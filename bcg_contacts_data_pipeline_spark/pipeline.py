@@ -18,9 +18,13 @@ Reference-parity operational behavior, Spark-first mechanics:
   reference's 'invalid email format' class (validate_fields.py:143-162
   fails only on email problems, not data-quality gaps), else 0.
 
-The whole run is ONE Spark job graph: stages compose lazily and Catalyst
-optimizes across them; subprocess-per-step and TSV handoffs between
-steps (the reference's design) have no equivalent here by design.
+Stages compose lazily and Catalyst optimizes within each one; the
+enrichment stage boundaries are checkpointed into the run's PinScope
+(plans/contacts._stage_boundary), because each splice join reads its
+target three times and the chained stages would otherwise multiply the
+input scans in every later plan. Subprocess-per-step and TSV handoffs
+between steps (the reference's design) have no equivalent here by
+design.
 """
 
 from __future__ import annotations
@@ -145,7 +149,7 @@ def _run(args, spark: SparkSession, persisted: list, pins=None) -> int:
         _log(f"  done in {time.time() - s:.1f}s ({len(usable)} usable)")
         i += 1
 
-    step(i, n_steps, "fill -> clean -> dedup -> renumber (one lazy plan)")
+    step(i, n_steps, "fill -> clean -> dedup -> renumber")
     s = time.time()
     result = C.run_pipeline(
         master,
@@ -176,7 +180,22 @@ def _run(args, spark: SparkSession, persisted: list, pins=None) -> int:
     errors = result.errors.persist()
     persisted.append(errors)
     err_path = f"{args.out_dir}/validation_errors.json"
-    W.write_json_log(errors, err_path, single=args.single_file)
+    # document and critical-error counts ride the report write (same
+    # Observation pattern as the cleaned write); the critical count is
+    # per error message, as the reference's exploded tally was
+    critical_msgs = F.filter(
+        "errors", lambda e: F.lower(e).contains("invalid email format")
+    )
+    to_write, err_obs = with_metrics(
+        errors,
+        {
+            "rows": F.count(F.lit(1)),
+            "critical": F.coalesce(F.sum(F.size(critical_msgs)), F.lit(0)),
+        },
+    )
+    W.write_json_log(to_write, err_path, single=args.single_file)
+    n_err_rows = err_obs.get["rows"]
+    critical = err_obs.get["critical"]
     if result.fill_log is not None:
         W.write_json_log(
             result.fill_log,
@@ -200,12 +219,6 @@ def _run(args, spark: SparkSession, persisted: list, pins=None) -> int:
         .orderBy(F.col("count").desc(), "error")
     )
     top = hist.take(6)
-    n_err_rows = errors.count()
-    critical = (
-        errors.select(F.explode("errors").alias("error"))
-        .filter(F.lower(F.col("error")).contains("invalid email format"))
-        .count()
-    )
     _log(f"  done in {time.time() - s:.1f}s")
 
     _log("-" * 60)

@@ -1,7 +1,9 @@
 """The complete contact-unification pipeline — the reference's whole
 run.py workflow (fill-missing -> clean -> dedup -> validate, plus the
-optional Mailchimp stage 0) as composable DataFrame stages in ONE Spark
-plan, files only at the edges.
+optional Mailchimp stage 0) as composable DataFrame stages, files only
+at the edges. Each stage is lazy; when the caller passes a ``PinScope``
+the enrichment stage boundaries are checkpointed (see
+``_stage_boundary`` for why), otherwise the whole run is one plan.
 
 Reference parity map (cites into /root/reference):
 - master schema: output/MergedDatabase.tsv header (88 columns)
@@ -15,7 +17,7 @@ Reference parity map (cites into /root/reference):
 - validation: cleaning/validate_fields.py (entire)
 - orchestration replaced: cleaning/run.py ran each stage as a subprocess
   communicating through TSV files; here stages are DataFrame->DataFrame
-  and Catalyst optimizes across stage boundaries (column pruning alone is
+  and Catalyst optimizes within a stage (column pruning alone is
   decisive: 88 columns, most stages touch <10).
 
 Known intentional divergences (SURVEY §7.4): keyless rows pass through
@@ -44,6 +46,7 @@ from bcg_contacts_data_pipeline_spark.operators.enrich import (
     kofn_enrich,
     two_key_enrich,
 )
+from bcg_contacts_data_pipeline_spark.operators.graph import free_local_checkpoint
 from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
 
 #: The master contact schema — output/MergedDatabase.tsv header, row 1.
@@ -105,6 +108,27 @@ def _with_row_id(df: DataFrame) -> DataFrame:
     # projection builds (see functions/normalize_sql.py).
     cols = ", ".join(NS.q(c) for c in df.columns)
     return df.withColumn("__row_id", F.expr(f"xxhash64(struct({cols}))"))
+
+
+def _stage_boundary(df: DataFrame, pins: PinScope | None) -> DataFrame:
+    """Materialize an enrichment stage's target frame once (eager
+    ``localCheckpoint``, adopted into ``pins``) so every later plan
+    starts from a leaf; without a scope, return ``df`` unchanged (lazy,
+    and nothing for an unscoped caller to leak).
+
+    Why: each enrichment stage reads its target three times (the k-of-n
+    probe, the enriched-key join, the splice join back), and the stages
+    chain (Mailchimp email pass -> mobile pass -> fill-missing), so the
+    copies multiply. Unbounded, the frame entering ``clean_fields`` held
+    46 CSV relations and 70 exchanges for 4 input files on the golden
+    fixture, and every action re-planned and re-ran that tree (the
+    renumber offset collect alone: 91 jobs). A scoped ``persist`` was
+    measured too and loses (CLI on the golden fixture, 4-core host:
+    48.6 s vs 30.3 s): the cache spares execution, but the analyzer
+    still walks the full tree on every action."""
+    if pins is None:
+        return df
+    return pins.adopt(df.localCheckpoint(eager=True), free_local_checkpoint)
 
 
 def conform_to_master(df: DataFrame) -> DataFrame:
@@ -191,6 +215,7 @@ def fill_missing(
     source: DataFrame,
     fill_fields: dict[str, str] | None = None,
     with_change_log: bool = True,
+    pins: PinScope | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
     """fill_missing_contacts.py semantics: fill firstname/lastname/
     fullname/mobile (SURVEY J2 fill set) from the first source row
@@ -199,6 +224,9 @@ def fill_missing(
     ``source`` columns must be pre-mapped to s_firstname, s_lastname,
     s_fullname, s_email, s_mobile + a numeric ``sid`` order column (use
     io.readers.SourceRegistry for raw files).
+
+    ``pins``: when given, the id-tagged master is checkpointed into it
+    (``_stage_boundary``); release it after the outputs are written.
     """
     fill_fields = fill_fields or {
         "firstname": "s_firstname",
@@ -206,7 +234,7 @@ def fill_missing(
         "fullname": "s_fullname",
         "mobile": "s_mobile",
     }
-    master_with_id = _with_row_id(master)
+    master_with_id = _stage_boundary(_with_row_id(master), pins)
     enriched, log = kofn_enrich(
         master_with_id,
         source,
@@ -240,13 +268,14 @@ def mailchimp_enrich(
 ) -> tuple[DataFrame, DataFrame]:
     """merge_contacts_kindaworks.py: fill missing email on (name, phone)
     match; fill missing mobile on (name, email) match. Two strict two-key
-    passes against a broadcast dimension."""
+    passes against a broadcast dimension. With ``pins``, each pass's
+    target is checkpointed into it (``_stage_boundary``)."""
     mc = (
         mailchimp
         if "sid" in mailchimp.columns
         else renumber(mailchimp, [F.col(c) for c in mailchimp.columns], seq_name="sid", pins=pins)
     )
-    m1 = _with_row_id(master)
+    m1 = _stage_boundary(_with_row_id(master), pins)
 
     name_t = N.norm_ws(N.full_name("firstname", "lastname", "fullname", "name"))
     name_s = N.norm_ws(N.full_name("s_firstname", "s_lastname", "s_fullname"))
@@ -262,12 +291,12 @@ def mailchimp_enrich(
         target_id="__row_id",
         source_order="sid",
     )
-    m2 = (
-        m1.drop("email")
-        .join(
+    m2 = _stage_boundary(
+        m1.drop("email").join(
             email_fill.select("__row_id", "email").dropDuplicates(["__row_id"]),
             "__row_id",
-        )
+        ),
+        pins,
     )
     mobile_fill, log2 = two_key_enrich(
         m2,
@@ -312,8 +341,11 @@ def dedup_contacts(
     # keyless passthrough rows all share a NULL key, so without the
     # tiebreak their relative numbering would be partition-order-dependent.
     # (A narrow renumber + join-back was tried and measured ~40% slower
-    # end-to-end: it prunes the 88 merge aggregates from the eager offset
-    # pass but recomputes the whole upstream enrich/clean pipeline twice.)
+    # end-to-end, before the enrichment stage boundaries were
+    # checkpointed: it prunes the 88 merge aggregates from the eager
+    # offset pass but recomputed the whole upstream enrich/clean plan —
+    # then 46 scans — twice. Not re-measured since; an unscoped run
+    # still carries that upstream.)
     # The hash pair REPLACES a full 88-column tiebreak list rather than
     # prefixing it: rows equal on (key, h1, h2) are byte-identical up to
     # a ~2^-128 collision (two independent 64-bit hashes — h2 feeds the
@@ -420,14 +452,19 @@ def run_pipeline(
     pins: PinScope | None = None,
     side_outputs: bool = True,
 ) -> PipelineResult:
-    """The whole reference pipeline as one lazy plan:
+    """The whole reference pipeline:
     stage 0 (optional) mailchimp enrich -> stage 1 fill-missing ->
     stage 2 clean+dedup -> stage 3 validate.
 
-    ``pins``: scope for the renumber persists the dedup stage creates —
-    the CLI releases it after every sink has run, so embedded callers
-    running many pipelines in one session don't accumulate cached
-    frames.
+    ``pins``: scope for the enrichment stage-boundary checkpoints
+    (``_stage_boundary``: the stage targets are materialized eagerly
+    here, so every later action plans from a leaf instead of the
+    multiplied splice-join tree) and for the renumber persists the
+    dedup stage creates. The CLI releases it after every sink has run,
+    so embedded callers running many pipelines in one session don't
+    accumulate cached frames. Without a scope the enrichment stages
+    stay one lazy plan (the renumber still runs its eager offset pass,
+    pinned for the session's lifetime).
 
     ``side_outputs=False`` skips CONSTRUCTING the errors frame and the
     fill change log (returned as None) — plan-BUILD cost, not execution
@@ -440,7 +477,9 @@ def run_pipeline(
     if mailchimp is not None:
         df, mc_log = mailchimp_enrich(df, mailchimp, pins=pins)
     if sources is not None:
-        df, fill_log = fill_missing(df, sources, with_change_log=side_outputs)
+        df, fill_log = fill_missing(
+            df, sources, with_change_log=side_outputs, pins=pins
+        )
     cleaned = dedup_contacts(clean_fields(df), merge_empty_keys=merge_empty_keys, pins=pins)
     errors = validate_contacts(cleaned) if side_outputs else None
     return PipelineResult(cleaned, errors, fill_log, mc_log)

@@ -1,10 +1,26 @@
 """End-to-end contact pipeline test — the reference's full run.py flow
 (mailchimp enrich -> fill missing -> clean -> dedup -> validate) on
-contact-shaped fixtures."""
+contact-shaped fixtures, plus the guards on the enrichment stage
+boundaries (plans/contacts._stage_boundary): plan shape, job budget,
+scoped == unscoped results, and release."""
 
 from __future__ import annotations
 
+import re
+
+import golden_fixture as G
+import pytest
+
+from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
 from bcg_contacts_data_pipeline_spark.plans import contacts as C
+from tests.test_pins import _n_persistent_rdds
+
+#: Golden-fixture budgets with the stage boundaries checkpointed
+#: (measured 4 relations / 7 exchanges / 76 jobs; without them 46 / 70 /
+#: 172). A reintroduced splice-join fan-out multiplies all three.
+MAX_CLEAN_INPUT_RELATIONS = 4
+MAX_CLEAN_INPUT_EXCHANGES = 8
+MAX_CLI_JOBS = 90
 
 
 def master_fixture(spark):
@@ -104,3 +120,115 @@ def test_bug_compat_empty_key_merge(spark):
     # compat mode: all keyless rows collapse into one record (reference bug)
     keyless = [r for r in rows if r["email"] is None and r["fullname"] is None]
     assert len(keyless) == 1
+
+
+@pytest.fixture(scope="module")
+def golden_inputs(spark, tmp_path_factory):
+    """The golden fixture's master, sources and Mailchimp frames, read
+    the way pipeline.run_cli reads them (the headerless 5/6.tsv lists
+    are skipped by the same usable-source rule)."""
+    from bcg_contacts_data_pipeline_spark.io import readers as R
+    from bcg_contacts_data_pipeline_spark.io import registries as REG
+
+    paths = G.write_all(str(tmp_path_factory.mktemp("golden_inputs")))
+    master = R.read_tsv(spark, paths["master"], all_strings=True)
+    mailchimp = REG.with_source_order(
+        REG.CONTACT_SOURCE_REGISTRY.apply(
+            R.read_tsv(spark, paths["mailchimpclean"], all_strings=True)
+        ),
+        "sid",
+    )
+    usable = [
+        p
+        for p in (paths["mailchimp_src"], paths["crm"], paths["adhoc5"], paths["adhoc6"])
+        if REG.usable_source(R._peek_header(spark, p))
+    ]
+    sources = REG.with_source_order(
+        R.read_sources(spark, usable, REG.CONTACT_SOURCE_REGISTRY).drop("source_file"),
+        "sid",
+    )
+    return master, sources, mailchimp
+
+
+def _run_capturing_clean_input(golden_inputs, pins):
+    """run_pipeline with ``pins``; returns the result and the frame that
+    entered clean_fields (the end of the enrichment stages)."""
+    seen = []
+    real = C.clean_fields
+
+    def spy(df):
+        seen.append(df)
+        return real(df)
+
+    master, sources, mailchimp = golden_inputs
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(C, "clean_fields", spy)
+        result = C.run_pipeline(master, sources=sources, mailchimp=mailchimp, pins=pins)
+    return result, seen[0]
+
+
+def _canonical(result: C.PipelineResult) -> dict:
+    return {
+        name: (df.columns, sorted(repr(tuple(r)) for r in df.collect()))
+        for name, df in (
+            ("cleaned", result.cleaned),
+            ("errors", result.errors),
+            ("fill_log", result.fill_log),
+            ("mailchimp_log", result.mailchimp_log),
+        )
+    }
+
+
+@pytest.fixture(scope="module")
+def scoped_run(spark, golden_inputs):
+    """One scoped run over the golden inputs: the clean_fields input
+    plan, the canonical outputs (collected before release — released
+    checkpoints are unrecomputable) and the persistent-RDD count before
+    the run and after ``release``."""
+    before = _n_persistent_rdds(spark)
+    scope = PinScope()
+    try:
+        result, clean_input = _run_capturing_clean_input(golden_inputs, scope)
+        qe = clean_input._jdf.queryExecution()
+        optimized = qe.optimizedPlan().toString()
+        physical = qe.executedPlan().toString()
+        outputs = _canonical(result)
+    finally:
+        scope.release()
+    return {
+        "relations": len(re.findall(r"Relation \[", optimized)),
+        "exchanges": physical.count("Exchange"),
+        "outputs": outputs,
+        "before": before,
+        "after": _n_persistent_rdds(spark),
+    }
+
+
+def test_stage_boundaries_bound_the_enrichment_plan(scoped_run):
+    """The frame entering clean_fields plans from the checkpointed stage
+    targets: one relation per input file (4), not the 46 the chained
+    splice joins multiply them into."""
+    assert scoped_run["relations"] <= MAX_CLEAN_INPUT_RELATIONS, scoped_run["relations"]
+    assert scoped_run["exchanges"] <= MAX_CLEAN_INPUT_EXCHANGES, scoped_run["exchanges"]
+
+
+def test_cli_job_budget(cli_run):
+    rc, _out, jobs = cli_run
+    assert rc == 0
+    assert 0 < jobs <= MAX_CLI_JOBS, jobs
+
+
+def test_stage_checkpoints_match_lazy_plan_and_release(spark, golden_inputs, scoped_run):
+    """Scoped and unscoped runs give identical outputs; release returns
+    the persistent-RDD count to its pre-run value (the checkpoints are
+    freed, not just dropped); an unscoped run checkpoints nothing."""
+    # <=, not ==: Spark's ContextCleaner may free unrelated leftovers of
+    # earlier tests meanwhile (same reasoning as tests/test_pins.py)
+    assert scoped_run["after"] <= scoped_run["before"]
+    try:
+        result, clean_input = _run_capturing_clean_input(golden_inputs, None)
+        assert "LogicalRDD" not in clean_input._jdf.queryExecution().optimizedPlan().toString()
+        assert _canonical(result) == scoped_run["outputs"]
+    finally:
+        # the unscoped renumber persist lives until clearCache (legacy)
+        spark.catalog.clearCache()

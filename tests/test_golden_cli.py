@@ -7,7 +7,8 @@ diffs every output artifact against pinned goldens
 (tests/goldens/cli_golden.json): byte digest of the cleaned TSV,
 sorted-line digests of the three JSON logs, row counts, and a set of
 semantic spot checks that make regressions diagnosable without reading
-digests.
+digests. The run itself is the session fixture ``cli_run`` in
+conftest.py.
 
 Regenerate after an INTENDED behavior change:
     GOLDEN_REGEN=1 python -m pytest tests/test_golden_cli.py -q
@@ -22,8 +23,6 @@ import os
 
 import golden_fixture as G
 import pytest
-
-from bcg_contacts_data_pipeline_spark.pipeline import run_cli
 
 GOLDEN_PATH = os.path.join(os.path.dirname(__file__), "goldens", "cli_golden.json")
 
@@ -41,29 +40,6 @@ def _sorted_lines_digest(path: str) -> tuple[str, int]:
     with open(path) as f:
         lines = sorted(line for line in f.read().split("\n") if line)
     return _sha("\n".join(lines).encode()), len(lines)
-
-
-@pytest.fixture(scope="module")
-def cli_run(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("golden"))
-    paths = G.write_all(d)
-    out = os.path.join(d, "out")
-    rc = run_cli(
-        [
-            paths["master"],
-            out,
-            "--sources",
-            paths["mailchimp_src"],
-            paths["crm"],
-            paths["adhoc5"],
-            paths["adhoc6"],
-            "--mailchimp",
-            paths["mailchimpclean"],
-            "--single-file",
-        ],
-        spark=spark,
-    )
-    return rc, out
 
 
 def _actual(out: str) -> dict:
@@ -92,7 +68,7 @@ def _actual(out: str) -> dict:
 
 
 def test_cli_matches_pinned_goldens(cli_run):
-    rc, out = cli_run
+    rc, out, _jobs = cli_run
     assert rc == 0
     actual = _actual(out)
 
@@ -117,7 +93,7 @@ def test_cli_matches_pinned_goldens(cli_run):
 def test_cli_semantics_spot_checks(cli_run):
     """Digest-independent assertions that keep failures diagnosable and
     pin the fixture's engineered behaviors end-to-end."""
-    rc, out = cli_run
+    rc, out, _jobs = cli_run
     with open(os.path.join(out, "MergedDatabase.tsv")) as f:
         lines = [line for line in f.read().split("\n") if line]
     header = lines[0].split("\t")

@@ -381,15 +381,20 @@ def test_static_schemas_match_inference(spark):
     """The static-schema catalog (io/schemas.py) must declare EXACTLY
     what footer inference yields on the shipped fixtures, field for
     field including nullability — the drift guard for the no-inference
-    read path. events is deliberately not in the catalog (its encoding
-    drifts by design; io/events.py handles it), asserted too so nobody
-    adds it back."""
+    read path, at every scale factor the tests and bench.py read. events
+    is deliberately not in the catalog (its encoding drifts by design;
+    io/events.py handles it), asserted too so nobody adds it back."""
+    import glob
     import os
 
     from bcg_contacts_data_pipeline_spark.io.schemas import TABLE_DDL
+    from tests.conftest import SF_SMALL
 
     assert "events" not in TABLE_DDL
-    for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
+    checked = 0
+    # every shipped scale factor: sf0.001 and sf0.01 (tests) and sf0.1
+    # (bench.py's default)
+    for sf_dir in sorted(glob.glob(os.path.join(os.path.dirname(SF_SMALL), "sf*"))):
         for name, ddl in TABLE_DDL.items():
             path = f"{sf_dir}/{name}.parquet"
             if not os.path.exists(path):
@@ -401,3 +406,5 @@ def test_static_schemas_match_inference(spark):
                 f"inferred {inferred.json()} — the testdata schema "
                 "drifted; update io/schemas.py:TABLE_DDL"
             )
+            checked += 1
+    assert checked, "no (table, sf) pair found to check"

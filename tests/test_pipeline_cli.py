@@ -59,6 +59,8 @@ def test_cli_end_to_end(spark, tmp_path, capsys):
     # row 3 (Cara, no email after clean, no phone) must be reported
     msgs = {e for d in docs for e in d["errors"]}
     assert any("email" in m.lower() or "phone" in m.lower() for m in msgs)
+    # the epilogue's total is the observed count of the report write
+    assert f"Total validation issues: {len(docs)} records" in logs
 
     # fill change log written when sources were given
     assert os.path.isfile(out + "/fill_change_log.json")
