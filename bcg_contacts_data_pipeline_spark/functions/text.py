@@ -126,6 +126,29 @@ def word_ngrams(toks: Column, n: int) -> Column:
     return bind(toks, body)
 
 
+def ngram_hashes(th: Column, n: int) -> Column:
+    """Positional n-gram hashes over a per-token hash array: element i is
+    ``xxhash64(h_i, ..., h_{i+n-1})``, in window order. Arrays shorter
+    than n -> empty array (the guard matters: ``sequence(1, 0)`` counts
+    DOWN to ``[1, 0]``, it is not empty).
+
+    The n-gram hash every gram consumer shares (similarity shingles and
+    signatures, dedup span postings, profile repetition grams): each
+    token's characters are hashed once per document, not n times via
+    string concatenation, and no per-gram string is allocated. Tokens
+    cannot contain whitespace, so hashing the token window is injective
+    on windows up to 2^-64 collisions. ``th`` should be a bound
+    attribute: it is referenced n + 2 times."""
+    idx = F.sequence(F.lit(1), F.size(th) - F.lit(n - 1))
+    return F.when(
+        F.size(th) >= n,
+        F.transform(
+            idx,
+            lambda i: F.xxhash64(*[F.element_at(th, i + F.lit(j)) for j in range(n)]),
+        ),
+    ).otherwise(F.array().cast("array<bigint>"))
+
+
 #: Dialect-portable "BPE-ish" token pattern: letter runs, digit runs,
 #: single non-alnum marks. Deliberately identical semantics under Java
 #: regex (Spark) and RE2-ish (DuckDB) so oracles can replicate counts.

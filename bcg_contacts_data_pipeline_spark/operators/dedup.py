@@ -27,6 +27,7 @@ from bcg_contacts_data_pipeline_spark.functions.normalize_sql import (
     longest_valid_agg_sql,
     q as quote_ident,
 )
+from bcg_contacts_data_pipeline_spark.functions.text import ngram_hashes
 from bcg_contacts_data_pipeline_spark.operators.pins import PinScope, pin
 
 
@@ -402,8 +403,8 @@ def substring_spans(
     1. postings: one row per (doc, position) holding a 64-bit
        fingerprint of the k-token window starting there (tokens =
        whitespace split). The fingerprint is ``xxhash64`` over the
-       window's per-token ``xxhash64`` values — the
-       ``shingle_hash_frame`` composition: each token's characters are
+       window's per-token ``xxhash64`` values
+       (``functions.text.ngram_hashes``): each token's characters are
        hashed once per document (not k times via string concat), no
        per-position string allocation happens, and the posting/join
        key is 8 bytes instead of the 32-char md5 hex string (r14:
@@ -480,15 +481,8 @@ def substring_spans(
         )
         .filter(F.size("__th") >= k)
     )
-    th = F.col("__th")
-    gram_arr = F.transform(
-        F.sequence(F.lit(1), F.size(th) - (k - 1)),
-        lambda i: F.xxhash64(
-            *[F.element_at(th, i + F.lit(j)) for j in range(k)]
-        ),
-    )
     grams = base.select(
-        "__doc", F.posexplode(gram_arr).alias("__p", "__g")
+        "__doc", F.posexplode(ngram_hashes(F.col("__th"), k)).alias("__p", "__g")
     ).select("__doc", (F.col("__p") + 1).alias("__i"), "__g")
     if occ_cap is not None:
         if occ_cap < 1:

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bcg_contacts_data_pipeline_spark.functions.text import ngram_hashes
+
 
 def profile_columns(
     df: DataFrame, cols: list[str], approx: bool = True
@@ -104,8 +106,8 @@ def gopher_repetition(
     form executed the 6-gram explode twice and shuffled it twice; the
     window does it once, and every group is bounded by a single
     document's gram multiplicity). Gram keys are 64-bit
-    ``xxhash64``-of-token-hashes (the ``shingle_hash_frame``
-    composition — token characters hashed once per doc, 8-byte keys
+    ``xxhash64``-of-token-hashes (``functions.text.ngram_hashes`` —
+    token characters hashed once per doc, 8-byte keys
     instead of 32-char md5 hex strings; a within-doc collision risk of
     ~|doc-grams|²/2^64 is the same trade every similarity join key
     accepts). All Catalyst expressions; token strings never leave
@@ -122,13 +124,7 @@ def gopher_repetition(
     )
 
     def grams(n: int) -> DataFrame:
-        th = F.col("__th")
-        arr = F.transform(
-            F.sequence(F.lit(1), F.col("__n") - (n - 1)),
-            lambda i: F.xxhash64(
-                *[F.element_at(th, i + F.lit(j)) for j in range(n)]
-            ),
-        )
+        arr = ngram_hashes(F.col("__th"), n)
         return (
             base.filter(F.col("__n") >= n)
             .select("__doc", "__n", F.posexplode(arr).alias("__p0", "__g"))

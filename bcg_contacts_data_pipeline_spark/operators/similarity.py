@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from bcg_contacts_data_pipeline_spark.operators.pins import PinScope, pin
 
-from bcg_contacts_data_pipeline_spark.functions.text import tokens, word_ngrams
+from bcg_contacts_data_pipeline_spark.functions.text import ngram_hashes, tokens
 from bcg_contacts_data_pipeline_spark.functions.vectors import dot
 
 #: 31-bit Mersenne prime for the minhash permutation family: with a, b, h
@@ -50,80 +50,57 @@ from bcg_contacts_data_pipeline_spark.functions.vectors import dot
 MERSENNE_31 = (1 << 31) - 1
 
 
-def shingle_frame(
-    df: DataFrame, id_col: str, text: Column | str, n: int = 3, parallelism: int = 64
+def _token_hashes(
+    df: DataFrame,
+    id_col: str,
+    text: Column | str,
+    min_tokens: int = 0,
+    parallelism: int = 64,
 ) -> DataFrame:
-    """(id, shingle) pairs — distinct word n-grams, lowercased.
+    """(id, __th) — each document's lowercased token hashes
+    (``xxhash64(lower(token))``, in token order): the one per-document
+    input of every text-similarity operator here.
 
-    The input is repartitioned first: document tables often arrive as few
-    fat partitions (one per parquet row-group), and the explode below is
-    the expensive step — spread it before it runs, not after.
-    """
+    The hashes are bound after the spreading ``repartition``: document
+    tables often arrive as few fat partitions (one per parquet
+    row-group), and hashing is the expensive step — spread it before it
+    runs. ``__th`` is an attribute, so the n-gram lambdas that reference
+    it n + 2 times read it instead of re-tokenizing.
+
+    With ``min_tokens`` > 0, documents with fewer tokens are dropped
+    first, on the token count alone: any later filter would be pushed
+    below the repartition with the hash expression inlined. The
+    signature families need the drop (an empty gram array has no
+    signature). The shingle path does not (a short document's gram
+    array explodes to no rows), and skips it: the count filter runs on
+    the unspread scan split, which at sf0.1 is ONE split, once per
+    consumer pass — measured 0.4-1.8 s slower per pair-generator query
+    at sf0.1 (4-core host, one draw each)."""
     t = F.col(text) if isinstance(text, str) else text
-    # Two-step projection on purpose: materialize the token array as an
-    # attribute before word_ngrams references it. Inlining the split()
-    # into every element_at inside the ngram lambda multiplies the
-    # expression tree by ~3n (minutes of codegen + re-evaluation); bound
-    # to a column it is computed once per row.
-    toked = df.repartition(parallelism).select(
-        F.col(id_col), F.transform(tokens(t), F.lower).alias("__toks")
-    )
-    return toked.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(word_ngrams(F.col("__toks"), n))).alias(
-            "shingle"
-        ),
-    )
-
-
-def shingle_hash_arrays(
-    df: DataFrame, id_col: str, text: Column | str, n: int = 3, parallelism: int = 64
-) -> DataFrame:
-    """(id, __sh) — per-document array of the DISTINCT 64-bit word-ngram
-    hashes, the pre-explode form of :func:`shingle_hash_frame`. One row
-    per document; the heavy per-row work (tokenize, per-token xxhash64,
-    ngram hash combination) happens exactly once here, so a caller with
-    several shingle-frame consumers can materialize THIS compact frame
-    (8 bytes per distinct ngram, no text column, strictly smaller than
-    the exploded (id, sh) frame) and explode per consumer."""
-    t = F.col(text) if isinstance(text, str) else text
-    # Token-hash array materialized as an attribute before the ngram
-    # lambda references it (same codegen-size guard as shingle_frame).
-    hashed = df.repartition(parallelism).select(
+    if min_tokens > 0:
+        df = df.filter(F.size(tokens(t)) >= min_tokens)
+    return df.repartition(parallelism).select(
         F.col(id_col),
         F.transform(tokens(t), lambda x: F.xxhash64(F.lower(x))).alias("__th"),
-    )
-    th = F.col("__th")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(th) - F.lit(n - 1), F.lit(0)))
-    grams = F.when(
-        F.size(th) >= n,
-        F.transform(
-            idx,
-            lambda i: F.xxhash64(*[F.element_at(th, i + F.lit(j)) for j in range(n)]),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    return hashed.select(
-        F.col(id_col), F.array_distinct(grams).alias("__sh")
     )
 
 
 def shingle_hash_frame(
     df: DataFrame, id_col: str, text: Column | str, n: int = 3, parallelism: int = 64
 ) -> DataFrame:
-    """(id, sh) pairs — 64-bit hashes of distinct word n-grams.
+    """(id, sh) pairs — 64-bit hashes of each document's DISTINCT word
+    n-grams (:func:`ngram_hashes` over the lowercased token hashes).
+    Documents with < n tokens yield no rows.
 
-    Equivalent join/dedup behavior to ``xxhash64`` over
-    ``shingle_frame``'s strings, but the n-gram hash is combined from
-    per-token hashes (``xxhash64(h_i, h_{i+1}, h_{i+2})``) instead of
-    concatenating shingle STRINGS first: each token's characters are
-    hashed once per document instead of n times, and no 3M-row string
-    allocation happens at all (measured ~35% off the signature stage at
-    sf0.1). Tokens cannot contain whitespace, so the string form was
-    injective on token windows — the hash-of-hashes composition preserves
-    that up to 2^-64 collisions, which the string form already accepted
-    at its join key."""
-    return shingle_hash_arrays(df, id_col, text, n, parallelism).select(
-        F.col(id_col), F.explode("__sh").alias("sh")
+    The explode takes the gram expression inline, never a bound array
+    attribute: Catalyst's InferFiltersFromGenerate adds ``size(arr) > 0``
+    only when the exploded input is an attribute, and that filter is
+    pushed below the spreading exchange with the whole tokenize + hash +
+    n-gram pipeline inlined into it (r15: five consumers 3-16x slower).
+    ``tests/test_plans.py`` guards the shape."""
+    grams = ngram_hashes(F.col("__th"), n)
+    return _token_hashes(df, id_col, text, parallelism=parallelism).select(
+        F.col(id_col), F.explode(F.array_distinct(grams)).alias("sh")
     )
 
 
@@ -162,30 +139,20 @@ def ngram_jaccard_pairs(
       hash — negligible next to the corpus sizes this verifies);
     - the shingle frame feeds four consumer subtrees (df branch when
       capped, sizes, both join sides) with zero exchange reuse between
-      them (re-verified round 6: no ReusedExchange nodes), so the heavy
-      per-row work — tokenize, per-token xxhash64, ngram combination —
-      ran once PER CONSUMER. The PRE-explode per-doc hash-array frame
-      is therefore materialized once (eager localCheckpoint) and each
-      consumer explodes the materialized arrays (r15). This supersedes
-      the r6 recompute-beats-persist measurement, which was about
-      persisting the EXPLODED (id, sh) frame — strictly larger than its
-      input and barriered in front of the join; the array form is
-      strictly SMALLER than the input (8 B per distinct ngram, no
-      text), and the r15 interleaved A/B measured the swap a wash at
-      sf0.1 fixtures (tiny texts) while removing three full
-      tokenize+hash corpus passes per call at scale. The EXPLODED frame
-      stays unmaterialized, exactly as r6 decided.
+      them (re-verified round 6: no ReusedExchange nodes), so the
+      per-row tokenize + hash + n-gram work runs once per consumer. It
+      stays unmaterialized: r6 measured recompute beating a persist of
+      the exploded frame, and r15's eager checkpoint of the per-doc
+      hash arrays (a checkpoint per call, leaked without ``pins``) left
+      the uncapped sf0.1 time flat (3.48 s with it, 3.49 s without,
+      medians of 3 and 4 runs). The capped callers pay for it: four
+      passes instead of one, 36.5 -> 41.0 s over the seven ``max_df``
+      callers plus ``ngram_jaccard`` (4-core host, 3 vs 4 runs). What must
+      not happen is a hash expression in a filter below the spreading
+      exchange: ``shingle_hash_frame`` explodes its gram expression
+      inline so Catalyst infers no ``size(arr) > 0`` filter there.
     """
-    arrs = shingle_hash_arrays(df, id_col, text, n).localCheckpoint(
-        eager=True
-    )
-    if pins is not None:
-        from bcg_contacts_data_pipeline_spark.operators.graph import (
-            free_local_checkpoint,
-        )
-
-        pins.adopt(arrs, free_local_checkpoint)
-    shingles = arrs.select(F.col(id_col), F.explode("__sh").alias("sh"))
+    shingles = shingle_hash_frame(df, id_col, text, n)
     if max_df is not None:
         # Materialize the hot set ONCE (r13, VERDICT r12 ask #3): the
         # capped shingle frame feeds four consumers (sizes via sa/sb,
@@ -303,36 +270,6 @@ def _minhash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     ]
 
 
-def _gram_hash_arrays(
-    df: DataFrame, id_col: str, text: Column | str, n: int, parallelism: int = 64
-) -> DataFrame:
-    """(id, __gh) with __gh = the document's DISTINCT n-gram hash array
-    folded to 31 bits — the row-local input both signature families
-    consume. Documents with < n tokens are dropped, matching the
-    explode+groupBy formulation where they produce no rows.
-
-    The drop filter runs EARLY, on the token-count (`size(__th) >= n` —
-    equivalent to a non-empty gram array, since >= n tokens always yield
-    >= 1 distinct gram): a post-hoc `filter(size(__gh) > 0)` gets its
-    predicate rewritten to contain the entire gram-pipeline expression,
-    re-evaluating it per row — measured ~3x the whole stage."""
-    t = F.col(text) if isinstance(text, str) else text
-    hashed = df.repartition(parallelism).select(
-        F.col(id_col),
-        F.transform(tokens(t), lambda x: F.xxhash64(F.lower(x))).alias("__th"),
-    ).filter(F.size("__th") >= n)
-    th = F.col("__th")
-    idx = F.sequence(F.lit(1), F.size(th) - F.lit(n - 1))
-    grams = F.transform(
-        idx,
-        lambda i: F.pmod(
-            F.xxhash64(*[F.element_at(th, i + F.lit(j)) for j in range(n)]),
-            F.lit(MERSENNE_31),
-        ),
-    )
-    return hashed.select(F.col(id_col), F.array_distinct(grams).alias("__gh"))
-
-
 def _no_static_broadcast(df: DataFrame) -> DataFrame:
     """Mark a CORPUS-DERIVED join side so it is never statically
     broadcast: plan-time width stats for computed array columns
@@ -385,7 +322,10 @@ def minhash_signatures(
     seed: int = 42,
 ) -> DataFrame:
     """MinHash signature per document: sig_i = min over shingles of
-    (a_i * h(shingle) + b_i) mod M31, with h the 31-bit-folded gram hash.
+    (a_i * h + b_i) mod M31, with h = pmod(gram hash, M31), the 64-bit
+    :func:`ngram_hashes` value folded to 31 bits where the min takes it.
+    Documents with < n tokens are dropped (the explode+groupBy
+    formulation produced no row for them).
 
     ROW-LOCAL: a signature is a pure function of one document, so it is
     computed as `array_min(transform(grams, ...))` over the per-doc gram
@@ -408,13 +348,17 @@ def minhash_signatures(
     a_i*h + b_i stays < 2^62 (a, b, h all < 2^31) — no int64 overflow
     under ANSI mode."""
     params = _minhash_params(num_hashes, seed)
-    grams = _gram_hash_arrays(df, id_col, text, n)
+    grams = _token_hashes(df, id_col, text, n).select(
+        F.col(id_col),
+        F.array_distinct(ngram_hashes(F.col("__th"), n)).alias("__gh"),
+    )
     a_arr = "array(" + ", ".join(f"{a}L" for a, _ in params) + ")"
     b_arr = "array(" + ", ".join(f"{b}L" for _, b in params) + ")"
+    m = f"{MERSENNE_31}L"
     sig = (
         "element_at(transform(array(`__gh`), gh -> "
         f"zip_with({a_arr}, {b_arr}, (a, b) -> "
-        f"array_min(transform(gh, h -> pmod(a * h + b, {MERSENNE_31}L)))"
+        f"array_min(transform(gh, h -> pmod(a * pmod(h, {m}) + b, {m})))"
         ")), 1) AS sigs"
     )
     return grams.selectExpr(f"`{id_col}`", sig)
@@ -661,17 +605,12 @@ def simhash64(
     tokens keep their weight exactly as in the exploded formulation.
     Documents with no tokens are dropped (the groupBy form produced no
     row for them)."""
-    t = F.col(text) if isinstance(text, str) else text
-    toked = df.repartition(64).select(
-        F.col(id_col),
-        F.transform(tokens(t), lambda x: F.xxhash64(F.lower(x))).alias("__th"),
-    ).filter(F.size("__th") > 0)
     sim = (
         "aggregate(sequence(0, 63), CAST(0 AS BIGINT), (acc, i) -> acc + "
         "IF(2 * size(filter(`__th`, h -> (h >> i) & 1 = 1)) > size(`__th`), "
         "shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))) AS simhash"
     )
-    return toked.selectExpr(f"`{id_col}`", sim)
+    return _token_hashes(df, id_col, text, 1).selectExpr(f"`{id_col}`", sim)
 
 
 def hamming64(a: Column, b: Column) -> Column:

@@ -125,9 +125,10 @@ def validate_documents(
     cheap boolean disjunction of the rule predicates: a post-hoc
     ``filter(size(errors) > 0)`` gets the whole array-construction
     expression substituted into its predicate and evaluated a second
-    time per row (see operators/similarity._gram_hash_arrays for the
-    measured version of this hazard); filtering first also means passing
-    rows never build the array at all."""
+    time per row (the n-gram signature stage once measured ~3x slower
+    from exactly this; operators/similarity.shingle_hash_frame documents
+    the inferred-filter form of the hazard); filtering first also means
+    passing rows never build the array at all."""
     if skip is not None:
         df = df.filter(~skip)
     if not rules:

@@ -105,11 +105,10 @@ def test_curation_frame_scope_returns_pins_to_zero(spark):
     """curation_frame threads every materialization through a PinScope
     (round-5 verdict: the registered query's pins=None form leaked one
     cached frame per invocation in a long-lived session). With a scope:
-    result materializes correctly, the scope holds exactly four
-    entries (the `kept` persist, the ngram pair generator's per-doc
-    shingle-hash-array localCheckpoint — r15, tokenize-once — and its
-    hot-set localCheckpoint — adopted since the r14 continuation closed
-    the fresh-session leak this test caught — and connected_components'
+    result materializes correctly, the scope holds exactly three
+    entries (the `kept` persist, the ngram pair generator's hot-set
+    localCheckpoint — adopted since the r14 continuation closed the
+    fresh-session leak this test caught — and connected_components'
     final label checkpoint; intermediate round checkpoints are freed
     eagerly inside the operator), and release returns the session's
     persistent-RDD count to its pre-call value."""
@@ -122,7 +121,7 @@ def test_curation_frame_scope_returns_pins_to_zero(spark):
     out = curation_frame(spark, "/root/testdata/sf0.001", pins=scope)
     rows = out.collect()
     assert len(rows) >= 1 and all(r["n_docs"] >= 1 for r in rows)
-    assert len(scope) == 4
+    assert len(scope) == 3
     scope.release()
     assert len(scope) == 0
     # <= for the same ContextCleaner-background-free reason as above

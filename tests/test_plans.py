@@ -9,11 +9,14 @@ load-bearing, so they are tested, not just eyeballed once.
   exchange
 """
 
+import os
+
 import pytest
 
 from bcg_contacts_data_pipeline_spark.plans.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _plan(df) -> str:
@@ -455,11 +458,11 @@ def test_plans_md_not_drifted(spark):
     import re
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from plan_report import plan_row
 
     committed = {}
-    with open("/root/repo/PLANS.md") as f:
+    with open(os.path.join(ROOT, "PLANS.md")) as f:
         for line in f:
             m = re.match(r"\| (\w+) \| (\S+) \| (\S+) \| (\S+) \| (\S+) \|", line)
             if m:
@@ -738,6 +741,62 @@ def test_pair_generators_never_static_broadcast_corpus_frames(spark):
         spark.catalog.clearCache()
 
 
+def _filters_below_spread(plan: str) -> list[str]:
+    """Filter nodes in the subtree of any Repartition /
+    RoundRobinPartitioning node of a plan tree string."""
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    lines = plan.splitlines()
+    out = []
+    for i, line in enumerate(lines):
+        if "Repartition" not in line and "RoundRobinPartitioning" not in line:
+            continue
+        for below in lines[i + 1:]:
+            if depth(below) <= depth(line):
+                break
+            if below.lstrip(" :+-").startswith("Filter"):
+                out.append(below)
+    return out
+
+
+def test_token_hashing_stays_above_the_spreading_exchange(spark):
+    """The r15 regression: ``shingle_hash_frame`` exploded a bound
+    ``__sh`` attribute, Catalyst inferred ``size(__sh) > 0`` for the
+    generate and pushed it below the RoundRobinPartitioning exchange
+    with the whole tokenize + hash + n-gram pipeline inlined (8
+    ``xxhash64`` in the optimized plan, 6 of them in that filter), so
+    the hashing ran on the unspread scan split — five consumers 3-16x
+    slower with identical results. Guard every per-document hashing
+    path: beneath the spread, only the token-count filter may run, and
+    the shingle plan hashes exactly twice (per token, per window)."""
+    from bcg_contacts_data_pipeline_spark.operators.similarity import (
+        minhash_signatures,
+        shingle_hash_frame,
+        simhash64,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    frames = {
+        "shingle_hash_frame": shingle_hash_frame(docs, "doc_id", "text", 3),
+        "minhash_signatures": minhash_signatures(docs, "doc_id", "text", 3),
+        "simhash64": simhash64(docs, "doc_id", "text"),
+    }
+    plans = {
+        name: df._jdf.queryExecution().optimizedPlan().toString()
+        for name, df in frames.items()
+    }
+    for name, p in plans.items():
+        assert "Repartition" in p, f"{name} lost its spreading repartition:\n{p}"
+        hashed = [f for f in _filters_below_spread(p) if "xxhash64" in f]
+        assert not hashed, (
+            f"{name}: a hash expression is filtered below the spreading "
+            f"exchange:\n{hashed}"
+        )
+    assert plans["shingle_hash_frame"].count("xxhash64") <= 2, plans
+
+
 # ---------------------------------------------------------------------------
 # Partitionless-window gate (VERDICT r10 ask #6)
 # ---------------------------------------------------------------------------
@@ -778,11 +837,11 @@ def test_partitionless_windows_enumerated_and_agg_bounded(spark):
     import re
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from plan_report import count_partitionless_windows
 
     flagged = set()
-    with open("/root/repo/PLANS.md") as f:
+    with open(os.path.join(ROOT, "PLANS.md")) as f:
         for line in f:
             m = re.match(r"\| (\w+) \|", line)
             if m and "1p-window" in line:

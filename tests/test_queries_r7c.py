@@ -592,7 +592,7 @@ def test_csv_roundtrip_preserves_nulls(spark, tmp_path):
         ("Customer#4", 7, 50.0),
     ]
     spark.createDataFrame(
-        rows, "c_name string, c_nationkey long, c_acctbal double"
+        rows, "c_name string, c_nationkey int, c_acctbal double"
     ).write.mode("overwrite").parquet(f"{tmp_path}/customer.parquet")
 
     got = {

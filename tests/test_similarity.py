@@ -30,6 +30,32 @@ def test_ngram_jaccard_exact(spark):
     assert (1, 3) not in out
 
 
+def test_ngram_hashes_short_arrays_and_windows(spark):
+    """A token-hash array shorter than n gives [] (``sequence(1, 0)``
+    counts down to ``[1, 0]``, so the size guard is load-bearing), and
+    a 4-token array gives its two positional window hashes, equal to
+    the hand-built ``xxhash64(element_at ...)`` composition."""
+    from pyspark.sql import functions as F
+
+    from bcg_contacts_data_pipeline_spark.functions.text import ngram_hashes
+
+    df = spark.createDataFrame(
+        [(1, []), (2, [11, 12]), (3, [11, 12, 13, 14])],
+        "id long, th array<bigint>",
+    )
+    got = {
+        r["id"]: r["g"]
+        for r in df.select("id", ngram_hashes(F.col("th"), 3).alias("g")).collect()
+    }
+    assert got[1] == [] and got[2] == []
+    th = F.col("th")
+    by_hand = F.array(
+        *[F.xxhash64(*[F.element_at(th, F.lit(i + j)) for j in range(3)]) for i in (1, 2)]
+    )
+    (want,) = df.filter("id = 3").select(by_hand.alias("w")).first()
+    assert got[3] == want and len(set(want)) == 2
+
+
 def test_minhash_lsh_finds_near_dups(spark):
     df = doc_corpus(spark)
     pairs = {

@@ -9,10 +9,12 @@ Run: python tools/plan_report.py  (rewrites PLANS.md at the repo root)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SHUFFLE = re.compile(
     r"Exchange (hashpartitioning|rangepartitioning|SinglePartition)"
@@ -95,7 +97,7 @@ def main() -> None:
 
     rows = [plan_row(spark, name, fn, sf) for name, fn in QUERIES.items()]
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(
             "# PLANS — whole-board physical-plan facts (generated)\n\n"
             "`python tools/plan_report.py` regenerates this file at "
