@@ -188,6 +188,7 @@ class ControlPlane:
 
     def run(self, name: str, sf_dir: str | None, timeout_s: float | None) -> dict:
         from bcg_contacts_data_pipeline_spark.io.writers import write_tsv_single
+        from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
         from bcg_contacts_data_pipeline_spark.plans.queries import QUERIES
 
         fn = QUERIES[name]
@@ -197,7 +198,7 @@ class ControlPlane:
         out_name = f"{name}.tsv"
         out_path = os.path.join(self.output_dir, out_name)
 
-        with self._lock:
+        with self._lock, PinScope():
             sc = spark.sparkContext
             group = f"control-plane-{uuid.uuid4().hex[:12]}"
             sc.setJobGroup(group, f"/run {name}", interruptOnCancel=True)

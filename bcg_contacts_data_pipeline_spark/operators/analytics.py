@@ -29,7 +29,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bcg_contacts_data_pipeline_spark.operators.dedup import renumber
-from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
 
 
 def funnel_stages(
@@ -119,7 +118,6 @@ def with_quantile_bin(
     order_by: list[Column],
     k: int,
     bin_name: str = "bin",
-    pins: PinScope | None = None,
 ) -> DataFrame:
     """Assign each row an even-spread quantile bin in ``[1, k]`` under a
     total order.
@@ -139,9 +137,7 @@ def with_quantile_bin(
     returns ``n`` from the offset pass it already ran — no second count
     job over the pinned frame.
     """
-    ranked, n = renumber(
-        df, order_by, seq_name="_rank", pins=pins, with_total=True
-    )
+    ranked, n = renumber(df, order_by, seq_name="_rank", with_total=True)
     if n == 0:  # no rows, no bins — and no div-by-zero under ANSI
         bin_col = F.lit(None).cast("long")
     else:

@@ -28,7 +28,7 @@ from bcg_contacts_data_pipeline_spark.functions.normalize_sql import (
     q as quote_ident,
 )
 from bcg_contacts_data_pipeline_spark.functions.text import ngram_hashes
-from bcg_contacts_data_pipeline_spark.operators.pins import PinScope, pin
+from bcg_contacts_data_pipeline_spark.operators.pins import checkpoint, pin
 
 
 def dedup_key(
@@ -178,7 +178,6 @@ def renumber(
     order_by: list[Column | str],
     seq_name: str = "seqno",
     scalable: bool = True,
-    pins: "PinScope | None" = None,
     with_total: bool = False,
 ) -> DataFrame | tuple[DataFrame, int]:
     """O2 — assign a global contiguous 1..N sequence under a total order.
@@ -196,11 +195,6 @@ def renumber(
     where the output contract genuinely demands contiguous numbering; for
     mere row identity use a lazy hash/rank id instead (see
     plans.contacts._with_row_id).
-
-    ``pins``: pass a :class:`~..operators.pins.PinScope` to get a
-    targeted release handle for the load-bearing persist below (release
-    only after the output is materialized); without one the pin lives
-    until ``clearCache()`` (legacy contract).
     """
     cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
     if not scalable:
@@ -214,9 +208,9 @@ def renumber(
     # ones the offsets below were computed from. Materializing once freezes
     # the assignment (and the offset collect pays for the materialization).
     parted = pin(
-        df.repartitionByRange(*cols)
-        .select("*", F.spark_partition_id().alias("__pid")),
-        pins,
+        df.repartitionByRange(*cols).select(
+            "*", F.spark_partition_id().alias("__pid")
+        )
     )
     # Small driver-side collect: one row per partition (#partitions rows).
     counts = (
@@ -516,9 +510,8 @@ def substring_spans(
     # self-join and everything downstream read the checkpointed frame,
     # so the pair join introduces no second full-postings execution or
     # exchange. Small by construction — only grams with df in
-    # [2, max_df] survive; blocks are released by the ContextCleaner
-    # (same lifecycle as the ngram hot-set checkpoint).
-    capped = grams.join(keep, "__g").localCheckpoint(eager=True)
+    # [2, max_df] survive; released with the open PinScope.
+    capped = checkpoint(grams.join(keep, "__g"))
     b = capped.select(
         F.col("__g").alias("__g"),
         F.col("__doc").alias("__doc_b"),

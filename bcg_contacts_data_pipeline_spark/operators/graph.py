@@ -25,26 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
-
-
-def free_local_checkpoint(df: DataFrame) -> None:
-    """Best-effort release of a ``localCheckpoint``'s materialized blocks.
-
-    ``DataFrame.unpersist`` only touches the SQL cache; a checkpoint's
-    blocks belong to the underlying RDD, reachable through the
-    ``LogicalRDD`` plan node. Spark's ContextCleaner would free them
-    eventually (when the JVM-side RDD is garbage collected), but an
-    iterative operator that checkpoints per round should not hold every
-    round's blocks until GC. Freeing makes the frame UNRECOMPUTABLE
-    (lineage was truncated) — only call once nothing will read it again.
-    Guarded: the accessor path is Spark-internal, so any mismatch
-    degrades to the ContextCleaner behavior instead of failing the job.
-    """
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+from bcg_contacts_data_pipeline_spark.operators.pins import (
+    checkpoint as _checkpoint,
+    free_local_checkpoint,
+)
 
 
 def connected_components(
@@ -55,7 +39,6 @@ def connected_components(
     node_col: str | None = None,
     max_iter: int | None = None,
     checkpoint: str = "local",
-    pins: PinScope | None = None,
 ) -> DataFrame:
     """(node, component) with component = min node id of the component.
 
@@ -82,25 +65,13 @@ def connected_components(
     checkpoint is freed as soon as the next round has materialized, so
     live block storage is bounded at sym + 2 label frames regardless of
     graph diameter (a 50-round pathological chain no longer holds 50
-    label snapshots until GC). The two frames that must outlive the
-    call — sym is not needed after the loop and is freed on exit; the
-    FINAL labels back the returned DataFrame — the final checkpoint is
-    registered in ``pins`` when a scope is passed (release it only
-    after your sinks have run; the frame cannot be recomputed), else it
-    is left to Spark's ContextCleaner like before.
+    label snapshots until GC). sym is not needed after the loop and is
+    freed on exit; the FINAL labels back the returned DataFrame and are
+    released with the open ``PinScope`` (operators/pins.py).
     """
     if checkpoint not in ("local", "reliable"):
         raise ValueError(f"checkpoint must be 'local' or 'reliable', got {checkpoint!r}")
-
-    def _truncate(df: DataFrame) -> DataFrame:
-        if checkpoint == "reliable":
-            if edges.sparkSession.sparkContext.getCheckpointDir() is None:
-                raise ValueError(
-                    "checkpoint='reliable' needs spark.sparkContext."
-                    "setCheckpointDir(<fault-tolerant path>) first"
-                )
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
+    reliable = checkpoint == "reliable"
 
     # Materialize the symmetrized edge list ONCE: it is joined every
     # round, and without this the upstream pair computation (e.g. the
@@ -111,7 +82,7 @@ def connected_components(
     # plans 2x the FileScans and 2x the pair pipeline's exchanges), so
     # a union would execute the upstream pair generator twice just to
     # emit each edge reversed.
-    sym = _truncate(
+    sym = _checkpoint(
         edges.select(
             F.explode(
                 F.array(
@@ -121,7 +92,8 @@ def connected_components(
             ).alias("__e")
         )
         .select("__e.u", "__e.v")
-        .distinct()
+        .distinct(),
+        reliable,
     )
     verts = sym.select(F.col("u").alias("node")).distinct()
     if nodes is not None:
@@ -181,34 +153,21 @@ def connected_components(
         new_labels = new_labels.observe(
             obs, F.count_if(F.col("comp") != F.col("old")).alias("changed")
         )
-        new_labels = _truncate(new_labels)
+        new_labels = _checkpoint(new_labels, reliable)
         changed = obs.get["changed"]
         # The new round is fully materialized (eager checkpoint + the
         # count action above); the previous round's blocks can never be
         # read again — free them now instead of waiting for GC.
-        if checkpoint == "local" and prev_ck is not None:
+        if not reliable and prev_ck is not None:
             free_local_checkpoint(prev_ck)
         prev_ck = new_labels
         labels = new_labels.select("node", "comp")
         if changed == 0:
             break
     # prev_ck is None only when max_iter=0 skipped the loop entirely —
-    # then the returned labels still derive from sym and neither may be
-    # freed.
-    if prev_ck is not None:
-        if checkpoint == "local":
-            free_local_checkpoint(sym)
-            if pins is not None:
-                pins.adopt(prev_ck, free_local_checkpoint)
-        elif pins is not None:
-            # reliable mode: the final frame is backed by checkpoint
-            # FILES (the fault-tolerance artifact — they outlive the
-            # scope by design; spark.cleaner.referenceTracking
-            # .cleanCheckpoints governs their lifetime). Register with a
-            # no-op releaser so the caller's scope accounting — adopt
-            # here, len()/release() there — behaves identically in both
-            # modes instead of silently skipping the registration.
-            pins.adopt(prev_ck, lambda df: None)
+    # then the returned labels still derive from sym, which must stay.
+    if not reliable and prev_ck is not None:
+        free_local_checkpoint(sym)
     return labels
 
 
@@ -254,16 +213,7 @@ def connected_components_star(
         raise ValueError(
             f"checkpoint must be 'local' or 'reliable', got {checkpoint!r}"
         )
-
-    def _truncate(df: DataFrame) -> DataFrame:
-        if checkpoint == "reliable":
-            if edges.sparkSession.sparkContext.getCheckpointDir() is None:
-                raise ValueError(
-                    "checkpoint='reliable' needs spark.sparkContext."
-                    "setCheckpointDir(<fault-tolerant path>) first"
-                )
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
+    reliable = checkpoint == "reliable"
 
     def _truncate_fp(df: DataFrame) -> tuple[DataFrame, tuple]:
         """Materialize a round's edge frame AND read its convergence
@@ -274,12 +224,13 @@ def connected_components_star(
         contracted graph is tiny; same fusion as the CC loop's changed
         count)."""
         obs = Observation()
-        ck = _truncate(
+        ck = _checkpoint(
             df.observe(
                 obs,
                 F.count(F.lit(1)).alias("n"),
                 F.bit_xor(F.xxhash64("u", "v")).alias("x"),
-            )
+            ),
+            reliable,
         )
         m = obs.get
         return ck, (m["n"], m["x"])
@@ -333,7 +284,6 @@ def connected_components_star(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    prev_ck: DataFrame | None = e
     for _ in range(max_iter):
         # the large-star result is materialized before small-star reads
         # it: small-star references its input twice (mins + the rewire
@@ -341,13 +291,11 @@ def connected_components_star(
         # twice per round (r14; same per-consumer recompute rule as the
         # CC loop's label checkpoints). The intermediate's blocks are
         # freed as soon as the round's result exists.
-        ls = _truncate(_large_star(e))
+        ls = _checkpoint(_large_star(e), reliable)
         nxt, nfp = _truncate_fp(_small_star(ls))
-        if checkpoint == "local":
+        if not reliable:
             free_local_checkpoint(ls)
-        if checkpoint == "local" and prev_ck is not None and prev_ck is not nxt:
-            free_local_checkpoint(prev_ck)
-        prev_ck = nxt
+            free_local_checkpoint(e)
         e = nxt
         if nfp == fp:
             break
@@ -383,7 +331,6 @@ def incremental_components(
     node_col: str = "node",
     comp_col: str = "comp",
     checkpoint: str = "local",
-    pins: PinScope | None = None,
 ) -> DataFrame:
     """Merge a batch of NEW edges into an existing min-label component
     labeling without recomputing the historical graph — the incremental
@@ -416,50 +363,34 @@ def incremental_components(
     the prefix-filtered jaccard chain at sf0.1). The edge blocks are
     freed as soon as the delta labels are materialized (nothing in the
     result reaches them); the labeling checkpoints BACK the returned
-    frame and are adopted into ``pins`` when a scope is passed, same
-    convention as ``connected_components``.
+    frame and are released with the open ``PinScope``, same as
+    ``connected_components``' final labels.
     """
     if checkpoint not in ("local", "reliable"):
         raise ValueError(
             f"checkpoint must be 'local' or 'reliable', got {checkpoint!r}"
         )
+    reliable = checkpoint == "reliable"
 
-    def _truncate(df: DataFrame) -> DataFrame:
-        if checkpoint == "reliable":
-            if df.sparkSession.sparkContext.getCheckpointDir() is None:
-                raise ValueError(
-                    "checkpoint='reliable' needs spark.sparkContext."
-                    "setCheckpointDir(<fault-tolerant path>) first"
-                )
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    def _register(df: DataFrame) -> None:
-        if pins is None:
-            return
-        if checkpoint == "local":
-            pins.adopt(df, free_local_checkpoint)
-        else:  # reliable: files outlive the scope by design (see CC)
-            pins.adopt(df, lambda frame: None)
-
-    edges = _truncate(
-        new_edges.select(F.col(src).alias("__ea"), F.col(dst).alias("__eb"))
+    edges = _checkpoint(
+        new_edges.select(F.col(src).alias("__ea"), F.col(dst).alias("__eb")),
+        reliable,
     )
-    base = _truncate(
+    base = _checkpoint(
         old_labels.select(
             F.col(node_col).alias("node"), F.col(comp_col).alias("comp")
-        )
+        ),
+        reliable,
     )
     # endpoints never seen before: they label themselves (singleton
     # components) before the merge, exactly as CC would seed them
-    new_nodes = _truncate(
+    new_nodes = _checkpoint(
         edges.select(F.col("__ea").alias("node"))
         .unionByName(edges.select(F.col("__eb").alias("node")))
         .distinct()
-        .join(base.select("node"), "node", "left_anti")
+        .join(base.select("node"), "node", "left_anti"),
+        reliable,
     )
-    _register(base)
-    _register(new_nodes)
     # lazy union of two MATERIALIZED frames: cheap per consumer
     labeled = base.unionByName(
         new_nodes.select("node", F.col("node").alias("comp"))
@@ -474,11 +405,11 @@ def incremental_components(
         .filter(F.col("id_a") != F.col("id_b"))
     )
     delta = connected_components(
-        contracted, "id_a", "id_b", checkpoint=checkpoint, pins=pins
+        contracted, "id_a", "id_b", checkpoint=checkpoint
     ).select(F.col("node").alias("comp"), F.col("comp").alias("__merged"))
     # delta is fully materialized by connected_components' eager final
     # checkpoint — the batch-edge blocks are unreachable from here on
-    if checkpoint == "local":
+    if not reliable:
         free_local_checkpoint(edges)
 
     return labeled.join(delta, "comp", "left").select(

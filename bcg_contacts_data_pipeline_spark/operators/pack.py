@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from bcg_contacts_data_pipeline_spark.operators.pins import PinScope, pin
+from bcg_contacts_data_pipeline_spark.operators.pins import pin
 
 
 def global_running_sum(
@@ -30,7 +30,6 @@ def global_running_sum(
     order_by: Column | str,
     out_name: str = "running_sum",
     exclusive: bool = True,
-    pins: PinScope | None = None,
 ) -> DataFrame:
     """Append the global running sum of ``value`` under a TOTAL order
     ``order_by`` (caller guarantees uniqueness — ties would make the
@@ -41,17 +40,14 @@ def global_running_sum(
     the input. The persist is load-bearing for the same reason as there
     (range-boundary sampling must not be recomputed differently later) —
     and for the same reason it CANNOT be unpersisted before the caller
-    materializes the result. Pass ``pins`` (a PinScope) to release it
-    exactly then; without one it lives until ``clearCache()`` (legacy
-    contract, same as renumber).
+    materializes the result (the open PinScope releases it then).
     """
     v = F.col(value) if isinstance(value, str) else value
     o = F.col(order_by) if isinstance(order_by, str) else order_by
     parted = pin(
         df.select("*", v.cast("long").alias("__v"))
         .repartitionByRange(o)
-        .select("*", F.spark_partition_id().alias("__pid")),
-        pins,
+        .select("*", F.spark_partition_id().alias("__pid"))
     )
     sums = parted.groupBy("__pid").agg(F.sum("__v").alias("s")).collect()
     offsets = {}
@@ -86,14 +82,13 @@ def pack_shards(
     size: Column | str,
     budget: int,
     shard_name: str = "shard_id",
-    pins: PinScope | None = None,
 ) -> DataFrame:
     """Assign each row a shard id so consecutive rows (in ``order_by``
     order) fill each shard to ~``budget`` size units. A row larger than
     the budget gets its own shard(s) worth of space — contiguity is
     preserved, nothing is split or dropped."""
     with_sum = global_running_sum(
-        df, size, order_by, out_name="__before", exclusive=True, pins=pins
+        df, size, order_by, out_name="__before", exclusive=True
     )
     # Integer `div`, not float `/` + cast: the running sum is a long that
     # can exceed 2^53 at corpus scale, where double division rounds and a

@@ -1,76 +1,132 @@
-"""Scoped persist pins — targeted release for operators that must cache.
+"""Scoped materialization — the one module that persists, checkpoints
+and releases frames.
 
-Several operators persist an intermediate frame as part of their
-correctness contract (renumber / global_running_sum freeze a sampled
-range partitioning; the LSH operators share signature frames between
-band-bucketing and verify). Those pins must survive until the CALLER
-materializes the operator's output — the operator itself can never know
-when that is — so historically they lived until `clearCache()`, which in
-a long-lived session running many pipelines is a slow storage-memory
-leak (advisor flag, round 4).
+Several operators materialize an intermediate frame as part of their
+correctness or cost contract: renumber / global_running_sum persist a
+frame to freeze a sampled range partitioning, the LSH operators share
+signature frames between band-bucketing and verify, and the iterative
+operators (connected components, PageRank hops) checkpoint every round
+to truncate lineage. Those frames must survive until the CALLER has
+materialized the operator's output — the operator can never know when
+that is — and in a long-lived session serving many queries a frame
+that outlives its query is a storage-memory leak.
 
-`PinScope` is the handle that closes that loop: the caller owns one,
-passes it down, and releases exactly the pins its plan created once its
-sinks have run — no session-wide `clearCache()`, no foreign caches
-touched. Operators accept ``pins=None`` and fall back to the old
-session-lifetime behavior so short-lived callers (bench, tests, the
-driver's one-shot queries) need no ceremony.
+The contract is ambient. A caller opens a scope around a query's build
+and its sinks::
+
+    with PinScope():
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+and every :func:`pin` and :func:`checkpoint` run while the scope is open
+registers its frame there; leaving the block releases exactly those
+frames (persists unpersisted, local-checkpoint blocks freed). No
+session-wide ``clearCache()``, no foreign caches touched, and no
+operator takes a scope argument. Scopes nest; the innermost open one
+collects.
+
+With no scope open, ``pin`` and ``checkpoint`` fall back to the
+untracked session-lifetime behavior: a persist lives until
+``clearCache()``, a checkpoint's blocks until Spark's ContextCleaner
+collects them. Short-lived callers that open none (``tools/plan_report``,
+one-shot registry queries) pay no ceremony. Callers that must stay lazy
+without a scope ask :func:`current_scope`.
 """
 
 from __future__ import annotations
 
+from contextvars import ContextVar
+
 from pyspark.sql import DataFrame
+
+_CURRENT: ContextVar["PinScope | None"] = ContextVar("pin_scope", default=None)
+
+
+def free_local_checkpoint(df: DataFrame) -> None:
+    """Best-effort release of a ``localCheckpoint``'s materialized blocks.
+
+    ``DataFrame.unpersist`` only touches the SQL cache; a checkpoint's
+    blocks belong to the underlying RDD, reachable through the
+    ``LogicalRDD`` plan node. Spark's ContextCleaner would free them
+    eventually (when the JVM-side RDD is garbage collected), but an
+    iterative operator that checkpoints per round should not hold every
+    round's blocks until GC. Freeing makes the frame UNRECOMPUTABLE
+    (lineage was truncated) — only call once nothing will read it again.
+    A second free is a no-op. Guarded: the accessor path is
+    Spark-internal, so any mismatch degrades to the ContextCleaner
+    behavior instead of failing the job.
+    """
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:
+        pass
+
+
+def _keep(df: DataFrame) -> None:
+    """Reliable-checkpoint files are the fault-tolerance artifact: they
+    outlive the scope by design (``spark.cleaner.referenceTracking
+    .cleanCheckpoints`` governs them), so release leaves them alone."""
 
 
 class PinScope:
-    """Collects the frames an operator pins so the caller can unpersist
-    exactly those once its outputs are materialized.
-
-    Usable as a context manager; pins release on exit. Release is
-    idempotent and non-blocking (executors drop blocks asynchronously).
-    """
+    """Collects the frames materialized while it is open and releases
+    exactly those on exit. Release is idempotent and non-blocking
+    (executors drop blocks asynchronously)."""
 
     def __init__(self) -> None:
-        self._frames: list[tuple[DataFrame, object | None]] = []
-
-    def pin(self, df: DataFrame) -> DataFrame:
-        """Persist ``df`` (default MEMORY_AND_DISK, same as .cache())
-        and remember it for release."""
-        df.persist()
-        self._frames.append((df, None))
-        return df
-
-    def adopt(self, df: DataFrame, releaser=None) -> DataFrame:
-        """Register an ALREADY-materialized frame (e.g. a
-        ``localCheckpoint``) for release without re-persisting it.
-        ``releaser(df)`` is called at release time when given (a
-        checkpointed frame's blocks are not freed by
-        ``DataFrame.unpersist`` — the owner passes the routine that
-        does); defaults to ``df.unpersist``."""
-        self._frames.append((df, releaser))
-        return df
+        self._frames: list[tuple[DataFrame, object]] = []
+        self._token = None
 
     def __len__(self) -> int:
         return len(self._frames)
 
-    def release(self, blocking: bool = False) -> None:
+    def release(self) -> None:
         frames, self._frames = self._frames, []
         for df, releaser in frames:
-            if releaser is not None:
-                releaser(df)
-            else:
-                df.unpersist(blocking=blocking)
+            releaser(df)
 
     def __enter__(self) -> "PinScope":
+        self._token = _CURRENT.set(self)
         return self
 
     def __exit__(self, *exc) -> None:
+        _CURRENT.reset(self._token)
         self.release()
 
 
-def pin(df: DataFrame, pins: PinScope | None) -> DataFrame:
-    """Persist ``df`` into ``pins`` when a scope is given, else with the
-    legacy session-lifetime contract (caller releases via clearCache)."""
-    if pins is not None:
-        return pins.pin(df)
-    return df.persist()
+def current_scope() -> PinScope | None:
+    """The innermost open scope, or None."""
+    return _CURRENT.get()
+
+
+def _register(df: DataFrame, releaser) -> DataFrame:
+    scope = current_scope()
+    if scope is not None:
+        scope._frames.append((df, releaser))
+    return df
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK, same as ``.cache()``) into the
+    open scope; with none open it lives until ``clearCache()``."""
+    return _register(df.persist(), DataFrame.unpersist)
+
+
+def checkpoint(df: DataFrame, reliable: bool = False) -> DataFrame:
+    """Eagerly materialize ``df`` and truncate its lineage, registered in
+    the open scope.
+
+    - ``reliable=False``: ``localCheckpoint`` — executor-local blocks,
+      no configuration needed; a lost executor fails the job (no
+      lineage left to recompute from). Release frees the blocks.
+    - ``reliable=True``: ``checkpoint`` to the fault-tolerant FS set via
+      ``spark.sparkContext.setCheckpointDir`` (required; ValueError
+      otherwise). The files survive release.
+    """
+    if not reliable:
+        return _register(df.localCheckpoint(eager=True), free_local_checkpoint)
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        raise ValueError(
+            "checkpoint='reliable' needs spark.sparkContext."
+            "setCheckpointDir(<fault-tolerant path>) first"
+        )
+    return _register(df.checkpoint(eager=True), _keep)

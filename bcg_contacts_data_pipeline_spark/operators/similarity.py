@@ -39,7 +39,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bcg_contacts_data_pipeline_spark.operators.pins import PinScope, pin
+from bcg_contacts_data_pipeline_spark.operators.pins import checkpoint, pin
 
 from bcg_contacts_data_pipeline_spark.functions.text import ngram_hashes, tokens
 from bcg_contacts_data_pipeline_spark.functions.vectors import dot
@@ -111,7 +111,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.2,
     max_df: int | None = None,
-    pins: PinScope | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing >= 1 shingle.
 
@@ -143,10 +142,9 @@ def ngram_jaccard_pairs(
       per-row tokenize + hash + n-gram work runs once per consumer. It
       stays unmaterialized: r6 measured recompute beating a persist of
       the exploded frame, and r15's eager checkpoint of the per-doc
-      hash arrays (a checkpoint per call, leaked without ``pins``) left
-      the uncapped sf0.1 time flat (3.48 s with it, 3.49 s without,
-      medians of 3 and 4 runs). The capped callers pay for it: four
-      passes instead of one, 36.5 -> 41.0 s over the seven ``max_df``
+      hash arrays left the uncapped sf0.1 time flat (3.48 s with it,
+      3.49 s without, medians of 3 and 4 runs). The capped callers pay
+      for it: four passes instead of one, 36.5 -> 41.0 s over the seven ``max_df``
       callers plus ``ngram_jaccard`` (4-core host, 3 vs 4 runs). What must
       not happen is a hash expression in a filter below the spreading
       exchange: ``shingle_hash_frame`` explodes its gram expression
@@ -165,24 +163,12 @@ def ngram_jaccard_pairs(
         # so checkpointing the small side is the scale-correct trade.
         # The large KEPT frame deliberately stays unmaterialized (the r6
         # measurement: persisting the exploded frame loses to re-scan).
-        hot = (
+        hot = checkpoint(
             shingles.groupBy("sh")
             .agg(F.count(F.lit(1)).alias("__df"))
             .filter(F.col("__df") > max_df)
             .select("sh")
-            .localCheckpoint(eager=True)
         )
-        if pins is not None:
-            # a localCheckpoint's blocks are not released by unpersist —
-            # register the freeing routine so a scoped caller returns
-            # the session to its pre-call persistent-RDD count
-            # (tests/test_pins.py; found by the r14 continuation's
-            # fresh-session run of that gate)
-            from bcg_contacts_data_pipeline_spark.operators.graph import (
-                free_local_checkpoint,
-            )
-
-            pins.adopt(hot, free_local_checkpoint)
         shingles = shingles.join(hot, "sh", "left_anti")
     sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
 
@@ -373,7 +359,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     seed: int = 42,
     verify_threshold: float | None = 0.5,
-    pins: PinScope | None = None,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Banded-LSH candidate pairs + estimated Jaccard.
@@ -398,7 +383,6 @@ def minhash_lsh_pairs(
         num_hashes=num_hashes,
         bands=bands,
         verify_threshold=verify_threshold,
-        pins=pins,
         max_bucket=max_bucket,
     )
 
@@ -409,7 +393,6 @@ def minhash_lsh_pairs_from_sigs(
     num_hashes: int = 64,
     bands: int = 16,
     verify_threshold: float | None = 0.5,
-    pins: PinScope | None = None,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """``minhash_lsh_pairs`` over a PRECOMPUTED ``(id, sigs)`` frame —
@@ -427,7 +410,7 @@ def minhash_lsh_pairs_from_sigs(
     scan it) — the caching contract documented on ``minhash_lsh_join``
     applies."""
     assert num_hashes % bands == 0
-    sigs = pin(sigs, pins)
+    sigs = pin(sigs)
     buckets = _band_buckets(sigs, id_col, num_hashes, bands)
     if max_bucket is not None:
         buckets = _drop_hot_buckets(buckets, ["band", "bh"], max_bucket)
@@ -516,7 +499,6 @@ def minhash_lsh_join(
     bands: int = 16,
     seed: int = 42,
     verify_threshold: float | None = 0.5,
-    pins: PinScope | None = None,
 ) -> DataFrame:
     """Cross-corpus banded-LSH similarity JOIN: (id_a from left, id_b
     from right, est_jaccard) for pairs colliding on any full band.
@@ -531,12 +513,8 @@ def minhash_lsh_join(
 
     Caching contract (also applies to minhash_lsh_pairs/simhash_pairs):
     the signature frames are persisted because band-bucketing and the
-    verify stage both scan them. Pass ``pins`` (a
-    operators.pins.PinScope) to get a targeted release handle — release
-    after the output is materialized; with ``pins=None`` the pin lives
-    until the session drops it (long-lived callers then need
-    ``clearCache()`` between corpora; storage-memory eviction makes the
-    leak a slowdown, not an OOM, but it is real on a shared cluster).
+    verify stage both scan them (``operators.pins.pin``: released with
+    the open ``PinScope``).
     """
     return minhash_lsh_join_from_sigs(
         minhash_signatures(left, left_id, left_text, n, num_hashes, seed),
@@ -546,7 +524,6 @@ def minhash_lsh_join(
         num_hashes=num_hashes,
         bands=bands,
         verify_threshold=verify_threshold,
-        pins=pins,
     )
 
 
@@ -558,7 +535,6 @@ def minhash_lsh_join_from_sigs(
     num_hashes: int = 64,
     bands: int = 16,
     verify_threshold: float | None = 0.5,
-    pins: PinScope | None = None,
 ) -> DataFrame:
     """``minhash_lsh_join`` over PRECOMPUTED signature frames. The
     caller guarantees both frames come from the same permutation
@@ -572,8 +548,8 @@ def minhash_lsh_join_from_sigs(
     filtered text — and scans the pinned left signatures instead of
     re-shingling the eval corpus (decontaminate's shape)."""
     assert num_hashes % bands == 0
-    sl = pin(sigs_a, pins)
-    sr = pin(sigs_b, pins)
+    sl = pin(sigs_a)
+    sr = pin(sigs_b)
     bl = _band_buckets(sl, left_id, num_hashes, bands).select(
         F.col(left_id).alias("id_a"), "band", "bh"
     )
@@ -623,7 +599,6 @@ def simhash_pairs(
     text: Column | str,
     max_hamming: int = 7,
     bands: int = 8,
-    pins: PinScope | None = None,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: band the 64-bit signature into ``bands``
@@ -648,7 +623,6 @@ def simhash_pairs(
         id_col,
         max_hamming=max_hamming,
         bands=bands,
-        pins=pins,
         max_bucket=max_bucket,
     )
 
@@ -658,7 +632,6 @@ def simhash_pairs_from_sigs(
     id_col: str,
     max_hamming: int = 7,
     bands: int = 8,
-    pins: PinScope | None = None,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """``simhash_pairs`` over a PRECOMPUTED ``(id, simhash)`` frame —
@@ -672,7 +645,7 @@ def simhash_pairs_from_sigs(
     mask = (1 << width) - 1
     # cache: both sides of the candidate self-join scan the signatures;
     # without it the token-hash/bit-aggregation pipeline runs twice.
-    sims = pin(sims, pins)
+    sims = pin(sims)
     slices = sims.select(
         F.col(id_col),
         F.col("simhash"),
@@ -1608,7 +1581,6 @@ def prefix_filter_pairs(
     n: int = 3,
     t_num: int = 1,
     t_den: int = 2,
-    pins=None,
     probe_pred=None,
 ) -> DataFrame:
     """Exact set-similarity join via PREFIX FILTERING (the AllPairs /
@@ -1661,8 +1633,6 @@ def prefix_filter_pairs(
     (the prefix theorem holds for ANY fixed total order, so a stale df
     snapshot costs candidate-list length, never recall).
     """
-    from bcg_contacts_data_pipeline_spark.operators.pins import pin
-
     # t_num/t_den are interpolated into integer DIV expressions and set
     # the prefix length: reject impossible thresholds loudly instead of
     # surfacing them as a negative-length slice or a divide-by-zero
@@ -1709,8 +1679,7 @@ def prefix_filter_pairs(
             F.col(id_col),
             F.transform("__arr", lambda x: x["sh"]).alias("sh_arr"),
             F.size("__arr").alias("sz"),
-        ),
-        pins,
+        )
     )
     # prefix length p = sz - ceil(t*sz) + 1, integer-exact.
     p = (

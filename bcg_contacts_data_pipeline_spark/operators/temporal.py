@@ -183,7 +183,6 @@ def gapfill_forward_fill(
     ts_col: str,
     value_col: str,
     unit: str = "hour",
-    pins=None,
 ) -> DataFrame:
     """Densify each key's series to every ``unit`` between its first and
     last observation, carrying the last observed per-unit sum across
@@ -204,8 +203,7 @@ def gapfill_forward_fill(
     references on this engine (the verified q15/q11 finding) — so it is
     pinned: the RAW events table is scanned exactly once, and what
     persists is the aggregated frame (one row per key-period), not the
-    input. Pass a ``PinScope`` to release it after your sinks run;
-    ``pins=None`` keeps the one-shot session-lifetime contract.
+    input.
 
     Output: (<key_col>, <unit>, n_events, v_filled, is_gap).
     """
@@ -229,8 +227,7 @@ def gapfill_forward_fill(
         .agg(
             F.count(F.lit(1)).alias("__n"),
             F.sum(F.col(value_col).cast("decimal(18,6)")).alias("__v"),
-        ),
-        pins,
+        )
     )
     # the dense axis descends from `agg` itself, so its columns get
     # fresh names — a same-name self-join would be ambiguous to resolve

@@ -69,32 +69,27 @@ def run_cli(argv: list[str] | None = None, spark: SparkSession | None = None) ->
             .config("spark.sql.adaptive.enabled", "true")
             .getOrCreate()
         )
-    # Release owned resources even when a stage throws: without the
-    # finally, an embedded caller (spark=None) would leak the
-    # session/JVM, any frame the run body persisted, AND the renumber
-    # pins the dedup stage creates (PinScope). Release happens strictly
-    # after every sink has materialized (the _run body finishes all its
-    # writes/counts before returning), so the load-bearing persists are
-    # gone by the time control returns to an embedded caller — pin count
-    # back to zero per run, no session-wide clearCache needed.
+    # Release owned resources even when a stage throws: every frame the
+    # run persists or checkpoints registers in the run's PinScope, and
+    # the scope closes strictly after every sink has materialized (the
+    # _run body finishes all its writes/counts before returning) — pin
+    # count back to zero per run, no session-wide clearCache needed; an
+    # owned session/JVM is stopped too.
     from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
 
-    persisted: list = []
-    pins = PinScope()
     try:
-        return _run(args, spark, persisted, pins)
+        with PinScope():
+            return _run(args, spark)
     finally:
-        for df in persisted:
-            df.unpersist()
-        pins.release()
         if own_spark:
             spark.stop()
 
 
-def _run(args, spark: SparkSession, persisted: list, pins=None) -> int:
+def _run(args, spark: SparkSession) -> int:
     from bcg_contacts_data_pipeline_spark.io import readers as R
     from bcg_contacts_data_pipeline_spark.io import registries as REG
     from bcg_contacts_data_pipeline_spark.io import writers as W
+    from bcg_contacts_data_pipeline_spark.operators.pins import pin
     from bcg_contacts_data_pipeline_spark.plans import contacts as C
 
     t0 = time.time()
@@ -156,7 +151,6 @@ def _run(args, spark: SparkSession, persisted: list, pins=None) -> int:
         sources=sources,
         mailchimp=mailchimp,
         merge_empty_keys=args.merge_empty_keys,
-        pins=pins,
     )
     cleaned_path = f"{args.out_dir}/MergedDatabase.tsv"
     # the row count rides the write job via the Observation API — the
@@ -177,8 +171,7 @@ def _run(args, spark: SparkSession, persisted: list, pins=None) -> int:
 
     step(i, n_steps, "validate + reports")
     s = time.time()
-    errors = result.errors.persist()
-    persisted.append(errors)
+    errors = pin(result.errors)
     err_path = f"{args.out_dir}/validation_errors.json"
     # document and critical-error counts ride the report write (same
     # Observation pattern as the cleaned write); the critical count is

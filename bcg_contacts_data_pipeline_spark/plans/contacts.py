@@ -1,8 +1,8 @@
 """The complete contact-unification pipeline — the reference's whole
 run.py workflow (fill-missing -> clean -> dedup -> validate, plus the
 optional Mailchimp stage 0) as composable DataFrame stages, files only
-at the edges. Each stage is lazy; when the caller passes a ``PinScope``
-the enrichment stage boundaries are checkpointed (see
+at the edges. Each stage is lazy; when the caller has a ``PinScope``
+open the enrichment stage boundaries are checkpointed into it (see
 ``_stage_boundary`` for why), otherwise the whole run is one plan.
 
 Reference parity map (cites into /root/reference):
@@ -46,8 +46,7 @@ from bcg_contacts_data_pipeline_spark.operators.enrich import (
     kofn_enrich,
     two_key_enrich,
 )
-from bcg_contacts_data_pipeline_spark.operators.graph import free_local_checkpoint
-from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
+from bcg_contacts_data_pipeline_spark.operators.pins import checkpoint, current_scope
 
 #: The master contact schema — output/MergedDatabase.tsv header, row 1.
 MASTER_COLUMNS = (
@@ -110,11 +109,11 @@ def _with_row_id(df: DataFrame) -> DataFrame:
     return df.withColumn("__row_id", F.expr(f"xxhash64(struct({cols}))"))
 
 
-def _stage_boundary(df: DataFrame, pins: PinScope | None) -> DataFrame:
+def _stage_boundary(df: DataFrame) -> DataFrame:
     """Materialize an enrichment stage's target frame once (eager
-    ``localCheckpoint``, adopted into ``pins``) so every later plan
-    starts from a leaf; without a scope, return ``df`` unchanged (lazy,
-    and nothing for an unscoped caller to leak).
+    ``localCheckpoint`` into the open ``PinScope``) so every later plan
+    starts from a leaf; with no scope open, return ``df`` unchanged
+    (lazy, and nothing for an unscoped caller to leak).
 
     Why: each enrichment stage reads its target three times (the k-of-n
     probe, the enriched-key join, the splice join back), and the stages
@@ -126,9 +125,7 @@ def _stage_boundary(df: DataFrame, pins: PinScope | None) -> DataFrame:
     measured too and loses (CLI on the golden fixture, 4-core host:
     48.6 s vs 30.3 s): the cache spares execution, but the analyzer
     still walks the full tree on every action."""
-    if pins is None:
-        return df
-    return pins.adopt(df.localCheckpoint(eager=True), free_local_checkpoint)
+    return df if current_scope() is None else checkpoint(df)
 
 
 def conform_to_master(df: DataFrame) -> DataFrame:
@@ -215,7 +212,6 @@ def fill_missing(
     source: DataFrame,
     fill_fields: dict[str, str] | None = None,
     with_change_log: bool = True,
-    pins: PinScope | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
     """fill_missing_contacts.py semantics: fill firstname/lastname/
     fullname/mobile (SURVEY J2 fill set) from the first source row
@@ -224,9 +220,6 @@ def fill_missing(
     ``source`` columns must be pre-mapped to s_firstname, s_lastname,
     s_fullname, s_email, s_mobile + a numeric ``sid`` order column (use
     io.readers.SourceRegistry for raw files).
-
-    ``pins``: when given, the id-tagged master is checkpointed into it
-    (``_stage_boundary``); release it after the outputs are written.
     """
     fill_fields = fill_fields or {
         "firstname": "s_firstname",
@@ -234,7 +227,7 @@ def fill_missing(
         "fullname": "s_fullname",
         "mobile": "s_mobile",
     }
-    master_with_id = _stage_boundary(_with_row_id(master), pins)
+    master_with_id = _stage_boundary(_with_row_id(master))
     enriched, log = kofn_enrich(
         master_with_id,
         source,
@@ -264,18 +257,18 @@ def fill_missing(
 
 
 def mailchimp_enrich(
-    master: DataFrame, mailchimp: DataFrame, pins: PinScope | None = None
+    master: DataFrame, mailchimp: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """merge_contacts_kindaworks.py: fill missing email on (name, phone)
     match; fill missing mobile on (name, email) match. Two strict two-key
-    passes against a broadcast dimension. With ``pins``, each pass's
-    target is checkpointed into it (``_stage_boundary``)."""
+    passes against a broadcast dimension. Each pass's target is a
+    ``_stage_boundary``."""
     mc = (
         mailchimp
         if "sid" in mailchimp.columns
-        else renumber(mailchimp, [F.col(c) for c in mailchimp.columns], seq_name="sid", pins=pins)
+        else renumber(mailchimp, [F.col(c) for c in mailchimp.columns], seq_name="sid")
     )
-    m1 = _stage_boundary(_with_row_id(master), pins)
+    m1 = _stage_boundary(_with_row_id(master))
 
     name_t = N.norm_ws(N.full_name("firstname", "lastname", "fullname", "name"))
     name_s = N.norm_ws(N.full_name("s_firstname", "s_lastname", "s_fullname"))
@@ -295,8 +288,7 @@ def mailchimp_enrich(
         m1.drop("email").join(
             email_fill.select("__row_id", "email").dropDuplicates(["__row_id"]),
             "__row_id",
-        ),
-        pins,
+        )
     )
     mobile_fill, log2 = two_key_enrich(
         m2,
@@ -321,7 +313,7 @@ def mailchimp_enrich(
 
 
 def dedup_contacts(
-    df: DataFrame, merge_empty_keys: bool = False, pins: PinScope | None = None
+    df: DataFrame, merge_empty_keys: bool = False
 ) -> DataFrame:
     """clean_contacts.py:158-236: derive the dedup key (email else
     lower(fullname)-mobile), merge duplicate groups most-complete-wins
@@ -371,7 +363,6 @@ def dedup_contacts(
         order,
         seq_name="seqno",
         scalable=True,
-        pins=pins,
     )
     return renumbered.select("seqno", *[c for c in MASTER_COLUMNS if c != "seqno"], "group_size")
 
@@ -449,22 +440,11 @@ def run_pipeline(
     sources: DataFrame | None = None,
     mailchimp: DataFrame | None = None,
     merge_empty_keys: bool = False,
-    pins: PinScope | None = None,
     side_outputs: bool = True,
 ) -> PipelineResult:
     """The whole reference pipeline:
     stage 0 (optional) mailchimp enrich -> stage 1 fill-missing ->
     stage 2 clean+dedup -> stage 3 validate.
-
-    ``pins``: scope for the enrichment stage-boundary checkpoints
-    (``_stage_boundary``: the stage targets are materialized eagerly
-    here, so every later action plans from a leaf instead of the
-    multiplied splice-join tree) and for the renumber persists the
-    dedup stage creates. The CLI releases it after every sink has run,
-    so embedded callers running many pipelines in one session don't
-    accumulate cached frames. Without a scope the enrichment stages
-    stay one lazy plan (the renumber still runs its eager offset pass,
-    pinned for the session's lifetime).
 
     ``side_outputs=False`` skips CONSTRUCTING the errors frame and the
     fill change log (returned as None) — plan-BUILD cost, not execution
@@ -475,11 +455,9 @@ def run_pipeline(
     df = conform_to_master(master)
     mc_log = fill_log = None
     if mailchimp is not None:
-        df, mc_log = mailchimp_enrich(df, mailchimp, pins=pins)
+        df, mc_log = mailchimp_enrich(df, mailchimp)
     if sources is not None:
-        df, fill_log = fill_missing(
-            df, sources, with_change_log=side_outputs, pins=pins
-        )
-    cleaned = dedup_contacts(clean_fields(df), merge_empty_keys=merge_empty_keys, pins=pins)
+        df, fill_log = fill_missing(df, sources, with_change_log=side_outputs)
+    cleaned = dedup_contacts(clean_fields(df), merge_empty_keys=merge_empty_keys)
     errors = validate_contacts(cleaned) if side_outputs else None
     return PipelineResult(cleaned, errors, fill_log, mc_log)

@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
 from bcg_contacts_data_pipeline_spark.plans.queries import (
     _dec,
     _events,
@@ -1003,9 +1002,8 @@ FROM labeled GROUP BY 1
 """
 
 
-def curation_frame(
-    spark: SparkSession, sf_dir: str, pins: "PinScope | None" = None
-) -> DataFrame:
+@register("curation_pipeline_e2e", oracle=_CURATION_ORACLE)
+def curation_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The complete training-data curation pipeline as one composed
     plan — the LLM-data twin of contacts_pipeline_e2e: quality gates
     (length, word count, distinct-word ratio; single narrow projection)
@@ -1024,9 +1022,7 @@ def curation_frame(
     building this frame runs those rounds. The gated `kept` subtree
     feeds three consumers (pair generation, CC vertex set, the semi
     join) and is persisted once rather than re-running the regex gates
-    per consumer; pass a ``PinScope`` to release that persist once your
-    sinks have run (``pins=None`` keeps the legacy session-lifetime
-    contract the one-shot driver/bench callers rely on)."""
+    per consumer."""
     from bcg_contacts_data_pipeline_spark.functions.sampling import (
         assign_split,
     )
@@ -1051,20 +1047,18 @@ def curation_frame(
 
     # Persisted once: three consumers below (pair generation, the CC
     # vertex set, the final semi join) would otherwise each re-scan
-    # documents and re-run the regex gates. Scoped when the caller
-    # passes a PinScope; session-lifetime otherwise.
+    # documents and re-run the regex gates.
     kept = pin(
         docs.filter(
             (F.col("n_chars") >= 100) & (F.size(words) >= 20) & (ratio >= 0.45)
-        ).select("doc_id", "text"),
-        pins,
+        ).select("doc_id", "text")
     )
 
     pairs = ngram_jaccard_pairs(
-        kept, "doc_id", "text", n=3, threshold=0.2, max_df=100, pins=pins
+        kept, "doc_id", "text", n=3, threshold=0.2, max_df=100
     )
     comp = connected_components(
-        pairs, "id_a", "id_b", nodes=kept, node_col="doc_id", pins=pins
+        pairs, "id_a", "id_b", nodes=kept, node_col="doc_id"
     )
     reps = comp.filter(F.col("comp") == F.col("node")).select(
         F.col("node").alias("doc_id")
@@ -1090,16 +1084,6 @@ def curation_frame(
         F.col("total_chars").cast("long").alias("total_chars"),
         F.expr("(total_chars - _last) div 5000 + 1").cast("long").alias("n_shards"),
     )
-
-
-@register("curation_pipeline_e2e", oracle=_CURATION_ORACLE)
-def q_curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered one-shot form of :func:`curation_frame` (``pins=None``:
-    the driver materializes once and the session exits, so the single
-    session-lifetime pin is bounded; long-lived callers invoke
-    ``curation_frame`` directly with their own ``PinScope`` — asserted
-    released-to-zero in tests/test_pins.py)."""
-    return curation_frame(spark, sf_dir, pins=None)
 
 
 @register(

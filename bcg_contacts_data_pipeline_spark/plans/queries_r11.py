@@ -529,7 +529,7 @@ _SHUFFLE_SHARDS = 16
     FROM ranked ORDER BY doc_id
     """,
 )
-def q_corpus_shuffle(spark: SparkSession, sf_dir: str, pins=None) -> DataFrame:
+def q_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic seeded corpus shuffle + round-robin shard
     assignment — the data-ordering step every pretraining run performs
     before writing epoch shards. The permutation key is
@@ -545,13 +545,7 @@ def q_corpus_shuffle(spark: SparkSession, sf_dir: str, pins=None) -> DataFrame:
     ID-only projection: the text payload never rides through the
     shuffle — a writer joins shard assignments back to payloads, which
     at 100 TB is one co-partitioned join instead of range-shuffling the
-    corpus bytes.
-
-    ``pins``: forwarded to ``renumber``'s load-bearing persist — pass a
-    PinScope for a targeted release in long-lived sessions; ``None``
-    keeps the legacy session-lifetime pin the one-shot driver/bench
-    callers rely on (released by clearCache), same contract as
-    ``q_crawl_curation_e2e``."""
+    corpus bytes."""
     from bcg_contacts_data_pipeline_spark.operators.dedup import renumber
 
     docs = _t(spark, sf_dir, "documents")
@@ -561,7 +555,7 @@ def q_corpus_shuffle(spark: SparkSession, sf_dir: str, pins=None) -> DataFrame:
             F.concat(F.lit(_SHUFFLE_SEED), F.col("doc_id").cast("string"))
         ).alias("__k"),
     )
-    out = renumber(keyed, ["__k", "doc_id"], seq_name="pos", pins=pins)
+    out = renumber(keyed, ["__k", "doc_id"], seq_name="pos")
     return out.select(
         "doc_id",
         F.col("pos").cast("long").alias("pos"),
@@ -703,9 +697,7 @@ _CRAWL_MIN_WORDS = 24  # quality gate on the paragraph-deduped text
     ORDER BY doc_id
     """,
 )
-def q_crawl_curation_e2e(
-    spark: SparkSession, sf_dir: str, pins=None
-) -> DataFrame:
+def q_crawl_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The crawl-curation ladder END-TO-END as one Spark plan — what a
     user actually runs on a crawl snapshot, certifying the LEG HANDOFFS
     the standalone queries cannot see (URL survivors feeding paragraph
@@ -753,8 +745,6 @@ def q_crawl_curation_e2e(
     # three consumers (the paragraph explode, its spine, the host join)
     # would otherwise each re-run the scan + URL-winner aggregation —
     # exchange reuse is not guaranteed across AQE-replanned branches.
-    # pins=None keeps the legacy session-lifetime contract the one-shot
-    # driver/bench callers rely on (released by clearCache).
     surv = pin(
         canon.groupBy("curl")
         .agg(F.min_by(F.struct("doc_id", "text"), F.col("doc_id")).alias("w"))
@@ -762,8 +752,7 @@ def q_crawl_curation_e2e(
             F.col("w.doc_id").alias("doc_id"),
             F.col("w.text").alias("text"),
             url_host("curl").alias("host"),
-        ),
-        pins,
+        )
     )
     # leg 2: corpus-wide paragraph dedup over the survivors
     paras = paragraph_dedup(surv, "doc_id", "text", words_per_para=_PARA_K)

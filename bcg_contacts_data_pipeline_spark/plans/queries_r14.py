@@ -347,8 +347,7 @@ def q_curation_pipeline_v2_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = pin(
         docs.filter(
             (F.col("n_chars") >= 100) & (F.size(words) >= 20) & (ratio >= 0.45)
-        ).select("doc_id", "text"),
-        None,
+        ).select("doc_id", "text")
     )
 
     rep_ok = (
@@ -357,7 +356,7 @@ def q_curation_pipeline_v2_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     # three consumers inside substring_trim (2x gram branches + spine)
-    gdocs = pin(kept.join(rep_ok, "doc_id", "left_semi"), None)
+    gdocs = pin(kept.join(rep_ok, "doc_id", "left_semi"))
 
     trimmed = substring_trim(
         gdocs, "doc_id", "text", k=_SS_K, min_len=_SS_MIN_LEN,
@@ -367,15 +366,14 @@ def q_curation_pipeline_v2_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdocs = pin(
         trimmed.filter(F.length("text_trimmed") > 0).select(
             "doc_id", F.col("text_trimmed").alias("text")
-        ),
-        None,
+        )
     )
 
     pairs = ngram_jaccard_pairs(
         tdocs, "doc_id", "text", n=3, threshold=0.2, max_df=100
     )
     comp = connected_components(
-        pairs, "id_a", "id_b", nodes=tdocs, node_col="doc_id", pins=None
+        pairs, "id_a", "id_b", nodes=tdocs, node_col="doc_id"
     )
     reps = comp.filter(F.col("comp") == F.col("node")).select(
         F.col("node").alias("doc_id")

@@ -112,8 +112,7 @@ def q11_part_value_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = pin(
         li.join(su, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("l_partkey")
-        .agg(F.sum(d("l_extendedprice") * d("l_quantity")).alias("pv")),
-        None,
+        .agg(F.sum(d("l_extendedprice") * d("l_quantity")).alias("pv"))
     )
     tot = v.agg(F.sum("pv").cast("decimal(28,8)").alias("__tot"))
     return (
@@ -153,11 +152,10 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per supplier, the small frame — is pinned, the max is a
     partial-max gather over it (32 partial rows to one task, never the
     data), and the equality probe joins the broadcast 1-row max back.
-    One fact scan total, plan-asserted. The pin is session-lifetime
-    (the driver/bench one-shot contract, same as curation_pipeline_e2e);
-    revenue is an exact decimal sum so the equality compare is
-    engine-deterministic and ties return every tied supplier on both
-    engines."""
+    One fact scan total, plan-asserted. The pin is released with the
+    caller's open ``PinScope`` (operators/pins.py); revenue is an exact
+    decimal sum so the equality compare is engine-deterministic and
+    ties return every tied supplier on both engines."""
     from bcg_contacts_data_pipeline_spark.operators.pins import pin
 
     li = _t(spark, sf_dir, "lineitem")
@@ -173,8 +171,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(d("l_extendedprice") * (F.lit(1) - d("l_discount"))).alias(
                 "total_rev"
             )
-        ),
-        None,
+        )
     )
     mx = rev.agg(F.max("total_rev").alias("__mx"))
     return (

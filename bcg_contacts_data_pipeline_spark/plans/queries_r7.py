@@ -464,8 +464,7 @@ def event_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = pin(
         ev.groupBy(
             "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
-        ).agg(F.count(F.lit(1)).alias("cnt")),
-        None,
+        ).agg(F.count(F.lit(1)).alias("cnt"))
     )
     stats = hourly.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_hours"),

@@ -936,7 +936,7 @@ def lang_rebalance_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     langs = pin(
-        docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs")), None
+        docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
     )
     langs = langs.select(
         "lang", "n_docs", F.sqrt(F.col("n_docs").cast("double")).alias("w")
@@ -1111,8 +1111,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = pin(
         embedding_pairs_lsh(
             emb, "vec_id", "embedding", dim=64, threshold=0.2, num_planes=4
-        ),
-        None,
+        )
     )
     e1 = e.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     e2 = e.select(F.col("id_a").alias("b2"), F.col("id_b").alias("c"))
@@ -1202,8 +1201,7 @@ def value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.percentile(F.col("value"), F.lit(0.5)), 4).alias(
                 "median_value"
             ),
-        ),
-        None,
+        )
     )
     dev = ev.join(
         F.broadcast(med.select("event_type", "median_value")), "event_type"
@@ -1216,8 +1214,7 @@ def value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.percentile(F.col("d"), F.lit(0.5)), 4).alias(
                 "mad_value"
             )
-        ),
-        None,
+        )
     )
     outliers = (
         dev.join(F.broadcast(mad), "event_type")

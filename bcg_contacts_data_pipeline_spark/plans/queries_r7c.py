@@ -95,7 +95,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bcg_contacts_data_pipeline_spark.operators.pins import PinScope, pin
+from bcg_contacts_data_pipeline_spark.operators.pins import checkpoint, pin
 from bcg_contacts_data_pipeline_spark.plans.queries import (
     _events,
     _t,
@@ -235,7 +235,7 @@ def skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def drift_split_audit(
-    spark: SparkSession, sf_dir: str, pins: PinScope | None = None
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Per-class distribution drift between the first and second half of
     the event log — the audit a training pipeline runs before trusting
@@ -276,8 +276,7 @@ def drift_split_audit(
             F.sum(F.when(F.col("us") > F.col("thr"), 1).otherwise(0))
             .cast("long")
             .alias("n_second"),
-        ),
-        pins,
+        )
     )
     t = c.agg(
         F.sum("n_first").cast("long").alias("tot_first"),
@@ -332,7 +331,7 @@ def drift_split_audit(
     """,
 )
 def basket_brand_lift(
-    spark: SparkSession, sf_dir: str, pins: PinScope | None = None
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Market-basket association mining at brand granularity: for every
     pair of brands bought together in at least one order, the support
@@ -389,13 +388,11 @@ def basket_brand_lift(
     )
     # Persisted once: four consumers (pairs, both marginals, the order
     # total) would otherwise each replay the two big shuffles. The
-    # frame is tiny (≤ brands² + brands + 1 rows). Scoped when the
-    # caller passes a PinScope; session-lifetime otherwise.
+    # frame is tiny (≤ brands² + brands + 1 rows).
     counts = pin(
         markers.groupBy(
             F.col("m.a").alias("a"), F.col("m.b").alias("b")
-        ).agg(F.count(F.lit(1)).alias("n")),
-        pins,
+        ).agg(F.count(F.lit(1)).alias("n"))
     )
     pairs = counts.filter(
         F.col("a").isNotNull() & F.col("b").isNotNull()
@@ -481,7 +478,7 @@ def basket_brand_lift(
     """,
 )
 def conversion_lag_curve(
-    spark: SparkSession, sf_dir: str, pins: PinScope | None = None
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Censored time-to-event distribution: for every user whose
     journey starts with a 'view', the lag (in whole days) to their
@@ -547,8 +544,7 @@ def conversion_lag_curve(
         durations.groupBy("day").agg(
             F.sum("event").cast("long").alias("n_conv"),
             F.sum(F.lit(1) - F.col("event")).cast("long").alias("n_cens"),
-        ),
-        pins,
+        )
     )
     tot = daily.agg(
         F.sum(F.col("n_conv") + F.col("n_cens")).cast("long").alias("n_total")
@@ -638,7 +634,7 @@ _PR_ORACLE = """
 
 @register("pagerank_nation_flow", oracle=_PR_ORACLE)
 def pagerank_nation_flow(
-    spark: SparkSession, sf_dir: str, pins: PinScope | None = None
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Three damped PageRank iterations (d = 0.85) over the nation
     trade-flow graph: an edge src -> dst weighted by the number of line
@@ -662,14 +658,13 @@ def pagerank_nation_flow(
     Scale: the one heavy phase is the edge aggregation — a fact-table
     groupBy after dimension joins (same join graph as q7), shrinking
     100 TB of lineitem to |nations|² = 625 edge rows. Iterations then
-    run on the aggregated graph: tiny joins, pinned transition frame
-    (released by the caller's PinScope), no checkpoint needed at 3
-    hops. Dangling nodes (nations with no outgoing shipments — 15 of
-    25 at sf0.001!) get the standard treatment: their mass is summed
-    each hop (left-anti against the source set) and redistributed
-    uniformly, keeping total mass at 1e12 up to truncation — without
-    it, dangling mass evaporates and the vector decays toward the
-    damping floor.
+    run on the aggregated graph: tiny joins, pinned transition frame,
+    each hop's rank vector checkpointed. Dangling nodes (nations with
+    no outgoing shipments — 15 of 25 at sf0.001!) get the standard
+    treatment: their mass is summed each hop (left-anti against the
+    source set) and redistributed uniformly, keeping total mass at 1e12
+    up to truncation — without it, dangling mass evaporates and the
+    vector decays toward the damping floor.
     """
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -692,8 +687,7 @@ def pagerank_nation_flow(
     p = pin(
         e.join(out, "src").select(
             "src", "dst", F.expr("(cnt * 1000000) DIV outc").alias("pfp")
-        ),
-        pins,
+        )
     )
     nn = na.agg(F.count(F.lit(1)).alias("n"))
     srcs = p.select("src").distinct()
@@ -731,7 +725,7 @@ def pagerank_nation_flow(
         # without this the printed plan re-inlines the pinned
         # transition frame ~5x per hop and the lineage grows
         # geometrically with iteration count.
-        r = r.localCheckpoint(eager=False)
+        r = checkpoint(r)
     return r.join(F.broadcast(na), r.node == na.n_nationkey).select(
         "n_name",
         F.col("r").alias("rank_fp"),
@@ -863,7 +857,7 @@ from bcg_contacts_data_pipeline_spark.plans.oracle_templates import (  # noqa: E
     oracle=JACCARD_PAIRS_ORACLE_TEMPLATE.format(extra_where=""),
 )
 def prefix_jaccard_pairs(
-    spark: SparkSession, sf_dir: str, pins: PinScope | None = None
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Exact 3-gram Jaccard >= 0.5 pairs via PREFIX FILTERING — the
     third member of the near-dup join family and the second exact one:
@@ -889,7 +883,7 @@ def prefix_jaccard_pairs(
 
     docs = _t(spark, sf_dir, "documents")
     return prefix_filter_pairs(
-        docs, "doc_id", "text", n=3, t_num=1, t_den=2, pins=pins
+        docs, "doc_id", "text", n=3, t_num=1, t_den=2
     )
 
 
@@ -1423,7 +1417,7 @@ def lateral_top_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def compound_balance_rcte(
-    spark: SparkSession, sf_dir: str, pins: PinScope | None = None
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """A linear recurrence computed with a RECURSIVE CTE (Spark >= 4.0,
     UNION ALL form): per region, a balance that each year earns 10%
@@ -1477,8 +1471,7 @@ def compound_balance_rcte(
             (F.col("ym") - F.col("ym0")).cast("int").alias("m"),
             F.expr("CAST(round(rev * 100) AS BIGINT)").alias("dep"),
         )
-        .coalesce(1),
-        pins,
+        .coalesce(1)
     )
     dep.createOrReplaceTempView("__cb_dep")
     r.select("r_name").createOrReplaceTempView("__cb_regions")

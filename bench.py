@@ -15,6 +15,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bcg_contacts_data_pipeline_spark.operators.pins import PinScope  # noqa: E402
 from bcg_contacts_data_pipeline_spark.plans.queries import QUERIES  # noqa: E402
 from bcg_contacts_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -215,13 +216,15 @@ def main() -> None:
         best = None
         stat0 = proc_stat_seconds()
         for _ in range(runs):
-            start = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            elapsed = time.perf_counter() - start
-            best = elapsed if best is None or elapsed < best else best
-            # Isolate queries from each other: drop caches a query may
-            # have pinned (e.g. minhash signatures) so later timings don't
+            # Isolate queries from each other: the scope releases every
+            # frame the query persisted or checkpointed, and clearCache
+            # drops anything cached outside it, so later timings don't
             # pay another query's storage/GC pressure.
+            with PinScope():
+                start = time.perf_counter()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                elapsed = time.perf_counter() - start
+            best = elapsed if best is None or elapsed < best else best
             spark.catalog.clearCache()
         timings[name] = round(best, 3)
         stat1 = proc_stat_seconds()
@@ -319,11 +322,12 @@ def main() -> None:
             best = None
             for _ in range(3):
                 spark.catalog.clearCache()
-                start = time.perf_counter()
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                elapsed = time.perf_counter() - start
+                with PinScope():
+                    start = time.perf_counter()
+                    QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                        "overwrite"
+                    ).save()
+                    elapsed = time.perf_counter() - start
                 best = elapsed if best is None or elapsed < best else best
             isolated[name] = {
                 "full_run": timings[name],

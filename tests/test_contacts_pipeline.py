@@ -150,9 +150,10 @@ def golden_inputs(spark, tmp_path_factory):
     return master, sources, mailchimp
 
 
-def _run_capturing_clean_input(golden_inputs, pins):
-    """run_pipeline with ``pins``; returns the result and the frame that
-    entered clean_fields (the end of the enrichment stages)."""
+def _run_capturing_clean_input(golden_inputs):
+    """run_pipeline in the caller's scope (if any); returns the result
+    and the frame that entered clean_fields (the end of the enrichment
+    stages)."""
     seen = []
     real = C.clean_fields
 
@@ -163,7 +164,7 @@ def _run_capturing_clean_input(golden_inputs, pins):
     master, sources, mailchimp = golden_inputs
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(C, "clean_fields", spy)
-        result = C.run_pipeline(master, sources=sources, mailchimp=mailchimp, pins=pins)
+        result = C.run_pipeline(master, sources=sources, mailchimp=mailchimp)
     return result, seen[0]
 
 
@@ -184,17 +185,14 @@ def scoped_run(spark, golden_inputs):
     """One scoped run over the golden inputs: the clean_fields input
     plan, the canonical outputs (collected before release — released
     checkpoints are unrecomputable) and the persistent-RDD count before
-    the run and after ``release``."""
+    the run and after the scope closes."""
     before = _n_persistent_rdds(spark)
-    scope = PinScope()
-    try:
-        result, clean_input = _run_capturing_clean_input(golden_inputs, scope)
+    with PinScope():
+        result, clean_input = _run_capturing_clean_input(golden_inputs)
         qe = clean_input._jdf.queryExecution()
         optimized = qe.optimizedPlan().toString()
         physical = qe.executedPlan().toString()
         outputs = _canonical(result)
-    finally:
-        scope.release()
     return {
         "relations": len(re.findall(r"Relation \[", optimized)),
         "exchanges": physical.count("Exchange"),
@@ -226,7 +224,7 @@ def test_stage_checkpoints_match_lazy_plan_and_release(spark, golden_inputs, sco
     # earlier tests meanwhile (same reasoning as tests/test_pins.py)
     assert scoped_run["after"] <= scoped_run["before"]
     try:
-        result, clean_input = _run_capturing_clean_input(golden_inputs, None)
+        result, clean_input = _run_capturing_clean_input(golden_inputs)
         assert "LogicalRDD" not in clean_input._jdf.queryExecution().optimizedPlan().toString()
         assert _canonical(result) == scoped_run["outputs"]
     finally:

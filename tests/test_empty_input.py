@@ -13,14 +13,26 @@ shipped at least once; this keeps them from shipping again.
 Row-content is NOT asserted (most queries legitimately return 0 rows; a
 few return a single all-NULL/zero summary row) — only that the plan
 builds, runs, and lands in the sink.
+
+The batch sweep doubles as the registry-wide leak guard: each query
+builds and sinks inside its own ``PinScope``, and once the scope has
+closed the session's persistent-RDD count must be back at (or below)
+its pre-query value — every persist and checkpoint a query makes is
+released when it finishes. A query whose count rose is run once more
+on its own and fails the guard only if the count rises again: the
+count is session-wide, so another query's late asynchronous work can
+land inside a query's window (seen once on ``lang_weighted_median``,
+which materializes nothing), while a query's own leak repeats.
 """
 
 from __future__ import annotations
 
 import pytest
 
+from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
 from bcg_contacts_data_pipeline_spark.plans.queries import QUERIES
 from bcg_contacts_data_pipeline_spark.session import TABLES
+from tests.test_pins import _n_persistent_rdds
 
 SRC = "/root/testdata/sf0.001"
 
@@ -37,22 +49,37 @@ def empty_sf_dir(spark, tmp_path_factory):
     return str(d)
 
 
+def _scoped_leak(spark, fn, sf_dir) -> int:
+    """Persistent RDDs added by one scoped build + noop sink (> 0 is a
+    leak; ContextCleaner frees of unrelated blocks only lower it)."""
+    before = _n_persistent_rdds(spark)
+    with PinScope():
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return _n_persistent_rdds(spark) - before
+
+
 # One sweep per family (not 154 parametrized cases): the per-case fixture
 # and reporting overhead would dominate, and the streaming queries each
 # restart a real availableNow stream — batch them and report all failures
 # at once.
 def test_batch_queries_survive_empty_input(spark, empty_sf_dir):
     failures = {}
+    suspects = []
     for name, fn in QUERIES.items():
         if name.startswith("stream_"):
             continue
         try:
-            fn(spark, empty_sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            if _scoped_leak(spark, fn, empty_sf_dir) > 0:
+                suspects.append(name)
         except Exception as e:  # noqa: BLE001
             failures[name] = f"{type(e).__name__}: {str(e).splitlines()[0][:160]}"
     assert not failures, failures
+    leaked = {}
+    for name in suspects:
+        n = _scoped_leak(spark, QUERIES[name], empty_sf_dir)
+        if n > 0:
+            leaked[name] = n
+    assert not leaked, f"persistent RDDs left after the query's scope: {leaked}"
 
 
 def test_streaming_queries_survive_empty_input(spark, empty_sf_dir):

@@ -64,12 +64,13 @@ def test_components_reliable_matches_local_and_survives_release(
     spark, tmp_path
 ):
     """The cluster-grade path (checkpoint='reliable', the 100 TB
-    setting) end-to-end with a PinScope: labels identical to local
+    setting) end-to-end under a PinScope: labels identical to local
     mode, checkpoint FILES actually written under the configured dir,
-    the scope registered symmetrically (one adopted frame in both
-    modes), and — the reliable branch's contract — release() is a
-    no-op for the returned frame: its backing is checkpoint files, not
-    storage blocks, so it stays readable after the scope closes."""
+    the scope registered symmetrically (the same frames in both modes:
+    sym plus one label frame per round, 1 + 4 rounds here), and — the
+    reliable branch's contract — release is a no-op for the returned
+    frame: its backing is checkpoint files, not storage blocks, so it
+    stays readable after the scope closes."""
     import os
 
     from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
@@ -81,23 +82,27 @@ def test_components_reliable_matches_local_and_survives_release(
         [(i,) for i in [1, 2, 3, 4, 10, 11, 99]], "n long"
     )
 
-    local = {
-        r.node: r.comp
-        for r in connected_components(
-            edges, nodes=nodes, node_col="n", checkpoint="local"
-        ).collect()
-    }
+    with PinScope() as local_scope:
+        local = {
+            r.node: r.comp
+            for r in connected_components(
+                edges, nodes=nodes, node_col="n", checkpoint="local"
+            ).collect()
+        }
+        n_local = len(local_scope)
 
     ckdir = tmp_path / "ck_reliable"
     spark.sparkContext.setCheckpointDir(str(ckdir))
-    pins = PinScope()
-    rel = connected_components(
-        edges, nodes=nodes, node_col="n", checkpoint="reliable", pins=pins
-    )
-    reliable = {r.node: r.comp for r in rel.collect()}
+    with PinScope() as scope:
+        rel = connected_components(
+            edges, nodes=nodes, node_col="n", checkpoint="reliable"
+        )
+        reliable = {r.node: r.comp for r in rel.collect()}
+        n_reliable = len(scope)
 
     assert reliable == local == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 99: 99}
-    assert len(pins) == 1  # symmetric scope accounting in both modes
+    # symmetric scope accounting in both modes
+    assert n_reliable == n_local == 5
 
     # reliable mode really wrote fault-tolerance artifacts to the dir
     written = [
@@ -107,11 +112,11 @@ def test_components_reliable_matches_local_and_survives_release(
     ]
     assert written, "no checkpoint files under the configured dir"
 
-    # releasing the scope must NOT invalidate the returned frame:
-    # the registered releaser is a no-op (files are the fault-tolerance
-    # artifact; spark.cleaner.referenceTracking.cleanCheckpoints governs
-    # their lifetime, not the scope)
-    pins.release()
+    # the scope's release (on exit above) must NOT invalidate the
+    # returned frame: the registered releaser is a no-op (files are the
+    # fault-tolerance artifact; spark.cleaner.referenceTracking
+    # .cleanCheckpoints governs their lifetime, not the scope)
+    assert len(scope) == 0
     assert {r.node: r.comp for r in rel.collect()} == reliable
     assert [
         os.path.join(d, f) for d, _, fs in os.walk(ckdir) for f in fs

@@ -5,9 +5,10 @@ sampled range partitioning; LSH signature frames are scanned twice) must
 be releasable per-plan, not only via session-wide clearCache — a
 long-lived session running many pipelines would otherwise accumulate
 cached frames (round-4 advisor flag). These tests pin the contract:
-operators register their persists in a passed PinScope, results stay
-correct, and release drops every pin (storage level back to NONE; the
-CLI returns the session's persistent-RDD count to its pre-run value).
+operators register their persists and checkpoints in the open PinScope,
+results stay correct, and closing the scope drops every pin (storage
+level back to NONE; the CLI returns the session's persistent-RDD count
+to its pre-run value).
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ from pyspark.sql import functions as F
 
 from bcg_contacts_data_pipeline_spark.operators.dedup import renumber
 from bcg_contacts_data_pipeline_spark.operators.pack import pack_shards
-from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
+from bcg_contacts_data_pipeline_spark.operators.pins import PinScope, pin
 from bcg_contacts_data_pipeline_spark.operators.similarity import (
     minhash_lsh_pairs,
 )
@@ -28,14 +29,13 @@ def _n_persistent_rdds(spark) -> int:
 
 def test_renumber_registers_and_releases_pin(spark):
     df = spark.range(100).select(F.col("id"), (F.col("id") % 7).alias("k"))
-    scope = PinScope()
-    out = renumber(df, [F.col("k"), F.col("id")], seq_name="n", pins=scope)
-    assert len(scope) == 1
-    rows = out.orderBy("n").collect()
-    assert [r["n"] for r in rows] == list(range(1, 101))
-    pinned = scope._frames[0][0]
-    assert pinned.storageLevel.useMemory or pinned.storageLevel.useDisk
-    scope.release()
+    with PinScope() as scope:
+        out = renumber(df, [F.col("k"), F.col("id")], seq_name="n")
+        assert len(scope) == 1
+        rows = out.orderBy("n").collect()
+        assert [r["n"] for r in rows] == list(range(1, 101))
+        pinned = scope._frames[0][0]
+        assert pinned.storageLevel.useMemory or pinned.storageLevel.useDisk
     assert len(scope) == 0
     lvl = pinned.storageLevel
     assert not (lvl.useMemory or lvl.useDisk), lvl
@@ -46,7 +46,7 @@ def test_pack_shards_scope_as_context_manager(spark):
         F.col("id"), (F.lit(10)).alias("sz")
     )
     with PinScope() as scope:
-        out = pack_shards(df, "id", "sz", budget=100, pins=scope)
+        out = pack_shards(df, "id", "sz", budget=100)
         got = {r["id"]: r["shard_id"] for r in out.collect()}
         assert len(scope) == 1
         pinned = scope._frames[0][0]
@@ -62,21 +62,22 @@ def test_minhash_pairs_pin_scope(spark):
          for i in range(20)],
         ["doc_id", "text"],
     )
-    scope = PinScope()
-    pairs = minhash_lsh_pairs(docs, "doc_id", F.col("text"), pins=scope)
-    n = pairs.count()
+    with PinScope() as scope:
+        pairs = minhash_lsh_pairs(docs, "doc_id", F.col("text"))
+        n = pairs.count()
+        assert len(scope) == 1
     assert n > 0  # near-identical docs must collide
-    assert len(scope) == 1
-    scope.release()
     assert len(scope) == 0
 
 
 def test_release_is_idempotent(spark):
     df = spark.range(10)
-    scope = PinScope()
-    scope.pin(df)
+    with PinScope() as scope:
+        pin(df)
+        assert len(scope) == 1
+    # the exit released once; further releases are no-ops, not errors
     scope.release()
-    scope.release()  # second release is a no-op, not an error
+    scope.release()
     assert len(scope) == 0
 
 
@@ -102,27 +103,28 @@ def test_pipeline_cli_returns_pin_count_to_baseline(spark, tmp_path):
 
 
 def test_curation_frame_scope_returns_pins_to_zero(spark):
-    """curation_frame threads every materialization through a PinScope
-    (round-5 verdict: the registered query's pins=None form leaked one
+    """curation_frame registers every materialization in the open
+    PinScope (round-5 verdict: the unscoped registered query leaked one
     cached frame per invocation in a long-lived session). With a scope:
-    result materializes correctly, the scope holds exactly three
-    entries (the `kept` persist, the ngram pair generator's hot-set
-    localCheckpoint — adopted since the r14 continuation closed the
-    fresh-session leak this test caught — and connected_components'
-    final label checkpoint; intermediate round checkpoints are freed
-    eagerly inside the operator), and release returns the session's
+    result materializes correctly, the scope holds every frame the
+    query materialized — the `kept` persist, the ngram pair
+    generator's hot-set checkpoint, and connected_components' sym plus
+    one label checkpoint per round (the superseded rounds and sym are
+    also freed eagerly inside the operator; their second free on
+    release is a no-op) — and closing it returns the session's
     persistent-RDD count to its pre-call value."""
     from bcg_contacts_data_pipeline_spark.plans.queries_ext import (
         curation_frame,
     )
+    from tests.conftest import SF_SMALL
 
     before = _n_persistent_rdds(spark)
-    scope = PinScope()
-    out = curation_frame(spark, "/root/testdata/sf0.001", pins=scope)
-    rows = out.collect()
-    assert len(rows) >= 1 and all(r["n_docs"] >= 1 for r in rows)
-    assert len(scope) == 3
-    scope.release()
+    with PinScope() as scope:
+        out = curation_frame(spark, SF_SMALL)
+        rows = out.collect()
+        assert len(rows) >= 1 and all(r["n_docs"] >= 1 for r in rows)
+        # kept, hot set, CC sym, 2 label rounds (sf0.001 converges in 2)
+        assert len(scope) == 5
     assert len(scope) == 0
     # <= for the same ContextCleaner-background-free reason as above
     assert _n_persistent_rdds(spark) <= before

@@ -63,11 +63,11 @@ def test_events_stream_drains_in_one_micro_batch(spark):
 
 
 def test_corpus_shuffle_forwards_pins(spark):
-    """ADVICE r11: q_corpus_shuffle must forward a PinScope to
-    renumber so long-lived sessions can release the load-bearing
-    persist without clearCache()."""
+    """ADVICE r11: q_corpus_shuffle's load-bearing renumber persist
+    registers in the caller's open PinScope, so long-lived sessions
+    release it without clearCache()."""
     with PinScope() as scope:
-        out = QUERIES["corpus_shuffle"](spark, SF_SMALL, pins=scope)
+        out = QUERIES["corpus_shuffle"](spark, SF_SMALL)
         n = out.count()
         assert len(scope) == 1
         pinned = scope._frames[0][0]

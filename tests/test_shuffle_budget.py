@@ -226,7 +226,7 @@ BUDGET = {
 @pytest.mark.parametrize("name", sorted(BUDGET))
 def test_shuffle_budget(spark, name):
     # Budgets are defined against a COLD cache: queries that pin a frame
-    # (pins=None -> session-lifetime persist) leave InMemoryRelations in
+    # (unscoped pin() -> session-lifetime persist) leave InMemoryRelations in
     # the shared test session, and Spark's cache manager substitutes any
     # matching subtree into later plan builds — so the printed exchange
     # count of the same query depends on which tests ran before it.

@@ -57,6 +57,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as entrymod
+    from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
     from bcg_contacts_data_pipeline_spark.session import TABLES, get_spark
 
     args = [a for a in sys.argv[1:] if a != "--vanilla"]
@@ -100,7 +101,8 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            with PinScope():
+                sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL {name}: spark error: {e}")
