@@ -12,7 +12,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: Tiny English stopword list used by the language-ID heuristic and the
-#: quality score. Keep in sync with the oracle SQL (plans/queries.py).
+#: quality score. Keep in sync with the oracle SQL (``_STOPLIST_SQL`` in
+#: plans/q_curation.py).
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
 
 #: Punctuation class counted by the quality score.

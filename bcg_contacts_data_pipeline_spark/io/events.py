@@ -13,7 +13,7 @@ rounds:
 Round 3 had the conversion copy-pasted in three places, all assuming the
 first encoding; when the data drifted to the second, nine queries, the
 bench, and the streaming tests went red at once. This module is the fix:
-every consumer (batch ``plans.queries._events``, streaming
+every consumer (batch ``plans.registry._events``, streaming
 ``streaming.sources.events_stream``, test fixtures) normalizes through
 :func:`normalize_event_ts`, which branches on the *read* dtype instead of
 assuming the file encoding.

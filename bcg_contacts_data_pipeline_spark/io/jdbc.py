@@ -26,8 +26,10 @@ Scale notes:
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,6 +39,16 @@ DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
 def derby_url(db_path: str) -> str:
     return f"jdbc:derby:{db_path};create=true"
+
+
+#: Scratch database directories handed out by this process.
+_SCRATCH_DBS: set[str] = set()
+
+
+@atexit.register
+def _remove_scratch_dbs() -> None:
+    for path in _SCRATCH_DBS:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def scratch_derby_url(key: str) -> str:
@@ -49,9 +61,11 @@ def scratch_derby_url(key: str) -> str:
     sf_dir) collide with ``Another instance of Derby may have already
     booted``. Keying by pid gives every process its own scratch DB; the
     consumers' outputs are path-independent, so nothing observable
-    changes."""
+    changes. The directory is removed when the process exits."""
     digest = hashlib.sha256(f"{key}|{os.getpid()}".encode()).hexdigest()[:16]
-    return derby_url(os.path.join(tempfile.gettempdir(), f"derby_{digest}"))
+    path = os.path.join(tempfile.gettempdir(), f"derby_{digest}")
+    _SCRATCH_DBS.add(path)
+    return derby_url(path)
 
 
 def write_jdbc(

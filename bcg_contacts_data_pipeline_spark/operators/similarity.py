@@ -946,7 +946,7 @@ def embedding_ann_lsh(
     baseline). When the cap does not trigger the computation — and its
     IEEE op order — is bit-identical to uncapped, so a cap sized above
     the shipped-SF bucket maximum shares the uncapped oracle
-    (`plans/queries_r10.py:minhash_recall_capped` recipe).
+    (`plans/q_similarity.py:minhash_recall_capped` recipe).
 
     Physical shape (the 100 TB path): the ONLY shuffle is the
     groupBy(bucket) exchange, whose rows carry (id, vector, bucket).

@@ -1,2562 +1,23 @@
-"""Query registry: every operator exposed through the driver contract.
+"""Query registry facade: importing this module registers every query.
 
-Each entry pairs a Spark implementation (callable ``(spark, sf_dir) ->
-DataFrame``) with an equivalent ANSI-SQL oracle string for DuckDB.
-Determinism rules used throughout so value-hashes match bit-for-bit:
-
-- Money/metric aggregates go through ``DECIMAL(18,4)`` (exact, associative
-  — immune to float summation order differing between engines), then cast
-  to DOUBLE at the end.
-- Averages are ``CAST(exact_decimal_sum AS DOUBLE) / COUNT`` — one IEEE
-  division of identical operands.
-- Every ``max_by``/``arg_max`` ordering is made *total* with a unique id
-  tiebreak, so no unspecified tie choices.
-- Column names are aliased identically on both sides.
+The registry (``QUERIES``, ``ORACLE``, ``register``) and the helpers
+shared across families live in ``plans.registry``; the queries live in
+six family modules, ``plans/q_*.py``, imported here for their
+registrations.
 """
 
-from __future__ import annotations
-
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from bcg_contacts_data_pipeline_spark.io.events import read_events
-from bcg_contacts_data_pipeline_spark.operators import dedup as dedup_ops
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # static-schema catalog read: skips the per-call footer-inference
-    # job (~100-160 ms each at sf0.1; guide §7.3 driver cost) for the 9
-    # stable tables; events and unknown names keep inference
-    from bcg_contacts_data_pipeline_spark.io.schemas import read_table
-
-    return read_table(spark, sf_dir, name)
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events table with `ts` normalized; all encoding knowledge lives in
-    io.events.read_events (shared with the streaming source and tests)."""
-    return read_events(spark, sf_dir)
-
-
-def _dec(c, scale: int = 4):
-    col = F.col(c) if isinstance(c, str) else c
-    return col.cast(f"decimal(18,{scale})")
-
-
-# ---------------------------------------------------------------------------
-# Dedup-merge (SURVEY §2.4 A1/A2) — the flagship
-# ---------------------------------------------------------------------------
-
-@register(
-    "dedup_merge",
-    oracle="""
-    SELECT CAST(c_nationkey AS VARCHAR) || '-' || c_mktsegment AS dedup_key,
-           arg_max(c_name, length(c_name) * 100000000 - c_custkey) AS c_name,
-           CAST(arg_max(c_acctbal, length(CAST(c_acctbal AS VARCHAR)) * 100000000 - c_custkey) AS DOUBLE) AS c_acctbal,
-           COUNT(*) AS group_size
-    FROM customer
-    GROUP BY 1
-    """,
+from bcg_contacts_data_pipeline_spark.plans import (  # noqa: F401
+    q_audit,
+    q_contacts,
+    q_curation,
+    q_similarity,
+    q_temporal,
+    q_tpch,
 )
-def q_dedup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Most-complete-record merge (clean_contacts.py:194-223 semantics) over
-    a derived composite key. One shuffle; map-side partial max_by."""
-    cust = _t(spark, sf_dir, "customer")
-    key = F.concat_ws(
-        "-", F.col("c_nationkey").cast("string"), F.col("c_mktsegment")
-    )
-    merged = dedup_ops.most_complete_merge(
-        cust,
-        key,
-        value_cols=["c_name", "c_acctbal"],
-        order_by=-F.col("c_custkey"),
-    )
-    return merged.select(
-        "dedup_key",
-        "c_name",
-        F.col("c_acctbal").cast("double").alias("c_acctbal"),
-        F.col("group_size").cast("long").alias("group_size"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# TPC-H-style analytics (scan + filter + agg; the bench headliners)
-# ---------------------------------------------------------------------------
-
-@register(
-    "q1_pricing_summary",
-    oracle="""
-    SELECT l_returnflag,
-           l_linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS sum_disc_price,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (1 - CAST(l_discount AS DECIMAL(18,4))) * (1 + CAST(l_tax AS DECIMAL(18,4)))) AS DOUBLE) AS sum_charge,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_price,
-           CAST(SUM(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_disc,
-           COUNT(*) AS count_order
-    FROM lineitem
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: full-scan aggregate with exact decimal arithmetic.
-    Catalyst gets partial aggregation + whole-stage codegen for free."""
-    l = _t(spark, sf_dir, "lineitem")
-    disc_price = _dec("l_extendedprice") * (F.lit(1) - _dec("l_discount"))
-    charge = disc_price * (F.lit(1) + _dec("l_tax"))
-    return (
-        l.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(_dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(disc_price).cast("double").alias("sum_disc_price"),
-            F.sum(charge).cast("double").alias("sum_charge"),
-            (F.sum(_dec("l_quantity")).cast("double") / F.count(F.lit(1))).alias("avg_qty"),
-            (F.sum(_dec("l_extendedprice")).cast("double") / F.count(F.lit(1))).alias("avg_price"),
-            (F.sum(_dec("l_discount")).cast("double") / F.count(F.lit(1))).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Scalar normalization (SURVEY §2.5 F1-F13) over synthesized dirty fields
-# ---------------------------------------------------------------------------
-
-@register(
-    "norm_scalars",
-    oracle="""
-    WITH synth AS (
-      SELECT c_custkey,
-             CASE WHEN c_custkey % 13 = 0 THEN 'no-at-sign'
-                  ELSE lower(c_name) || '@' || lower(c_mktsegment) || '.example' END AS raw_email,
-             '+61-' || CAST(c_custkey * 7919 AS VARCHAR) AS raw_phone,
-             CASE c_custkey % 5 WHEN 0 THEN 'y' WHEN 1 THEN ' N ' WHEN 2 THEN 'yes'
-                  WHEN 3 THEN '' ELSE NULL END AS raw_flag,
-             CASE c_custkey % 4 WHEN 0 THEN 'nan' WHEN 1 THEN 'None' WHEN 2 THEN ''
-                  ELSE c_name END AS raw_sentinel,
-             c_mktsegment AS raw_title
-      FROM customer)
-    SELECT c_custkey,
-           CASE WHEN regexp_matches(lower(trim(raw_email)), '^[^@]+@[^@]+\\.[^@]+')
-                THEN lower(trim(raw_email)) END AS email,
-           CASE WHEN length(regexp_replace(raw_phone, '[^0-9]', '', 'g')) >= 10
-                THEN right(regexp_replace(raw_phone, '[^0-9]', '', 'g'), 10)
-                WHEN length(regexp_replace(raw_phone, '[^0-9]', '', 'g')) > 0
-                THEN regexp_replace(raw_phone, '[^0-9]', '', 'g') END AS phone,
-           CASE WHEN upper(trim(raw_flag)) IN ('Y','N') THEN upper(trim(raw_flag)) END AS flag,
-           CASE WHEN trim(raw_sentinel) IN ('', 'nan', 'None', 'NaN') THEN NULL
-                ELSE raw_sentinel END AS clean_value,
-           upper(substr(raw_title, 1, 1)) || lower(substr(raw_title, 2)) AS title_cased
-    FROM synth
-    """,
-)
-def q_norm_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1/F3/F7/F13/F5 applied to synthesized dirty fields. All-expression
-    projection — zero shuffle, fully codegen'd."""
-    from bcg_contacts_data_pipeline_spark.functions import normalize as N
-
-    cust = _t(spark, sf_dir, "customer")
-    synth = cust.select(
-        "c_custkey",
-        F.when(F.col("c_custkey") % 13 == 0, F.lit("no-at-sign"))
-        .otherwise(
-            F.concat(
-                F.lower("c_name"), F.lit("@"), F.lower("c_mktsegment"), F.lit(".example")
-            )
-        )
-        .alias("raw_email"),
-        F.concat(F.lit("+61-"), (F.col("c_custkey") * 7919).cast("string")).alias(
-            "raw_phone"
-        ),
-        F.when(F.col("c_custkey") % 5 == 0, "y")
-        .when(F.col("c_custkey") % 5 == 1, " N ")
-        .when(F.col("c_custkey") % 5 == 2, "yes")
-        .when(F.col("c_custkey") % 5 == 3, "")
-        .alias("raw_flag"),
-        F.when(F.col("c_custkey") % 4 == 0, "nan")
-        .when(F.col("c_custkey") % 4 == 1, "None")
-        .when(F.col("c_custkey") % 4 == 2, "")
-        .otherwise(F.col("c_name"))
-        .alias("raw_sentinel"),
-        F.col("c_mktsegment").alias("raw_title"),
-    )
-    return synth.select(
-        "c_custkey",
-        N.norm_email("raw_email").alias("email"),
-        N.norm_phone("raw_phone").alias("phone"),
-        N.yn_flag("raw_flag").alias("flag"),
-        N.nullify_sentinels("raw_sentinel").alias("clean_value"),
-        N.title_case("raw_title").alias("title_cased"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# k-of-n enrichment join (SURVEY §2.3 J2/J3) + change log
-# ---------------------------------------------------------------------------
-
-_ENRICH_ORACLE_BASE = """
-    WITH target AS (
-      SELECT c_custkey AS id,
-             lower(c_name) AS k_name,
-             CAST(c_nationkey AS VARCHAR) AS k_nat,
-             CAST(CAST(floor(c_acctbal) AS BIGINT) AS VARCHAR) AS k_bal,
-             CASE WHEN c_custkey % 7 = 0 THEN NULL ELSE c_mktsegment END AS mktsegment,
-             CASE WHEN c_custkey % 11 = 0 THEN NULL ELSE c_acctbal END AS acctbal
-      FROM customer),
-    source AS (
-      SELECT c_custkey + 1000000 AS sid,
-             lower(CASE WHEN c_custkey % 5 = 0 THEN c_name || '_x' ELSE c_name END) AS k_name,
-             CAST(CASE WHEN c_custkey % 3 = 0 THEN c_nationkey + 1 ELSE c_nationkey END AS VARCHAR) AS k_nat,
-             CAST(CAST(floor(c_acctbal) AS BIGINT) AS VARCHAR) AS k_bal,
-             c_mktsegment AS s_mktsegment,
-             c_acctbal AS s_acctbal
-      FROM customer),
-    needy AS (SELECT * FROM target WHERE mktsegment IS NULL OR acctbal IS NULL),
-    cand AS (
-      SELECT n.id, s.sid FROM needy n JOIN source s
-        ON n.k_name = s.k_name AND n.k_nat = s.k_nat
-      UNION
-      SELECT n.id, s.sid FROM needy n JOIN source s
-        ON n.k_name = s.k_name AND n.k_bal = s.k_bal
-      UNION
-      SELECT n.id, s.sid FROM needy n JOIN source s
-        ON n.k_nat = s.k_nat AND n.k_bal = s.k_bal
-    ),
-    best AS (SELECT id, min(sid) AS sid FROM cand GROUP BY id),
-    joined AS (
-      SELECT t.*, b.sid, s.s_mktsegment, s.s_acctbal, s.k_name AS sk_name,
-             s.k_nat AS sk_nat, s.k_bal AS sk_bal
-      FROM target t LEFT JOIN best b ON t.id = b.id
-      LEFT JOIN source s ON b.sid = s.sid)
-"""
-
-
-def _enrich_inputs(spark: SparkSession, sf_dir: str):
-    cust = _t(spark, sf_dir, "customer")
-    # SQL-string projections (the normalize_sql treatment): the Column
-    # form of this fixture synthesis measured ~0.5 s of py4j round-trips
-    # per BUILD; one selectExpr parses JVM-side in one call
-    target = cust.selectExpr(
-        "c_custkey AS id",
-        "c_name",
-        "c_nationkey",
-        "c_acctbal AS orig_acctbal",
-        "CASE WHEN c_custkey % 7 = 0 THEN CAST(NULL AS STRING)"
-        " ELSE c_mktsegment END AS mktsegment",
-        "CASE WHEN c_custkey % 11 = 0 THEN CAST(NULL AS DOUBLE)"
-        " ELSE c_acctbal END AS acctbal",
-    )
-    source = cust.selectExpr(
-        "c_custkey + 1000000 AS sid",
-        "CASE WHEN c_custkey % 5 = 0 THEN concat(c_name, '_x')"
-        " ELSE c_name END AS s_name",
-        "CASE WHEN c_custkey % 3 = 0 THEN c_nationkey + 1"
-        " ELSE c_nationkey END AS s_nationkey",
-        "c_acctbal AS s_bal_src",
-        "c_mktsegment AS s_mktsegment",
-        "c_acctbal AS s_acctbal",
-    )
-    from bcg_contacts_data_pipeline_spark.operators.enrich import MatchKey
-
-    keys = [
-        MatchKey("name", F.expr("lower(c_name)"), F.expr("lower(s_name)")),
-        MatchKey(
-            "nat",
-            F.expr("CAST(c_nationkey AS STRING)"),
-            F.expr("CAST(s_nationkey AS STRING)"),
-        ),
-        MatchKey(
-            "bal",
-            F.expr("CAST(CAST(floor(orig_acctbal) AS BIGINT) AS STRING)"),
-            F.expr("CAST(CAST(floor(s_bal_src) AS BIGINT) AS STRING)"),
-        ),
-    ]
-    return target, source, keys
-
-
-@register(
-    "enrich_2of3",
-    oracle=_ENRICH_ORACLE_BASE
-    + """
-    SELECT id, coalesce(mktsegment, s_mktsegment) AS mktsegment,
-           coalesce(acctbal, s_acctbal) AS acctbal,
-           sid AS matched_source_id
-    FROM joined
-    """,
-)
-def q_enrich_2of3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 — >=2-of-3 key match as a union of pairwise broadcast-able
-    equi-joins; first-match = partial-aggregatable min; fills = coalesce
-    (fill_missing_contacts.py:47-138 semantics, Spark-first shape)."""
-    from bcg_contacts_data_pipeline_spark.operators.enrich import kofn_enrich
-
-    target, source, keys = _enrich_inputs(spark, sf_dir)
-    enriched, _log = kofn_enrich(
-        target,
-        source,
-        keys,
-        fill={"mktsegment": "s_mktsegment", "acctbal": "s_acctbal"},
-        target_id="id",
-        source_order="sid",
-        min_matches=2,
-        with_change_log=False,  # unused here; skipping saves ~0.4 s of build
-    )
-    return enriched.select("id", "mktsegment", "acctbal", "matched_source_id")
-
-
-@register(
-    "enrich_change_log",
-    oracle=_ENRICH_ORACLE_BASE
-    + """
-    , matched AS (
-      SELECT *,
-             concat_ws(',',
-               CASE WHEN k_name IS NOT NULL AND k_name = sk_name THEN 'name' END,
-               CASE WHEN k_nat IS NOT NULL AND k_nat = sk_nat THEN 'nat' END,
-               CASE WHEN k_bal IS NOT NULL AND k_bal = sk_bal THEN 'bal' END) AS matched_on
-      FROM joined WHERE sid IS NOT NULL)
-    SELECT id, 'mktsegment' AS field, CAST(NULL AS VARCHAR) AS old_value,
-           CAST(s_mktsegment AS VARCHAR) AS new_value, sid AS source_id, matched_on
-    FROM matched WHERE mktsegment IS NULL AND s_mktsegment IS NOT NULL
-    UNION ALL
-    SELECT id, 'acctbal', CAST(NULL AS VARCHAR), CAST(s_acctbal AS VARCHAR),
-           sid, matched_on
-    FROM matched WHERE acctbal IS NULL AND s_acctbal IS NOT NULL
-    """,
-)
-def q_enrich_change_log(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fill audit log (fill_missing_contacts.py:124-131) as a DataFrame:
-    one row per filled cell with the match basis."""
-    from bcg_contacts_data_pipeline_spark.operators.enrich import kofn_enrich
-
-    target, source, keys = _enrich_inputs(spark, sf_dir)
-    _enriched, log = kofn_enrich(
-        target,
-        source,
-        keys,
-        fill={"mktsegment": "s_mktsegment", "acctbal": "s_acctbal"},
-        target_id="id",
-        source_order="sid",
-        min_matches=2,
-    )
-    return log.select(
-        "id", "field", "old_value", "new_value", "source_id", "matched_on"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Validation rule engine (SURVEY §2.8)
-# ---------------------------------------------------------------------------
-
-@register(
-    "validate_rules",
-    oracle="""
-    WITH synth AS (
-      SELECT c_custkey, c_name, c_acctbal, c_mktsegment,
-             CASE WHEN c_custkey % 13 = 0 THEN 'not-an-email'
-                  ELSE lower(c_name) || '@corp.example' END AS email,
-             CASE WHEN c_custkey % 17 = 0 THEN '12'
-                  ELSE '+61-' || CAST(c_custkey * 7919 + 10000000 AS VARCHAR) END AS phone
-      FROM customer)
-    SELECT c_custkey, 'Invalid email format in email' AS error FROM synth
-    WHERE email IS NOT NULL AND length(trim(email)) > 0
-      AND NOT regexp_matches(lower(trim(email)), '^[^@]+@[^@]+\\.[^@]+')
-    UNION ALL
-    SELECT c_custkey, 'Invalid phone format in phone' FROM synth
-    WHERE phone IS NOT NULL AND length(trim(phone)) > 0
-      AND (length(regexp_replace(phone, '[^0-9]', '', 'g')) < 7
-           OR length(regexp_replace(phone, '[^0-9]', '', 'g')) > 15)
-    UNION ALL
-    SELECT c_custkey, 'c_acctbal out of range' FROM synth
-    WHERE c_acctbal IS NOT NULL AND (c_acctbal < -500 OR c_acctbal > 8000)
-    UNION ALL
-    SELECT c_custkey, 'Unexpected value in c_mktsegment' FROM synth
-    WHERE c_mktsegment IS NOT NULL
-      AND c_mktsegment NOT IN ('BUILDING','MACHINERY','AUTOMOBILE','FURNITURE')
-    """,
-)
-def q_validate_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.8 rule engine (validate_fields.py:60-116 semantics) compiled to
-    expressions; exploded (id, error) relation. No shuffle."""
-    from bcg_contacts_data_pipeline_spark.operators import validate as V
-
-    cust = _t(spark, sf_dir, "customer")
-    synth = cust.select(
-        "c_custkey",
-        "c_name",
-        "c_acctbal",
-        "c_mktsegment",
-        F.when(F.col("c_custkey") % 13 == 0, F.lit("not-an-email"))
-        .otherwise(F.concat(F.lower("c_name"), F.lit("@corp.example")))
-        .alias("email"),
-        F.when(F.col("c_custkey") % 17 == 0, F.lit("12"))
-        .otherwise(
-            F.concat(
-                F.lit("+61-"), (F.col("c_custkey") * 7919 + 10000000).cast("string")
-            )
-        )
-        .alias("phone"),
-    )
-    rules = [
-        V.email_format("email"),
-        V.phone_format("phone"),
-        V.in_range("c_acctbal", -500, 8000),
-        V.in_set("c_mktsegment", ["BUILDING", "MACHINERY", "AUTOMOBILE", "FURNITURE"]),
-    ]
-    return V.validate_exploded(synth, rules, ["c_custkey"])
-
-
-# ---------------------------------------------------------------------------
-# Join-heavy analytics (bench headliners)
-# ---------------------------------------------------------------------------
-
-@register(
-    "q3_shipping_priority",
-    oracle="""
-    SELECT l.l_orderkey,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4)) * (1 - CAST(l.l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue,
-           o.o_orderdate,
-           o.o_orderpriority
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND o.o_orderdate < TIMESTAMP '1998-01-01'
-      AND l.l_shipdate > TIMESTAMP '1998-01-01'
-    GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
-    ORDER BY revenue DESC, l_orderkey
-    LIMIT 10
-    """,
-)
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: selective filters pushed to scans, two shuffled
-    joins, agg, total-ordered top-10."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
-    )
-    l = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp")
-    )
-    revenue = _dec("l_extendedprice") * (F.lit(1) - _dec("l_discount"))
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(l, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum(revenue).cast("double").alias("revenue"))
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
-        .limit(10)
-    )
-
-
-@register(
-    "q5_region_revenue",
-    oracle="""
-    SELECT r.r_name,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4)) * (1 - CAST(l.l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue,
-           COUNT(*) AS n_items
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-    GROUP BY r.r_name
-    """,
-)
-def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q5 shape: star join — nation/region explicitly broadcast (dimension
-    tables never shuffle the fact side)."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    revenue = _dec("l_extendedprice") * (F.lit(1) - _dec("l_discount"))
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            F.sum(revenue).cast("double").alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-@register(
-    "topk_parts_per_brand",
-    oracle="""
-    WITH rev AS (
-      SELECT p.p_brand, l.l_partkey,
-             CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4)) * (1 - CAST(l.l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-      GROUP BY p.p_brand, l.l_partkey),
-    ranked AS (
-      SELECT *, row_number() OVER (ORDER BY revenue DESC, l_partkey) AS rk_global,
-             row_number() OVER (PARTITION BY p_brand ORDER BY revenue DESC, l_partkey) AS rk
-      FROM rev)
-    SELECT p_brand, l_partkey AS partkey, revenue, CAST(rk AS BIGINT) AS brand_rank
-    FROM ranked WHERE rk <= 3
-    """,
-)
-def q_topk_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped top-k via ranking window over an aggregated frame (SURVEY
-    §2.6 — windows the reference lacks). Total order = (revenue desc, key)."""
-    from pyspark.sql import Window
-
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    revenue = _dec("l_extendedprice") * (F.lit(1) - _dec("l_discount"))
-    rev = (
-        l.join(p, l.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "l_partkey")
-        .agg(F.sum(revenue).cast("double").alias("revenue"))
-    )
-    w = Window.partitionBy("p_brand").orderBy(F.col("revenue").desc(), F.col("l_partkey"))
-    return (
-        rev.withColumn("brand_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("brand_rank") <= 3)
-        .select("p_brand", F.col("l_partkey").alias("partkey"), "revenue", "brand_rank")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Temporal operators on events (green-field extensions, SURVEY §2.6/§2.9)
-# ---------------------------------------------------------------------------
-
-@register(
-    "events_hourly",
-    oracle="""
-    SELECT date_trunc('hour', ts) AS window_start, event_type,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value,
-           COUNT(DISTINCT user_id) AS n_users
-    FROM events
-    GROUP BY 1, 2
-    """,
-)
-def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window aggregation (batch twin of the streaming windowed
-    agg)."""
-    from bcg_contacts_data_pipeline_spark.operators.temporal import tumbling_agg
-
-    e = _events(spark, sf_dir)
-    return tumbling_agg(
-        e,
-        "ts",
-        "hour",
-        ["event_type"],
-        [
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(_dec("value")).cast("double").alias("sum_value"),
-            F.countDistinct("user_id").alias("n_users"),
-        ],
-    )
-
-
-@register(
-    "sessionize",
-    oracle="""
-    WITH marked AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                       OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-    sessions AS (
-      SELECT user_id, ts, event_id,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS UNBOUNDED PRECEDING) AS session_id
-      FROM marked)
-    SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-           COUNT(*) AS n_events, MIN(ts) AS session_start, MAX(ts) AS session_end
-    FROM sessions
-    GROUP BY user_id, session_id
-    """,
-)
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-min gap): lag + running sum, one
-    shuffle; then the per-session rollup reuses the same partitioning."""
-    from bcg_contacts_data_pipeline_spark.operators.temporal import sessionize
-
-    e = _events(spark, sf_dir)
-    s = sessionize(e, "user_id", "ts", 1_800_000_000, "event_id")
-    return (
-        s.groupBy("user_id", "session_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-        )
-        .select(
-            "user_id",
-            F.col("session_id").cast("long").alias("session_id"),
-            "n_events",
-            "session_start",
-            "session_end",
-        )
-    )
-
-
-@register(
-    "asof_purchase_click",
-    oracle="""
-    WITH purchases AS (
-      SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'),
-    clicks AS (
-      SELECT user_id, ts, arg_max(value, event_id) AS click_value
-      FROM events WHERE event_type = 'click' GROUP BY user_id, ts)
-    SELECT p.event_id, p.user_id, p.ts, p.value,
-           c.click_value AS last_click_value
-    FROM purchases p
-    ASOF LEFT JOIN clicks c ON p.user_id = c.user_id AND p.ts >= c.ts
-    """,
-)
-def q_asof_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (backward inclusive): for each purchase, the most recent
-    click value per user. Union-tag implementation — one shuffle, no range
-    explosion; oracle is DuckDB's native ASOF JOIN."""
-    from bcg_contacts_data_pipeline_spark.operators.temporal import asof_join
-
-    e = _events(spark, sf_dir)
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    clicks = (
-        e.filter(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(F.max_by("value", "event_id").alias("click_value"))
-    )
-    return asof_join(
-        purchases,
-        clicks,
-        on=["user_id"],
-        left_ts="ts",
-        right_ts="ts",
-        right_values={"last_click_value": "click_value"},
-    )
-
-
-@register(
-    "error_burst",
-    oracle="""
-    SELECT e.event_id, COUNT(f.event_id) AS n_follow
-    FROM (SELECT * FROM events WHERE event_type = 'error') e
-    LEFT JOIN events f
-      ON e.user_id = f.user_id AND f.ts > e.ts
-         AND epoch_us(f.ts) <= epoch_us(e.ts) + 3600000000
-    GROUP BY e.event_id
-    """,
-)
-def q_error_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded range join: events within 1 h after each error, per user —
-    bucketed implementation (each row probes 2 time buckets, not the whole
-    user history)."""
-    from bcg_contacts_data_pipeline_spark.operators.temporal import (
-        range_join_bucketed,
-    )
-
-    e = _events(spark, sf_dir)
-    errors = e.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("err_id"), F.col("user_id"), F.col("ts").alias("err_ts")
-    )
-    follow = e.select(
-        F.col("event_id").alias("f_id"), F.col("user_id"), F.col("ts").alias("f_ts")
-    )
-    joined = range_join_bucketed(
-        errors, follow, on=["user_id"], left_ts="err_ts", right_ts="f_ts",
-        window_us=3_600_000_000,
-    )
-    counts = joined.groupBy("err_id").agg(
-        F.countDistinct("f_id").alias("n_follow")
-    )
-    return (
-        errors.select("err_id").distinct()
-        .join(counts, "err_id", "left")
-        .select(
-            F.col("err_id").alias("event_id"),
-            F.coalesce(F.col("n_follow"), F.lit(0)).cast("long").alias("n_follow"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Document pipeline: text analysis + dedup (LLM-data extensions)
-# ---------------------------------------------------------------------------
-
-@register(
-    "exact_dedup",
-    oracle="""
-    SELECT md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS content_hash,
-           MIN(doc_id) AS canonical_id,
-           COUNT(*) AS dup_count
-    FROM documents
-    GROUP BY 1
-    """,
-)
-def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup via hash-groupBy on normalized content. The shuffle key
-    is the 32-char md5, never the document text."""
-    from bcg_contacts_data_pipeline_spark.operators.dedup import exact_dedup
-
-    docs = _t(spark, sf_dir, "documents")
-    return exact_dedup(docs, "text", "doc_id")
-
-
-_TOKS_SQL = "string_split_regex(trim(text), '\\s+')"
-_STOPLIST_SQL = "['the','a','of','and','to','in','is','on','for','with']"
-
-
-@register(
-    "token_stats",
-    oracle=f"""
-    SELECT doc_id,
-           CAST(CASE WHEN length(trim(text)) > 0 THEN len({_TOKS_SQL}) ELSE 0 END AS BIGINT) AS n_tokens,
-           CAST(length(text) AS BIGINT) AS n_chars,
-           CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS BIGINT) AS n_punct,
-           CAST(CASE WHEN length(trim(text)) > 0
-                THEN len(list_filter({_TOKS_SQL}, t -> list_contains({_STOPLIST_SQL}, lower(t))))
-                ELSE 0 END AS BIGINT) AS n_stopwords
-    FROM documents
-    """,
-)
-def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token/char/punct/stopword counting — narrow projection, no shuffle."""
-    from bcg_contacts_data_pipeline_spark.functions import text as T
-
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        T.token_count("text").alias("n_tokens"),
-        T.char_count("text").alias("n_chars"),
-        T.punct_count("text").alias("n_punct"),
-        T.stopword_count("text").alias("n_stopwords"),
-    )
-
-
-@register(
-    "lang_quality",
-    oracle=f"""
-    WITH counts AS (
-      SELECT doc_id,
-             CAST(CASE WHEN length(trim(text)) > 0 THEN len({_TOKS_SQL}) ELSE 0 END AS DOUBLE) AS nt,
-             CAST(length(text) AS DOUBLE) AS nc,
-             CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) AS pc,
-             CAST(CASE WHEN length(trim(text)) > 0
-                  THEN len(list_filter({_TOKS_SQL}, t -> list_contains({_STOPLIST_SQL}, lower(t))))
-                  ELSE 0 END AS DOUBLE) AS st
-      FROM documents)
-    SELECT doc_id,
-           CASE WHEN st >= 2 THEN 'en' ELSE 'und' END AS lang_guess,
-           CASE WHEN nt > 0 THEN
-             0.4 * least(nt / 100.0, 1.0)
-             + 0.3 * least(st / nt * 3.0, 1.0)
-             + 0.3 * (1.0 - least(pc / nc * 10.0, 1.0))
-           ELSE 0.0 END AS quality
-    FROM counts
-    """,
-)
-def q_lang_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID heuristic + composite quality score (exact integer
-    components -> bit-identical doubles)."""
-    from bcg_contacts_data_pipeline_spark.functions import text as T
-
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        T.lang_guess("text").alias("lang_guess"),
-        T.quality_score("text").alias("quality"),
-    )
-
-
-@register(
-    "fingerprint_dedup",
-    oracle=f"""
-    SELECT md5(array_to_string(list_sort(list_distinct(
-             list_transform({_TOKS_SQL}, t -> lower(t)))), ' ')) AS fingerprint,
-           MIN(doc_id) AS canonical_id,
-           COUNT(*) AS dup_count
-    FROM documents
-    WHERE length(trim(text)) > 0
-    GROUP BY 1
-    """,
-)
-def q_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word-set fingerprint dedup (order/multiplicity-insensitive)."""
-    from bcg_contacts_data_pipeline_spark.functions import text as T
-
-    docs = _t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
-    return (
-        docs.select(T.fingerprint("text").alias("fingerprint"), "doc_id")
-        .groupBy("fingerprint")
-        .agg(F.min("doc_id").alias("canonical_id"), F.count(F.lit(1)).alias("dup_count"))
-    )
-
-
-@register(
-    "ngram_jaccard",
-    oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, {_TOKS_SQL} AS t FROM documents WHERE length(trim(text)) > 0),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct(list_transform(range(1, len(t) - 1),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS shingle
-      FROM toks WHERE len(t) >= 3),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    shared AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS shared
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id)
-    SELECT s.id_a, s.id_b, s.shared,
-           sa.n AS size_a, sb.n AS size_b,
-           CAST(s.shared AS DOUBLE) / CAST(sa.n + sb.n - s.shared AS DOUBLE) AS jaccard
-    FROM shared s
-    JOIN sizes sa ON s.id_a = sa.doc_id
-    JOIN sizes sb ON s.id_b = sb.doc_id
-    WHERE CAST(s.shared AS DOUBLE) / CAST(sa.n + sb.n - s.shared AS DOUBLE) >= 0.05
-    """,
-)
-def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 3-gram Jaccard near-dup pairs via shingle inverted index."""
-    from bcg_contacts_data_pipeline_spark.operators.similarity import (
-        ngram_jaccard_pairs,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.05)
-
-
-# ---------------------------------------------------------------------------
-# Embedding similarity search
-# ---------------------------------------------------------------------------
-
-_DOT_SQL = (
-    "list_reduce(list_transform(list_zip({a}, {b}), "
-    "x -> x[1]::DOUBLE * x[2]::DOUBLE), (acc, v) -> acc + v)"
+from bcg_contacts_data_pipeline_spark.plans.registry import (
+    ORACLE,
+    QUERIES,
+    register,
 )
 
-
-@register(
-    "embedding_topk",
-    oracle=f"""
-    WITH scored AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             {_DOT_SQL.format(a='q.embedding', b='c.embedding')}
-             / (sqrt({_DOT_SQL.format(a='q.embedding', b='q.embedding')})
-                * sqrt({_DOT_SQL.format(a='c.embedding', b='c.embedding')})) AS score
-      FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY score DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, score
-    FROM ranked WHERE rank <= 5
-    """,
-)
-def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact brute-force cosine top-5. Float math is a sequential double
-    fold on BOTH engines (see functions/vectors.py) so scores are
-    bit-identical and even the ranking hash-matches."""
-    from bcg_contacts_data_pipeline_spark.operators.similarity import embedding_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = embedding_topk(emb, "vec_id", "embedding", k=5)
-    return out.select(
-        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"), "score"
-    )
-
-
-# ---------------------------------------------------------------------------
-# LSH family. The seeded hash FAMILIES (xxhash64 minhash permutations,
-# simhash bit votes) are not SQL-expressible, but each operator still gets
-# a hash-checked oracle through a provable property:
-#
-# - minhash/simhash: recall over CONSTRUCTED exact-duplicate pairs. The
-#   corpus is the documents table unioned with an id-offset copy of
-#   itself; a doc and its copy have identical shingle sets / token
-#   streams, hence identical signatures, hence land in identical buckets
-#   — so the operator MUST find every constructed pair (deterministic,
-#   not probabilistic) and the recall aggregate is exactly 1.0, which
-#   DuckDB can state independently. A bucketing/join/dedup bug on either
-#   operator breaks the equality. (Near-dup recall below jaccard 1.0 has
-#   no guarantee and is exercised by unit tests instead.)
-# - embedding_ann_lsh: FULLY SQL-expressible — the seeded hyperplanes are
-#   fixed doubles embedded in the oracle as literals; bucket signs and
-#   cosine scores reproduce bit-identically via the sequential fold.
-# ---------------------------------------------------------------------------
-
-#: Offset added to copied doc ids in the recall corpora; far above any
-#: real doc_id at any plausible scale factor.
-_COPY_OFFSET = 1 << 40
-
-_RECALL_ORACLE_TMPL = """
-    WITH eligible AS (
-      SELECT doc_id FROM documents
-      WHERE length(trim(text)) > 0 AND len({toks}) >= {min_tokens})
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_true,
-           CAST(COUNT(*) AS BIGINT) AS n_found,
-           CAST(COUNT(*) AS DOUBLE) / COUNT(*) AS recall
-    FROM eligible
-"""
-
-
-def _recall_frame(found_pairs: DataFrame, truth: DataFrame) -> DataFrame:
-    """(n_true, n_found, recall) for constructed true pairs vs the
-    candidate pair set (inner-join containment check)."""
-    hits = truth.join(found_pairs, ["id_a", "id_b"], "left_semi")
-    return truth.agg(F.count(F.lit(1)).alias("n_true")).crossJoin(
-        hits.agg(F.count(F.lit(1)).alias("n_found"))
-    ).select(
-        "n_true",
-        "n_found",
-        # try_divide: an empty corpus gives n_true=0; ANSI x/0 throws where
-        # DuckDB (the oracle engine) yields NULL — try_divide matches it.
-        F.try_divide(F.col("n_found").cast("double"), F.col("n_true")).alias(
-            "recall"
-        ),
-    )
-
-
-def _docs_with_copy(docs: DataFrame) -> DataFrame:
-    # row-local explode, not a self-union (r14, guide §2.4): union
-    # branches are separate subtrees with zero scan/exchange reuse, so
-    # the union form read the documents parquet (text included — the
-    # heavy column) TWICE and re-ran every downstream per-branch stage
-    # twice; each row now emits (id, id+offset) against one scan
-    return docs.select(
-        F.explode(
-            F.array(F.col("doc_id"), F.col("doc_id") + F.lit(_COPY_OFFSET))
-        ).alias("doc_id"),
-        "text",
-    )
-
-
-def _sigs_with_copy(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Corpus ∪ id-offset copy at the SIGNATURE level (r14 continuation,
-    guide §2.3 — do the heavy per-row work once, then multiply rows):
-    the copy's text is identical by construction, so its signature is
-    identical, and exploding the ids AFTER the per-row signature
-    projection tokenizes/shingles/hashes each text ONCE instead of once
-    per copy. Bit-identical to running the signature operator over
-    ``_docs_with_copy``: a signature is a pure function of the text, so
-    both forms emit the same (id, signature) multiset — pinned by
-    tests/test_properties_r14.py's sig-level-copy equivalence tests."""
-    rest = [c for c in sigs.columns if c != id_col]
-    return sigs.select(
-        F.explode(
-            F.array(F.col(id_col), F.col(id_col) + F.lit(_COPY_OFFSET))
-        ).alias(id_col),
-        *rest,
-    )
-
-
-def _emb_with_copy(emb: DataFrame) -> DataFrame:
-    """Corpus ∪ id-offset copy for the embedding recall corpora — the
-    vector twin of ``_docs_with_copy``, same row-local explode instead
-    of a self-union (r14: the union read the embeddings parquet — the
-    heavy vector column — once per branch per downstream consumer)."""
-    return emb.select(
-        F.explode(
-            F.array(F.col("vec_id"), F.col("vec_id") + F.lit(_COPY_OFFSET))
-        ).alias("vec_id"),
-        "embedding",
-    )
-
-
-@register(
-    "minhash_recall",
-    oracle=_RECALL_ORACLE_TMPL.format(toks=_TOKS_SQL, min_tokens=3),
-)
-def q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash(64) + 16-band LSH over documents + an exact copy of each:
-    identical shingle sets => identical signatures => every constructed
-    pair is a guaranteed candidate (est_jaccard 1.0 passes the verify
-    threshold), so recall over the constructed truth is exactly 1.0.
-    Docs with < 3 tokens yield no shingles (no signature) and are
-    excluded from the truth on both sides."""
-    from bcg_contacts_data_pipeline_spark.functions.text import tokens
-    from bcg_contacts_data_pipeline_spark.operators.similarity import (
-        minhash_lsh_pairs_from_sigs,
-        minhash_signatures,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    # signatures once per text, ids exploded after (_sigs_with_copy)
-    pairs = minhash_lsh_pairs_from_sigs(
-        _sigs_with_copy(
-            minhash_signatures(docs, "doc_id", "text", n=3, num_hashes=64)
-        ),
-        "doc_id",
-        num_hashes=64,
-        bands=16,
-        verify_threshold=0.5,
-    )
-    truth = docs.filter(
-        (F.length(F.trim("text")) > 0) & (F.size(tokens(F.col("text"))) >= 3)
-    ).select(
-        F.col("doc_id").alias("id_a"),
-        (F.col("doc_id") + F.lit(_COPY_OFFSET)).alias("id_b"),
-    )
-    return _recall_frame(pairs, truth)
-
-
-@register(
-    "decontaminate",
-    oracle=f"""
-    WITH eligible AS (
-      SELECT doc_id FROM documents
-      WHERE doc_id % 10 = 0 AND length(trim(text)) > 0
-        AND len({_TOKS_SQL}) >= 3)
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_true,
-           CAST(COUNT(*) AS BIGINT) AS n_found,
-           CAST(COUNT(*) AS DOUBLE) / COUNT(*) AS recall
-    FROM eligible
-    """,
-)
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: cross-corpus MinHash-LSH join flagging
-    training documents that near-match an eval set (here: every 10th doc
-    doubles as the 'benchmark'). Each eval doc IS in the corpus, so its
-    identical twin pair (id, id) is a provable must-find (same shingles
-    => same signature => same bands => est_jaccard 1.0); recall over
-    that constructed truth is exactly 1.0, independently stated by the
-    oracle. Docs with < 3 tokens have no shingles and are excluded on
-    both sides. Same proof shape as minhash_recall, but exercising the
-    CROSS-FRAME join path (operators/similarity.py:minhash_lsh_join).
-
-    r14 continuation: the eval set IS a filter of the training corpus
-    and a signature is a pure per-row function of the text, so the
-    query signs the corpus ONCE and filters the SIGNATURE frame for the
-    eval side (filter commutes with the row-local projection —
-    bit-identical to re-signing the filtered text). The eval side then
-    scans the pinned corpus signatures instead of re-tokenizing/
-    re-shingling every tenth document (guide §2.3)."""
-    from bcg_contacts_data_pipeline_spark.functions.text import tokens
-    from bcg_contacts_data_pipeline_spark.operators.similarity import (
-        minhash_lsh_join_from_sigs,
-        minhash_signatures,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    sl = minhash_signatures(
-        docs.select("doc_id", "text"), "doc_id", "text", n=3, num_hashes=64
-    )
-    sr = sl.filter(F.col("doc_id") % 10 == 0).select(
-        F.col("doc_id").alias("eval_id"), "sigs"
-    )
-    pairs = minhash_lsh_join_from_sigs(
-        sl, "doc_id", sr, "eval_id",
-        num_hashes=64, bands=16, verify_threshold=0.5,
-    )
-    truth = docs.filter(
-        (F.col("doc_id") % 10 == 0)
-        & (F.length(F.trim("text")) > 0)
-        & (F.size(tokens(F.col("text"))) >= 3)
-    ).select(F.col("doc_id").alias("id_a"), F.col("doc_id").alias("id_b"))
-    return _recall_frame(pairs, truth)
-
-
-@register(
-    "simhash_recall",
-    oracle=_RECALL_ORACLE_TMPL.format(toks=_TOKS_SQL, min_tokens=1),
-)
-def q_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash64 + 8-bit banding (candidate generation COMPLETE for
-    hamming <= 7 by pigeonhole) over documents + an exact copy: identical
-    token streams => identical signatures => hamming 0 => guaranteed
-    found; recall over the constructed truth is exactly 1.0. Docs with no
-    tokens produce no signature and are excluded from the truth."""
-    from bcg_contacts_data_pipeline_spark.functions.text import tokens
-    from bcg_contacts_data_pipeline_spark.operators.similarity import (
-        simhash64,
-        simhash_pairs_from_sigs,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    # signatures once per text, ids exploded after (_sigs_with_copy)
-    pairs = simhash_pairs_from_sigs(
-        _sigs_with_copy(simhash64(docs, "doc_id", "text")),
-        "doc_id",
-        max_hamming=7,
-    )
-    truth = docs.filter(
-        (F.length(F.trim("text")) > 0) & (F.size(tokens(F.col("text"))) >= 1)
-    ).select(
-        F.col("doc_id").alias("id_a"),
-        (F.col("doc_id") + F.lit(_COPY_OFFSET)).alias("id_b"),
-    )
-    return _recall_frame(pairs, truth)
-
-
-def _ann_lsh_oracle(dim: int = 64, num_planes: int = 6, k: int = 5, seed: int = 42) -> str:
-    """Full DuckDB twin of embedding_ann_lsh: the seeded hyperplanes are
-    deterministic Python floats, embedded as SQL literals (repr round-trips
-    exactly), so bucket signs and scores match bit-for-bit."""
-    from bcg_contacts_data_pipeline_spark.operators.similarity import _hyperplanes
-
-    planes = _hyperplanes(dim, num_planes, seed)
-    bucket_terms = []
-    for i, plane in enumerate(planes):
-        lits = ", ".join(repr(x) for x in plane)
-        d = _DOT_SQL.format(a="embedding", b=f"[{lits}]")
-        bucket_terms.append(f"(CASE WHEN {d} >= 0 THEN {1 << i} ELSE 0 END)")
-    bucket = " + ".join(bucket_terms)
-    return f"""
-    WITH b AS (
-      SELECT vec_id, embedding,
-             {bucket} AS bucket,
-             sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
-      FROM embeddings),
-    scored AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             {_DOT_SQL.format(a='q.embedding', b='c.embedding')} / (q.nrm * c.nrm) AS score
-      FROM b q JOIN b c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY score DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, score
-    FROM ranked WHERE rank <= {k}
-    """
-
-
-@register("embedding_ann_lsh", oracle=_ann_lsh_oracle())
-def q_embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Random-hyperplane LSH approximate top-5 (the scale path for ANN).
-
-    ``num_planes`` is pinned at 6 here ONLY because the DuckDB twin
-    embeds the seeded hyperplanes as literals, so both engines must
-    agree on the count up front. Production callers should leave the
-    operator's default ``num_planes="auto"``, which sizes the plane
-    count from a corpus count via ``lsh_num_planes`` (expected bucket
-    occupancy <= ~4k rows; see its docstring for the recall/cost dial).
-    """
-    from bcg_contacts_data_pipeline_spark.operators.similarity import (
-        embedding_ann_lsh,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = embedding_ann_lsh(emb, "vec_id", "embedding", dim=64, k=5, num_planes=6)
-    return out.select(
-        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"), "score"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Structured Streaming (SURVEY §2.9 — green-field; each query is the
-# streaming twin of a batch operator above, executed to completion with
-# Trigger.AvailableNow so the DuckDB batch oracle applies verbatim).
-# ---------------------------------------------------------------------------
-
-@register(
-    "stream_hourly_counts",
-    oracle="""
-    SELECT date_trunc('hour', ts) AS window_start,
-           date_trunc('hour', ts) + INTERVAL 1 HOUR AS window_end,
-           event_type, COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-    FROM events
-    GROUP BY 1, 2, 3
-    """,
-)
-def q_stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked tumbling-window streaming aggregation, run to completion
-    (complete output mode: every window emits once the source drains)."""
-    from bcg_contacts_data_pipeline_spark import streaming as S
-
-    st = S.events_stream(spark, sf_dir)
-    agg = S.windowed_agg(
-        st,
-        "ts",
-        "1 hour",
-        ["event_type"],
-        [
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(_dec("value")).cast("double").alias("sum_value"),
-        ],
-        watermark="1 hour",
-    )
-    return S.run_available_now(agg, "complete", shuffle_partitions=8)
-
-
-@register(
-    "stream_sessions",
-    oracle="""
-    WITH marked AS (
-      SELECT user_id, ts,
-             CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                       OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-    sessions AS (
-      SELECT user_id, ts,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                               ROWS UNBOUNDED PRECEDING) AS session_id
-      FROM marked)
-    SELECT user_id, MIN(ts) AS session_start,
-           MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-           COUNT(*) AS n_events
-    FROM sessions
-    GROUP BY user_id, session_id
-    """,
-)
-def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming session windows (30-min gap) via session_window; the
-    window end is last_event_ts + gap, matching the oracle's island SQL.
-    Same session boundaries as the batch `sessionize` query."""
-    from bcg_contacts_data_pipeline_spark import streaming as S
-
-    st = S.events_stream(spark, sf_dir)
-    agg = S.session_agg(
-        st,
-        ["user_id"],
-        "ts",
-        "30 minutes",
-        [F.count(F.lit(1)).alias("n_events")],
-        watermark="1 hour",
-    )
-    return S.run_available_now(agg, "complete", shuffle_partitions=8)
-
-
-@register(
-    "stream_dedup_keys",
-    oracle="SELECT DISTINCT user_id, event_type FROM events",
-)
-def q_stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exact dedup (dropDuplicatesWithinWatermark): first row per
-    (user_id, event_type) is emitted as it arrives; key state expires with
-    the watermark. Projected to the key columns so the result is
-    order-insensitive and equals batch DISTINCT."""
-    from bcg_contacts_data_pipeline_spark import streaming as S
-
-    st = S.events_stream(spark, sf_dir)
-    dd = S.dedup_within_watermark(st, ["user_id", "event_type"], "ts", "2 hours")
-    return S.run_available_now(
-        dd.select("user_id", "event_type"), "append", shuffle_partitions=8
-    )
-
-
-@register(
-    "stream_running_stats",
-    oracle="""
-    SELECT user_id, COUNT(*) AS n_events,
-           CAST(MAX(CAST(value AS DOUBLE)) AS DOUBLE) AS max_value
-    FROM events GROUP BY user_id
-    """,
-)
-def q_stream_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState): per-user running
-    (count, max) in keyed state, update mode. On the finite test source the
-    single micro-batch's emission equals the batch GROUP BY."""
-    from bcg_contacts_data_pipeline_spark import streaming as S
-
-    st = S.events_stream(spark, sf_dir)
-    out = S.running_user_stats(st.select("user_id", "value"))
-    return S.run_available_now(out, "update", shuffle_partitions=8)
-
-
-# ---------------------------------------------------------------------------
-# Multimodal binary columns (beyond-reference). ALL metadata decodes are
-# REAL parses over genuine synthesized bytes: image headers (PNG IHDR +
-# CRC / JPEG SOF / WebP VP8L), WAV RIFF chunk walk, ISO-BMFF (MP4)
-# sample-table demux — stdlib struct+zlib, see operators/multimodal.py.
-# Each fixture derives its parameters from length(text) with
-# SQL-expressible arithmetic, so the oracles certify the full
-# encode->parse round trips.
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "media_image_meta",
-    oracle="""
-    SELECT doc_id,
-           CAST(16 + length(text) % 64 AS INT) AS width,
-           CAST(16 + (length(text) * 7) % 64 AS INT) AS height,
-           CASE length(text) % 3
-                WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'webp'
-           END AS format
-    FROM documents
-    """,
-)
-def q_media_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary image column -> typed metadata by REAL header parsing:
-    the fixture synthesizes genuine PNG / JFIF-JPEG / RIFF-VP8L bytes
-    with dimensions derived from ``length(text)``, and the decode stage
-    reads them back from the actual IHDR / SOF0 / VP8L headers
-    (operators/multimodal.py:parse_image_meta — stdlib struct+zlib, no
-    imaging library). The oracle recomputes the dimensions from the
-    text length, so a hash match proves the encode->parse round trip.
-    n_bytes is dropped from the query surface: PNG's IDAT length is a
-    zlib artifact no SQL oracle should re-derive (covered by unit
-    tests instead)."""
-    from bcg_contacts_data_pipeline_spark.operators import multimodal as M
-
-    docs = _t(spark, sf_dir, "documents")
-    payload = M.synthesize_image_payload(docs, "doc_id", "text")
-    return M.decode_image_meta(payload, "doc_id").select(
-        "doc_id", "width", "height", "format"
-    )
-
-
-@register(
-    "media_frame_sample",
-    oracle="""
-    WITH v AS (
-      SELECT doc_id, CAST(4 + length(text) % 13 AS INT) AS n_frames
-      FROM documents)
-    SELECT doc_id, CAST(unnest(range(0, n_frames, 3)) AS INT) AS frame_idx,
-           n_frames
-    FROM v
-    """,
-)
-def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame sampling: one row per kept frame (stride 3); fan-out
-    mapInPandas. REAL since r7: the fixture packs per-doc frames into a
-    genuine ISO-BMFF container (ftyp/mdat/moov with a full stsd/stts/
-    stsc/stsz/stco sample table) and sample_frames demuxes them back by
-    walking the boxes and slicing mdat via stco + cumulative stsz
-    (operators/multimodal.py:parse_video_frames). The oracle recomputes
-    the frame count from length(text), so the hash match proves the
-    mux->demux round trip; frame BYTES are dropped from the query
-    surface (blob content is pinned by unit tests, not SQL)."""
-    from bcg_contacts_data_pipeline_spark.operators import multimodal as M
-
-    docs = _t(spark, sf_dir, "documents")
-    out = M.sample_frames(
-        M.synthesize_video_payload(docs, "doc_id", "text"), "doc_id", stride=3
-    )
-    return out.select("doc_id", "frame_idx", "n_frames")
-
-
-@register(
-    "media_audio_stats",
-    oracle="""
-    WITH a AS (
-      SELECT doc_id,
-             CASE length(text) % 3
-                  WHEN 0 THEN 8000 WHEN 1 THEN 16000 ELSE 44100
-             END AS sample_rate,
-             100 + (length(text) * 37) % 2000 AS n_samples
-      FROM documents)
-    SELECT CAST(sample_rate AS INT) AS sample_rate,
-           COUNT(*) AS n_docs,
-           CAST(SUM(CAST(n_samples AS BIGINT)) AS BIGINT) AS total_samples,
-           CAST(SUM(CAST(CAST(n_samples AS DOUBLE) / sample_rate
-                         AS DECIMAL(18,12))) AS DOUBLE) AS total_duration_s
-    FROM a GROUP BY 1
-    """,
-)
-def q_media_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio decode then a rollup per sample rate — the typical
-    media-pipeline shape: Python decode first, cheap JVM agg after,
-    payload pruned before the shuffle. Decode is REAL since r7: the
-    fixture emits complete PCM WAVs (rate and sample count derived from
-    length(text)) and audio_features reads them back from the actual
-    RIFF fmt/data chunks (operators/multimodal.py:parse_audio_meta), so
-    the hash match proves the WAV encode->parse round trip. Durations
-    sum through DECIMAL(18,12) on both engines (each duration is one
-    IEEE division; the staging makes the SUM order-independent)."""
-    from bcg_contacts_data_pipeline_spark.operators import multimodal as M
-
-    docs = _t(spark, sf_dir, "documents")
-    audio = M.audio_features(
-        M.synthesize_audio_payload(docs, "doc_id", "text"), "doc_id"
-    )
-    return audio.groupBy("sample_rate").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_samples").cast("long").alias("total_samples"),
-        F.sum(F.col("duration_s").cast("decimal(18,12)"))
-        .cast("double")
-        .alias("total_duration_s"),
-    )
-
-
-@register(
-    "embedding_neardup",
-    oracle=f"""
-    WITH pairs AS (
-      SELECT a.vec_id AS aid, b.vec_id AS bid
-      FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-      WHERE {_DOT_SQL.format(a='a.embedding', b='b.embedding')}
-            / (sqrt({_DOT_SQL.format(a='a.embedding', b='a.embedding')})
-               * sqrt({_DOT_SQL.format(a='b.embedding', b='b.embedding')}))
-            >= 0.4),
-    mins AS (SELECT bid, MIN(aid) AS min_aid FROM pairs GROUP BY bid)
-    SELECT e.vec_id AS doc_id,
-           COALESCE(m.min_aid, e.vec_id) AS canonical_id,
-           m.bid IS NOT NULL AS is_duplicate
-    FROM embeddings e LEFT JOIN mins m ON e.vec_id = m.bid
-    """,
-)
-def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup dedup (greedy lowest-id canonical,
-    cosine >= 0.4). Scores are bit-identical to DuckDB (sequential double
-    fold), so even the threshold comparison hash-matches."""
-    from bcg_contacts_data_pipeline_spark.operators.similarity import (
-        embedding_neardup,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return embedding_neardup(emb, "vec_id", "embedding", threshold=0.4)
-
-
-# ---------------------------------------------------------------------------
-# JDBC staging edge (SURVEY §2.1 S7/S8 — the reference's SQLite staging
-# re-expressed as Spark's JDBC source/sink against embedded Derby).
-# ---------------------------------------------------------------------------
-
-@register(
-    "jdbc_stage_roundtrip",
-    oracle="""
-    SELECT n.n_name, COUNT(*) AS n_suppliers,
-           CAST(SUM(CAST(s.s_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS total_acctbal
-    FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
-    WHERE s.s_nationkey < 13
-    GROUP BY n.n_name
-    """,
-)
-def q_jdbc_stage_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stage supplier into embedded Derby (S7), read it back as a
-    bound-partitioned JDBC scan with the filter pushed into the remote
-    query (S8), then a broadcast join to nation + rollup. The round trip
-    proves sink, source, partitioned read, and pushdown on one path."""
-    from bcg_contacts_data_pipeline_spark.io import jdbc as J
-
-    sup = _t(spark, sf_dir, "supplier")
-    url = J.scratch_derby_url(f"stage_{sf_dir}")
-    J.write_jdbc(sup, url, "supplier_stage", num_partitions=2)
-    # max() over an empty staged table is NULL; any positive bound keeps
-    # the partitioned read valid (it just scans zero rows per stride).
-    hi = sup.agg(F.max("s_suppkey")).first()[0] or 0
-    back = J.read_jdbc(
-        spark,
-        url,
-        "supplier_stage",
-        partition_column="s_suppkey",
-        lower_bound=0,
-        upper_bound=int(hi) + 1,
-        num_partitions=4,
-    ).filter(F.col("s_nationkey") < 13)
-    nation = _t(spark, sf_dir, "nation")
-    return (
-        back.join(F.broadcast(nation), back.s_nationkey == nation.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_suppliers"),
-            F.sum(_dec("s_acctbal")).cast("double").alias("total_acctbal"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Beyond-reference §2.4/§2.7 widening: rollup aggregates, union-then-dedup
-# (the idiomatic redesign of the whole reference pipeline), and the extra
-# text-analysis modes the training-data brief names (BPE-ish token counts,
-# rolling-hash fingerprints).
-# ---------------------------------------------------------------------------
-
-@register(
-    "rollup_pricing",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-           COUNT(*) AS n,
-           CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS BIGINT)
-               AS grouping_id
-    FROM lineitem
-    GROUP BY ROLLUP (l_returnflag, l_linestatus)
-    """,
-)
-def q_rollup_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical rollup (flag -> flag+status -> grand total) in one
-    pass — the grouping-sets surface the reference lacked (SURVEY §2.4
-    'absent'); Catalyst expands + partially aggregates it like any other
-    groupBy."""
-    l = _t(spark, sf_dir, "lineitem")
-    return (
-        l.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.count(F.lit(1)).alias("n"),
-            F.grouping_id().cast("long").alias("grouping_id"),
-        )
-    )
-
-
-@register(
-    "union_sources_dedup",
-    oracle="""
-    WITH unioned AS (
-      SELECT c_name AS name, c_nationkey AS nation, CAST(c_acctbal AS DOUBLE) AS bal,
-             'crm' AS src FROM customer
-      UNION ALL
-      SELECT s_name AS name, s_nationkey AS nation, CAST(s_acctbal AS DOUBLE) AS bal,
-             'vendor' AS src FROM supplier)
-    SELECT lower(trim(name)) AS name_key,
-           COUNT(*) AS n_records,
-           CAST(COUNT(DISTINCT src) AS BIGINT) AS n_sources,
-           CAST(MIN(CAST(bal AS DECIMAL(18,4))) AS DOUBLE) AS min_bal
-    FROM unioned
-    GROUP BY 1
-    """,
-)
-def q_union_sources_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.7 — the reference never unions its sources; unionByName-then-
-    dedup is the idiomatic Spark redesign of its whole enrich/merge
-    pipeline. Two heterogeneous 'sources' conformed, unioned, grouped on
-    the normalized key."""
-    cust = _t(spark, sf_dir, "customer").select(
-        F.col("c_name").alias("name"),
-        F.col("c_nationkey").alias("nation"),
-        F.col("c_acctbal").cast("double").alias("bal"),
-        F.lit("crm").alias("src"),
-    )
-    supp = _t(spark, sf_dir, "supplier").select(
-        F.col("s_name").alias("name"),
-        F.col("s_nationkey").alias("nation"),
-        F.col("s_acctbal").cast("double").alias("bal"),
-        F.lit("vendor").alias("src"),
-    )
-    return (
-        cust.unionByName(supp)
-        .groupBy(F.lower(F.trim(F.col("name"))).alias("name_key"))
-        .agg(
-            F.count(F.lit(1)).alias("n_records"),
-            F.countDistinct("src").alias("n_sources"),
-            F.min(_dec("bal")).cast("double").alias("min_bal"),
-        )
-    )
-
-
-@register(
-    "doc_signatures",
-    oracle="""
-    SELECT doc_id,
-           CAST(len(regexp_extract_all(text,
-                '[A-Za-z]+|[0-9]+|[^\\sA-Za-z0-9]')) AS BIGINT) AS n_bpe_tokens,
-           list_reduce(list_prepend(0::BIGINT,
-                [ascii(x) for x in string_split(text, '')]),
-                (acc, ch) -> (acc*31 + ch) % 2147483647) AS rhash
-    FROM documents
-    """,
-)
-def q_doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-ish token counting + rolling-hash document fingerprint — both
-    pure expressions (regexp_extract_all / aggregate fold), narrow
-    projection, no shuffle."""
-    from bcg_contacts_data_pipeline_spark.functions import text as T
-
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        T.bpe_ish_token_count("text").alias("n_bpe_tokens"),
-        T.rolling_hash("text").alias("rhash"),
-    )
-
-
-@register(
-    "events_moving_avg",
-    oracle="""
-    SELECT event_id, user_id,
-           CAST(COUNT(*) OVER w AS BIGINT) AS n_window,
-           CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE)
-                / COUNT(*) OVER w AS DOUBLE) AS avg_value
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-                 RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-    """,
-)
-def q_events_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing 1-hour moving average per user — a RANGE window frame
-    (value-based, so same-timestamp ties land in the same frame in every
-    engine; no tie-order hazard). The sum goes through DECIMAL(18,6):
-    exact and associative, so sliding-frame add/remove (Spark) and
-    per-frame recompute (DuckDB) cannot diverge; ONE IEEE division at
-    the end. One shuffle on user_id."""
-    from pyspark.sql import Window
-
-    e = _events(spark, sf_dir)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.unix_micros(F.col("ts")))
-        .rangeBetween(-3_600_000_000, 0)
-    )
-    n = F.count(F.lit(1)).over(w)
-    total = F.sum(F.col("value").cast("decimal(18,6)")).over(w)
-    return e.select(
-        "event_id",
-        "user_id",
-        n.cast("long").alias("n_window"),
-        (total.cast("double") / n).alias("avg_value"),
-    )
-
-
-@register(
-    "numeric_profile",
-    oracle="""
-    SELECT 'l_extendedprice' AS col,
-           CAST(COUNT(l_extendedprice) AS BIGINT) AS n,
-           round(CAST(quantile_cont(l_extendedprice, 0.5) AS DOUBLE), 4) AS p50,
-           round(CAST(quantile_cont(l_extendedprice, 0.9) AS DOUBLE), 4) AS p90,
-           round(CAST(quantile_cont(l_extendedprice, 0.99) AS DOUBLE), 4) AS p99
-    FROM lineitem
-    UNION ALL
-    SELECT 'value', CAST(COUNT(value) AS BIGINT),
-           round(CAST(quantile_cont(value, 0.5) AS DOUBLE), 4),
-           round(CAST(quantile_cont(value, 0.9) AS DOUBLE), 4),
-           round(CAST(quantile_cont(value, 0.99) AS DOUBLE), 4)
-    FROM events
-    """,
-)
-def q_numeric_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles (p50/p90/p99) over fact columns —
-    the data-profiling stat the approx HLL profile (profile_columns)
-    doesn't cover. Spark `percentile` and DuckDB `quantile_cont` share
-    the interpolation definition; results round to 4 decimals because
-    the two engines' interpolation arithmetic differs in the last ulp.
-    At 100 TB use the sketch twin `numeric_profile_approx` (registered
-    below) — this query pins the exact baseline the sketch is judged
-    against, and the twin's in-band booleans do that judging in-query."""
-    def prof(df, col, label):
-        pct = F.percentile(F.col(col), F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99)))
-        return df.agg(
-            F.count(F.col(col)).alias("n"),
-            pct.alias("__p"),
-        ).select(
-            F.lit(label).alias("col"),
-            "n",
-            F.round(F.col("__p")[0], 4).alias("p50"),
-            F.round(F.col("__p")[1], 4).alias("p90"),
-            F.round(F.col("__p")[2], 4).alias("p99"),
-        )
-
-    li = _t(spark, sf_dir, "lineitem")
-    ev = _events(spark, sf_dir)
-    return prof(li, "l_extendedprice", "l_extendedprice").unionByName(
-        prof(ev, "value", "value")
-    )
-
-
-@register(
-    "numeric_profile_approx",
-    oracle="""
-    SELECT 'l_extendedprice' AS col,
-           CAST(COUNT(l_extendedprice) AS BIGINT) AS n,
-           true AS p50_in_band, true AS p90_in_band, true AS p99_in_band
-    FROM lineitem
-    UNION ALL
-    SELECT 'value', CAST(COUNT(value) AS BIGINT), true, true, true
-    FROM events
-    """,
-)
-def q_numeric_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB twin of numeric_profile: `approx_percentile` (the
-    Greenwald-Khanna sketch — bounded memory, map-side mergeable, no
-    single aggregation buffer holding a column's every value) instead of
-    exact `percentile`.
-
-    Sketch outputs aren't bit-stable across engines, so the oracle
-    contract is a TOLERANCE BAND enforced through the exact-hash gate:
-    the Spark side computes, in the same single aggregate, both the
-    sketch percentiles (accuracy=10000, guaranteed rank error
-    <= n/10000) and the EXACT percentiles at q +/- 10x that rank slack,
-    then emits `approx between lo and hi` booleans. The oracle pins the
-    booleans TRUE (and the count exact): a sketch outside its guaranteed
-    band flips a boolean and fails the value-hash compare. The exact
-    bounds are the local-verification harness only — production callers
-    use the sketch columns; numeric_profile remains the exact baseline.
-    """
-    qs = [0.5, 0.9, 0.99]
-    acc = 10_000
-    slack = 10.0 / acc
-
-    def prof(df, col, label):
-        c = F.col(col)
-        ap = F.percentile_approx(
-            c, F.array(*[F.lit(q) for q in qs]), F.lit(acc)
-        )
-        # ONE exact-percentile aggregate for all 6 band edges (lo+hi per
-        # q): each `percentile` call keeps its own buffer of the
-        # column's values, so splitting lo/hi into two calls doubles the
-        # harness's memory and sort cost for nothing.
-        edges = [max(qs[0] - slack, 0.0), min(qs[0] + slack, 1.0),
-                 max(qs[1] - slack, 0.0), min(qs[1] + slack, 1.0),
-                 max(qs[2] - slack, 0.0), min(qs[2] + slack, 1.0)]
-        band = F.percentile(c, F.array(*[F.lit(e) for e in edges]))
-        row = df.agg(
-            F.count(c).alias("n"),
-            ap.alias("__ap"),
-            band.alias("__band"),
-        )
-        return row.select(
-            F.lit(label).alias("col"),
-            "n",
-            *[
-                (
-                    (F.col("__ap")[i] >= F.col("__band")[2 * i])
-                    & (F.col("__ap")[i] <= F.col("__band")[2 * i + 1])
-                ).alias(f"p{int(q * 100)}_in_band")
-                for i, q in enumerate(qs)
-            ],
-        )
-
-    li = _t(spark, sf_dir, "lineitem")
-    ev = _events(spark, sf_dir)
-    return prof(li, "l_extendedprice", "l_extendedprice").unionByName(
-        prof(ev, "value", "value")
-    )
-
-
-@register(
-    "pack_shards",
-    oracle=f"""
-    WITH sized AS (
-      SELECT doc_id,
-             CAST(CASE WHEN length(trim(text)) > 0
-                  THEN len({_TOKS_SQL}) ELSE 0 END AS BIGINT) AS n_tokens
-      FROM documents)
-    SELECT doc_id, n_tokens,
-           CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                // 2000 AS BIGINT) AS shard_id
-    FROM sized
-    """,
-)
-def q_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-shard assignment: contiguous packing of documents into
-    ~2000-token shards in doc_id order — shard_id = floor(exclusive
-    running token sum / budget). Pure integer arithmetic, engine-exact.
-    The Spark side computes the global running sum WITHOUT a
-    single-partition window (two-pass partition-offset,
-    operators/pack.py) — the oracle's bare `ORDER BY` window is the
-    1-task shape this operator exists to avoid."""
-    from bcg_contacts_data_pipeline_spark.functions.text import token_count
-    from bcg_contacts_data_pipeline_spark.operators.pack import pack_shards
-
-    docs = _t(spark, sf_dir, "documents")
-    sized = docs.select(
-        "doc_id", token_count(F.col("text")).alias("n_tokens")
-    )
-    return pack_shards(sized, "doc_id", "n_tokens", budget=2000)
-
-
-# ONE source for the PII regexes: the oracle interpolates the same dict
-# the Spark-side pii_counts/redact_pii use, so tuning a pattern in
-# functions/text.py cannot desync the two engines.
-from bcg_contacts_data_pipeline_spark.functions.text import (  # noqa: E402
-    PII_PATTERNS as _PII_PATTERNS,
-)
-
-_PII_EMAIL = _PII_PATTERNS["email"]
-_PII_PHONE = _PII_PATTERNS["phone"]
-_PII_IPV4 = _PII_PATTERNS["ipv4"]
-
-
-@register(
-    "pii_scan",
-    oracle=f"""
-    WITH synth AS (
-      SELECT doc_id,
-             CASE CAST(doc_id % 7 AS INTEGER)
-               WHEN 0 THEN text || ' contact user' || CAST(doc_id AS VARCHAR) || '@corp.example now'
-               WHEN 1 THEN text || ' call 555-867-530' || CAST(doc_id % 10 AS VARCHAR)
-               WHEN 2 THEN text || ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.17'
-               ELSE text END AS t
-      FROM documents)
-    SELECT doc_id,
-           CAST(len(regexp_extract_all(t, '{_PII_EMAIL}')) AS BIGINT) AS n_email,
-           CAST(len(regexp_extract_all(t, '{_PII_PHONE}')) AS BIGINT) AS n_phone,
-           CAST(len(regexp_extract_all(t, '{_PII_IPV4}')) AS BIGINT) AS n_ipv4,
-           md5(regexp_replace(regexp_replace(regexp_replace(t,
-               '{_PII_EMAIL}', '[PII]', 'g'),
-               '{_PII_PHONE}', '[PII]', 'g'),
-               '{_PII_IPV4}', '[PII]', 'g')) AS redacted_fp
-    FROM synth
-    """,
-)
-def q_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII detect + redact over documents (the scrubbing pre-pass of a
-    training-data release). PII is synthesized deterministically into a
-    third of the docs so the detectors are exercised on every run; counts
-    AND an md5 of the redacted text are oracle-checked, pinning both the
-    detector and the redaction rewrite. Pure regexp projections — no
-    shuffle, no Python (functions/text.py pii_counts / redact_pii)."""
-    from bcg_contacts_data_pipeline_spark.functions import text as T
-
-    docs = _t(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    synth = docs.select(
-        "doc_id",
-        F.when(d % 7 == 0, F.concat(
-            F.col("text"), F.lit(" contact user"), d.cast("string"),
-            F.lit("@corp.example now"),
-        ))
-        .when(d % 7 == 1, F.concat(
-            F.col("text"), F.lit(" call 555-867-530"), (d % 10).cast("string"),
-        ))
-        .when(d % 7 == 2, F.concat(
-            F.col("text"), F.lit(" from 10.0."), (d % 256).cast("string"),
-            F.lit(".17"),
-        ))
-        .otherwise(F.col("text"))
-        .alias("t"),
-    )
-    counts = T.pii_counts(F.col("t"))
-    return synth.select(
-        "doc_id",
-        counts["email"].alias("n_email"),
-        counts["phone"].alias("n_phone"),
-        counts["ipv4"].alias("n_ipv4"),
-        F.md5(T.redact_pii(F.col("t"))).alias("redacted_fp"),
-    )
-
-
-@register(
-    "repetition_filter",
-    oracle=f"""
-    WITH grams AS (
-      SELECT doc_id,
-             CASE WHEN length(trim(text)) > 0 THEN
-               [lower(t[i]) || ' ' || lower(t[i+1]) || ' ' || lower(t[i+2])
-                for i in range(1, greatest(len(t)-1, 1))]
-             ELSE [] END AS g
-      FROM (SELECT doc_id, text, {_TOKS_SQL} AS t FROM documents))
-    SELECT doc_id,
-           CAST(len(g) AS BIGINT) AS total_ngrams,
-           CAST(len(list_distinct(g)) AS BIGINT) AS distinct_ngrams,
-           CASE WHEN len(g) > 0
-                THEN 1.0 - CAST(len(list_distinct(g)) AS DOUBLE) / len(g)
-                ELSE 0.0 END AS rep_ratio
-    FROM grams
-    """,
-)
-def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Intra-document repetition (boilerplate) scoring: fraction of
-    3-gram occurrences that repeat an earlier 3-gram in the same doc —
-    the standard cheap filter for template/spam/navigation-chrome pages
-    in scraped corpora. Counts and the IEEE ratio are oracle-exact.
-    Expression-only narrow projection; no shuffle."""
-    from bcg_contacts_data_pipeline_spark.functions import text as T
-    from bcg_contacts_data_pipeline_spark.functions.text import (
-        tokens,
-        word_ngrams,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    # Token and gram arrays materialized as ATTRIBUTES between selects:
-    # referencing them as inline expressions re-evaluates the whole
-    # split/ngram pipeline per use (see functions.text.bind docstring).
-    toked = docs.select(
-        "doc_id", F.transform(tokens(F.col("text")), F.lower).alias("__toks")
-    )
-    grammed = toked.select(
-        "doc_id", word_ngrams(F.col("__toks"), 3).alias("__g")
-    )
-    total = F.size("__g").cast("long")
-    distinct = F.size(F.array_distinct("__g")).cast("long")
-    return grammed.select(
-        "doc_id",
-        total.alias("total_ngrams"),
-        distinct.alias("distinct_ngrams"),
-        F.when(
-            total > 0,
-            F.lit(1.0) - distinct.cast("double") / total.cast("double"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("rep_ratio"),
-    )
-
-
-@register(
-    "tfidf_top_terms",
-    oracle=f"""
-    WITH terms AS (
-      SELECT doc_id, lower(unnest(t)) AS term
-      FROM (SELECT doc_id, {_TOKS_SQL} AS t FROM documents
-            WHERE length(trim(text)) > 0)),
-    tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM terms GROUP BY 1, 2),
-    dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-    n AS (SELECT COUNT(*) AS n_docs FROM documents),
-    scored AS (
-      SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-             round(tf.tf * ln(CAST(n.n_docs AS DOUBLE) / dfreq.df), 6) AS tfidf
-      FROM tf JOIN dfreq USING (term) CROSS JOIN n)
-    SELECT doc_id, term, tf, df, tfidf, CAST(rank AS BIGINT) AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY doc_id
-                                   ORDER BY tfidf DESC, term ASC) AS rank
-      FROM scored) WHERE rank <= 3
-    """,
-)
-def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus TF-IDF: top-3 terms per document, idf = ln(N/df). The
-    inverted-index build (explode -> tf -> df) is the same shape as the
-    shingle index; N joins as a broadcast scalar (no driver collect).
-    Scores rounded to 6 decimals BEFORE ranking so a <=1-ulp ln()
-    difference between engines can't flip the order (operators/tfidf.py
-    docstring)."""
-    from bcg_contacts_data_pipeline_spark.operators.tfidf import (
-        tfidf_top_terms,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return tfidf_top_terms(docs, "doc_id", "text", k=3)
-
-
-@register(
-    "hash_split",
-    oracle="""
-    WITH assigned AS (
-      SELECT doc_id,
-             CAST(CAST(('0x' || substring(md5('corpus-v1:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT) % 100 AS BIGINT) AS bucket
-      FROM documents)
-    SELECT doc_id, bucket,
-           CASE WHEN bucket < 80 THEN 'train'
-                WHEN bucket < 90 THEN 'val'
-                ELSE 'test' END AS split
-    FROM assigned
-    """,
-)
-def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 80/10/10 train/val/test assignment by salted md5
-    bucket — stable across runs, engines, and corpus growth (a doc's
-    split never changes when other docs are added). Pure projection; the
-    md5 basis makes the exact same assignment computable in any engine
-    (functions/sampling.py docstring)."""
-    from bcg_contacts_data_pipeline_spark.functions.sampling import (
-        assign_split,
-        hash_bucket,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        hash_bucket("doc_id", 100, "corpus-v1").alias("bucket"),
-        assign_split("doc_id", seed="corpus-v1").alias("split"),
-    )
-
-
-@register(
-    "embedding_ann_ivf",
-    oracle="""
-    SELECT CAST(2 * COUNT(*) AS BIGINT) AS n_true,
-           CAST(2 * COUNT(*) AS BIGINT) AS n_found,
-           CAST(2 * COUNT(*) AS DOUBLE) / (2 * COUNT(*)) AS recall
-    FROM embeddings
-    """,
-)
-def q_embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF coarse-quantizer ANN (1 Lloyd iteration, 16 cells, probe 4) —
-    the second scale path for similarity search next to the
-    random-hyperplane LSH variant — verified by the constructed-duplicate
-    recall pattern (same proof shape as ``minhash_recall``):
-
-    corpus ∪ id-offset copy ⇒ for ANY codebook, identical vectors have
-    identical centroid distances, so original and copy land in the SAME
-    cell (argmin of identical rows) and each probes its own cell first
-    (argsort of the same row). The copy is therefore always a candidate,
-    scores cosine 1.0 — strictly above every other neighbor (all corpus
-    vectors are distinct, checked at data-gen) — and MUST appear in the
-    query's top-k, in both directions. Recall over the constructed truth
-    is provably 1.0 and DuckDB states the same count independently; any
-    assignment / probe / cell-join / ranking bug breaks the equality.
-    """
-    from bcg_contacts_data_pipeline_spark.operators.similarity import (
-        embedding_ann_ivf,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    out = embedding_ann_ivf(
-        _emb_with_copy(emb), "vec_id", "embedding", n_centroids=16, n_probe=4, k=5
-    )
-    pairs = out.select(
-        F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b")
-    )
-    # both truth directions from ONE pass over the id column (r14: the
-    # fwd ∪ reversed(fwd) union planned the scan twice)
-    truth = emb.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("vec_id").alias("id_a"),
-                    (F.col("vec_id") + F.lit(_COPY_OFFSET)).alias("id_b"),
-                ),
-                F.struct(
-                    (F.col("vec_id") + F.lit(_COPY_OFFSET)).alias("id_a"),
-                    F.col("vec_id").alias("id_b"),
-                ),
-            )
-        ).alias("__t")
-    ).select("__t.id_a", "__t.id_b")
-    return _recall_frame(pairs, truth)
-
-
-@register(
-    "error_histogram",
-    oracle="""
-    WITH synth AS (
-      SELECT c_custkey, c_name, c_acctbal, c_mktsegment,
-             CASE WHEN c_custkey % 13 = 0 THEN 'not-an-email'
-                  ELSE lower(c_name) || '@corp.example' END AS email,
-             CASE WHEN c_custkey % 17 = 0 THEN '12'
-                  ELSE '+61-' || CAST(c_custkey * 7919 + 10000000 AS VARCHAR) END AS phone
-      FROM customer),
-    errors AS (
-      SELECT 'Invalid email format in email' AS error FROM synth
-      WHERE email IS NOT NULL AND length(trim(email)) > 0
-        AND NOT regexp_matches(lower(trim(email)), '^[^@]+@[^@]+\\.[^@]+')
-      UNION ALL
-      SELECT 'Invalid phone format in phone' FROM synth
-      WHERE phone IS NOT NULL AND length(trim(phone)) > 0
-        AND (length(regexp_replace(phone, '[^0-9]', '', 'g')) < 7
-             OR length(regexp_replace(phone, '[^0-9]', '', 'g')) > 15)
-      UNION ALL
-      SELECT 'c_acctbal out of range' FROM synth
-      WHERE c_acctbal IS NOT NULL AND (c_acctbal < -500 OR c_acctbal > 8000)
-      UNION ALL
-      SELECT 'Unexpected value in c_mktsegment' FROM synth
-      WHERE c_mktsegment IS NOT NULL
-        AND c_mktsegment NOT IN ('BUILDING','MACHINERY','AUTOMOBILE','FURNITURE'))
-    SELECT error, COUNT(*) AS n FROM errors GROUP BY error
-    ORDER BY n DESC, error LIMIT 5
-    """,
-)
-def q_error_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7/O4 — the error-type histogram run.py:136-146 prints after each
-    pipeline: top-5 error kinds by count. Total order (count desc, error
-    asc) so the limit is deterministic."""
-    errors = QUERIES["validate_rules"](spark, sf_dir)
-    return (
-        errors.groupBy("error")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("error").asc())
-        .limit(5)
-    )
-
-
-@register(
-    "skew_salted_agg",
-    oracle="""
-    WITH skewed AS (
-      SELECT CASE WHEN l_orderkey % 3 = 0 THEN 'HOT' 
-                  ELSE CAST(l_suppkey AS VARCHAR) END AS k,
-             l_quantity AS v
-      FROM lineitem)
-    SELECT k, COUNT(*) AS n,
-           CAST(SUM(CAST(v AS DECIMAL(18,4))) AS DOUBLE) AS total,
-           CAST(MAX(CAST(v AS DOUBLE)) AS DOUBLE) AS mx
-    FROM skewed GROUP BY k
-    """,
-)
-def q_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted two-phase aggregation over a deliberately skewed key (a
-    third of lineitem collapses onto one 'HOT' key — the engineered twin
-    of the reference's empty-dedup-key pile-up). Identical semantics to
-    the plain GROUP BY oracle; the salt only reshapes the shuffle."""
-    from bcg_contacts_data_pipeline_spark.operators.skew import salted_agg
-
-    l = _t(spark, sf_dir, "lineitem")
-    skewed = l.select(
-        F.when(F.col("l_orderkey") % 3 == 0, F.lit("HOT"))
-        .otherwise(F.col("l_suppkey").cast("string"))
-        .alias("k"),
-        F.col("l_quantity").alias("v"),
-    )
-    return salted_agg(
-        skewed,
-        ["k"],
-        {
-            "n": (F.count, F.sum, F.lit(1)),
-            "total": (
-                lambda c: F.sum(c.cast("decimal(18,4)")),
-                F.sum,
-                F.col("v"),
-            ),
-            "mx": (
-                lambda c: F.max(c.cast("double")),
-                F.max,
-                F.col("v"),
-            ),
-        },
-        salt_buckets=16,
-    ).select("k", "n", F.col("total").cast("double").alias("total"), "mx")
-
-
-@register(
-    "profile_columns",
-    oracle="""
-    SELECT 'c_acctbal' AS col, COUNT(*) AS n_rows,
-           COUNT(c_acctbal) AS n_nonnull,
-           CAST(COUNT(DISTINCT c_acctbal) AS BIGINT) AS n_distinct,
-           CAST(MIN(CAST(c_acctbal AS DOUBLE)) AS DOUBLE) AS min_v,
-           CAST(MAX(CAST(c_acctbal AS DOUBLE)) AS DOUBLE) AS max_v
-    FROM customer
-    UNION ALL
-    SELECT 'c_nationkey', COUNT(*), COUNT(c_nationkey),
-           CAST(COUNT(DISTINCT c_nationkey) AS BIGINT),
-           CAST(MIN(CAST(c_nationkey AS DOUBLE)) AS DOUBLE),
-           CAST(MAX(CAST(c_nationkey AS DOUBLE)) AS DOUBLE)
-    FROM customer
-    """,
-)
-def q_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-profiling rollup (the stat-logging the reference sprinkles
-    through clean_contacts.py:105-147, as one single-pass multi-aggregate
-    per column). Exact count-distinct here for the oracle; the operator
-    takes approx=True at real scale (HLL sketch, no extra shuffle)."""
-    from bcg_contacts_data_pipeline_spark.operators.profile import profile_columns
-
-    cust = _t(spark, sf_dir, "customer")
-    return profile_columns(cust, ["c_acctbal", "c_nationkey"], approx=False)
-
-
-@register(
-    "dedup_components",
-    oracle="""
-    WITH sh_all AS (
-      SELECT doc_id,
-             unnest(list_distinct([lower(t[i]) || ' ' || lower(t[i+1]) || ' ' || lower(t[i+2])
-                    for i in range(1, greatest(len(t)-1, 1))])) AS s
-      FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
-            FROM documents WHERE length(trim(text)) > 0)),
-    hot AS (SELECT s FROM sh_all GROUP BY s HAVING COUNT(*) > 100),
-    sh AS (SELECT * FROM sh_all WHERE s NOT IN (SELECT s FROM hot)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    shared AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-    edges AS (
-      SELECT id_a, id_b FROM shared
-      JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
-      WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.2),
-    sym AS (SELECT id_a AS u, id_b AS v FROM edges
-            UNION SELECT id_b, id_a FROM edges),
-    reach AS (
-      WITH RECURSIVE r(node, lab) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT s.v, r.lab FROM r JOIN sym s ON s.u = r.node)
-      SELECT node, MIN(lab) AS comp FROM r GROUP BY node)
-    SELECT CAST(node AS BIGINT) AS doc_id, CAST(comp AS BIGINT) AS component,
-           CAST(COUNT(*) OVER (PARTITION BY comp) AS BIGINT) AS component_size
-    FROM reach
-    """,
-)
-def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitive near-dup clusters: ngram-Jaccard pairs (>= 0.2) closed
-    under connectivity via iterated min-label propagation. The oracle
-    recomputes the same closure with a recursive CTE — every doc gets its
-    component (min doc_id) and the component size.
-
-    This is the production cluster view, so pair generation is the
-    scale-safe capped form (``max_df=100``, mirrored in the oracle's
-    ``hot`` CTE): a stop-shingle appearing in f documents would otherwise
-    contribute f² rows to the inverted-index self-join before the Jaccard
-    filter. The uncapped exact baseline remains the standalone
-    ``ngram_jaccard`` query; bounded-pair behaviour through this cluster
-    query is asserted in tests/test_skew.py."""
-    from pyspark.sql import Window
-
-    from bcg_contacts_data_pipeline_spark.operators.graph import (
-        connected_components,
-    )
-    from bcg_contacts_data_pipeline_spark.operators.similarity import (
-        ngram_jaccard_pairs,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.2, max_df=100
-    )
-    comp = connected_components(
-        pairs, "id_a", "id_b", nodes=docs, node_col="doc_id"
-    )
-    w = Window.partitionBy("comp")
-    return comp.select(
-        F.col("node").alias("doc_id"),
-        F.col("comp").alias("component"),
-        F.count(F.lit(1)).over(w).alias("component_size"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# The complete contacts pipeline, end-to-end (plans/contacts.py) — the
-# reference's entire run.py workflow as ONE lazy Spark plan over
-# synthesized contact data. Rows-only check: the 4-stage composition
-# (enrich -> fill -> clean -> dedup -> validate) is the flagship of
-# reference parity; each constituent operator is separately oracle-exact
-# above (enrich_2of3, dedup_merge, norm_scalars, validate_rules).
-# ---------------------------------------------------------------------------
-
-#: The whole pipeline (fill-missing -> clean -> dedup -> renumber ->
-#: error count) as one DuckDB query. Simplifications valid FOR THIS
-#: SYNTHESIZED INPUT (and stated so the equivalence is auditable):
-#: - title_case reduces to upper(first)+lower(rest): every value is a
-#:   single leading letter-run ('Customer#000000001', mktsegments);
-#:   DuckDB's RE2 regex lacks the lookarounds of the general form.
-#: - Real multi-row merge groups exist: the %4==1 collision cohort shares
-#:   a mobile per c_custkey % 97, so its dedup key is the reference's
-#:   `-<mobile>` fallback and the most-complete merge (longest valid
-#:   value, recency tiebreak) genuinely fires; `last_updated` is unique
-#:   within every group (members congruent mod 388 = 4*97), making the
-#:   length-then-recency winner deterministic in both engines, expressed
-#:   here as first(... ORDER BY length DESC, ts DESC) FILTER (valid).
-#: - %19 keyless rows pass through unmerged with a NULL key. Their
-#:   relative SEQNO order in Spark is an xxhash64 tiebreak (not
-#:   SQL-expressible), but they are pairwise identical on every selected
-#:   column, so ANY contiguous numbering of the keyless block yields the
-#:   same output multiset and the order-insensitive hash agrees.
-#: - Keyed rows have pairwise-distinct dedup keys (emails unique;
-#:   fallback keys embed the unique c_name or the group-merged mobile),
-#:   so their seqno is the rank of dedup_key alone.
-_E2E_ORACLE = """
-WITH master AS (
-  SELECT CAST(c_custkey AS VARCHAR) AS mid,
-         (c_custkey % 4 = 1 AND c_custkey % 13 <> 0 AND c_custkey % 19 <> 0)
-           AS cohort,
-         CASE WHEN c_custkey % 19 = 0 THEN 'nan'
-              WHEN c_custkey % 7 = 0 THEN 'nan'
-              ELSE str_split(c_name, '#')[1] END AS firstname,
-         CASE WHEN c_custkey % 19 = 0 OR c_custkey % 5 = 0 THEN NULL
-              ELSE str_split(c_name, '#')[2] END AS lastname,
-         CASE WHEN c_custkey % 19 = 0 THEN NULL
-              WHEN c_custkey % 13 = 0 THEN 'not-an-email'
-              WHEN cohort THEN NULL
-              ELSE lower(c_name) || '@corp.example' END AS email,
-         CASE WHEN c_custkey % 19 = 0 THEN NULL
-              WHEN cohort THEN CAST(10000000 + c_custkey % 97 AS VARCHAR)
-              WHEN c_custkey % 3 = 0 THEN NULL
-              ELSE CAST(c_custkey * 7919 + 10000000 AS VARCHAR) END AS mobile,
-         CASE WHEN c_custkey % 19 = 0 THEN 'nan'
-              WHEN cohort THEN NULL
-              ELSE c_name END AS fullname,
-         '2020-01-02 '
-           || lpad(CAST(((c_custkey // 388) // 60) % 24 AS VARCHAR), 2, '0')
-           || ':' || lpad(CAST((c_custkey // 388) % 60 AS VARCHAR), 2, '0')
-           || ':05' AS last_updated,
-         CASE WHEN c_custkey % 19 = 0 THEN 'No'
-              WHEN c_custkey % 2 = 0 THEN 'y' ELSE 'No' END AS isactive
-  FROM customer),
-source AS (
-  SELECT c_custkey AS sid,
-         str_split(c_name, '#')[1] AS s_firstname,
-         str_split(c_name, '#')[2] AS s_lastname,
-         c_name AS s_fullname,
-         lower(c_name) || '@corp.example' AS s_email,
-         CAST(c_custkey * 7919 + 10000000 AS VARCHAR) AS s_mobile
-  FROM customer),
--- J2 match keys (name = ws-collapsed lower full name; email = anchored
--- regex validated; phone = digits last-10)
-tkeys AS (
-  SELECT m.*,
-         lower(trim(regexp_replace(
-           CASE WHEN length(trim(concat_ws(' ', firstname, lastname))) > 0
-                THEN trim(concat_ws(' ', firstname, lastname))
-                WHEN length(trim(fullname)) > 0 THEN trim(fullname) END,
-           '\\s+', ' ', 'g'))) AS k_name,
-         CASE WHEN regexp_matches(lower(trim(email)), '^[^@]+@[^@]+\\.[^@]+')
-              THEN lower(trim(email)) END AS k_email,
-         CASE WHEN length(regexp_replace(mobile, '[^0-9]', '', 'g')) >= 10
-              THEN right(regexp_replace(mobile, '[^0-9]', '', 'g'), 10)
-              WHEN length(regexp_replace(mobile, '[^0-9]', '', 'g')) > 0
-              THEN regexp_replace(mobile, '[^0-9]', '', 'g') END AS k_phone
-  FROM master m),
-skeys AS (
-  SELECT s.*,
-         lower(trim(regexp_replace(
-           CASE WHEN length(trim(concat_ws(' ', s_firstname, s_lastname))) > 0
-                THEN trim(concat_ws(' ', s_firstname, s_lastname))
-                WHEN length(trim(s_fullname)) > 0 THEN trim(s_fullname) END,
-           '\\s+', ' ', 'g'))) AS k_name,
-         CASE WHEN regexp_matches(lower(trim(s_email)), '^[^@]+@[^@]+\\.[^@]+')
-              THEN lower(trim(s_email)) END AS k_email,
-         CASE WHEN length(regexp_replace(s_mobile, '[^0-9]', '', 'g')) >= 10
-              THEN right(regexp_replace(s_mobile, '[^0-9]', '', 'g'), 10)
-              WHEN length(regexp_replace(s_mobile, '[^0-9]', '', 'g')) > 0
-              THEN regexp_replace(s_mobile, '[^0-9]', '', 'g') END AS k_phone
-  FROM source s),
-needy AS (
-  SELECT * FROM tkeys
-  WHERE firstname IS NULL OR lastname IS NULL OR fullname IS NULL OR mobile IS NULL),
-cand AS (
-  SELECT n.mid, s.sid FROM needy n JOIN skeys s
-    ON n.k_name = s.k_name AND n.k_email = s.k_email
-  UNION
-  SELECT n.mid, s.sid FROM needy n JOIN skeys s
-    ON n.k_name = s.k_name AND n.k_phone = s.k_phone
-  UNION
-  SELECT n.mid, s.sid FROM needy n JOIN skeys s
-    ON n.k_email = s.k_email AND n.k_phone = s.k_phone),
-best AS (SELECT mid, MIN(sid) AS sid FROM cand GROUP BY mid),
-filled AS (
-  SELECT t.mid,
-         coalesce(t.firstname, s.s_firstname) AS firstname,
-         coalesce(t.lastname, s.s_lastname) AS lastname,
-         coalesce(t.fullname, s.s_fullname) AS fullname,
-         coalesce(t.mobile, s.s_mobile) AS mobile,
-         t.email, t.isactive, t.last_updated
-  FROM tkeys t
-  LEFT JOIN best b ON t.mid = b.mid
-  LEFT JOIN skeys s ON b.sid = s.sid),
--- clean: sentinel-null, normalize email, digits-only mobile, title-case
--- names, Y/N flags; ts = parsed last_updated (the merge's recency order)
-cleaned AS (
-  SELECT mid,
-         upper(substr(nullif(trim(firstname), 'nan'), 1, 1))
-           || lower(substr(nullif(trim(firstname), 'nan'), 2)) AS firstname,
-         upper(substr(lastname, 1, 1)) || lower(substr(lastname, 2)) AS lastname,
-         CASE WHEN regexp_matches(lower(trim(email)), '^[^@]+@[^@]+\\.[^@]+')
-              THEN lower(trim(email)) END AS email,
-         CASE WHEN length(regexp_replace(mobile, '[^0-9]', '', 'g')) > 0
-              THEN regexp_replace(mobile, '[^0-9]', '', 'g') END AS mobile,
-         upper(substr(nullif(trim(fullname), 'nan'), 1, 1))
-           || lower(substr(nullif(trim(fullname), 'nan'), 2)) AS fullname,
-         CASE WHEN upper(trim(isactive)) IN ('Y', 'N')
-              THEN upper(trim(isactive)) END AS isactive,
-         CAST(last_updated AS TIMESTAMP) AS ts
-  FROM filled),
--- dedup key (email else lower(fullname)||'-'||mobile, dash always kept,
--- NULL -> ''; a lone dash is keyless)
-keyed AS (
-  SELECT c.*,
-         coalesce(email,
-                  CASE WHEN length(coalesce(lower(trim(fullname)), '') || '-'
-                              || coalesce(trim(mobile), '')) > 1
-                       THEN coalesce(lower(trim(fullname)), '') || '-'
-                            || coalesce(trim(mobile), '') END
-         ) AS dedup_key
-  FROM cleaned c),
--- most-complete merge: per column the longest valid value wins, ties
--- toward most-recent last_updated (unique within each group, so total);
--- keyless rows (NULL key) pass through unmerged, group_size 1
-merged AS (
-  SELECT dedup_key,
-         first(firstname ORDER BY length(firstname) DESC, ts DESC)
-           FILTER (WHERE firstname IS NOT NULL) AS firstname,
-         first(lastname ORDER BY length(lastname) DESC, ts DESC)
-           FILTER (WHERE lastname IS NOT NULL) AS lastname,
-         first(email ORDER BY length(email) DESC, ts DESC)
-           FILTER (WHERE email IS NOT NULL) AS email,
-         first(mobile ORDER BY length(mobile) DESC, ts DESC)
-           FILTER (WHERE mobile IS NOT NULL) AS mobile,
-         first(isactive ORDER BY length(isactive) DESC, ts DESC)
-           FILTER (WHERE isactive IS NOT NULL) AS isactive,
-         COUNT(*) AS group_size
-  FROM keyed
-  WHERE dedup_key IS NOT NULL AND length(trim(dedup_key)) > 0
-  GROUP BY dedup_key
-  UNION ALL
-  SELECT dedup_key, firstname, lastname, email, mobile, isactive,
-         CAST(1 AS BIGINT) AS group_size
-  FROM keyed
-  WHERE dedup_key IS NULL OR length(trim(dedup_key)) = 0)
-SELECT CAST(row_number() OVER (ORDER BY dedup_key ASC NULLS LAST) AS BIGINT) AS seqno,
-       firstname, lastname, email, mobile, isactive, group_size,
-       CAST(CASE WHEN firstname IS NULL AND lastname IS NULL AND email IS NULL THEN 0
-            ELSE (CASE WHEN firstname IS NULL OR length(trim(firstname)) = 0 THEN 1 ELSE 0 END)
-               + (CASE WHEN lastname IS NULL OR length(trim(lastname)) = 0 THEN 1 ELSE 0 END)
-               + (CASE WHEN email IS NULL OR length(trim(email)) = 0 THEN 1 ELSE 0 END)
-               + (CASE WHEN email IS NOT NULL AND length(trim(email)) > 0
-                       AND NOT regexp_matches(lower(trim(email)), '^[^@]+@[^@]+\\.[^@]+')
-                  THEN 1 ELSE 0 END)
-               + (CASE WHEN mobile IS NOT NULL AND length(trim(mobile)) > 0
-                       AND (length(regexp_replace(mobile, '[^0-9]', '', 'g')) < 7
-                            OR length(regexp_replace(mobile, '[^0-9]', '', 'g')) > 15)
-                  THEN 1 ELSE 0 END)
-               + (CASE WHEN mobile IS NULL OR length(trim(mobile)) = 0 THEN 1 ELSE 0 END)
-       END AS BIGINT) AS n_errors
-FROM merged
-"""
-
-
-@register("contacts_pipeline_e2e", oracle=_E2E_ORACLE)
-def q_contacts_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthesizes a dirty master table from `customer` (sentinel nulls,
-    invalid emails, missing names), an enrichment source from the same
-    rows (so k-of-n matches exist), runs the full pipeline, and returns
-    the cleaned output joined with its per-row error count."""
-    from bcg_contacts_data_pipeline_spark.plans import contacts as C
-
-    cust = _t(spark, sf_dir, "customer")
-    ck = F.col("c_custkey")
-    # Collision cohort (%4==1, excluding the %13/%19 cohorts): null email +
-    # null fullname + a GROUP-SHARED mobile => dedup key is the reference's
-    # `-<mobile>` fallback, shared by every cohort row with the same
-    # c_custkey % 97 — real multi-row merge groups. Keyless cohort (%19):
-    # all three key inputs blank => NULL key => passthrough. last_updated
-    # is UNIQUE within every merge group (members of a group are congruent
-    # mod 388 = 4*97, so c_custkey // 388 is distinct within a group),
-    # making the length-then-recency merge deterministic in both engines.
-    cohort = (ck % 4 == 1) & (ck % 13 != 0) & (ck % 19 != 0)
-    j = F.floor(ck / F.lit(388)).cast("long")
-    last_updated = F.concat(
-        F.lit("2020-01-02 "),
-        F.lpad(((j / 60).cast("long") % 24).cast("string"), 2, "0"),
-        F.lit(":"),
-        F.lpad((j % 60).cast("string"), 2, "0"),
-        F.lit(":05"),
-    )
-    master = cust.select(
-        ck.cast("string").alias("seqno"),
-        # %19 keyless rows blank EVERY output-visible field: their relative
-        # SEQNO order is decided by the renumber's xxhash64 tiebreak (not
-        # SQL-expressible), which is only oracle-safe when keyless rows are
-        # pairwise identical on the selected columns — then any numbering
-        # permutation yields the same output multiset.
-        F.when(ck % 19 == 0, F.lit("nan"))
-        .when(ck % 7 == 0, F.lit("nan"))
-        .otherwise(F.split(F.col("c_name"), "#").getItem(0))
-        .alias("firstname"),
-        F.when((ck % 19 == 0) | (ck % 5 == 0), F.lit(None))
-        .otherwise(F.split(F.col("c_name"), "#").getItem(1))
-        .alias("lastname"),
-        F.when(ck % 19 == 0, F.lit(None))
-        .when(ck % 13 == 0, F.lit("not-an-email"))
-        .when(cohort, F.lit(None))
-        .otherwise(F.concat(F.lower("c_name"), F.lit("@corp.example")))
-        .alias("email"),
-        F.when(ck % 19 == 0, F.lit(None))
-        .when(cohort, (F.lit(10000000) + ck % 97).cast("string"))
-        .when(ck % 3 == 0, F.lit(None))
-        .otherwise((ck * 7919 + 10000000).cast("string"))
-        .alias("mobile"),
-        F.when(ck % 19 == 0, F.lit("nan"))
-        .when(cohort, F.lit(None))
-        .otherwise(F.col("c_name"))
-        .alias("fullname"),
-        F.col("c_mktsegment").alias("title"),
-        last_updated.alias("last_updated"),
-        F.when(ck % 19 == 0, F.lit("No"))
-        .when(ck % 2 == 0, F.lit("y"))
-        .otherwise(F.lit("No"))
-        .alias("isactive"),
-    )
-    source = cust.select(
-        F.col("c_custkey").alias("sid"),
-        F.split(F.col("c_name"), "#").getItem(0).alias("s_firstname"),
-        F.split(F.col("c_name"), "#").getItem(1).alias("s_lastname"),
-        F.col("c_name").alias("s_fullname"),
-        F.concat(F.lower("c_name"), F.lit("@corp.example")).alias("s_email"),
-        (F.col("c_custkey") * 7919 + 10000000).cast("string").alias("s_mobile"),
-    )
-    # side_outputs=False: this query consumes only `cleaned` (n_errors
-    # is the pure-projection column below), so the errors frame and the
-    # fill change log would be ~0.7 s of pure plan-build waste (r14)
-    result = C.run_pipeline(master, sources=source, side_outputs=False)
-    # n_errors is derivable from the row alone (validation is a pure
-    # projection), so attach it as a column instead of aggregating
-    # result.errors and joining back — the join form computes the whole
-    # dedup pipeline twice and adds two shuffles for zero information.
-    return result.cleaned.select(
-        "seqno", "firstname", "lastname", "email", "mobile",
-        "isactive", "group_size",
-        C.contact_error_count().alias("n_errors"),
-    )
-
-
-@register(
-    "semi_anti_orders",
-    oracle="""
-    SELECT 'with_orders' AS cohort, COUNT(*) AS n_customers,
-           CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS total_bal
-    FROM customer c WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-    UNION ALL
-    SELECT 'without_orders', COUNT(*),
-           CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE)
-    FROM customer c WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-    """,
-)
-def q_semi_anti_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-semi + left-anti joins (SURVEY §2.3 'absent join types' — free
-    in Spark, exposed here): customer cohorts by order existence. The
-    orders side is reduced to its join key before the semi/anti probe."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").select("o_custkey")
-    on = cust.c_custkey == orders.o_custkey
-    parts = []
-    for cohort, how in (("with_orders", "left_semi"), ("without_orders", "left_anti")):
-        parts.append(
-            cust.join(orders, on, how).agg(
-                F.lit(cohort).alias("cohort"),
-                F.count(F.lit(1)).alias("n_customers"),
-                F.sum(_dec("c_acctbal")).cast("double").alias("total_bal"),
-            ).select("cohort", "n_customers", "total_bal")
-        )
-    return parts[0].unionByName(parts[1])
-
-
-@register(
-    "stream_static_enrich",
-    oracle="""
-    WITH profile AS (
-      SELECT user_id, COUNT(*) AS hist_events,
-             CAST(MAX(CAST(value AS DOUBLE)) AS DOUBLE) AS hist_max
-      FROM events GROUP BY user_id)
-    SELECT e.event_id, e.user_id, e.event_type,
-           p.hist_events, p.hist_max
-    FROM events e JOIN profile p ON e.user_id = p.user_id
-    """,
-)
-def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static join: each streaming event enriched with a broadcast
-    per-user profile computed batch-side — stateless append mode, every
-    event emitted exactly once."""
-    from bcg_contacts_data_pipeline_spark import streaming as S
-
-    profile = (
-        _events(spark, sf_dir)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("hist_events"),
-            F.max(F.col("value").cast("double")).alias("hist_max"),
-        )
-    )
-    st = S.events_stream(spark, sf_dir)
-    joined = S.stream_static_enrich(
-        st.select("event_id", "user_id", "event_type"), profile, ["user_id"]
-    )
-    return S.run_available_now(
-        joined.select("event_id", "user_id", "event_type", "hist_events", "hist_max"),
-        "append",
-        shuffle_partitions=8,
-    )
-
-
-# Late import so extension registrations land in the same QUERIES/ORACLE
-# dicts the driver contract reads (the module imports `register` from here;
-# everything it needs is defined above this line).
-from bcg_contacts_data_pipeline_spark.plans import queries_ext  # noqa: E402,F401
-from bcg_contacts_data_pipeline_spark.plans import queries_r6  # noqa: E402,F401
-from bcg_contacts_data_pipeline_spark.plans import queries_r7  # noqa: E402,F401
-from bcg_contacts_data_pipeline_spark.plans import queries_r7b  # noqa: E402,F401
-from bcg_contacts_data_pipeline_spark.plans import queries_r7c  # noqa: E402,F401
-from bcg_contacts_data_pipeline_spark.plans import queries_r9  # noqa: E402,F401
-from bcg_contacts_data_pipeline_spark.plans import queries_r10  # noqa: E402,F401
-from bcg_contacts_data_pipeline_spark.plans import queries_r11  # noqa: E402,F401
-from bcg_contacts_data_pipeline_spark.plans import queries_r12  # noqa: E402,F401
-from bcg_contacts_data_pipeline_spark.plans import queries_r13  # noqa: E402,F401
-from bcg_contacts_data_pipeline_spark.plans import queries_r14  # noqa: E402,F401
+__all__ = ["ORACLE", "QUERIES", "register"]

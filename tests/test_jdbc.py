@@ -1,5 +1,9 @@
 """JDBC staging edge (S7/S8) against embedded Derby."""
 
+import os
+import subprocess
+import sys
+
 import pyspark.sql.functions as F
 
 from bcg_contacts_data_pipeline_spark.io import jdbc as J
@@ -249,3 +253,29 @@ def test_upsert_reraises_transient_error_on_existing_table(
     # and the table survived untouched
     monkeypatch.undo()
     assert J.read_jdbc(spark, url, table).count() == 1
+
+
+def test_scratch_db_removed_at_process_exit():
+    """A process that wrote through a scratch URL leaves no Derby
+    directory behind once it exits (fresh JVM in a subprocess)."""
+    script = (
+        "import os\n"
+        "from bcg_contacts_data_pipeline_spark.io import jdbc as J\n"
+        "from bcg_contacts_data_pipeline_spark.session import get_spark\n"
+        "spark = get_spark('scratch-exit', shuffle_partitions=1)\n"
+        "url = J.scratch_derby_url('exit_cleanup')\n"
+        "J.write_jdbc(spark.range(3), url, 't', num_partitions=1)\n"
+        "path = url[len('jdbc:derby:'):].split(';')[0]\n"
+        "assert os.path.isdir(path), path\n"
+        "print(path)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1")
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, timeout=300, env=env, cwd=repo,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    path = proc.stdout.strip().splitlines()[-1]
+    assert path.startswith(os.sep) and "derby_" in path
+    assert not os.path.exists(path), f"scratch DB left behind: {path}"

@@ -113,7 +113,7 @@ def test_curation_frame_scope_returns_pins_to_zero(spark):
     also freed eagerly inside the operator; their second free on
     release is a no-op) — and closing it returns the session's
     persistent-RDD count to its pre-call value."""
-    from bcg_contacts_data_pipeline_spark.plans.queries_ext import (
+    from bcg_contacts_data_pipeline_spark.plans.q_curation import (
         curation_frame,
     )
     from tests.conftest import SF_SMALL

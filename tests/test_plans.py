@@ -10,10 +10,14 @@ load-bearing, so they are tested, not just eyeballed once.
 """
 
 import os
+import pkgutil
+import subprocess
+import sys
 
 import pytest
 
-from bcg_contacts_data_pipeline_spark.plans.queries import QUERIES
+from bcg_contacts_data_pipeline_spark import plans as plans_pkg
+from bcg_contacts_data_pipeline_spark.plans.queries import ORACLE, QUERIES
 
 SF = "/root/testdata/sf0.001"
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -812,7 +816,7 @@ def test_token_hashing_stays_above_the_spreading_exchange(spark):
 #: - "pruned:<marker>": the exchange draws from the bucket-prune
 #:   broadcast join (marker = the prune column in the join condition) —
 #:   input is the skyline candidate set, O(frontier) by the prune
-#:   argument in the query's docstring (queries_r7c.py skyline_pareto:
+#:   argument in the query's docstring (q_tpch.py skyline_pareto:
 #:   stage-2 window safe BECAUSE stage 1 shrank the input). Its second
 #:   single-partition exchange (the bucket-prior cum-max) is agg-fed
 #:   and checked under the "agg" rule like the rest.
@@ -883,3 +887,39 @@ def test_partitionless_windows_enumerated_and_agg_bounded(spark):
                 f"(unbounded one-task window):\n{line}"
             )
         spark.catalog.clearCache()
+
+
+FAMILIES = (
+    "q_tpch", "q_contacts", "q_curation", "q_similarity", "q_temporal", "q_audit",
+)
+
+
+def test_registry_is_grouped_by_family():
+    """Every registered query lives in one of the six family modules, the
+    round-numbered modules are gone, and each family imports first, on
+    its own, in a fresh interpreter (no import cycle through the facade)
+    and registers exactly its own queries."""
+    pkg = plans_pkg.__name__
+    assert {fn.__module__ for fn in QUERIES.values()} <= {
+        f"{pkg}.{f}" for f in FAMILIES
+    }
+    modules = {m.name for m in pkgutil.iter_modules(plans_pkg.__path__)}
+    assert not {
+        m for m in modules
+        if m.startswith("queries_") or m == "oracle_templates"
+    }, modules
+    assert set(QUERIES) == set(ORACLE)
+    for fam in FAMILIES:
+        proc = subprocess.run(
+            [sys.executable, "-c", (
+                f"import {pkg}.{fam}\n"
+                f"from {pkg}.registry import QUERIES\n"
+                "print(' '.join(sorted(QUERIES)))\n"
+            )],
+            capture_output=True, text=True, timeout=120, cwd=ROOT,
+        )
+        assert proc.returncode == 0, f"{fam}: {proc.stderr[-2000:]}"
+        mine = sorted(
+            n for n, fn in QUERIES.items() if fn.__module__ == f"{pkg}.{fam}"
+        )
+        assert mine and proc.stdout.split() == mine, fam

@@ -15,7 +15,7 @@ from bcg_contacts_data_pipeline_spark.operators.similarity import (
 
 def _compose(spark, rows):
     """Run the incremental_curation_e2e composition over a constructed
-    documents frame (same code path as plans/queries_r11.py, with the
+    documents frame (same code path as plans/q_curation.py, with the
     table injected)."""
     from pyspark.sql import Window
 

@@ -1,4 +1,4 @@
-"""Tests for the round-7c analytic shapes (plans/queries_r7c.py):
+"""Tests for the round-7c analytic shapes (plans/q_*.py):
 skyline vs an O(n²) brute-force dominance model, basket lift vs a
 Python itertools model, drift-audit invariants, and conversion-curve
 ledger invariants. Real testdata correctness is covered by the DuckDB
@@ -12,10 +12,12 @@ import itertools
 
 from pyspark.sql import functions as F
 
-from bcg_contacts_data_pipeline_spark.plans.queries_r7c import (
-    basket_brand_lift,
+from bcg_contacts_data_pipeline_spark.plans.q_audit import drift_split_audit
+from bcg_contacts_data_pipeline_spark.plans.q_temporal import (
     conversion_lag_curve,
-    drift_split_audit,
+)
+from bcg_contacts_data_pipeline_spark.plans.q_tpch import (
+    basket_brand_lift,
     skyline_pareto,
 )
 
@@ -222,7 +224,7 @@ def test_conversion_curve_ledger_invariants(spark):
 
 
 def test_pagerank_fixed_point_invariants(spark):
-    from bcg_contacts_data_pipeline_spark.plans.queries_r7c import (
+    from bcg_contacts_data_pipeline_spark.plans.q_tpch import (
         pagerank_nation_flow,
     )
 
@@ -254,7 +256,7 @@ def test_pagerank_fixed_point_invariants(spark):
 
 
 def test_session_error_overlap_matches_nonequi_model(spark):
-    from bcg_contacts_data_pipeline_spark.plans.queries_r7c import (
+    from bcg_contacts_data_pipeline_spark.plans.q_temporal import (
         session_error_overlap,
     )
 
@@ -352,7 +354,7 @@ def test_prefix_filter_lossless_and_pruning(spark):
 
 def test_chained_stream_rollup_matches_batch_with_cutoff(spark):
     from bcg_contacts_data_pipeline_spark.io.events import read_events
-    from bcg_contacts_data_pipeline_spark.plans.queries_r7c import (
+    from bcg_contacts_data_pipeline_spark.plans.q_temporal import (
         stream_hourly_daily_rollup,
     )
 
@@ -391,7 +393,7 @@ def test_chained_stream_rollup_matches_batch_with_cutoff(spark):
 
 def test_weighted_median_matches_python_model(spark):
     from bcg_contacts_data_pipeline_spark.functions.text import token_count
-    from bcg_contacts_data_pipeline_spark.plans.queries_r7c import (
+    from bcg_contacts_data_pipeline_spark.plans.q_curation import (
         lang_weighted_median,
     )
 
@@ -427,7 +429,7 @@ def test_weighted_median_matches_python_model(spark):
 
 def test_seasonal_backtest_alignment_is_gap_safe(spark):
     from bcg_contacts_data_pipeline_spark.io.events import read_events
-    from bcg_contacts_data_pipeline_spark.plans.queries_r7c import (
+    from bcg_contacts_data_pipeline_spark.plans.q_temporal import (
         seasonal_naive_backtest,
     )
 
@@ -463,7 +465,7 @@ def test_ols_matches_numpy_and_merges(spark):
     import numpy as np
 
     from bcg_contacts_data_pipeline_spark.io.events import read_events
-    from bcg_contacts_data_pipeline_spark.plans.queries_r7c import (
+    from bcg_contacts_data_pipeline_spark.plans.q_temporal import (
         trend_ols_by_type,
     )
 
@@ -532,7 +534,7 @@ def test_prefix_filter_rejects_bad_threshold(spark):
 
 
 def test_compound_balance_matches_python_recurrence(spark):
-    from bcg_contacts_data_pipeline_spark.plans.queries_r7c import (
+    from bcg_contacts_data_pipeline_spark.plans.q_tpch import (
         compound_balance_rcte,
     )
 
@@ -581,7 +583,7 @@ def test_csv_roundtrip_preserves_nulls(spark, tmp_path):
     left (a NULL c_name would make nationkey parse as the name). Pin
     the lossless round trip on a null-bearing customer table — one
     NULL per column position plus a dense row."""
-    from bcg_contacts_data_pipeline_spark.plans.queries_r7c import (
+    from bcg_contacts_data_pipeline_spark.plans.q_contacts import (
         csv_line_roundtrip,
     )
 

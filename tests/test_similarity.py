@@ -683,7 +683,7 @@ def test_sig_level_copy_equals_doc_level_copy_minhash(spark):
     AFTER one signature pass (_sigs_with_copy + *_from_sigs). A
     signature is a pure per-row function of the text, so both
     formulations must emit identical pair sets."""
-    from bcg_contacts_data_pipeline_spark.plans.queries import (
+    from bcg_contacts_data_pipeline_spark.plans.q_similarity import (
         _docs_with_copy,
         _sigs_with_copy,
     )
@@ -714,7 +714,7 @@ def test_sig_level_copy_equals_doc_level_copy_minhash(spark):
 
 
 def test_sig_level_copy_equals_doc_level_copy_simhash(spark):
-    from bcg_contacts_data_pipeline_spark.plans.queries import (
+    from bcg_contacts_data_pipeline_spark.plans.q_similarity import (
         _docs_with_copy,
         _sigs_with_copy,
     )

@@ -123,7 +123,7 @@ def test_events_gapfill_fills_and_flags(spark):
     driver reads (the real behavior checks live in the sf0.001 shape
     test below and the DuckDB oracle)."""
     from bcg_contacts_data_pipeline_spark.plans.queries import QUERIES
-    from bcg_contacts_data_pipeline_spark.plans.queries_r6 import (
+    from bcg_contacts_data_pipeline_spark.plans.q_temporal import (
         q_events_gapfill,
     )
 

@@ -4,9 +4,8 @@ Usage: python tools/explain_query.py OUT_DIR SUFFIX [sf_dir] query [query...]
 
 Writes ``OUT_DIR/<query>_<SUFFIX>.txt`` for each name. Queries whose
 construction executes eagerly (the CC family checkpoints inside) show
-the final frame's plan; the sym/pair subtrees those queries materialize
-internally are captured separately by the dedicated probe blocks in
-plans/r14 (see OPTIMIZATION_r14.md).
+the final frame's plan, not the sym/pair subtrees they materialize
+internally.
 """
 
 from __future__ import annotations

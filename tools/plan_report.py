@@ -1,7 +1,8 @@
-"""Generate PLANS.md: one row per registered batch query with the plan
-facts that matter at 100 TB — distinct file scans, shuffle exchanges,
-broadcast joins/exchanges, cached-frame reads, and any Python row-eval
-nodes (should be zero outside the Arrow-batched operators).
+"""Generate PLANS.md: one row per registered batch query, sorted by
+name, with the plan facts that matter at 100 TB — distinct file scans,
+shuffle exchanges, broadcast joins/exchanges, cached-frame reads, and
+any Python row-eval nodes (should be zero outside the Arrow-batched
+operators).
 
 Streaming queries are skipped (building them executes the stream).
 Run: python tools/plan_report.py  (rewrites PLANS.md at the repo root)
@@ -95,7 +96,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sf = "/root/testdata/sf0.001"
 
-    rows = [plan_row(spark, name, fn, sf) for name, fn in QUERIES.items()]
+    rows = [plan_row(spark, name, QUERIES[name], sf) for name in sorted(QUERIES)]
 
     with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(
