@@ -28,7 +28,8 @@ from bcg_contacts_data_pipeline_spark.functions.normalize_sql import (
     q as quote_ident,
 )
 from bcg_contacts_data_pipeline_spark.functions.text import ngram_hashes
-from bcg_contacts_data_pipeline_spark.operators.pins import checkpoint, pin
+from bcg_contacts_data_pipeline_spark.operators.pins import pin
+from bcg_contacts_data_pipeline_spark.operators.skew import cap_keys
 
 
 def dedup_key(
@@ -262,8 +263,9 @@ def paragraph_dedup(
     filters drop them, which is exactly the CCNet pipeline shape.
 
     ``max_df``: additionally drop paragraphs occurring in MORE than
-    ``max_df`` documents *everywhere* (including the first occurrence) —
-    the boilerplate-removal variant (navigation chrome, cookie banners
+    ``max_df`` distinct documents *everywhere* (including the first
+    occurrence; ``skew.cap_keys`` on the paragraph hash) — the
+    boilerplate-removal variant (navigation chrome, cookie banners
     repeat corpus-wide; keeping even one copy per paragraph still leaves
     one doc full of chrome).
 
@@ -283,16 +285,15 @@ def paragraph_dedup(
     aggregate, no window over the corpus. Rebuild is one groupBy(id)
     over only the SURVIVING paragraphs; the doc spine comes straight
     from the tokenized narrow projection, so the whole operator is two
-    aggregate shuffles plus the broadcast-or-shuffle join back (the
-    ``max_df`` twin adds one more: df = COUNT(DISTINCT doc) is staged
-    as groupBy(hash, doc) THEN groupBy(hash) so both stages stay
-    map-side combinable — a direct count_distinct would deliver one
-    row per document of the boilerplate paragraph to a single final
-    reducer). Each shuffle keys on high-cardinality uniform values;
-    the known degenerate key is the boilerplate paragraph repeated
-    corpus-wide, which every aggregate stage partial-combines map-side
-    (one winner row per task, same shape the empty-dedup-key skew
-    probe in PERF.md measured flat)."""
+    aggregate shuffles plus the broadcast-or-shuffle join back. With
+    ``max_df`` the cap runs in front of the same winner aggregate: its
+    window exchange on the hash feeds a checkpoint, and the winner
+    aggregate shuffles the surviving paragraphs only. Each shuffle keys
+    on high-cardinality uniform values; the known degenerate key is the
+    boilerplate paragraph repeated corpus-wide, which the winner
+    aggregate partial-combines map-side (one winner row per task, same
+    shape the empty-dedup-key skew probe in PERF.md measured flat) and
+    the cap's window buffers in one task before dropping it."""
     if words_per_para <= 0:
         raise ValueError("words_per_para must be positive")
     from bcg_contacts_data_pipeline_spark.functions.text import tokens
@@ -318,30 +319,14 @@ def paragraph_dedup(
             )
         ).alias("para_idx", "para"),
     )
-    real = paras.where(F.length("para") > 0)
-    if max_df is None:
-        winners = real.groupBy(F.sha2("para", 256).alias("__h")).agg(
-            F.min(F.struct("__id", "para_idx", "para")).alias("w")
-        )
-    else:
-        # df needs COUNT(DISTINCT doc): a direct count_distinct would
-        # plan as partial-agg on (hash, doc) then a final agg that
-        # receives one row PER DOCUMENT on the paragraph's hash — the
-        # corpus-wide boilerplate key would arrive unreduced at a single
-        # reducer. Two explicit stages keep every shuffle combinable:
-        # (hash, doc) collapses each doc's repeats map-side, then the
-        # hash stage counts pre-deduped rows and min-merges the winner.
-        per_doc = real.groupBy(F.sha2("para", 256).alias("__h"), "__id").agg(
-            F.min(F.struct("__id", "para_idx", "para")).alias("w0")
-        )
-        winners = (
-            per_doc.groupBy("__h")
-            .agg(
-                F.min("w0").alias("w"),
-                F.count(F.lit(1)).alias("df"),
-            )
-            .where(F.col("df") <= F.lit(max_df))
-        )
+    real = paras.where(F.length("para") > 0).withColumn(
+        "__h", F.sha2("para", 256)
+    )
+    if max_df is not None:
+        real = cap_keys(real, ["__h"], "__id", max_df)
+    winners = real.groupBy("__h").agg(
+        F.min(F.struct("__id", "para_idx", "para")).alias("w")
+    )
     rebuilt = (
         winners.select("w.__id", "w.para_idx", "w.para")
         .groupBy("__id")
@@ -412,22 +397,16 @@ def substring_spans(
        with ``transform`` + ``posexplode`` so the token-hash array is
        never duplicated per posting row;
     2. df-cap: grams present in fewer than 2 or more than ``max_df``
-       DISTINCT documents are dropped — singletons can't pair, and
-       corpus-wide stop-grams (chrome, licence headers past the cap)
-       would otherwise fan the pair join out quadratically: the same
-       frequency-cap contract as every pair generator in
-       ``operators/similarity.py``;
-    3. pair join on the gram key: (doc_a < doc_b) position pairs. The
-       CAPPED postings (only grams with df in [2, max_df] — tiny next
-       to the corpus by construction, the hot-set argument of the r13
-       similarity fix) are materialized once with an eager
-       ``localCheckpoint`` and self-joined: the uncapped postings
-       frame is computed twice (cap side + capped side) instead of
-       three times, and the pair join's probe side ships only capped
-       rows instead of re-shuffling the FULL postings frame (r14,
-       guide §8 "decide with small rows": the second full-postings
-       exchange was pure waste — every row of it that could match is,
-       by definition, in the capped frame);
+       DISTINCT documents are dropped (``skew.cap_keys`` with
+       ``min_df=2``) — singletons can't pair, and corpus-wide
+       stop-grams (chrome, licence headers past the cap) would
+       otherwise fan the pair join out quadratically: the same
+       frequency cap every pair generator in
+       ``operators/similarity.py`` applies;
+    3. pair join on the gram key: (doc_a < doc_b) position pairs over
+       the cap's checkpointed postings, so the postings pipeline runs
+       once (inside the cap's checkpoint job) and the pair join ships
+       only capped rows, never the FULL postings frame;
     4. maximal-run merge: two matched positions extend the same span
        iff both advance by one token, i.e. they sit on the same
        DIAGONAL (ia - ib) at consecutive ia — group by (pair, diag),
@@ -461,8 +440,8 @@ def substring_spans(
     window keys on (doc_a, doc_b, diag) whose group size is bounded by
     the shorter document's length, so no degenerate window partition
     exists. Every stage is a Catalyst expression — no UDF, no driver
-    collect; the one materialization is the eager ``localCheckpoint``
-    of the df-capped postings (bounded small by the cap itself).
+    collect; the one materialization is the cap's checkpoint of the
+    df-capped postings.
     """
     if k < 2:
         raise ValueError("substring_spans: k must be >= 2")
@@ -491,27 +470,7 @@ def substring_spans(
             .drop("__o")
         )
 
-    # df-cap staged as (gram, doc)-distinct then a plain count per gram —
-    # the paragraph_dedup two-stage house rule: both shuffles stay
-    # map-side combinable, so a corpus-wide stop-gram is partially
-    # deduped on every mapper before any reducer sees it. (Catalyst's
-    # distinct-aggregate rewrite compiles count_distinct to this exact
-    # physical shape too — verified plan-identical — but the explicit
-    # form is the one the house convention asks readers to see.)
-    keep = (
-        grams.select("__g", "__doc")
-        .distinct()
-        .groupBy("__g")
-        .agg(F.count(F.lit(1)).alias("__d"))
-        .filter((F.col("__d") >= 2) & (F.col("__d") <= max_df))
-        .select("__g")
-    )
-    # capped postings materialized ONCE (see docstring step 3): the
-    # self-join and everything downstream read the checkpointed frame,
-    # so the pair join introduces no second full-postings execution or
-    # exchange. Small by construction — only grams with df in
-    # [2, max_df] survive; released with the open PinScope.
-    capped = checkpoint(grams.join(keep, "__g"))
+    capped = cap_keys(grams, ["__g"], "__doc", max_df, min_df=2)
     b = capped.select(
         F.col("__g").alias("__g"),
         F.col("__doc").alias("__doc_b"),

@@ -27,8 +27,8 @@ collects.
 With no scope open, ``pin`` and ``checkpoint`` fall back to the
 untracked session-lifetime behavior: a persist lives until
 ``clearCache()``, a checkpoint's blocks until Spark's ContextCleaner
-collects them. Short-lived callers that open none (``tools/plan_report``,
-one-shot registry queries) pay no ceremony. Callers that must stay lazy
+collects them. Short-lived callers that open none (one-shot registry
+queries) pay no ceremony. Callers that must stay lazy
 without a scope ask :func:`current_scope`.
 """
 

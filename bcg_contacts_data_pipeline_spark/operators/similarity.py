@@ -39,7 +39,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bcg_contacts_data_pipeline_spark.operators.pins import checkpoint, pin
+from bcg_contacts_data_pipeline_spark.operators.pins import pin
+from bcg_contacts_data_pipeline_spark.operators.skew import cap_keys
 
 from bcg_contacts_data_pipeline_spark.functions.text import ngram_hashes, tokens
 from bcg_contacts_data_pipeline_spark.functions.vectors import dot
@@ -118,58 +119,36 @@ def ngram_jaccard_pairs(
     not corpus². Jaccard = shared / (|A| + |B| - shared) — integer counts,
     one IEEE division, engine-exact.
 
-    ``max_df`` is the posting-list frequency cap, the thing that makes
-    this shape survive a real scraped corpus: a stop-shingle ("of the
-    and") shared by f documents contributes f² rows to the self-join —
-    quadratic on exactly the skewed posting lists web text has. With
-    ``max_df=K``, shingles whose document frequency exceeds K are dropped
-    BEFORE the join (and before the size counts — the semantics become
-    Jaccard over the sub-K shingle universe, well-defined and mirrorable
-    in an oracle), so no posting list contributes more than K² pairs.
-    The hot set is tiny by construction (only shingles in > K docs), so
-    the anti-join against it broadcasts under AQE — no extra shuffle of
-    the full shingle frame. ``max_df=None`` keeps the exact uncapped
-    baseline (the documented contract of the standalone ``ngram_jaccard``
-    query).
+    ``max_df`` is the posting-list frequency cap (``skew.cap_keys``):
+    shingles held by more than K documents are dropped BEFORE the join
+    and before the size counts, so the semantics become Jaccard over the
+    sub-K shingle universe (well-defined and mirrorable in an oracle)
+    and no posting list contributes more than K² pairs. ``max_df=None``
+    keeps the exact uncapped baseline (the documented contract of the
+    standalone ``ngram_jaccard`` query).
 
     Physical shape:
     - the join key is xxhash64(shingle), 8 bytes instead of a string
       (collisions would need two shingles of one corpus to share a 64-bit
       hash — negligible next to the corpus sizes this verifies);
-    - the shingle frame feeds four consumer subtrees (df branch when
-      capped, sizes, both join sides) with zero exchange reuse between
-      them (re-verified round 6: no ReusedExchange nodes), so the
+    - uncapped, the shingle frame feeds three consumer subtrees (sizes,
+      both join sides) with no exchange reuse between them, so the
       per-row tokenize + hash + n-gram work runs once per consumer. It
       stays unmaterialized: r6 measured recompute beating a persist of
       the exploded frame, and r15's eager checkpoint of the per-doc
       hash arrays left the uncapped sf0.1 time flat (3.48 s with it,
-      3.49 s without, medians of 3 and 4 runs). The capped callers pay
-      for it: four passes instead of one, 36.5 -> 41.0 s over the seven ``max_df``
-      callers plus ``ngram_jaccard`` (4-core host, 3 vs 4 runs). What must
-      not happen is a hash expression in a filter below the spreading
-      exchange: ``shingle_hash_frame`` explodes its gram expression
-      inline so Catalyst infers no ``size(arr) > 0`` filter there.
+      3.49 s without, medians of 3 and 4 runs);
+    - capped, the shingles are exploded once, inside the cap's
+      checkpoint job, and the sizes and both join sides read the
+      checkpointed frame.
+    What must not happen is a hash expression in a filter below the
+    spreading exchange: ``shingle_hash_frame`` explodes its gram
+    expression inline so Catalyst infers no ``size(arr) > 0`` filter
+    there.
     """
     shingles = shingle_hash_frame(df, id_col, text, n)
     if max_df is not None:
-        # Materialize the hot set ONCE (r13, VERDICT r12 ask #3): the
-        # capped shingle frame feeds four consumers (sizes via sa/sb,
-        # join sides a/b), and with zero exchange reuse each consumer
-        # would re-run the full groupBy(sh) document-frequency shuffle
-        # just to rebuild this anti-join side — measured 4.28 s -> 3.85 s
-        # on the dedup_components pair stage at sf0.1, and at 100x the
-        # recomputed shuffle grows with the corpus while the hot set
-        # stays tiny BY CONSTRUCTION (only shingles in > max_df docs),
-        # so checkpointing the small side is the scale-correct trade.
-        # The large KEPT frame deliberately stays unmaterialized (the r6
-        # measurement: persisting the exploded frame loses to re-scan).
-        hot = checkpoint(
-            shingles.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_df)
-            .select("sh")
-        )
-        shingles = shingles.join(hot, "sh", "left_anti")
+        shingles = cap_keys(shingles, ["sh"], id_col, max_df)
     sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
 
     a = shingles.select(F.col(id_col).alias("id_a"), "sh")
@@ -269,34 +248,9 @@ def _no_static_broadcast(df: DataFrame) -> DataFrame:
     joins — build sides are per-partition, memory bounded by the
     partition count — the right strategy for corpus×corpus joins at
     EVERY scale; at small SF the extra exchanges are sub-MB and cost
-    nothing measurable. Bounded-by-construction sides (hot-bucket sets,
-    k-row stats frames) keep their broadcasts."""
+    nothing measurable. Bounded-by-construction sides (k-row stats
+    frames) keep their broadcasts."""
     return df.hint("shuffle_hash")
-
-
-def _drop_hot_buckets(
-    buckets: DataFrame, keys: list[str], cap: int
-) -> DataFrame:
-    """Drop bucket keys shared by more than ``cap`` rows BEFORE a
-    bucket self-join — the generic form of ``ngram_jaccard_pairs``'s
-    ``max_df`` posting-list cap. A bucket of f members contributes f²
-    join rows; at web scale a boilerplate cluster (one page duplicated
-    100k times) lands its members in the SAME band bucket in EVERY
-    band, so without the cap one cluster emits 10^10 candidate rows.
-    The hot set is tiny by construction (only keys with > cap members),
-    so the anti-join broadcasts under AQE. Semantics: pairs inside a
-    dropped bucket are not generated FROM THAT BUCKET — for banded
-    schemes a pair survives if any of its other bands stays under the
-    cap; a cluster hot in every band is precisely the pathological
-    near-identical family a dedup pipeline should route to
-    cluster-by-bucket handling instead of pairwise scoring."""
-    hot = (
-        buckets.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > cap)
-        .select(*keys)
-    )
-    return buckets.join(hot, keys, "left_anti")
 
 
 def minhash_signatures(
@@ -369,8 +323,8 @@ def minhash_lsh_pairs(
     path. ``verify_threshold`` filters on the signature-estimated
     Jaccard (fraction of agreeing hash positions).
 
-    ``max_bucket`` caps band-bucket membership (see
-    ``_drop_hot_buckets``): a near-identical cluster of f docs collides
+    ``max_bucket`` caps band-bucket membership (``skew.cap_keys``): a
+    near-identical cluster of f docs collides
     in EVERY band, contributing bands·f² candidate rows — AQE skew-join
     splits that work across tasks but cannot shrink the output volume.
     With the cap, no bucket contributes more than cap² rows. ``None``
@@ -413,7 +367,7 @@ def minhash_lsh_pairs_from_sigs(
     sigs = pin(sigs)
     buckets = _band_buckets(sigs, id_col, num_hashes, bands)
     if max_bucket is not None:
-        buckets = _drop_hot_buckets(buckets, ["band", "bh"], max_bucket)
+        buckets = cap_keys(buckets, ["band", "bh"], id_col, max_bucket)
 
     l = buckets.select(F.col(id_col).alias("id_a"), "band", "bh")
     r = _no_static_broadcast(
@@ -613,7 +567,7 @@ def simhash_pairs(
     guarantee line degrades (standard LSH tradeoff).
 
     ``max_bucket`` caps band-bucket membership before the self-join
-    (``_drop_hot_buckets`` — the anti-quadratic guard for
+    (``skew.cap_keys`` — the anti-quadratic guard for
     near-identical clusters, which collide in every band). Capping
     trades the pigeonhole completeness guarantee inside dropped
     buckets for bounded pair volume; ``None`` keeps the complete
@@ -664,7 +618,7 @@ def simhash_pairs_from_sigs(
         ).alias("qq"),
     ).select(id_col, "simhash", F.col("qq.q").alias("q"), F.col("qq.qh").alias("qh"))
     if max_bucket is not None:
-        slices = _drop_hot_buckets(slices, ["q", "qh"], max_bucket)
+        slices = cap_keys(slices, ["q", "qh"], id_col, max_bucket)
 
     l = slices.select(
         F.col(id_col).alias("id_a"), F.col("simhash").alias("sim_a"), "q", "qh"
@@ -1535,8 +1489,9 @@ def fuzzy_pairs_blocked(
     Catalyst's built-in. |pairs| = sum over blocks of |B|² — bounded by
     the blocking design, never corpus². A block key shared by B records
     is the same quadratic hazard as a hot shingle; ``max_block`` drops
-    over-sized blocks before the join (anti-join on the tiny hot set,
-    same recipe as ``ngram_jaccard_pairs.max_df``). Recall note: a pair
+    blocks of more than that many records before the join
+    (``skew.cap_keys``, the cap behind ``ngram_jaccard_pairs.max_df``
+    too). Recall note: a pair
     is found only if SOME blocking expression agrees — standard
     multi-pass linkage runs several blocking schemes and unions.
 
@@ -1548,13 +1503,7 @@ def fuzzy_pairs_blocked(
     )
     keys = [f"__b{i}" for i in range(len(blocking))]
     if max_block is not None:
-        hot = (
-            base.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > max_block)
-            .select(*keys)
-        )
-        base = base.join(hot, keys, "left_anti")
+        base = cap_keys(base, keys, "__id", max_block)
     a = base.select(
         F.col("__id").alias("id_a"), F.col("__name").alias("name_a"), *keys
     )
@@ -1662,8 +1611,10 @@ def prefix_filter_pairs(
     # build map, whereas WindowExec BUFFERS each sh partition group
     # (spilling past the in-memory threshold) — under extreme
     # stop-shingle skew this is buffered-with-spill rather than
-    # streamed; memory-safe either way, and the max_df cap downstream
-    # is the real guard.
+    # streamed; memory-safe either way. What keeps the candidate join
+    # short is the rarest-first prefix order (a stop-shingle enters a
+    # prefix only when the document holds nothing rarer); pathological
+    # corpora are the docstring's note.
     # Per-doc shingle array sorted by the global (df asc, sh asc) order.
     per_doc = pin(
         shingles.withColumn(

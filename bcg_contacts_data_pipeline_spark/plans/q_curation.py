@@ -2789,14 +2789,14 @@ def q_curation_pipeline_v2_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle, every stage restated.
 
     Scale shape: each rung inherits its certified operator's contract
-    (df-capped pair generation, two-stage combinable shuffles, eager
-    checkpoints only inside the CC loop); the three frames consumed by
-    multiple downstream stages (`kept`, the Gopher-gated corpus, the
-    trimmed corpus) are pinned once — the same hot-set materialization
-    rule the v1 ladder and the r13 similarity fix follow (`gdocs` was
-    unpinned until r14: `substring_trim` reads its input three times —
-    twice in the span finder's gram branches, once for the rebuild
-    spine — so the whole Gopher window pipeline re-executed per read)."""
+    (df-capped pair generation, eager checkpoints only at the caps and
+    inside the CC loop); the three frames consumed by multiple
+    downstream stages (`kept`, the Gopher-gated corpus, the trimmed
+    corpus) are pinned once — the same materialize-what-several-stages-
+    read rule the v1 ladder and the near-dup cap follow (`gdocs` was
+    unpinned until r14: `substring_trim` reads its input twice — in the
+    span finder's cap, and for the rebuild spine — so the whole Gopher
+    window pipeline re-executed per read)."""
     # two consumers (gopher metrics, the post-filter semi join)
     kept = _quality_gate(_t(spark, sf_dir, "documents"))
 
@@ -2805,7 +2805,7 @@ def q_curation_pipeline_v2_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("keep"))
         .select("doc_id")
     )
-    # three consumers inside substring_trim (2x gram branches + spine)
+    # two consumers inside substring_trim (the span finder's cap + spine)
     gdocs = pin(kept.join(rep_ok, "doc_id", "left_semi"))
 
     trimmed = substring_trim(

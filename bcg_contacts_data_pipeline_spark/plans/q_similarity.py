@@ -1781,7 +1781,7 @@ def _capped_recall_oracle() -> str:
 @register("minhash_recall_capped", oracle=_capped_recall_oracle())
 def minhash_recall_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``minhash_recall`` with the PRODUCTION hot-bucket cap
-    (``max_bucket=100``, `similarity.py:_drop_hot_buckets`). At every
+    (``max_bucket=100``, `skew.py:cap_keys`). At every
     shipped SF the corpus's identical-text clusters have exactly 2
     members (doc + constructed copy), far under the cap, so the result
     — and the oracle — are identical to the uncapped baseline's

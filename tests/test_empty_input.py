@@ -22,7 +22,9 @@ released when it finishes. A query whose count rose is run once more
 on its own and fails the guard only if the count rises again: the
 count is session-wide, so another query's late asynchronous work can
 land inside a query's window (seen once on ``lang_weighted_median``,
-which materializes nothing), while a query's own leak repeats.
+which materializes nothing), while a query's own leak repeats. A
+confirmed leak is reported with each new persistent RDD's id and the
+head of its lineage, which names the operator that materialized it.
 """
 
 from __future__ import annotations
@@ -32,7 +34,6 @@ import pytest
 from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
 from bcg_contacts_data_pipeline_spark.plans.queries import QUERIES
 from bcg_contacts_data_pipeline_spark.session import TABLES
-from tests.test_pins import _n_persistent_rdds
 
 SRC = "/root/testdata/sf0.001"
 
@@ -49,13 +50,28 @@ def empty_sf_dir(spark, tmp_path_factory):
     return str(d)
 
 
-def _scoped_leak(spark, fn, sf_dir) -> int:
-    """Persistent RDDs added by one scoped build + noop sink (> 0 is a
-    leak; ContextCleaner frees of unrelated blocks only lower it)."""
-    before = _n_persistent_rdds(spark)
+def _ids(rdds) -> set[int]:
+    # one py4j call: iterating the Java key set costs a round trip per
+    # id, and a long test session holds hundreds of persistent RDDs
+    return {int(i) for i in rdds.keys().mkString(",").split(",") if i}
+
+
+def _scoped_leak(spark, fn, sf_dir) -> tuple[int, dict[int, str]]:
+    """Persistent RDDs added by one scoped build + noop sink: the count
+    delta (> 0 is a leak; ContextCleaner frees of unrelated blocks only
+    lower it) and, per RDD id present only after the scope, the first
+    lines of its ``toDebugString`` lineage."""
+    sc = spark.sparkContext._jsc.sc()
+    before = _ids(sc.getPersistentRDDs())
     with PinScope():
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return _n_persistent_rdds(spark) - before
+    rdds = sc.getPersistentRDDs()  # an immutable snapshot
+    after = _ids(rdds)
+    new = {
+        i: "\n".join(rdds.apply(i).toDebugString().splitlines()[:6])
+        for i in sorted(after - before)
+    }
+    return len(after) - len(before), new
 
 
 # One sweep per family (not 154 parametrized cases): the per-case fixture
@@ -69,17 +85,21 @@ def test_batch_queries_survive_empty_input(spark, empty_sf_dir):
         if name.startswith("stream_"):
             continue
         try:
-            if _scoped_leak(spark, fn, empty_sf_dir) > 0:
+            if _scoped_leak(spark, fn, empty_sf_dir)[0] > 0:
                 suspects.append(name)
         except Exception as e:  # noqa: BLE001
             failures[name] = f"{type(e).__name__}: {str(e).splitlines()[0][:160]}"
     assert not failures, failures
     leaked = {}
     for name in suspects:
-        n = _scoped_leak(spark, QUERIES[name], empty_sf_dir)
+        n, new = _scoped_leak(spark, QUERIES[name], empty_sf_dir)
         if n > 0:
-            leaked[name] = n
-    assert not leaked, f"persistent RDDs left after the query's scope: {leaked}"
+            leaked[name] = f"+{n}\n" + "\n".join(
+                f"  rdd {i}:\n{lineage}" for i, lineage in new.items()
+            )
+    assert not leaked, "persistent RDDs left after the query's scope:\n" + (
+        "\n".join(f"{name} {report}" for name, report in leaked.items())
+    )
 
 
 def test_streaming_queries_survive_empty_input(spark, empty_sf_dir):

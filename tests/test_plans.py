@@ -455,8 +455,11 @@ def test_q10_limit_pushed_into_take_ordered(spark):
 def test_plans_md_not_drifted(spark):
     """PLANS.md is a generated fact sheet; nothing forced it to track
     the code until now. Regenerate the row for a pinned sample of
-    queries (cheap — plans only, nothing executes) and diff the
-    scans/shuffles/bcast/py-rows columns against the committed file.
+    queries and diff the scans/shuffles/bcast/py-rows columns against
+    the committed file. Building a row runs the build-time jobs of
+    queries that checkpoint or collect while building (the contacts
+    pipeline's stage boundaries, the near-dup cap); ``plan_row`` builds
+    inside a ``PinScope``, so what they materialize is released.
     On mismatch: run `python tools/plan_report.py` and commit the
     regenerated PLANS.md alongside the plan change."""
     import re
@@ -799,6 +802,46 @@ def test_token_hashing_stays_above_the_spreading_exchange(spark):
             f"exchange:\n{hashed}"
         )
     assert plans["shingle_hash_frame"].count("xxhash64") <= 2, plans
+
+
+def _ran_plan_trees(spark, after_id: int) -> list[str]:
+    """The plan tree AQE actually ran, for every SQL execution with an id
+    above ``after_id`` (checkpoint jobs included): the formatted UI
+    description cut before its per-node details and before the
+    ``Initial Plan`` copy of the tree."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    trees = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.executionId() > after_id:
+            tree = e.physicalPlanDescription().split("\n\n(1) ")[0]
+            trees.append(tree.split("== Initial Plan ==")[0])
+    return trees
+
+
+def test_capped_neardup_explodes_shingles_once(spark):
+    """The capped near-dup path tokenizes, hashes and explodes the
+    corpus ONCE: the cap (``skew.cap_keys``) checkpoints the capped
+    shingles and the sizes and both join sides read the checkpoint.
+    Counted over every plan the call runs — its checkpoint jobs and the
+    sink."""
+    import re
+
+    from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
+    from bcg_contacts_data_pipeline_spark.plans.registry import neardup_pairs
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    after = max(
+        [execs.apply(i).executionId() for i in range(execs.size())], default=-1
+    )
+    with PinScope():
+        neardup_pairs(docs).write.format("noop").mode("overwrite").save()
+    trees = _ran_plan_trees(spark, after)
+    assert len(trees) >= 2, trees  # the cap's checkpoint + the sink
+    generates = sum(len(re.findall(r"\bGenerate \(\d+\)", t)) for t in trees)
+    assert generates == 1, "\n\n".join(trees)
 
 
 # ---------------------------------------------------------------------------

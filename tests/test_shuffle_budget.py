@@ -73,24 +73,21 @@ BUDGET = {
     "scd2_order_status": 1,  # collapse+renumber+lead on ONE partitioning
     "event_rate_anomaly": 3,  # hourly agg + stats agg + stats join-back
     "bm25_topk": 1,  # corpus-stats SinglePartition; probe via broadcast
-    # block self-join broadcasts; +2 from the max_block guard (hot-block
-    # agg partial+final feeding the anti-join) — the price of making the
-    # degenerate-block case structurally impossible
-    "fuzzy_contact_pairs": 3,
+    # the final distance agg only: the block self-join broadcasts, and
+    # the max_block cap (skew.cap_keys) runs its window exchange inside
+    # its own checkpoint job, so the plan reads the capped blocks with
+    # no exchange
+    "fuzzy_contact_pairs": 1,
     "cube_order_stats": 1,  # Expand 4x map-side, partial agg pre-shuffle
-    # the no-persist ngram pair generator recomputes the shingle explode
-    # in each of its three consumers (documented trade in
-    # similarity.ngram_jaccard_pairs) and the degree rollup adds the
-    # union+agg+outer-join chain on top — high by design, bounded by
-    # the df cap, re-point this ONLY with a measured justification.
-    # r10: +8 from the SHUFFLE_HASH pins on corpus-derived join sides
-    # (each de-broadcast join shuffles both sides — the static
-    # broadcasts OOM'd the 100x probe; see PERF.md r10)
-    # r13: -8 — ngram_jaccard_pairs materializes the max_df hot set
-    # once (localCheckpoint), so the four capped-postings consumers no
-    # longer each replay the document-frequency shuffle (PERF.md r13)
-    # r14: endpoint explode replaced the degree self-union, halving
-    # the pair-pipeline executions (OPTIMIZATION_r14.md #2)
+    # the capped ngram pair generator reads its checkpointed capped
+    # shingles (skew.cap_keys: the df window and the one shingle
+    # explode run in the checkpoint job, outside this plan) in three
+    # consumers — sizes agg + shared agg + the SHUFFLE_HASH join sides
+    # (each de-broadcast join shuffles both sides; the static
+    # broadcasts OOM'd the 100x probe, PERF.md r10) — and the degree
+    # rollup's endpoint explode + agg + outer join sit on top
+    # (OPTIMIZATION_r14.md #2). Re-point this ONLY with a measured
+    # justification.
     "neardup_degree_hist": 10,
     # round-7 continuation: the last three TPC-H shapes — every dim
     # broadcasts, the single exchange is the final groupBy's
@@ -150,12 +147,10 @@ BUDGET = {
     # rangepartitioning (printed twice via the pinned frame's reprint)
     # + the bounded per-partition count; NO single-partition window
     "orders_global_rank": 3,
-    # the capped pair generator's chain (hot-shingle agg + sizes +
-    # shared agg, shingle explode recomputed per consumer - the
-    # documented no-persist trade) + split joins + final cell agg.
-    # r10: +4 from the no-static-broadcast SHUFFLE_HASH pins (PERF.md)
-    # r13: -4 — the checkpointed max_df hot set removes the replayed
-    # document-frequency shuffle from each consumer (PERF.md r13)
+    # the capped pair generator's chain over its checkpointed capped
+    # shingles (sizes agg + shared agg + the SHUFFLE_HASH join sides,
+    # PERF.md r10; the cap's df window runs in the checkpoint job) +
+    # split joins + final cell agg
     "split_leakage_audit": 8,
     # leaf groupBy + the tiny region window exchange; parent total
     # derives from the 25-row child aggregate, never a second scan

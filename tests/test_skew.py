@@ -1,9 +1,20 @@
 """Salted aggregation/join: semantics identical to unsalted, shuffle
-reshaped."""
+reshaped. The key-frequency cap matches its Python model."""
+
+from collections import defaultdict
 
 import pyspark.sql.functions as F
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
-from bcg_contacts_data_pipeline_spark.operators.skew import salted_agg, salted_join
+from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
+from bcg_contacts_data_pipeline_spark.operators.skew import (
+    cap_keys,
+    salted_agg,
+    salted_join,
+)
+from tests.test_properties import SETTINGS
 
 
 def test_salted_agg_equals_plain(spark):
@@ -225,12 +236,12 @@ def test_ngram_df_cap_bounds_hot_shingle_pairs(spark):
     # the one (sub-cap) shingle -> 1/(1+1-1) = 1.0.
     assert got[0]["jaccard"] == 1.0
 
-    # The hot-set filter is an anti-join (the hot side is tiny by
-    # construction — only shingles with df > K — so AQE broadcasts it);
-    # pin that the plan really anti-joins rather than re-shuffling the
-    # full shingle frame through an inner join on df.
+    # The cap (skew.cap_keys) is materialized before the join: the pair
+    # plan reads the checkpointed capped shingles and neither re-explodes
+    # the corpus nor anti-joins a hot set.
     plan = capped._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in plan, plan
+    assert "Scan ExistingRDD" in plan, plan
+    assert "Generate" not in plan and "LeftAnti" not in plan, plan
 
 
 def test_dedup_components_pair_generation_is_capped(spark, tmp_path):
@@ -242,7 +253,7 @@ def test_dedup_components_pair_generation_is_capped(spark, tmp_path):
     corpus (the output discriminates capped from uncapped, so no plan
     inspection is needed — the final executed plan is checkpoint-
     truncated by connected_components anyway and can't show the
-    LeftAnti; the plan-level anti-join pin lives in the test above)."""
+    cap; the plan-level cap pin lives in the test above)."""
     from bcg_contacts_data_pipeline_spark.plans.queries import QUERIES
 
     # Hot cohort: 150 docs, each "h1 h2 h3 h4 uX" -> shingles
@@ -333,9 +344,43 @@ def test_lsh_band_bucket_cap_bounds_clone_cluster_pairs(spark):
     assert (100, 101) in got
     assert not any(a < 40 for a, _ in got), got
     plan = mh._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in plan, plan
+    assert "Scan ExistingRDD" in plan, plan
+    assert "Generate" not in plan and "LeftAnti" not in plan, plan
 
     sh = simhash_pairs(docs, "doc_id", "text", max_bucket=10)
     sgot = {(r.id_a, r.id_b) for r in sh.collect()}
     assert (100, 101) in sgot
     assert not any(a < 40 for a, _ in sgot), sgot
+
+
+# (k1, k2, doc) rows with repeated pairs: a document holding one key
+# several times is the substring_spans / paragraph_dedup row shape
+_cap_rows = st.lists(
+    st.tuples(
+        st.integers(0, 3), st.integers(0, 1), st.integers(0, 3)
+    ),
+    max_size=30,
+)
+
+
+@pytest.mark.parametrize("keys", [["k1"], ["k1", "k2"]])
+@given(rows=_cap_rows, min_df=st.sampled_from([1, 2]), max_df=st.integers(1, 4))
+@settings(**SETTINGS)
+def test_cap_keys_matches_model(spark, keys, rows, min_df, max_df):
+    """cap_keys keeps exactly the rows whose key is held by between
+    min_df and max_df DISTINCT documents — repeated (key, doc) rows
+    count once toward the key's frequency and are all kept or all
+    dropped. Two-column keys are the (band, bh) / blocking-key shape."""
+    docs = defaultdict(set)
+    for k1, k2, doc in rows:
+        docs[(k1, k2)[: len(keys)]].add(doc)
+    want = sorted(
+        r for r in rows if min_df <= len(docs[r[: len(keys)]]) <= max_df
+    )
+    df = spark.createDataFrame(rows, "k1 int, k2 int, doc int")
+    with PinScope():
+        got = sorted(
+            tuple(r)
+            for r in cap_keys(df, keys, "doc", max_df, min_df=min_df).collect()
+        )
+    assert got == want

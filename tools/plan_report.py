@@ -27,14 +27,18 @@ def plan_row(spark, name, fn, sf) -> tuple:
     bcast joins, py rows, notes) — all strings. Shared with the drift
     test (tests/test_plans.py) so the committed fact sheet can't
     silently diverge from the code it documents."""
+    from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
+
     if name.startswith("stream_"):
         return (name, "—", "—", "—", "—", "streaming (executes on build)")
+    # built and read inside a scope: the persists and eager checkpoints a
+    # build takes are released when the row is done, and the plan is the
+    # one bench.py and tools/check.py run (they open a scope too)
     try:
-        p = fn(spark, sf)._jdf.queryExecution().executedPlan().toString()
+        with PinScope():
+            p = fn(spark, sf)._jdf.queryExecution().executedPlan().toString()
     except Exception as ex:  # pragma: no cover - report tool
         return (name, "?", "?", "?", "?", f"plan error: {ex}"[:60])
-    finally:
-        spark.catalog.clearCache()
     scans: dict[str, set] = {}
     for line in p.splitlines():
         t = re.search(r"/(\w+)\.parquet", line)
