@@ -286,14 +286,14 @@ def paragraph_dedup(
     over only the SURVIVING paragraphs; the doc spine comes straight
     from the tokenized narrow projection, so the whole operator is two
     aggregate shuffles plus the broadcast-or-shuffle join back. With
-    ``max_df`` the cap runs in front of the same winner aggregate: its
-    window exchange on the hash feeds a checkpoint, and the winner
-    aggregate shuffles the surviving paragraphs only. Each shuffle keys
-    on high-cardinality uniform values; the known degenerate key is the
-    boilerplate paragraph repeated corpus-wide, which the winner
-    aggregate partial-combines map-side (one winner row per task, same
-    shape the empty-dedup-key skew probe in PERF.md measured flat) and
-    the cap's window buffers in one task before dropping it."""
+    ``max_df`` the cap runs in front of the same winner aggregate: the
+    paragraphs are checkpointed, their (hash, doc) count runs in the
+    cap's own jobs, and the winner aggregate shuffles the surviving
+    paragraphs only. Each shuffle keys on high-cardinality uniform
+    values; the known degenerate key is the boilerplate paragraph
+    repeated corpus-wide, which the winner aggregate and both stages of
+    the cap's count partial-combine map-side (one row per task, same
+    shape the empty-dedup-key skew probe in PERF.md measured flat)."""
     if words_per_para <= 0:
         raise ValueError("words_per_para must be positive")
     from bcg_contacts_data_pipeline_spark.functions.text import tokens
@@ -405,8 +405,9 @@ def substring_spans(
        ``operators/similarity.py`` applies;
     3. pair join on the gram key: (doc_a < doc_b) position pairs over
        the cap's checkpointed postings, so the postings pipeline runs
-       once (inside the cap's checkpoint job) and the pair join ships
-       only capped rows, never the FULL postings frame;
+       once (inside the cap's checkpoint job); the in-range gram set
+       broadcasts into a semi-join, so the pair join ships only capped
+       rows, never the FULL postings frame;
     4. maximal-run merge: two matched positions extend the same span
        iff both advance by one token, i.e. they sit on the same
        DIAGONAL (ia - ib) at consecutive ia — group by (pair, diag),
@@ -440,8 +441,8 @@ def substring_spans(
     window keys on (doc_a, doc_b, diag) whose group size is bounded by
     the shorter document's length, so no degenerate window partition
     exists. Every stage is a Catalyst expression — no UDF, no driver
-    collect; the one materialization is the cap's checkpoint of the
-    df-capped postings.
+    collect; the materializations are the cap's checkpoints of the
+    postings and of the in-range gram set.
     """
     if k < 2:
         raise ValueError("substring_spans: k must be >= 2")

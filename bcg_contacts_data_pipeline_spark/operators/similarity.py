@@ -140,7 +140,8 @@ def ngram_jaccard_pairs(
       3.49 s without, medians of 3 and 4 runs);
     - capped, the shingles are exploded once, inside the cap's
       checkpoint job, and the sizes and both join sides read the
-      checkpointed frame.
+      checkpointed frame through a broadcast anti-join against the
+      (checkpointed) set of shingles past the cap.
     What must not happen is a hash expression in a filter below the
     spreading exchange: ``shingle_hash_frame`` explodes its gram
     expression inline so Catalyst infers no ``size(arr) > 0`` filter

@@ -14,7 +14,7 @@ salted aggregation is the plain GROUP BY.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bcg_contacts_data_pipeline_spark.operators.pins import checkpoint
@@ -116,30 +116,43 @@ def cap_keys(
     key (a paragraph or k-gram occurring twice in it) counts once. For
     inputs that carry each (key, doc) once — unique ids, one row per
     shingle / band / block per document — rows equal distinct documents,
-    so the callers that used to count rows keep their semantics. A NULL
-    ``doc`` counts as one document; NULL keys form one group.
+    so the callers that used to count rows keep their semantics. A row
+    whose key has a NULL column matches no key set: an upper cap alone
+    (``min_df=1``) keeps it, ``min_df=2`` drops it; either way it joins
+    nothing downstream.
 
-    Shape: ``dense_rank`` over (keys, ordered by doc) then ``max`` over
-    keys — two windows on one partitioning, so one exchange and one
-    sort, no join back and no second pass over the input (the shape of
-    ``similarity.prefix_filter_pairs``' df window). The group of a hot
-    key is buffered by one task (spilling past the in-memory threshold)
-    rather than streamed; memory-safe either way.
+    Shape: the count is a ``distinct`` on (keys, doc) then a plain count
+    per key, so both exchanges combine map-side and the reducer of a
+    degenerate key receives one row per task, not one per document
+    (the ``most_complete_merge`` rule ``tools/skew_probe.py`` measures).
+    A window count (one exchange on the key) would hand every row of a
+    hot key to one task: with half of 4M rows on one key it ran 1.6–3x
+    its uniform-key time, where this count stayed flat (4-core host).
+    The frame is joined against the smaller key set — the keys past
+    ``max_df`` (anti-join; bounded by rows / max_df) or, with
+    ``min_df > 1``, the keys in range (semi-join) — which is
+    checkpointed, so every reader shares one count, and broadcast when
+    small.
 
-    Materialization: the capped frame is eagerly checkpointed into the
-    open ``PinScope``. The self-join callers read it at least twice
-    (both join sides; the n-gram pair generator also for its sizes), and
-    a lazy frame would re-run the input pipeline (tokenize, hash,
-    explode) and the window exchange once per reader. Checkpointed, the
-    capped near-dup path explodes its shingles once
-    (``tests/test_plans.py`` guards it). ``dedup.paragraph_dedup`` reads
-    it once; there the checkpoint measured flat (``paragraph_boilerplate``
-    at sf0.1 on a 4-core host, 1.10 -> 1.03 s, medians of four
-    interleaved min-of-5 pairs against the lazy two-stage count)."""
-    by_key = Window.partitionBy(*keys)
-    return checkpoint(
-        frame.withColumn("__rk", F.dense_rank().over(by_key.orderBy(doc)))
-        .withColumn("__df", F.max("__rk").over(by_key))
-        .filter(F.col("__df").between(min_df, max_df))
-        .drop("__rk", "__df")
+    Materialization: ``frame`` is eagerly checkpointed into the open
+    ``PinScope`` first, and the count and the capped rows read the
+    checkpoint. The self-join callers read the capped frame at least
+    twice (both join sides; the n-gram pair generator also for its
+    sizes), and without it each read would re-run the input pipeline
+    (tokenize, hash, explode) — ``tests/test_plans.py`` guards that the
+    capped near-dup path explodes its shingles once. The price is the
+    stored uncapped frame: 21 MB at sf0.1 and 209 MB on the 10x replica
+    of ``tools/scale_probe.py`` for ``neardup_degree_hist``, where the
+    tiny key set alone was under 1 MB."""
+    frame = checkpoint(frame)
+    n_docs = (
+        frame.select(*keys, doc)
+        .distinct()
+        .groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__df"))
     )
+    if min_df <= 1:
+        hot = n_docs.where(F.col("__df") > max_df)
+        return frame.join(checkpoint(hot.select(*keys)), keys, "left_anti")
+    kept = n_docs.where(F.col("__df").between(min_df, max_df))
+    return frame.join(checkpoint(kept.select(*keys)), keys, "left_semi")

@@ -108,7 +108,8 @@ def test_curation_frame_scope_returns_pins_to_zero(spark):
     cached frame per invocation in a long-lived session). With a scope:
     result materializes correctly, the scope holds every frame the
     query materialized — the `kept` persist, the ngram pair
-    generator's capped-shingle checkpoint, and connected_components' sym plus
+    generator's two cap checkpoints (the shingles and the set of
+    shingles past max_df), and connected_components' sym plus
     one label checkpoint per round (the superseded rounds and sym are
     also freed eagerly inside the operator; their second free on
     release is a no-op) — and closing it returns the session's
@@ -123,8 +124,9 @@ def test_curation_frame_scope_returns_pins_to_zero(spark):
         out = curation_frame(spark, SF_SMALL)
         rows = out.collect()
         assert len(rows) >= 1 and all(r["n_docs"] >= 1 for r in rows)
-        # kept, capped shingles, CC sym, 2 label rounds (sf0.001: 2 rounds)
-        assert len(scope) == 5
+        # kept, shingles, hot-shingle set, CC sym, 2 label rounds
+        # (sf0.001 converges in 2)
+        assert len(scope) == 6
     assert len(scope) == 0
     # <= for the same ContextCleaner-background-free reason as above
     assert _n_persistent_rdds(spark) <= before

@@ -822,10 +822,10 @@ def _ran_plan_trees(spark, after_id: int) -> list[str]:
 
 def test_capped_neardup_explodes_shingles_once(spark):
     """The capped near-dup path tokenizes, hashes and explodes the
-    corpus ONCE: the cap (``skew.cap_keys``) checkpoints the capped
-    shingles and the sizes and both join sides read the checkpoint.
-    Counted over every plan the call runs — its checkpoint jobs and the
-    sink."""
+    corpus ONCE: the cap (``skew.cap_keys``) checkpoints the shingles,
+    and its document-frequency count, the sizes and both join sides
+    read the checkpoint. Counted over every plan the call runs — the
+    cap's checkpoint jobs and the sink."""
     import re
 
     from bcg_contacts_data_pipeline_spark.operators.pins import PinScope

@@ -74,14 +74,15 @@ BUDGET = {
     "event_rate_anomaly": 3,  # hourly agg + stats agg + stats join-back
     "bm25_topk": 1,  # corpus-stats SinglePartition; probe via broadcast
     # the final distance agg only: the block self-join broadcasts, and
-    # the max_block cap (skew.cap_keys) runs its window exchange inside
-    # its own checkpoint job, so the plan reads the capped blocks with
-    # no exchange
+    # the max_block cap (skew.cap_keys) counts block sizes in its own
+    # jobs before the plan runs (its two count exchanges are real work
+    # this budget does not see); the plan reads the checkpointed blocks
+    # and broadcast-anti-joins the tiny over-cap set
     "fuzzy_contact_pairs": 1,
     "cube_order_stats": 1,  # Expand 4x map-side, partial agg pre-shuffle
-    # the capped ngram pair generator reads its checkpointed capped
-    # shingles (skew.cap_keys: the df window and the one shingle
-    # explode run in the checkpoint job, outside this plan) in three
+    # the capped ngram pair generator reads its checkpointed shingles
+    # (skew.cap_keys: the one shingle explode and the df count run in
+    # the cap's own jobs, outside this plan) in three
     # consumers — sizes agg + shared agg + the SHUFFLE_HASH join sides
     # (each de-broadcast join shuffles both sides; the static
     # broadcasts OOM'd the 100x probe, PERF.md r10) — and the degree
@@ -147,10 +148,10 @@ BUDGET = {
     # rangepartitioning (printed twice via the pinned frame's reprint)
     # + the bounded per-partition count; NO single-partition window
     "orders_global_rank": 3,
-    # the capped pair generator's chain over its checkpointed capped
-    # shingles (sizes agg + shared agg + the SHUFFLE_HASH join sides,
-    # PERF.md r10; the cap's df window runs in the checkpoint job) +
-    # split joins + final cell agg
+    # the capped pair generator's chain over its checkpointed shingles
+    # (sizes agg + shared agg + the SHUFFLE_HASH join sides, PERF.md
+    # r10; the cap's df count runs in its own jobs) + split joins +
+    # final cell agg
     "split_leakage_audit": 8,
     # leaf groupBy + the tiny region window exchange; parent total
     # derives from the 25-row child aggregate, never a second scan

@@ -399,7 +399,7 @@ def test_fuzzy_pairs_blocked_finds_typos_within_blocks(spark):
     assert (1, 2) in pairs2 and (7, 8) in pairs2
     assert not any(a >= 100 for a, _ in pairs2), pairs2
     plan = capped._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan and "LeftAnti" not in plan, plan
+    assert "LeftAnti" in plan, plan
 
 
 def test_int8_quantization_properties(spark):

@@ -236,12 +236,14 @@ def test_ngram_df_cap_bounds_hot_shingle_pairs(spark):
     # the one (sub-cap) shingle -> 1/(1+1-1) = 1.0.
     assert got[0]["jaccard"] == 1.0
 
-    # The cap (skew.cap_keys) is materialized before the join: the pair
-    # plan reads the checkpointed capped shingles and neither re-explodes
-    # the corpus nor anti-joins a hot set.
+    # The cap (skew.cap_keys) drops the hot shingles with an anti-join
+    # against the keys past max_df, and the pair plan reads the cap's
+    # checkpointed shingles instead of re-exploding the corpus; the
+    # uncapped plan explodes and anti-joins nothing.
     plan = capped._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan, plan
-    assert "Generate" not in plan and "LeftAnti" not in plan, plan
+    assert "LeftAnti" in plan and "Generate" not in plan, plan
+    plan = uncapped._jdf.queryExecution().executedPlan().toString()
+    assert "LeftAnti" not in plan and "Generate" in plan, plan
 
 
 def test_dedup_components_pair_generation_is_capped(spark, tmp_path):
@@ -343,9 +345,12 @@ def test_lsh_band_bucket_cap_bounds_clone_cluster_pairs(spark):
     got = {(r.id_a, r.id_b) for r in mh.collect()}
     assert (100, 101) in got
     assert not any(a < 40 for a, _ in got), got
+    # capped: the band-bucket explode ran in the cap's checkpoint job
+    # and the plan anti-joins the buckets past max_bucket
     plan = mh._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan, plan
-    assert "Generate" not in plan and "LeftAnti" not in plan, plan
+    assert "LeftAnti" in plan and "Generate" not in plan, plan
+    plan = mh_uncapped._jdf.queryExecution().executedPlan().toString()
+    assert "LeftAnti" not in plan and "Generate" in plan, plan
 
     sh = simhash_pairs(docs, "doc_id", "text", max_bucket=10)
     sgot = {(r.id_a, r.id_b) for r in sh.collect()}
