@@ -21,7 +21,9 @@ from bcg_contacts_data_pipeline_spark.plans.queries import ORACLE, QUERIES  # no
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the complete contact-unification pipeline (k-of-n
     enrichment fill -> field cleaning -> most-complete-record dedup ->
-    validation) end-to-end as one Spark plan at sf0.001."""
+    validation) end-to-end at sf0.001. Building it runs the eager
+    stage-boundary checkpoint (plans/contacts.py) and the SEQNO offset
+    pass; the returned frame plans from those."""
     return QUERIES["contacts_pipeline_e2e"](spark, "/root/testdata/sf0.001")
 
 

@@ -1,9 +1,10 @@
 """Custom Spark data source (Python DataSource API, Spark 4) for the
 reference's heterogeneous TSV directory.
 
-`io.readers.read_sources` expresses the same ingest as driver-side plan
-construction (one read + registry projection per file, unioned). This
-module packages it as a first-class source —
+`io.readers.read_tsv` per file plus `io.readers.read_sources` express the
+same ingest as driver-side plan construction (one read + registry
+projection per file, unioned). This module packages it as a first-class
+source —
 
     spark.read.format("contacts_tsv")
          .option("path", dir)
@@ -47,7 +48,7 @@ Scale notes
 - This source exists for *heterogeneous/quirky* formats (per-file
   synonym schemas, the reference's headerless exports). For big
   homogeneous TSVs the JVM csv reader (`read_tsv`) remains the fast
-  path; the docstring of read_sources states the same split.
+  path.
 
 Reference: fill_missing_contacts.py:188-201, merge_contacts_kindaworks.py:27-54
 (synonym registries), run.py:21-38 (directory ingest).

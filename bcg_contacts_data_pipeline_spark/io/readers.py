@@ -1,19 +1,21 @@
 """Source connectors (SURVEY.md §2.1 S1–S8).
 
 Reference semantics re-expressed Spark-first:
-- S1/S2/S3 TSV scans  -> one ``read_tsv`` with optional explicit schema
+- S1/S2/S3 TSV scans  -> one ``read_tsv``: the reference's ``dtype=str``
+  load, every column a string named from the header, '' read as NULL
   (no low_memory/chunk concerns: Spark splits CSV input natively, which
   also replaces S4's 10k-row chunking).
 - headerless ad-hoc lists (data_files/5.tsv, 6.tsv) -> ``read_headerless_tsv``
   with positional names.
-- S5 per-file heterogeneous directory -> ``read_sources`` loops files
-  (schemas differ so it can NOT be one multi-path scan) and applies the
-  synonym registry per file; ``input_file_name()`` keeps provenance.
+- S5 per-file heterogeneous directory -> ``read_sources`` unions the
+  per-file frames after the synonym registry maps each one (schemas
+  differ so it can NOT be one multi-path scan); ``input_file_name()``
+  keeps provenance.
 - S6 latest-file-by-mtime -> driver-side glob (filesystem concern, not
   engine), same as the reference (clean_contacts.py:239-245).
-- S7/S8 SQLite staging -> JDBC read/write, gated on driver availability;
-  the staging pattern itself is obsolete (Spark shuffle/spill is the
-  out-of-core story).
+- S7/S8 SQLite staging -> ``io.jdbc`` (partitioned JDBC read/write and
+  the staged round trip); the staging pattern itself is obsolete (Spark
+  shuffle/spill is the out-of-core story).
 """
 
 from __future__ import annotations
@@ -25,47 +27,33 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from bcg_contacts_data_pipeline_spark.functions.normalize_sql import q
+
 
 def string_schema(cols: list[str]) -> StructType:
     return StructType([StructField(c, StringType(), True) for c in cols])
 
 
-def read_tsv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | None = None,
-    header: bool = True,
-    all_strings: bool = False,
-    nullify_empty: bool = True,
-) -> DataFrame:
-    """TSV scan (S1-S3). ``all_strings`` mirrors the reference's
-    ``dtype=str`` loading mode but keeps NULLs real instead of '' — the
-    two null conventions (SURVEY §1.2) unify at ingest."""
-    reader = (
+def read_tsv(spark: SparkSession, path: str) -> DataFrame:
+    """TSV scan (S1-S3) in the reference's ``dtype=str`` loading mode,
+    but with NULLs kept real instead of '': the two null conventions
+    (SURVEY §1.2) unify at ingest. Columns are named from one header
+    peek (:func:`_peek_header`, one Spark job)."""
+    df = (
         spark.read.option("sep", "\t")
-        .option("header", header)
+        .option("header", True)
         .option("mode", "PERMISSIVE")
+        .schema(string_schema(_peek_header(spark, path)))
+        .csv(path)
     )
-    if schema is not None:
-        reader = reader.schema(schema)
-    elif all_strings:
-        header_cols = _peek_header(spark, path)
-        reader = reader.schema(string_schema(header_cols))
-    else:
-        reader = reader.option("inferSchema", True)
-    df = reader.csv(path)
-    if nullify_empty:
-        df = df.select(
-            *[
-                F.when(F.length(F.trim(F.col(c).cast("string"))) == 0, None)
-                .otherwise(F.col(c))
-                .alias(c)
-                if isinstance(df.schema[c].dataType, StringType)
-                else F.col(c)
-                for c in df.columns
-            ]
-        )
-    return df
+    # Quoted names: a header such as 'No.' or 'E-mail' is not a valid
+    # unquoted identifier.
+    return df.selectExpr(
+        *[
+            f"CASE WHEN length(trim({q(c)})) = 0 THEN NULL ELSE {q(c)} END AS {q(c)}"
+            for c in df.columns
+        ]
+    )
 
 
 def _peek_header(spark: SparkSession, path: str) -> list[str]:
@@ -78,7 +66,29 @@ def _peek_header(spark: SparkSession, path: str) -> list[str]:
     serves."""
     first = spark.read.text(path).limit(1).take(1)
     line = first[0][0] if first else ""
-    return [c.strip() for c in line.split("\t")]
+    return _column_names([c.strip() for c in line.split("\t")])
+
+
+def _column_names(header: list[str]) -> list[str]:
+    """Header cells -> usable column names, the way the reference's
+    pandas loader names them: an empty cell i becomes ``Unnamed: i`` and
+    a repeated name gets ``.1``, ``.2``, ... appended. Repeats are found
+    case-insensitively (pandas: case-sensitively), because Spark resolves
+    names that way and rejects a schema that repeats one. Matters for
+    files whose first DATA row is misread as a header (data_files/5.tsv:
+    two empty cells), which must still read so the usable-source rule
+    can skip them."""
+    names: list[str] = []
+    seen: set[str] = set()
+    for i, c in enumerate(header):
+        base = name = c or f"Unnamed: {i}"
+        k = 0
+        while name.lower() in seen:
+            k += 1
+            name = f"{base}.{k}"
+        seen.add(name.lower())
+        names.append(name)
+    return names
 
 
 def read_headerless_tsv(
@@ -136,20 +146,13 @@ class SourceRegistry:
         return df.select(*out)
 
 
-def read_sources(
-    spark: SparkSession,
-    paths: list[str],
-    registry: SourceRegistry,
-    header: bool = True,
-) -> DataFrame:
-    """S5 — heterogeneous multi-file source: per-file schema mapping via the
-    registry, then a single unionByName. Provenance column included."""
-    frames = []
-    for p in paths:
-        raw = read_tsv(spark, p, all_strings=header, header=header)
-        frames.append(registry.apply(raw, keep_provenance=True))
-    out = frames[0]
-    for f in frames[1:]:
+def read_sources(frames: list[DataFrame], registry: SourceRegistry) -> DataFrame:
+    """S5 — heterogeneous multi-file source: each file's frame (as
+    ``read_tsv`` returns it) mapped through the registry, then a single
+    unionByName. Provenance column included."""
+    mapped = [registry.apply(f, keep_provenance=True) for f in frames]
+    out = mapped[0]
+    for f in mapped[1:]:
         out = out.unionByName(f)
     return out
 
@@ -159,20 +162,3 @@ def latest_file(directory: str, pattern: str = "*.tsv") -> str | None:
     filesystem concern, exactly as in the reference."""
     files = globmod.glob(os.path.join(directory, pattern))
     return max(files, key=os.path.getmtime) if files else None
-
-
-def jdbc_available(spark: SparkSession, driver: str = "org.sqlite.JDBC") -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(driver)  # noqa: SLF001
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-
-
-def read_jdbc(
-    spark: SparkSession, url: str, table: str, properties: dict | None = None
-) -> DataFrame:
-    """S8 — JDBC source (replaces the SQLite staged lookups; predicate
-    pushdown comes from the JDBC source). Requires the driver jar on the
-    classpath — check ``jdbc_available`` first."""
-    return spark.read.jdbc(url, table, properties=properties or {})

@@ -25,10 +25,14 @@ s_lastname, s_fullname, s_email, s_mobile.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bcg_contacts_data_pipeline_spark.io.readers import SourceRegistry
+from bcg_contacts_data_pipeline_spark.io.readers import (
+    SourceRegistry,
+    read_sources,
+    read_tsv,
+)
 
 #: fill_missing_contacts.py:188-192 exact synonym sets.
 FIRSTNAME_SYNONYMS = ["First Name", "FirstName", "firstname"]
@@ -131,3 +135,25 @@ def with_source_order(df: DataFrame, order_col: str = "sid") -> DataFrame:
     chosen) first-match winners."""
     cols = [F.col(c) for c in df.columns]
     return df.select("*", F.xxhash64(F.struct(*cols)).alias(order_col))
+
+
+def read_contact_sources(
+    spark: SparkSession, paths: list[str]
+) -> tuple[DataFrame | None, list[str]]:
+    """The enrichment-source ingest (fill_missing_contacts.py:186-196):
+    read each file once, keep the files ``usable_source`` accepts on the
+    header that read found, and return their CONTACT_SOURCE_REGISTRY
+    projections as one frame with a ``sid`` source order (None when no
+    file is usable), plus the skipped paths in input order. One Spark
+    job per file: ``read_tsv``'s header peek."""
+    usable, skipped = [], []
+    for p in paths:
+        df = read_tsv(spark, p)
+        if usable_source(df.columns):
+            usable.append(df)
+        else:
+            skipped.append(p)
+    if not usable:
+        return None, skipped
+    sources = read_sources(usable, CONTACT_SOURCE_REGISTRY).drop("source_file")
+    return with_source_order(sources, "sid"), skipped

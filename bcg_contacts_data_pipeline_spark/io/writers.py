@@ -7,7 +7,7 @@
   the *output contract* is a single file, not because the engine needs it;
   ``write_tsv`` (partitioned) is the scale path.
 - ``write_json_log`` — change-log / validation-report sinks (S11).
-- ``write_jdbc`` — S7's staging sink generalized.
+- S7's staging sink is ``io.jdbc.write_jdbc``.
 """
 
 from __future__ import annotations
@@ -19,17 +19,17 @@ import shutil
 from pyspark.sql import DataFrame
 
 
-def write_tsv(df: DataFrame, path: str, header: bool = True) -> None:
-    """Partitioned TSV output — the 100 TB path."""
-    df.write.mode("overwrite").option("sep", "\t").option("header", header).csv(path)
+def write_tsv(df: DataFrame, path: str) -> None:
+    """Partitioned TSV output with a header line — the 100 TB path."""
+    df.write.mode("overwrite").option("sep", "\t").option("header", True).csv(path)
 
 
-def write_tsv_single(df: DataFrame, path: str, header: bool = True) -> str:
-    """Single-file TSV for edge export. Writes via a temp dir then moves
-    the one part file to ``path``."""
+def write_tsv_single(df: DataFrame, path: str) -> str:
+    """Single-file TSV with a header line, for edge export. Writes via a
+    temp dir then moves the one part file to ``path``."""
     tmp = path + ".__tmpdir__"
     df.coalesce(1).write.mode("overwrite").option("sep", "\t").option(
-        "header", header
+        "header", True
     ).csv(tmp)
     part = glob.glob(os.path.join(tmp, "part-*"))[0]
     os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
@@ -48,10 +48,6 @@ def write_json_log(df: DataFrame, path: str, single: bool = False) -> None:
         shutil.rmtree(tmp)
     else:
         df.write.mode("overwrite").json(path)
-
-
-def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "append") -> None:
-    df.write.mode(mode).jdbc(url, table)
 
 
 def write_columnar(

@@ -178,16 +178,15 @@ def renumber(
     df: DataFrame,
     order_by: list[Column | str],
     seq_name: str = "seqno",
-    scalable: bool = True,
     with_total: bool = False,
 ) -> DataFrame | tuple[DataFrame, int]:
     """O2 — assign a global contiguous 1..N sequence under a total order.
 
-    ``scalable=True`` uses the two-pass partition-offset pattern instead of
-    a single-partition window: range-repartition on the sort keys (so
-    partition i holds globally-ordered slice i), count rows per partition
-    (tiny aggregate collected to the driver), then add the broadcast offset
-    to a partition-local row_number. No stage ever sees more than one
+    Two-pass partition-offset pattern instead of a single-partition
+    window: range-repartition on the sort keys (so partition i holds
+    globally-ordered slice i), count rows per partition (tiny aggregate
+    collected to the driver), then add the broadcast offset to a
+    partition-local row_number. No stage ever sees more than one
     partition's rows — this is the distributed replacement for the
     reference's in-memory ``SEQNO = 1..N`` (clean_contacts.py:57-86).
 
@@ -198,11 +197,6 @@ def renumber(
     plans.contacts._with_row_id).
     """
     cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    if not scalable:
-        w = Window.orderBy(*cols)
-        out = df.withColumn(seq_name, F.row_number().over(w))
-        return (out, out.count()) if with_total else out
-
     # persist() is load-bearing: repartitionByRange samples range boundaries
     # with an rdd-id-derived seed, so RE-computation (e.g. both branches of
     # a later self-join) could assign rows to different partitions than the

@@ -240,11 +240,10 @@ def two_key_enrich(
     fill: dict[str, str],
     target_id: str,
     source_order: str,
-    broadcast_source: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """J1 — the Mailchimp-style strict variant: ALL listed keys must match
     (merge_contacts_kindaworks.py:77-96). Same machinery with
-    min_matches == len(keys); source defaults to broadcast because the
+    min_matches == len(keys); the source is always broadcast because the
     reference's enrichment sources are dimension-sized."""
     return kofn_enrich(
         target,
@@ -254,5 +253,5 @@ def two_key_enrich(
         target_id,
         source_order,
         min_matches=len(keys),
-        broadcast_source=broadcast_source,
+        broadcast_source=True,
     )

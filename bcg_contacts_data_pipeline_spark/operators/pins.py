@@ -28,8 +28,9 @@ With no scope open, ``pin`` and ``checkpoint`` fall back to the
 untracked session-lifetime behavior: a persist lives until
 ``clearCache()``, a checkpoint's blocks until Spark's ContextCleaner
 collects them. Short-lived callers that open none (one-shot registry
-queries) pay no ceremony. Callers that must stay lazy
-without a scope ask :func:`current_scope`.
+queries) pay no ceremony. No operator branches on whether a scope is
+open: a frame materializes the same way either way, and only its
+release differs.
 """
 
 from __future__ import annotations
@@ -93,13 +94,8 @@ class PinScope:
         self.release()
 
 
-def current_scope() -> PinScope | None:
-    """The innermost open scope, or None."""
-    return _CURRENT.get()
-
-
 def _register(df: DataFrame, releaser) -> DataFrame:
-    scope = current_scope()
+    scope = _CURRENT.get()
     if scope is not None:
         scope._frames.append((df, releaser))
     return df

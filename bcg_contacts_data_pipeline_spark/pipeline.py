@@ -18,13 +18,16 @@ Reference-parity operational behavior, Spark-first mechanics:
   reference's 'invalid email format' class (validate_fields.py:143-162
   fails only on email problems, not data-quality gaps), else 0.
 
-Stages compose lazily and Catalyst optimizes within each one; the
-enrichment stage boundaries are checkpointed into the run's PinScope
-(plans/contacts._stage_boundary), because each splice join reads its
-target three times and the chained stages would otherwise multiply the
-input scans in every later plan. Subprocess-per-step and TSV handoffs
-between steps (the reference's design) have no equivalent here by
-design.
+Stages compose lazily and Catalyst optimizes within each one; every
+enrichment stage's target is checkpointed into the run's PinScope (the
+plans/contacts module docstring says why), because each splice join
+reads its target three times and the chained stages would otherwise
+multiply the input scans in every later plan. Each input file is read
+once: one header peek names its all-string columns, and the enrichment
+sources are filtered by the reference's usable-source rule on that same
+read (io/registries.read_contact_sources). Subprocess-per-step and TSV
+handoffs between steps (the reference's design) have no equivalent here
+by design.
 """
 
 from __future__ import annotations
@@ -105,7 +108,7 @@ def _run(args, spark: SparkSession) -> int:
 
     step(i, n_steps, f"read master: {args.master}")
     s = time.time()
-    master = R.read_tsv(spark, args.master, all_strings=True)
+    master = R.read_tsv(spark, args.master)
     _log(f"  done in {time.time() - s:.1f}s ({len(master.columns)} columns)")
     i += 1
 
@@ -114,9 +117,7 @@ def _run(args, spark: SparkSession) -> int:
         step(i, n_steps, f"read mailchimp source: {args.mailchimp}")
         s = time.time()
         mailchimp = REG.with_source_order(
-            REG.CONTACT_SOURCE_REGISTRY.apply(
-                R.read_tsv(spark, args.mailchimp, all_strings=True)
-            ),
+            REG.CONTACT_SOURCE_REGISTRY.apply(R.read_tsv(spark, args.mailchimp)),
             "sid",
         )
         _log(f"  done in {time.time() - s:.1f}s")
@@ -126,22 +127,12 @@ def _run(args, spark: SparkSession) -> int:
     if args.sources:
         step(i, n_steps, f"read {len(args.sources)} enrichment sources")
         s = time.time()
-        usable = []
-        for path in args.sources:
-            cols = R._peek_header(spark, path)
-            if REG.usable_source(cols):
-                usable.append(path)
-            else:
-                # fill_missing_contacts.py:194-196 skip decision
-                _log(f"  skipping {path} - missing required columns")
-        if usable:
-            sources = REG.with_source_order(
-                R.read_sources(spark, usable, REG.CONTACT_SOURCE_REGISTRY).drop(
-                    "source_file"
-                ),
-                "sid",
-            )
-        _log(f"  done in {time.time() - s:.1f}s ({len(usable)} usable)")
+        sources, skipped = REG.read_contact_sources(spark, args.sources)
+        for path in skipped:
+            # fill_missing_contacts.py:194-196 skip decision
+            _log(f"  skipping {path} - missing required columns")
+        n_usable = len(args.sources) - len(skipped)
+        _log(f"  done in {time.time() - s:.1f}s ({n_usable} usable)")
         i += 1
 
     step(i, n_steps, "fill -> clean -> dedup -> renumber")

@@ -1,9 +1,22 @@
 """The complete contact-unification pipeline — the reference's whole
 run.py workflow (fill-missing -> clean -> dedup -> validate, plus the
 optional Mailchimp stage 0) as composable DataFrame stages, files only
-at the edges. Each stage is lazy; when the caller has a ``PinScope``
-open the enrichment stage boundaries are checkpointed into it (see
-``_stage_boundary`` for why), otherwise the whole run is one plan.
+at the edges. Each stage is lazy, but every enrichment stage's target
+frame (``mailchimp_enrich``'s two passes, ``fill_missing``) is
+materialized once by an eager ``pins.checkpoint``: into the caller's
+open ``PinScope``, else held by the session until Spark's ContextCleaner
+frees it. The plan is the same whether or not a scope is open.
+
+Why: each enrichment stage reads its target three times (the k-of-n
+probe, the enriched-key join, the splice join back), and the stages
+chain (Mailchimp email pass -> mobile pass -> fill-missing), so the
+copies multiply. Unbounded, the frame entering ``clean_fields`` held 46
+CSV relations and 70 exchanges for 4 input files on the golden fixture,
+and every action re-planned and re-ran that tree (the renumber offset
+collect alone: 91 jobs). A scoped ``persist`` was measured too and
+loses (CLI on the golden fixture, 4-core host: 48.6 s vs 30.3 s): the
+cache spares execution, but the analyzer still walks the full tree on
+every action.
 
 Reference parity map (cites into /root/reference):
 - master schema: output/MergedDatabase.tsv header (88 columns)
@@ -46,7 +59,7 @@ from bcg_contacts_data_pipeline_spark.operators.enrich import (
     kofn_enrich,
     two_key_enrich,
 )
-from bcg_contacts_data_pipeline_spark.operators.pins import checkpoint, current_scope
+from bcg_contacts_data_pipeline_spark.operators.pins import checkpoint
 
 #: The master contact schema — output/MergedDatabase.tsv header, row 1.
 MASTER_COLUMNS = (
@@ -83,6 +96,14 @@ YN_FIELDS = ["isactive", "optout_emarketing", *SUB_FIELDS]
 NAME_FIELDS = ["firstname", "lastname", "fullname", "title"]
 INT_FIELDS = ["seqno", "salesno", "company_accno"]
 
+#: fill_missing_contacts.py — master column <- source column it fills from.
+FILL_FIELDS = {
+    "firstname": "s_firstname",
+    "lastname": "s_lastname",
+    "fullname": "s_fullname",
+    "mobile": "s_mobile",
+}
+
 
 def _with_row_id(df: DataFrame) -> DataFrame:
     """Stable row identity (O3). NOT monotonically_increasing_id: that is
@@ -107,25 +128,6 @@ def _with_row_id(df: DataFrame) -> DataFrame:
     # projection builds (see functions/normalize_sql.py).
     cols = ", ".join(NS.q(c) for c in df.columns)
     return df.withColumn("__row_id", F.expr(f"xxhash64(struct({cols}))"))
-
-
-def _stage_boundary(df: DataFrame) -> DataFrame:
-    """Materialize an enrichment stage's target frame once (eager
-    ``localCheckpoint`` into the open ``PinScope``) so every later plan
-    starts from a leaf; with no scope open, return ``df`` unchanged
-    (lazy, and nothing for an unscoped caller to leak).
-
-    Why: each enrichment stage reads its target three times (the k-of-n
-    probe, the enriched-key join, the splice join back), and the stages
-    chain (Mailchimp email pass -> mobile pass -> fill-missing), so the
-    copies multiply. Unbounded, the frame entering ``clean_fields`` held
-    46 CSV relations and 70 exchanges for 4 input files on the golden
-    fixture, and every action re-planned and re-ran that tree (the
-    renumber offset collect alone: 91 jobs). A scoped ``persist`` was
-    measured too and loses (CLI on the golden fixture, 4-core host:
-    48.6 s vs 30.3 s): the cache spares execution, but the analyzer
-    still walks the full tree on every action."""
-    return df if current_scope() is None else checkpoint(df)
 
 
 def conform_to_master(df: DataFrame) -> DataFrame:
@@ -210,29 +212,23 @@ def contact_match_keys() -> list[MatchKey]:
 def fill_missing(
     master: DataFrame,
     source: DataFrame,
-    fill_fields: dict[str, str] | None = None,
     with_change_log: bool = True,
 ) -> tuple[DataFrame, DataFrame | None]:
-    """fill_missing_contacts.py semantics: fill firstname/lastname/
-    fullname/mobile (SURVEY J2 fill set) from the first source row
-    agreeing on >=2 of (name, email, phone).
+    """fill_missing_contacts.py semantics: fill the FILL_FIELDS
+    (firstname/lastname/fullname/mobile, SURVEY J2 fill set) from the
+    first source row agreeing on >=2 of (name, email, phone).
 
     ``source`` columns must be pre-mapped to s_firstname, s_lastname,
     s_fullname, s_email, s_mobile + a numeric ``sid`` order column (use
-    io.readers.SourceRegistry for raw files).
+    io.registries.read_contact_sources for raw files).
     """
-    fill_fields = fill_fields or {
-        "firstname": "s_firstname",
-        "lastname": "s_lastname",
-        "fullname": "s_fullname",
-        "mobile": "s_mobile",
-    }
-    master_with_id = _stage_boundary(_with_row_id(master))
+    # the stage's target is checkpointed (module docstring says why)
+    master_with_id = checkpoint(_with_row_id(master))
     enriched, log = kofn_enrich(
         master_with_id,
         source,
         contact_match_keys(),
-        fill=fill_fields,
+        fill=FILL_FIELDS,
         target_id="__row_id",
         source_order="sid",
         min_matches=2,
@@ -245,9 +241,9 @@ def fill_missing(
     # suffices and the join stays 1:1 per master row. The join key is a
     # single long; AQE broadcast-converts the fill side when small.
     out = (
-        master_with_id.drop(*fill_fields.keys())
+        master_with_id.drop(*FILL_FIELDS)
         .join(
-            enriched.select("__row_id", *fill_fields.keys())
+            enriched.select("__row_id", *FILL_FIELDS)
             .dropDuplicates(["__row_id"]),
             "__row_id",
         )
@@ -261,21 +257,20 @@ def mailchimp_enrich(
 ) -> tuple[DataFrame, DataFrame]:
     """merge_contacts_kindaworks.py: fill missing email on (name, phone)
     match; fill missing mobile on (name, email) match. Two strict two-key
-    passes against a broadcast dimension. Each pass's target is a
-    ``_stage_boundary``."""
-    mc = (
-        mailchimp
-        if "sid" in mailchimp.columns
-        else renumber(mailchimp, [F.col(c) for c in mailchimp.columns], seq_name="sid")
-    )
-    m1 = _stage_boundary(_with_row_id(master))
+    passes against a broadcast dimension, each against a checkpointed
+    target (module docstring).
+
+    ``mailchimp`` columns must be pre-mapped like ``fill_missing``'s
+    source, ``sid`` included (io.registries.with_source_order).
+    """
+    m1 = checkpoint(_with_row_id(master))
 
     name_t = N.norm_ws(N.full_name("firstname", "lastname", "fullname", "name"))
     name_s = N.norm_ws(N.full_name("s_firstname", "s_lastname", "s_fullname"))
 
     email_fill, log1 = two_key_enrich(
         m1,
-        mc,
+        mailchimp,
         [
             MatchKey("name", name_t, name_s),
             MatchKey("phone", N.norm_phone(F.col("mobile")), N.norm_phone(F.col("s_mobile"))),
@@ -284,7 +279,7 @@ def mailchimp_enrich(
         target_id="__row_id",
         source_order="sid",
     )
-    m2 = _stage_boundary(
+    m2 = checkpoint(
         m1.drop("email").join(
             email_fill.select("__row_id", "email").dropDuplicates(["__row_id"]),
             "__row_id",
@@ -292,7 +287,7 @@ def mailchimp_enrich(
     )
     mobile_fill, log2 = two_key_enrich(
         m2,
-        mc,
+        mailchimp,
         [
             MatchKey("name", name_t, name_s),
             MatchKey("email", N.norm_email(F.col("email")), N.norm_email(F.col("s_email"))),
@@ -336,8 +331,7 @@ def dedup_contacts(
     # end-to-end, before the enrichment stage boundaries were
     # checkpointed: it prunes the 88 merge aggregates from the eager
     # offset pass but recomputed the whole upstream enrich/clean plan —
-    # then 46 scans — twice. Not re-measured since; an unscoped run
-    # still carries that upstream.)
+    # then 46 scans — twice. Not re-measured since.)
     # The hash pair REPLACES a full 88-column tiebreak list rather than
     # prefixing it: rows equal on (key, h1, h2) are byte-identical up to
     # a ~2^-128 collision (two independent 64-bit hashes — h2 feeds the
@@ -358,12 +352,7 @@ def dedup_contacts(
     row_hash = F.expr(f"xxhash64(struct({fwd}))")
     row_hash2 = F.expr(f"xxhash64('seqno-tiebreak-2', struct({rev}))")
     order = [F.col("dedup_key").asc_nulls_last(), row_hash.asc(), row_hash2.asc()]
-    renumbered = renumber(
-        merged.drop("seqno"),
-        order,
-        seq_name="seqno",
-        scalable=True,
-    )
+    renumbered = renumber(merged.drop("seqno"), order, seq_name="seqno")
     return renumbered.select("seqno", *[c for c in MASTER_COLUMNS if c != "seqno"], "group_size")
 
 

@@ -2,7 +2,7 @@
 
 Most-complete-record merge, scalar normalization, k-of-n enrichment and
 its change log, rule validation and the error histogram, the complete
-contacts pipeline (``plans/contacts.py``) as one plan, fuzzy record
+contacts pipeline (``plans/contacts.py``) as one query, fuzzy record
 linkage, source unions, CDC upserts and snapshot diffs, SCD2 history,
 collation-aware grouping and the TSV/CSV/JDBC edges (quarantine, line
 round-trip, staging round-trip).

@@ -1,8 +1,9 @@
 """End-to-end contact pipeline test — the reference's full run.py flow
 (mailchimp enrich -> fill missing -> clean -> dedup -> validate) on
-contact-shaped fixtures, plus the guards on the enrichment stage
-boundaries (plans/contacts._stage_boundary): plan shape, job budget,
-scoped == unscoped results, and release."""
+contact-shaped fixtures, plus the guards on the one path the CLI runs:
+one Spark job per source file at ingest, and the checkpointed
+enrichment stage boundaries (plans/contacts.py) — plan shape scoped or
+not, job budget, outputs equal to the lazy plan's, and release."""
 
 from __future__ import annotations
 
@@ -16,11 +17,12 @@ from bcg_contacts_data_pipeline_spark.plans import contacts as C
 from tests.test_pins import _n_persistent_rdds
 
 #: Golden-fixture budgets with the stage boundaries checkpointed
-#: (measured 4 relations / 7 exchanges / 76 jobs; without them 46 / 70 /
-#: 172). A reintroduced splice-join fan-out multiplies all three.
+#: (measured 4 relations / 7 exchanges / 74 jobs; without them 46 / 70 /
+#: 172). A reintroduced splice-join fan-out multiplies all three; a
+#: second header peek per source file adds a job per usable file.
 MAX_CLEAN_INPUT_RELATIONS = 4
 MAX_CLEAN_INPUT_EXCHANGES = 8
-MAX_CLI_JOBS = 90
+MAX_CLI_JOBS = 78
 
 
 def master_fixture(spark):
@@ -122,32 +124,60 @@ def test_bug_compat_empty_key_merge(spark):
     assert len(keyless) == 1
 
 
+#: The CLI's --sources on the golden fixture: two usable files, then the
+#: two headerless lists the usable-source rule skips.
+SOURCE_KEYS = ("mailchimp_src", "crm", "adhoc5", "adhoc6")
+
+
 @pytest.fixture(scope="module")
-def golden_inputs(spark, tmp_path_factory):
+def golden_paths(tmp_path_factory):
+    return G.write_all(str(tmp_path_factory.mktemp("golden_inputs")))
+
+
+@pytest.fixture(scope="module")
+def golden_inputs(spark, golden_paths):
     """The golden fixture's master, sources and Mailchimp frames, read
-    the way pipeline.run_cli reads them (the headerless 5/6.tsv lists
-    are skipped by the same usable-source rule)."""
+    the way pipeline.run_cli reads them."""
     from bcg_contacts_data_pipeline_spark.io import readers as R
     from bcg_contacts_data_pipeline_spark.io import registries as REG
 
-    paths = G.write_all(str(tmp_path_factory.mktemp("golden_inputs")))
-    master = R.read_tsv(spark, paths["master"], all_strings=True)
+    master = R.read_tsv(spark, golden_paths["master"])
     mailchimp = REG.with_source_order(
         REG.CONTACT_SOURCE_REGISTRY.apply(
-            R.read_tsv(spark, paths["mailchimpclean"], all_strings=True)
+            R.read_tsv(spark, golden_paths["mailchimpclean"])
         ),
         "sid",
     )
-    usable = [
-        p
-        for p in (paths["mailchimp_src"], paths["crm"], paths["adhoc5"], paths["adhoc6"])
-        if REG.usable_source(R._peek_header(spark, p))
-    ]
-    sources = REG.with_source_order(
-        R.read_sources(spark, usable, REG.CONTACT_SOURCE_REGISTRY).drop("source_file"),
-        "sid",
+    sources, _skipped = REG.read_contact_sources(
+        spark, [golden_paths[k] for k in SOURCE_KEYS]
     )
     return master, sources, mailchimp
+
+
+def _jobs_in(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran (own job group)."""
+    sc = spark.sparkContext
+    group = "contacts-pipeline-job-count"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_source_ingest_runs_one_job_per_file(spark, golden_paths):
+    """Each source file is read once: its header peek names the columns
+    and decides usability; nothing re-reads a usable file's header."""
+    from bcg_contacts_data_pipeline_spark.io import registries as REG
+
+    paths = [golden_paths[k] for k in SOURCE_KEYS]
+    (sources, skipped), jobs = _jobs_in(
+        spark, lambda: REG.read_contact_sources(spark, paths)
+    )
+    assert jobs == len(paths), jobs
+    assert skipped == [golden_paths["adhoc5"], golden_paths["adhoc6"]]
+    assert sources is not None and "sid" in sources.columns
 
 
 def _run_capturing_clean_input(golden_inputs):
@@ -180,26 +210,47 @@ def _canonical(result: C.PipelineResult) -> dict:
     }
 
 
+def _plan_and_outputs(golden_inputs) -> dict:
+    """One run over the golden inputs: the clean_fields input's relation
+    and exchange counts, and the canonical outputs (collected in the
+    caller's scope — released checkpoints are unrecomputable)."""
+    result, clean_input = _run_capturing_clean_input(golden_inputs)
+    qe = clean_input._jdf.queryExecution()
+    return {
+        "relations": len(re.findall(r"Relation \[", qe.optimizedPlan().toString())),
+        "exchanges": qe.executedPlan().toString().count("Exchange"),
+        "outputs": _canonical(result),
+    }
+
+
 @pytest.fixture(scope="module")
 def scoped_run(spark, golden_inputs):
-    """One scoped run over the golden inputs: the clean_fields input
-    plan, the canonical outputs (collected before release — released
-    checkpoints are unrecomputable) and the persistent-RDD count before
-    the run and after the scope closes."""
+    """A scoped run, plus the persistent-RDD count before the run and
+    after the scope closes."""
     before = _n_persistent_rdds(spark)
     with PinScope():
-        result, clean_input = _run_capturing_clean_input(golden_inputs)
-        qe = clean_input._jdf.queryExecution()
-        optimized = qe.optimizedPlan().toString()
-        physical = qe.executedPlan().toString()
-        outputs = _canonical(result)
-    return {
-        "relations": len(re.findall(r"Relation \[", optimized)),
-        "exchanges": physical.count("Exchange"),
-        "outputs": outputs,
-        "before": before,
-        "after": _n_persistent_rdds(spark),
-    }
+        run = _plan_and_outputs(golden_inputs)
+    return {**run, "before": before, "after": _n_persistent_rdds(spark)}
+
+
+@pytest.fixture(scope="module")
+def unscoped_run(spark, golden_inputs):
+    """The same run with no scope open: the checkpoints stay with the
+    session."""
+    try:
+        return _plan_and_outputs(golden_inputs)
+    finally:
+        # the unscoped renumber persist lives until clearCache
+        spark.catalog.clearCache()
+
+
+@pytest.fixture(scope="module")
+def lazy_run(golden_inputs):
+    """The reference: the same run with the stage checkpoints replaced
+    by identity, i.e. one lazy plan from the input files."""
+    with PinScope(), pytest.MonkeyPatch.context() as mp:
+        mp.setattr(C, "checkpoint", lambda df: df)
+        return _plan_and_outputs(golden_inputs)
 
 
 def test_stage_boundaries_bound_the_enrichment_plan(scoped_run):
@@ -210,23 +261,31 @@ def test_stage_boundaries_bound_the_enrichment_plan(scoped_run):
     assert scoped_run["exchanges"] <= MAX_CLEAN_INPUT_EXCHANGES, scoped_run["exchanges"]
 
 
+def test_unscoped_run_plans_the_same_bounded_input(scoped_run, unscoped_run):
+    """No scope open, same rule: the stage targets are checkpointed
+    anyway, so the clean_fields input is the scoped run's plan."""
+    assert unscoped_run["relations"] <= MAX_CLEAN_INPUT_RELATIONS, unscoped_run["relations"]
+    assert unscoped_run["exchanges"] <= MAX_CLEAN_INPUT_EXCHANGES, unscoped_run["exchanges"]
+    assert (unscoped_run["relations"], unscoped_run["exchanges"]) == (
+        scoped_run["relations"],
+        scoped_run["exchanges"],
+    )
+
+
 def test_cli_job_budget(cli_run):
     rc, _out, jobs = cli_run
     assert rc == 0
     assert 0 < jobs <= MAX_CLI_JOBS, jobs
 
 
-def test_stage_checkpoints_match_lazy_plan_and_release(spark, golden_inputs, scoped_run):
-    """Scoped and unscoped runs give identical outputs; release returns
-    the persistent-RDD count to its pre-run value (the checkpoints are
-    freed, not just dropped); an unscoped run checkpoints nothing."""
+def test_stage_checkpoints_match_lazy_plan_and_release(scoped_run, unscoped_run, lazy_run):
+    """Scoped and unscoped runs give the lazy reference's outputs, and
+    release returns the persistent-RDD count to its pre-run value (the
+    checkpoints are freed, not just dropped)."""
+    # the reference really is the unbounded plan the checkpoints cut
+    assert lazy_run["relations"] > MAX_CLEAN_INPUT_RELATIONS, lazy_run["relations"]
+    assert scoped_run["outputs"] == lazy_run["outputs"]
+    assert unscoped_run["outputs"] == lazy_run["outputs"]
     # <=, not ==: Spark's ContextCleaner may free unrelated leftovers of
     # earlier tests meanwhile (same reasoning as tests/test_pins.py)
     assert scoped_run["after"] <= scoped_run["before"]
-    try:
-        result, clean_input = _run_capturing_clean_input(golden_inputs)
-        assert "LogicalRDD" not in clean_input._jdf.queryExecution().optimizedPlan().toString()
-        assert _canonical(result) == scoped_run["outputs"]
-    finally:
-        # the unscoped renumber persist lives until clearCache (legacy)
-        spark.catalog.clearCache()

@@ -12,6 +12,7 @@ from bcg_contacts_data_pipeline_spark.io.datasource import ContactsTSVDataSource
 from bcg_contacts_data_pipeline_spark.io.readers import (
     SourceRegistry,
     read_sources,
+    read_tsv,
 )
 
 CANONICAL = {
@@ -90,7 +91,7 @@ def test_parity_with_read_sources(registered, tsv_dir):
     want = {
         tuple(r[c] for c in (*CANONICAL, "source_file"))
         for r in read_sources(
-            registered, paths, SourceRegistry(CANONICAL)
+            [read_tsv(registered, p) for p in paths], SourceRegistry(CANONICAL)
         ).collect()
     }
     got = {

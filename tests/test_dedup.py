@@ -81,7 +81,7 @@ def test_exact_dedup(spark):
 
 def test_renumber_scalable_contiguous(spark):
     df = spark.createDataFrame([(x,) for x in range(997, 0, -1)], "v int").repartition(7)
-    out = D.renumber(df, ["v"], scalable=True).collect()
+    out = D.renumber(df, ["v"]).collect()
     assert len(out) == 997
     by_v = {r["v"]: r["seqno"] for r in out}
     # seqno follows the total order on v, contiguous 1..N

@@ -17,19 +17,29 @@ def test_tsv_roundtrip_single_file(spark, tmp_path):
     W.write_tsv_single(df, out)
     assert os.path.isfile(out)
     back = R.read_tsv(spark, out)
-    rows = {r["id"]: r for r in back.collect()}
-    assert rows[1]["email"] == "a@x.com"
-    assert rows[2]["email"] is None
+    rows = {r["id"]: r for r in back.collect()}  # all-string read: "1", not 1
+    assert rows["1"]["email"] == "a@x.com"
+    assert rows["2"]["email"] is None
 
 
 def test_read_tsv_all_strings_nullifies_empty(spark, tmp_path):
     p = tmp_path / "src.tsv"
     p.write_text("A\tB\n1\t\nx\ty\n")
-    df = R.read_tsv(spark, str(p), all_strings=True)
+    df = R.read_tsv(spark, str(p))
     assert [f.dataType.simpleString() for f in df.schema.fields] == ["string", "string"]
     rows = sorted(df.collect(), key=lambda r: r["A"])
     assert rows[0]["B"] is None  # '' -> real NULL at ingest
     assert rows[1]["B"] == "y"
+
+
+def test_read_tsv_dotted_and_repeated_header_names(spark, tmp_path):
+    """Header cells that are not plain identifiers ('No.', 'E-mail') read
+    as they are; empty and repeated cells get the pandas loader's names."""
+    p = tmp_path / "dots.tsv"
+    p.write_text("No.\tE-mail\t\tE-MAIL\n1\ta@x.com\tz\t\n")
+    df = R.read_tsv(spark, str(p))
+    assert df.columns == ["No.", "E-mail", "Unnamed: 2", "E-MAIL.1"]
+    assert [tuple(r) for r in df.collect()] == [("1", "a@x.com", "z", None)]
 
 
 def test_headerless_positional(spark, tmp_path):
@@ -59,7 +69,7 @@ def test_source_registry_synonyms_and_union(spark, tmp_path):
         }
     )
     df = R.read_sources(
-        spark, [str(tmp_path / "1.tsv"), str(tmp_path / "4.tsv")], reg
+        [R.read_tsv(spark, str(tmp_path / f)) for f in ("1.tsv", "4.tsv")], reg
     )
     rows = {r["s_email"]: r for r in df.collect()}
     assert rows["a@x.com"]["s_firstname"] == "Ann"
@@ -113,8 +123,10 @@ def test_canned_registry_reads_reference_shaped_files(spark, tmp_path):
     from bcg_contacts_data_pipeline_spark.io import registries as REG
 
     df = R.read_sources(
-        spark,
-        [_mailchimp_fixture(tmp_path), _crm_fixture(tmp_path)],
+        [
+            R.read_tsv(spark, _mailchimp_fixture(tmp_path)),
+            R.read_tsv(spark, _crm_fixture(tmp_path)),
+        ],
         REG.CONTACT_SOURCE_REGISTRY,
     )
     rows = {r["s_email"]: r for r in df.collect()}
@@ -140,6 +152,27 @@ def test_usable_source_reproduces_reference_skip(tmp_path):
     assert not REG.usable_source(["Scott", "QRS", "scott@qldretailsupplies.com.au", "", ""])
     # name but no contact key
     assert not REG.usable_source(["First Name", "Last Name", "Job Title"])
+
+
+def test_contact_sources_read_dotted_headers(spark, tmp_path):
+    """A source whose header holds non-identifier names ('No.', 'Mobile
+    No.') is read, judged usable and projected like any other; a file
+    whose first data row was misread as a header (empty cells) is
+    skipped, not a crash."""
+    from bcg_contacts_data_pipeline_spark.io import registries as REG
+
+    dotted = tmp_path / "dotted.tsv"
+    dotted.write_text(
+        "No.\tFirst Name\tLast Name\tEmail\tMobile No.\n"
+        "1\tAnn\tLee\tann@x.com\t0405\n"
+    )
+    adhoc = tmp_path / "5.tsv"
+    adhoc.write_text("Scott\tQRS\tscott@x.com.au\t\t\nAl\tQRS\tal@x.com.au\t\t\n")
+    src, skipped = REG.read_contact_sources(spark, [str(dotted), str(adhoc)])
+    assert skipped == [str(adhoc)]
+    [row] = src.collect()
+    assert (row["s_firstname"], row["s_lastname"], row["s_email"]) == ("Ann", "Lee", "ann@x.com")
+    assert row["sid"] is not None
 
 
 def test_headerless_adhoc_lists_ingest_via_positional_registry(spark, tmp_path):
@@ -168,7 +201,7 @@ def test_headerless_adhoc_lists_ingest_via_positional_registry(spark, tmp_path):
 
 def test_pipeline_runs_off_reference_shaped_tsvs(spark, tmp_path):
     """TSV-edge e2e: master + enrichment sources from reference-shaped
-    files through read_sources + canned registry + run_pipeline; a master
+    files through read_contact_sources + run_pipeline; a master
     row missing its lastname/mobile is filled from the 2-of-3 match."""
     from bcg_contacts_data_pipeline_spark.io import registries as REG
     from bcg_contacts_data_pipeline_spark.plans import contacts as C
@@ -180,14 +213,12 @@ def test_pipeline_runs_off_reference_shaped_tsvs(spark, tmp_path):
         "2\tBob\tRoy\tbob.roy@corp.example\t\tBob Roy\tN\t2020-01-02 03:04:05\n"
         "3\tnan\tnan\tnot-an-email\t\t\tjunk\t\n"
     )
-    master = R.read_tsv(spark, str(master_p), all_strings=True)
+    master = R.read_tsv(spark, str(master_p))
 
-    src = R.read_sources(
-        spark,
-        [_mailchimp_fixture(tmp_path), _crm_fixture(tmp_path)],
-        REG.CONTACT_SOURCE_REGISTRY,
+    src, skipped = REG.read_contact_sources(
+        spark, [_mailchimp_fixture(tmp_path), _crm_fixture(tmp_path)]
     )
-    src = REG.with_source_order(src.drop("source_file"))
+    assert skipped == []
 
     result = C.run_pipeline(master, sources=src)
     rows = {r["email"]: r for r in result.cleaned.collect()}

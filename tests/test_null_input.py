@@ -26,6 +26,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
 from bcg_contacts_data_pipeline_spark.plans.queries import QUERIES
 from bcg_contacts_data_pipeline_spark.session import TABLES
 
@@ -80,9 +81,11 @@ def test_batch_queries_survive_null_input(spark, null_sf_dir):
         if name.startswith("stream_"):
             continue
         try:
-            fn(spark, null_sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            # the scope releases what building and sinking materialized
+            with PinScope():
+                fn(spark, null_sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
         except Exception as e:  # noqa: BLE001
             failures[name] = f"{type(e).__name__}: {str(e).splitlines()[0][:160]}"
     assert not failures, failures
@@ -94,9 +97,11 @@ def test_streaming_queries_survive_null_input(spark, null_sf_dir):
         if not name.startswith("stream_"):
             continue
         try:
-            fn(spark, null_sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            # the scope releases what building and sinking materialized
+            with PinScope():
+                fn(spark, null_sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
         except Exception as e:  # noqa: BLE001
             failures[name] = f"{type(e).__name__}: {str(e).splitlines()[0][:160]}"
     assert not failures, failures
