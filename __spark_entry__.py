@@ -82,22 +82,21 @@ def _certification_rounds(root: str | None = None) -> dict[str, int]:
 #: Names here sort as if never certified. Curate per round; stale names
 #: are harmless (they just re-verify).
 _FORCE_HEAD: set[str] = {
-    # r14: substring_spans dropped its consumer's global orderBy, staged
-    # the df-cap two-stage, and grew the occ_cap dial; trim and
-    # gopher_repetition now exclude NULL-text rows (oracle-spine
-    # alignment, ADVICE r13) — re-verify all three r13 queries in their
-    # new form.
-    "substring_dedup",
-    "substring_dedup_trim",
-    "gopher_repetition",
-    # r14: _non_null_vectors now also excludes NaN-carrying vectors
-    # (ADVICE r13) — no fixture carries one, so answers are unchanged,
-    # but the eligibility filter in front of every numpy kernel changed:
-    # re-verify one representative per kernel family, same as the r13
-    # zero-norm precedent.
-    "semantic_dedup",
+    # The embedding operators moved onto one block grid, one sign-LSH
+    # bucketer, one top-k emitter and shared score/distance kernels:
+    # embedding_topk now scores the upper-triangle grid and emits both
+    # directions per cell. Answers are unchanged, but every query that
+    # runs one of those operators is re-verified in its new form.
     "embedding_topk",
+    "embedding_ann_lsh",
+    "embedding_ann_lsh_capped",
+    "embedding_ann_ivf",
+    "embedding_ann_ivf_capped",
     "embedding_neardup",
+    "embedding_components",
+    "embedding_components_ann",
+    "triangle_count",
+    "semantic_dedup",
 }
 
 

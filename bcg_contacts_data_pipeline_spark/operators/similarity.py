@@ -13,14 +13,19 @@ Every operator here is built for the 100 TB shape of the problem:
 - ``simhash64`` / ``simhash_pairs``: 64-bit SimHash via explode + 64
   bit-count aggregates; 8-bit banding (complete for hamming <= 7 by
   pigeonhole) for candidate pairs, exact hamming verify after.
-- ``embedding_topk``: brute-force cosine top-k (the exact baseline) —
-  all-pairs mode scores hash-block grid cells via cogrouped
-  applyInPandas (no driver collect); bounded query batches broadcast.
-- ``embedding_ann_lsh``: random-hyperplane LSH bucketing as one scale
-  path: cosine is only evaluated within matching sign-buckets.
+- ``embedding_topk``: brute-force cosine top-k (the exact baseline) and
+  ``embedding_pairs`` / ``embedding_neardup`` (thresholded cosine pairs,
+  greedy lowest-id dedup) score the upper triangle of ONE hash-block
+  grid (``_block_cells``: cogrouped applyInPandas, no driver collect).
+- ``embedding_ann_lsh`` / ``embedding_pairs_lsh``: random-hyperplane
+  LSH as one scale path: ONE sign bucketer (``_sign_buckets``), cosine
+  evaluated only within a bucket.
 - ``embedding_ann_ivf``: IVF coarse quantizer as the other scale path:
-  distributed Lloyd refinement, cell-join candidate generation.
-- ``embedding_neardup``: thresholded cosine dedup (greedy lowest-id).
+  one distributed Lloyd refinement, cell-cogroup candidate generation.
+- ``semantic_dedup``: SemDeDup-style cluster-then-prune dedup.
+
+Every top-k site emits through ``_emit_topk`` (local top-k per query)
+and, where several candidate sets meet, ranks once via ``_global_topk``.
 
 Text/signature operators are pure Catalyst expressions (tokenize,
 xxhash64, bit-votes, hamming — whole-stage-codegen'd, no Python). The
@@ -32,6 +37,7 @@ bit-identical to the SQL oracle while vectorizing across rows.
 
 from __future__ import annotations
 
+import math
 import random
 
 import numpy as np
@@ -709,6 +715,38 @@ def _seq_scores(left: np.ndarray, right: np.ndarray) -> np.ndarray:
     return acc / np.outer(_seq_norms(left), _seq_norms(right))
 
 
+def _blas_scores(left: np.ndarray, right: np.ndarray) -> np.ndarray:
+    """Cosine score matrix (len(left) x len(right)) from one BLAS matmul:
+    the algebra of ``_seq_scores`` at a fraction of its cost, equal
+    within float ulps but not bit-identical to the SQL fold."""
+    return (left @ right.T) / np.outer(
+        np.sqrt((left * left).sum(axis=1)), np.sqrt((right * right).sum(axis=1))
+    )
+
+
+def _sq_l2(vecs: np.ndarray, cent: np.ndarray) -> np.ndarray:
+    """Squared L2 distance of every vector to every centroid
+    (len(vecs) x len(cent)): ``|v|^2 - 2 v.c + |c|^2``."""
+    return (
+        (vecs * vecs).sum(axis=1)[:, None]
+        - 2.0 * vecs @ cent.T
+        + (cent * cent).sum(axis=1)[None, :]
+    )
+
+
+_PANDAS_TYPES = {"long": "int64", "int": "int32", "double": "float64"}
+
+_TOPK_SCHEMA = "query_id long, neighbor_id long, rank int, score double"
+
+
+def _no_rows(schema: str) -> pd.DataFrame:
+    """An empty pandas frame typed for a ``"name type, ..."`` UDF schema."""
+    types = dict(field.split() for field in schema.split(","))
+    return pd.DataFrame({c: [] for c in types}).astype(
+        {c: _PANDAS_TYPES[t] for c, t in types.items()}
+    )
+
+
 def _local_topk(
     score_col: np.ndarray, cids: np.ndarray, self_id, k: int
 ) -> np.ndarray:
@@ -721,116 +759,35 @@ def _local_topk(
     return idx[order]
 
 
-def embedding_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 5,
-    queries: DataFrame | None = None,
-    corpus_blocks: int = 8,
-) -> DataFrame:
-    """Exact brute-force cosine top-k neighbors. Two physical paths, both
-    exact and both emitting only LOCAL top-k per query before the final
-    rank (exact: the global top-k is a subset of the union of local
-    top-ks, so the rank shuffle carries O(blocks * k) rows per query):
+def _emit_topk(
+    score: np.ndarray, cand_ids: np.ndarray, query_ids: np.ndarray, k: int
+) -> pd.DataFrame:
+    """``_TOPK_SCHEMA`` rows: the top-k candidates of every query, where
+    column j of ``score`` (candidates x queries) scores query
+    ``query_ids[j]``. ``rank`` counts within this candidate set; an
+    operator that unions several sets re-ranks with ``_global_topk``."""
+    picks = [
+        _local_topk(score[:, j], cand_ids, q, k) for j, q in enumerate(query_ids)
+    ]
+    sizes = np.array([len(p) for p in picks], dtype=np.int64)
+    rows = np.concatenate([np.empty(0, np.int64), *picks])
+    cols = np.repeat(np.arange(len(picks)), sizes)
+    first = np.repeat(np.cumsum(sizes) - sizes, sizes)
+    return pd.DataFrame(
+        {
+            "query_id": query_ids[cols],
+            "neighbor_id": cand_ids[rows],
+            "rank": (np.arange(len(rows)) - first + 1).astype("int32"),
+            "score": score[rows, cols],
+        }
+    )
 
-    - ``queries`` given (a BOUNDED frame — a user query batch, never the
-      corpus): the query side is collected and broadcast; the corpus
-      streams once through a vectorized ``mapInPandas`` scorer. The
-      caller asserts boundedness by passing the frame.
-    - ``queries=None`` (all-pairs over the corpus): NO driver collect.
-      The corpus is hash-split into ``corpus_blocks`` blocks on the id;
-      every (query-block, corpus-block) grid cell is scored as one numpy
-      matrix op inside a cogrouped ``applyInPandas``. Group memory is
-      O((N/B)*D) per side, the replication shuffle is 2*N*B rows, and
-      the driver never materializes a vector — pick B so a block fits an
-      executor and the same plan runs at 100 TB. (All-pairs exact top-k
-      is inherently O(N^2) compute on any engine; the blocking bounds
-      *memory*, and the ANN operators below are the sub-quadratic path.)
 
-    Scoring accumulates dimension-sequentially (see ``_seq_scores``) so
-    scores are bit-identical to the SQL oracle while vectorizing across
-    rows (~100x over per-pair interpreted HOF evaluation).
-    """
+def _global_topk(local: DataFrame, k: int) -> DataFrame:
+    """The final rank over a union of local top-ks: exact, because a
+    query's global top-k is a subset of that union, so the rank shuffle
+    carries O(candidate sets * k) rows per query."""
     from pyspark.sql import Window
-
-    out_schema = "query_id long, neighbor_id long, score double"
-
-    df = _non_null_vectors(df, vec_col)
-    if queries is not None:
-        spark = df.sparkSession
-        qrows = _non_null_vectors(queries, vec_col).select(
-            id_col, vec_col
-        ).collect()
-        bc = spark.sparkContext.broadcast(
-            ([r[0] for r in qrows], [list(r[1]) for r in qrows])
-        )
-
-        def batches(it):
-            qids, qmat = bc.value
-            qarr = np.asarray(qmat, dtype=np.float64)  # Q x D
-            qid_arr = np.asarray(qids)
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                carr = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                cids = pdf[id_col].to_numpy()
-                score = _seq_scores(carr, qarr)  # C x Q
-                out_q, out_n, out_s = [], [], []
-                for j in range(len(qarr)):
-                    pick = _local_topk(score[:, j], cids, qid_arr[j], k)
-                    out_q.extend([qid_arr[j]] * len(pick))
-                    out_n.extend(cids[pick])
-                    out_s.extend(score[pick, j])
-                yield pd.DataFrame(
-                    {"query_id": out_q, "neighbor_id": out_n, "score": out_s}
-                )
-
-        local = df.repartition(32).mapInPandas(batches, out_schema)
-    else:
-        B = corpus_blocks
-        base = df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
-        own = F.pmod(F.xxhash64(F.col("__id")), F.lit(B)).cast("int")
-        grid = F.explode(F.array(*[F.lit(i) for i in range(B)]))
-        qside = base.select("__id", "__v", own.alias("qb"), grid.alias("cb"))
-        # Fresh aliases on the corpus side: same self-cogroup
-        # attribute-id-sharing hazard embedding_pairs documents — shared
-        # ids between the two children can cost the right pdf its
-        # non-key columns depending on what consumes the output.
-        cside = base.select(
-            F.col("__id").alias("__id2"),
-            F.col("__v").alias("__v2"),
-            own.alias("cb"),
-            grid.alias("qb"),
-        )
-
-        def cell_topk(key, qpdf, cpdf):
-            if not len(qpdf) or not len(cpdf):
-                return pd.DataFrame(
-                    {"query_id": [], "neighbor_id": [], "score": []}
-                ).astype(
-                    {"query_id": "int64", "neighbor_id": "int64", "score": "float64"}
-                )
-            qarr = np.stack(qpdf["__v"].to_numpy()).astype(np.float64)
-            carr = np.stack(cpdf["__v2"].to_numpy()).astype(np.float64)
-            qids = qpdf["__id"].to_numpy()
-            cids = cpdf["__id2"].to_numpy()
-            score = _seq_scores(carr, qarr)  # C x Q
-            out_q, out_n, out_s = [], [], []
-            for j in range(len(qarr)):
-                pick = _local_topk(score[:, j], cids, qids[j], k)
-                out_q.extend([qids[j]] * len(pick))
-                out_n.extend(cids[pick])
-                out_s.extend(score[pick, j])
-            return pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "score": out_s}
-            )
-
-        local = (
-            qside.groupBy("qb", "cb")
-            .cogroup(cside.groupBy("qb", "cb"))
-            .applyInPandas(cell_topk, out_schema)
-        )
 
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("neighbor_id").asc()
@@ -842,6 +799,109 @@ def embedding_topk(
     )
 
 
+def _block_cells(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    corpus_blocks: int,
+    emit,
+    schema: str,
+) -> DataFrame:
+    """All-pairs cosine over the upper triangle of a hash-block grid.
+
+    The eligible rows hash into ``corpus_blocks`` blocks on the id, and
+    every cell (bi, bj) with bi <= bj is one cogrouped ``applyInPandas``
+    group: its lo side holds block bi, its hi side block bj. The cell
+    scores lo x hi as one ``_seq_scores`` matrix (bit-identical to the
+    SQL fold, and to the transposed orientation) and
+    ``emit(diagonal, lo_ids, hi_ids, score)`` turns it into ``schema``
+    rows; on a diagonal cell (bi == bj) both sides hold the same rows.
+
+    Scale shape: NO driver collect. Group memory is O((N/B)*D) per side
+    and the replication shuffle carries N*(B+1) rows: a row of block b
+    visits B - b cells as lo and b + 1 as hi. Every unordered pair is
+    scored in exactly one cell, twice only on the diagonal, so the grid
+    does (B+1)/2B of the full B x B grid's scoring. All-pairs work is
+    inherently O(N^2/2) on any engine; the blocking bounds *memory*, and
+    the LSH/IVF operators are the sub-quadratic path."""
+    B = corpus_blocks
+    base = _non_null_vectors(df, vec_col).select(
+        F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
+    )
+    own = F.pmod(F.xxhash64(F.col("__id")), F.lit(B)).cast("int")
+    tagged = base.select("__id", "__v", own.alias("__b"))
+    lo = tagged.select(
+        "__id",
+        "__v",
+        F.col("__b").alias("bi"),
+        F.explode(F.sequence(F.col("__b"), F.lit(B - 1))).alias("bj"),
+    )
+    # The hi side gets freshly-aliased column names: both sides descend
+    # from the same `tagged` frame, and a self-cogroup whose children share
+    # attribute ids can lose the hi side's non-key columns to analyzer
+    # deduplication depending on what sits downstream (observed on 4.1:
+    # bare consumption of the cogroup output handed the UDF a right pdf
+    # with only the grouping keys). Distinct names -> distinct attributes,
+    # no conflict to deduplicate, plan-shape independent.
+    hi = tagged.select(
+        F.col("__id").alias("__id2"),
+        F.col("__v").alias("__v2"),
+        F.explode(F.sequence(F.lit(0), F.col("__b"))).alias("bi"),
+        F.col("__b").alias("bj"),
+    )
+
+    def cell(key, lpdf, hpdf):
+        if not len(lpdf) or not len(hpdf):
+            return _no_rows(schema)
+        larr = np.stack(lpdf["__v"].to_numpy()).astype(np.float64)
+        harr = np.stack(hpdf["__v2"].to_numpy()).astype(np.float64)
+        return emit(
+            key[0] == key[1],
+            lpdf["__id"].to_numpy(),
+            hpdf["__id2"].to_numpy(),
+            _seq_scores(larr, harr),
+        )
+
+    return (
+        lo.groupBy("bi", "bj")
+        .cogroup(hi.groupBy("bi", "bj"))
+        .applyInPandas(cell, schema)
+    )
+
+
+def embedding_topk(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int = 5,
+    corpus_blocks: int = 8,
+) -> DataFrame:
+    """Exact brute-force cosine top-k neighbors of every corpus row.
+
+    Scored on ``_block_cells``' upper-triangle grid (no driver collect):
+    a cell emits the local top-k of its lo rows over its hi rows and,
+    off the diagonal, of its hi rows over its lo rows — one score
+    matrix serves both directions because per-pair scores are
+    bit-symmetric. A query thus sees every block exactly once, and one
+    window (``_global_topk``) ranks the union of its local top-ks.
+    Scores accumulate dimension-sequentially (``_seq_scores``), so they
+    are bit-identical to the SQL oracle while vectorizing across rows.
+    """
+
+    def cell_topk(diagonal, lo_ids, hi_ids, score):
+        lo_side = _emit_topk(score.T, hi_ids, lo_ids, k)
+        if diagonal:
+            return lo_side
+        return pd.concat(
+            [lo_side, _emit_topk(score, lo_ids, hi_ids, k)], ignore_index=True
+        )
+
+    return _global_topk(
+        _block_cells(df, id_col, vec_col, corpus_blocks, cell_topk, _TOPK_SCHEMA),
+        k,
+    )
+
+
 def _hyperplanes(dim: int, num_planes: int, seed: int) -> list[list[float]]:
     rng = random.Random(seed)
     return [
@@ -849,18 +909,51 @@ def _hyperplanes(dim: int, num_planes: int, seed: int) -> list[list[float]]:
     ]
 
 
-def lsh_num_planes(n_rows: int, target_bucket_rows: int = 4096) -> int:
-    """Plane count sized from the corpus: ``ceil(log2(n / target))``
+#: Expected sign-LSH bucket occupancy that ``lsh_num_planes`` sizes for.
+LSH_BUCKET_ROWS = 4096
+
+
+def lsh_num_planes(n_rows: int) -> int:
+    """Plane count sized from the corpus: ``ceil(log2(n / LSH_BUCKET_ROWS))``
     clamped to [1, 30], so expected bucket occupancy stays at or below
-    ``target_bucket_rows`` under the uniform-sign approximation. The
+    ``LSH_BUCKET_ROWS`` under the uniform-sign approximation. The
     recall/cost dial in one line: each extra plane halves the expected
     bucket (≈ halves candidate cost) and lowers recall for non-identical
     neighbors; identical vectors always share every sign bit, so
-    exact-duplicate recall is 1.0 at any plane count. At 10^9 rows and
-    the default target this picks 18 planes (~256k buckets)."""
-    import math
+    exact-duplicate recall is 1.0 at any plane count. At 10^9 rows this
+    picks 18 planes (~256k buckets)."""
+    return max(1, min(30, math.ceil(math.log2(max(2.0, n_rows / LSH_BUCKET_ROWS)))))
 
-    return max(1, min(30, math.ceil(math.log2(max(2.0, n_rows / target_bucket_rows)))))
+
+def _sign_buckets(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    num_planes: int | str,
+    seed: int,
+) -> DataFrame:
+    """(__id, __v, __bucket) for the eligible rows: the bucket is the
+    sign bit-vector of ``num_planes`` seeded hyperplane dot products
+    (bit i set when the i-th dot is >= 0). ``"auto"`` derives the plane
+    count from a corpus ``count()`` via ``lsh_num_planes`` — one extra
+    cheap count job, and the bucket size stays bounded as the corpus
+    grows instead of silently degrading to quadratic in-bucket cost at
+    a fixed toy plane count. The dots are the SQL fold, so the oracles
+    reproduce every bucket with the planes as SQL literals."""
+    df = _non_null_vectors(df, vec_col)
+    if num_planes == "auto":
+        num_planes = lsh_num_planes(df.count())
+    v = F.col(vec_col)
+    bucket = None
+    for i, plane in enumerate(_hyperplanes(dim, num_planes, seed)):
+        d = dot(v, F.array(*[F.lit(x) for x in plane]))
+        bit = F.when(d >= 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
+        term = F.shiftleft(bit, i)
+        bucket = term if bucket is None else bucket.bitwiseOR(term)
+    return df.select(
+        F.col(id_col).alias("__id"), v.alias("__v"), bucket.alias("__bucket")
+    )
 
 
 def embedding_ann_lsh(
@@ -871,17 +964,10 @@ def embedding_ann_lsh(
     k: int = 5,
     num_planes: int | str = "auto",
     seed: int = 42,
-    target_bucket_rows: int = 4096,
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """Approximate top-k via random-hyperplane (sign) LSH.
-
-    Bucket = the sign bit-vector of ``num_planes`` fixed hyperplane dot
-    products; cosine is evaluated only within a bucket. ``"auto"``
-    (default) derives the plane count from a corpus ``count()`` via
-    ``lsh_num_planes`` — one extra cheap count job, and the bucket size
-    stays bounded as the corpus grows instead of silently degrading to
-    quadratic in-bucket cost at a fixed toy plane count.
+    """Approximate top-k via random-hyperplane (sign) LSH: cosine is
+    evaluated only within a ``_sign_buckets`` bucket.
 
     ``max_bucket`` caps IN-BUCKET scoring cost: a bucket with more than
     ``max_bucket`` members scores every member against only the
@@ -906,69 +992,33 @@ def embedding_ann_lsh(
     Physical shape (the 100 TB path): the ONLY shuffle is the
     groupBy(bucket) exchange, whose rows carry (id, vector, bucket).
     Because a query's candidate set is exactly its own bucket, scoring
-    and per-query top-k both happen inside one ``applyInPandas`` group —
-    one numpy matrix product per bucket, dimension-sequential
-    accumulation (``_seq_scores``) so scores stay bit-identical to the
-    SQL fold oracle. No candidate pair ever carries two vectors through
-    a shuffle (the r2 version joined bucket-vs-bucket and shipped
-    ~N^2/buckets pair rows with both 64-float vectors attached — the
-    exact shape the IVF cogroup comment measured at ~6 s). Hot buckets
+    and per-query top-k (``_emit_topk``, whose in-bucket rank is final)
+    both happen inside one ``applyInPandas`` group — one numpy matrix
+    product per bucket, dimension-sequential accumulation
+    (``_seq_scores``) so scores stay bit-identical to the SQL fold
+    oracle. No candidate pair ever carries two vectors through a
+    shuffle (a bucket-vs-bucket join would ship ~N^2/buckets pair rows
+    with both 64-float vectors attached — the shape the IVF cogroup
+    comment measured at ~6 s). Hot buckets
     are the standard sign-LSH skew risk: ``lsh_num_planes`` bounds the
     EXPECTED occupancy; a pathologically aligned corpus still
     concentrates, which AQE cannot split (single group key) — the dial
     is more planes, fewer per-bucket rows.
     """
-    df = _non_null_vectors(df, vec_col)
-    if num_planes == "auto":
-        num_planes = lsh_num_planes(df.count(), target_bucket_rows)
-    planes = _hyperplanes(dim, num_planes, seed)
-    v = F.col(vec_col)
-    bucket = None
-    for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(x) for x in plane])
-        d = dot(v, lit_plane)
-        bit = F.when(d >= 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, i)
-        bucket = term if bucket is None else bucket.bitwiseOR(term)
-    bucketed = df.select(
-        F.col(id_col).alias("__id"), v.alias("__v"), bucket.alias("__bucket")
-    )
-
-    out_schema = "query_id long, neighbor_id long, rank int, score double"
-    empty = pd.DataFrame(
-        {"query_id": [], "neighbor_id": [], "rank": [], "score": []}
-    ).astype(
-        {
-            "query_id": "int64",
-            "neighbor_id": "int64",
-            "rank": "int32",
-            "score": "float64",
-        }
-    )
 
     def bucket_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return empty
         arr = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
         ids = pdf["__id"].to_numpy()
+        cand = slice(None)
         if max_bucket is not None and len(ids) > max_bucket:
-            rep = np.argsort(ids)[:max_bucket]
-            cand_arr, cand_ids = arr[rep], ids[rep]
-        else:
-            cand_arr, cand_ids = arr, ids
-        score = _seq_scores(cand_arr, arr)  # candidates x members
-        out_q, out_n, out_r, out_s = [], [], [], []
-        for j in range(len(ids)):
-            pick = _local_topk(score[:, j], cand_ids, ids[j], k)
-            out_q.extend([ids[j]] * len(pick))
-            out_n.extend(cand_ids[pick])
-            out_r.extend(range(1, len(pick) + 1))
-            out_s.extend(score[pick, j])
-        return pd.DataFrame(
-            {"query_id": out_q, "neighbor_id": out_n, "rank": out_r, "score": out_s}
-        )
+            cand = np.argsort(ids)[:max_bucket]
+        return _emit_topk(_seq_scores(arr[cand], arr), ids[cand], ids, k)
 
-    return bucketed.groupBy("__bucket").applyInPandas(bucket_topk, out_schema)
+    return (
+        _sign_buckets(df, id_col, vec_col, dim, num_planes, seed)
+        .groupBy("__bucket")
+        .applyInPandas(bucket_topk, _TOPK_SCHEMA)
+    )
 
 
 def embedding_pairs(
@@ -980,87 +1030,38 @@ def embedding_pairs(
 ) -> DataFrame:
     """All id-ordered pairs with cosine similarity >= ``threshold``.
 
-    Returns ``(id_a, id_b)`` with ``id_a < id_b``. Diagonal block cells
-    score each unordered pair twice, so the output may contain duplicate
-    rows — downstream consumers either aggregate them away for free
-    (``embedding_neardup``'s min-agg) or tolerate duplicate edges
-    (``connected_components``' min-label propagation); a ``.distinct()``
-    here would be a pure extra shuffle on the hit set.
+    Scored on ``_block_cells``' upper-triangle grid (dimension-sequential
+    accumulation, so the threshold compare agrees bitwise with the SQL
+    oracle); only above-threshold hits leave the Python worker — the
+    shuffle after scoring is the hit set, not the pair product. At real
+    corpus sizes the sub-quadratic route is a blocking stage
+    (``embedding_pairs_lsh`` / ``minhash_lsh_pairs``) followed by exact
+    verification of the candidate set.
 
-    Scale shape: NO driver collect. The corpus is hash-split into
-    ``corpus_blocks`` blocks on the id and only the upper-triangle block
-    pairs (bi <= bj) are scored — each as one numpy matrix op inside a
-    cogrouped ``applyInPandas`` (dimension-sequential accumulation, see
-    ``_seq_scores`` — the threshold compare agrees bitwise with the SQL
-    oracle). Group memory is O((N/B)*D) per side, the replication shuffle
-    is ~N*B rows per side, and only above-threshold (a < b) hits leave
-    the Python worker — the shuffle after scoring is the hit set, not the
-    pair product. Exact all-pairs is inherently O(N^2/2) *compute*; the
-    blocking bounds memory, and at real corpus sizes the sub-quadratic
-    route is a blocking stage (``embedding_ann_lsh`` / ``minhash_lsh_pairs``)
-    followed by exact verification of the candidate set.
+    Diagonal cells score each unordered pair twice, so the output may
+    contain duplicate rows — downstream consumers either aggregate them
+    away for free (``embedding_neardup``'s min-agg) or tolerate duplicate
+    edges (``connected_components``' min-label propagation); a
+    ``.distinct()`` here would be a pure extra shuffle on the hit set.
 
     Output: (id_a, id_b) with id_a < id_b, possibly with duplicates.
     """
-    B = corpus_blocks
-    base = _non_null_vectors(df, vec_col).select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
-    )
-    own = F.pmod(F.xxhash64(F.col("__id")), F.lit(B)).cast("int")
-    tagged = base.select("__id", "__v", own.alias("__b"))
-    # lower side owns block bi, visits cells (bi, bj) for bj >= bi;
-    # upper side owns block bj, visits cells (bi, bj) for bi <= bj.
-    lo = tagged.select(
-        "__id",
-        "__v",
-        F.col("__b").alias("bi"),
-        F.explode(F.sequence(F.col("__b"), F.lit(B - 1))).alias("bj"),
-    )
-    # The right side gets freshly-aliased column names: both sides descend
-    # from the same `tagged` frame, and a self-cogroup whose children share
-    # attribute ids can lose the right side's non-key columns to analyzer
-    # deduplication depending on what sits downstream (observed on 4.1:
-    # bare consumption of the cogroup output handed the UDF a right pdf
-    # with only the grouping keys). Distinct names -> distinct attributes,
-    # no conflict to deduplicate, plan-shape independent.
-    hi = tagged.select(
-        F.col("__id").alias("__id2"),
-        F.col("__v").alias("__v2"),
-        F.explode(F.sequence(F.lit(0), F.col("__b"))).alias("bi"),
-        F.col("__b").alias("bj"),
-    )
 
-    def cell_hits(key, lpdf, rpdf):
-        empty = pd.DataFrame({"__bid": [], "__aid": []}).astype(
-            {"__bid": "int64", "__aid": "int64"}
-        )
-        if not len(lpdf) or not len(rpdf):
-            return empty
-        xarr = np.stack(lpdf["__v"].to_numpy()).astype(np.float64)
-        yarr = np.stack(rpdf["__v2"].to_numpy()).astype(np.float64)
-        xids = lpdf["__id"].to_numpy()
-        yids = rpdf["__id2"].to_numpy()
-        score = _seq_scores(xarr, yarr)  # X x Y
+    def cell_hits(diagonal, lo_ids, hi_ids, score):
         hit = score >= threshold
         # orient every hit as (smaller id = canonical a, larger id = dup b);
-        # diagonal cells (bi == bj) see each unordered pair twice — the
-        # min-agg downstream dedups, and self-pairs fail both strict <>.
-        lt_i, lt_j = np.nonzero(hit & (xids[:, None] < yids[None, :]))
-        gt_i, gt_j = np.nonzero(hit & (xids[:, None] > yids[None, :]))
+        # self-pairs fail both strict compares.
+        lt_i, lt_j = np.nonzero(hit & (lo_ids[:, None] < hi_ids[None, :]))
+        gt_i, gt_j = np.nonzero(hit & (lo_ids[:, None] > hi_ids[None, :]))
         return pd.DataFrame(
             {
-                "__bid": np.concatenate([yids[lt_j], xids[gt_i]]),
-                "__aid": np.concatenate([xids[lt_i], yids[gt_j]]),
+                "id_a": np.concatenate([lo_ids[lt_i], hi_ids[gt_j]]),
+                "id_b": np.concatenate([hi_ids[lt_j], lo_ids[gt_i]]),
             }
         )
 
-    pairs = (
-        lo.groupBy("bi", "bj")
-        .cogroup(hi.groupBy("bi", "bj"))
-        .applyInPandas(cell_hits, "__bid long, __aid long")
-    )
-    return pairs.select(
-        F.col("__aid").alias("id_a"), F.col("__bid").alias("id_b")
+    return _block_cells(
+        df, id_col, vec_col, corpus_blocks, cell_hits, "id_a long, id_b long"
     )
 
 
@@ -1103,28 +1104,28 @@ def embedding_ann_ivf(
     n_centroids: int = 16,
     n_probe: int = 4,
     k: int = 5,
-    lloyd_iters: int = 1,
     max_cell: int | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate nearest neighbors — the classic
     coarse-quantizer index, distributed:
 
     1. Train a small centroid codebook: deterministic seed (the
-       ``n_centroids`` lowest-id vectors) + ``lloyd_iters`` k-means
-       refinements. The refinement is fully distributed — assignment is a
+       ``n_centroids`` lowest-id vectors) + one k-means (Lloyd)
+       refinement. The refinement is fully distributed — assignment is a
        vectorized mapInPandas over the corpus, the new codebook is an
        elementwise mean via posexplode + groupBy(cell, dim) — only the
        (n_centroids x dim) codebook ever reaches the driver.
     2. Assign every vector to its nearest centroid cell (one corpus pass).
     3. Each query probes its ``n_probe`` nearest cells; candidates are the
-       cell members (an equi-join on cell id — the inverted file), scored
-       exactly and ranked top-k.
+       cell members (a cogroup on cell id — the inverted file), scored
+       exactly and ranked top-k (``_emit_topk`` per cell, ``_global_topk``
+       over the probed cells).
 
     Recall/cost dial: n_probe/n_centroids is the fraction of the corpus
-    scored per query (default 4/16 = 25%). The cell join partitions by
-    cell id, so hot cells are AQE-splittable; at 100 TB the codebook stays
-    a broadcast (KB-scale) and no stage ever holds the full pair product.
-    Rows-only check (seeded iterative training is not SQL-expressible).
+    scored per query (default 4/16 = 25%). The cell cogroup partitions by
+    cell id; at 100 TB the codebook stays a broadcast (KB-scale) and no
+    stage ever holds the full pair product. Rows-only check (seeded
+    iterative training is not SQL-expressible).
 
     ``max_cell`` caps the MEMBER side of per-cell scoring (the same
     clone-cluster degeneracy ``embedding_ann_lsh``'s ``max_bucket``
@@ -1136,11 +1137,11 @@ def embedding_ann_ivf(
     rep-approximate for heterogeneous members, bit-identical to
     uncapped whenever the cap does not trigger.
     """
-    from pyspark.sql import Window
-
     spark = df.sparkSession
+    df = _non_null_vectors(df, vec_col)
+    vecs = df.select(id_col, vec_col)
 
-    def _assign_factory(cent_arr):
+    def assigned(cent: np.ndarray) -> DataFrame:
         # vec passes through the UDF output so no downstream join is needed
         # to recover it (each join here would be a full shuffle).
         def assign(it):
@@ -1148,45 +1149,31 @@ def embedding_ann_ivf(
                 if not len(pdf):
                     continue
                 varr = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                # squared L2 to each centroid: |v|^2 - 2 v.c + |c|^2
-                d2 = (
-                    (varr * varr).sum(axis=1)[:, None]
-                    - 2.0 * varr @ cent_arr.T
-                    + (cent_arr * cent_arr).sum(axis=1)[None, :]
-                )
                 yield pd.DataFrame(
                     {
                         id_col: pdf[id_col].to_numpy(),
-                        "cell": d2.argmin(axis=1).astype("int32"),
+                        "cell": _sq_l2(varr, cent).argmin(axis=1).astype("int32"),
                         vec_col: pdf[vec_col],
                     }
                 )
 
-        return assign
+        return vecs.mapInPandas(
+            assign, f"{id_col} long, cell int, {vec_col} array<float>"
+        )
 
-    df = _non_null_vectors(df, vec_col)
     init = df.orderBy(id_col).limit(n_centroids).select(vec_col).collect()
     cent = np.asarray([list(r[0]) for r in init], dtype=np.float64)
+    means = (
+        assigned(cent)
+        .select("cell", F.posexplode(vec_col).alias("dim", "val"))
+        .groupBy("cell", "dim")
+        .agg(F.avg("val").alias("mu"))
+        .collect()
+    )
+    for r in means:
+        cent[r["cell"], r["dim"]] = r["mu"]
 
-    assign_schema = f"{id_col} long, cell int, {vec_col} array<float>"
-    for _ in range(lloyd_iters):
-        assigned = df.select(id_col, vec_col).mapInPandas(
-            _assign_factory(cent), assign_schema
-        )
-        means = (
-            assigned.select("cell", F.posexplode(vec_col).alias("dim", "val"))
-            .groupBy("cell", "dim")
-            .agg(F.avg("val").alias("mu"))
-            .collect()
-        )
-        new_cent = cent.copy()
-        for r in means:
-            new_cent[r["cell"], r["dim"]] = r["mu"]
-        cent = new_cent
-
-    members = df.select(id_col, vec_col).mapInPandas(
-        _assign_factory(cent), assign_schema
-    ).select(
+    members = assigned(cent).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__nv"),
         "cell",
@@ -1200,24 +1187,18 @@ def embedding_ann_ivf(
             if not len(pdf):
                 continue
             varr = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            d2 = (
-                (varr * varr).sum(axis=1)[:, None]
-                - 2.0 * varr @ c_arr.T
-                + (c_arr * c_arr).sum(axis=1)[None, :]
-            )
-            cells = np.argsort(d2, axis=1)[:, :n_probe].astype("int32")
-            n = len(pdf)
+            cells = np.argsort(_sq_l2(varr, c_arr), axis=1)[:, :n_probe]
             yield pd.DataFrame(
                 {
                     "query_id": np.repeat(pdf[id_col].to_numpy(), n_probe),
                     "__qv": [
                         v for v in pdf[vec_col] for _ in range(n_probe)
                     ],
-                    "cell": cells.ravel(),
+                    "cell": cells.astype("int32").ravel(),
                 }
             )
 
-    probes = df.select(id_col, vec_col).mapInPandas(
+    probes = vecs.mapInPandas(
         probe, "query_id long, __qv array<float>, cell int"
     )
 
@@ -1229,46 +1210,26 @@ def embedding_ann_ivf(
     # product per cell, and only the per-cell top-k rows come back.
     def cell_score(key, qpdf, mpdf):
         if not len(qpdf) or not len(mpdf):
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "score": []}
-            ).astype({"query_id": "int64", "neighbor_id": "int64", "score": "float64"})
+            return _no_rows(_TOPK_SCHEMA)
         if max_cell is not None and len(mpdf) > max_cell:
             rep = np.argsort(mpdf["neighbor_id"].to_numpy())[:max_cell]
             mpdf = mpdf.iloc[rep]
         qa = np.stack(qpdf["__qv"].to_numpy()).astype(np.float64)
         ma = np.stack(mpdf["__nv"].to_numpy()).astype(np.float64)
-        qids = qpdf["query_id"].to_numpy()
-        mids = mpdf["neighbor_id"].to_numpy()
-        scores = (qa @ ma.T) / np.outer(
-            np.sqrt((qa * qa).sum(axis=1)), np.sqrt((ma * ma).sum(axis=1))
-        )
-        out_q, out_n, out_s = [], [], []
-        for i in range(len(qa)):
-            row = scores[i]
-            mask = mids != qids[i]
-            idx = np.nonzero(mask)[0]
-            order = np.lexsort((mids[idx], -row[idx]))[:k]
-            pick = idx[order]
-            out_q.extend([qids[i]] * len(pick))
-            out_n.extend(mids[pick])
-            out_s.extend(row[pick])
-        return pd.DataFrame(
-            {"query_id": out_q, "neighbor_id": out_n, "score": out_s}
+        return _emit_topk(
+            _blas_scores(qa, ma).T,
+            mpdf["neighbor_id"].to_numpy(),
+            qpdf["query_id"].to_numpy(),
+            k,
         )
 
-    scored = (
+    return _global_topk(
         probes.groupBy("cell")
         .cogroup(members.groupBy("cell"))
-        .applyInPandas(cell_score, "query_id long, neighbor_id long, score double")
+        .applyInPandas(cell_score, _TOPK_SCHEMA),
+        k,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+
 
 def semantic_dedup(
     df: DataFrame,
@@ -1323,20 +1284,14 @@ def semantic_dedup(
     ``exact_fold``: True (default, the certified path) scores with
     dimension-sequential accumulation (`_seq_scores`) so values stay
     bit-identical to the SQL fold the DuckDB oracle computes; False
-    swaps in the BLAS matmul kernel — same algebra, ~3-5x faster at
-    100x where per-cluster scoring is the stage (PERF.md r12), values
-    identical within float ulps (pinned by test). Production runs that
-    do not need oracle bit-parity should pass False.
+    swaps in the BLAS matmul kernel (`_blas_scores`) — same algebra,
+    ~3-5x faster at 100x where per-cluster scoring is the stage
+    (PERF.md), values identical within float ulps (pinned by test).
+    Production runs that do not need oracle bit-parity should pass
+    False.
     """
     spark = df.sparkSession
-
-    def _scores(left: np.ndarray, right: np.ndarray) -> np.ndarray:
-        if exact_fold:
-            return _seq_scores(left, right)
-        num = left @ right.T
-        nl = np.sqrt((left * left).sum(axis=1))
-        nr = np.sqrt((right * right).sum(axis=1))
-        return num / np.outer(nl, nr)
+    scores = _seq_scores if exact_fold else _blas_scores
     df = _non_null_vectors(df, vec_col)
     init = (
         df.orderBy(id_col).limit(n_clusters).select(id_col, vec_col).collect()
@@ -1351,14 +1306,13 @@ def semantic_dedup(
             if not len(pdf):
                 continue
             varr = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            sims = _scores(varr, carr)
             # argmax returns the FIRST max: centroids are in ascending
             # id order, so ties break to the lowest centroid id — the
             # same total order as the oracle's (cos DESC, cid ASC)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy(),
-                    "cluster": cids[sims.argmax(axis=1)],
+                    "cluster": cids[scores(varr, carr).argmax(axis=1)],
                     vec_col: pdf[vec_col],
                 }
             )
@@ -1382,13 +1336,12 @@ def semantic_dedup(
         col = np.arange(m)[None, :]
         for i0 in range(0, n, chunk):
             i1 = min(i0 + chunk, n)
-            scores = _scores(varr[i0:i1], varr[:m])
             # row i may see base columns j < min(i, m): strictly-lower
             # ids only, capped at the base width (the rep-cap)
             visible = col < np.minimum(np.arange(i0, i1), m)[:, None]
-            mp[i0:i1] = np.where(visible, scores, -np.inf).max(
-                axis=1, initial=-np.inf
-            )
+            mp[i0:i1] = np.where(
+                visible, scores(varr[i0:i1], varr[:m]), -np.inf
+            ).max(axis=1, initial=-np.inf)
         mp = np.where(np.isfinite(mp), mp, -1.0)
         return pd.DataFrame(
             {
@@ -1413,60 +1366,40 @@ def embedding_pairs_lsh(
     threshold: float,
     num_planes: int | str = "auto",
     seed: int = 42,
-    target_bucket_rows: int = 4096,
 ) -> DataFrame:
     """Cosine-threshold pairs restricted to same-LSH-bucket candidates —
     the sub-quadratic twin of ``embedding_pairs``.
 
-    Bucket = the sign bit-vector of ``num_planes`` seeded hyperplane dot
-    products (identical construction to ``embedding_ann_lsh``, so the
-    whole pipeline — signs, candidate set, exact in-bucket cosine
-    verify — is SQL-mirrorable for the oracle). Only pairs sharing the
-    full sign vector are scored: compute drops from O(N²) to
-    sum-of-bucket² while exact duplicates (identical vectors share
-    every sign bit) keep recall 1.0; near-duplicates below cosine 1
-    trade recall per plane, the standard sign-LSH dial.
+    Buckets come from ``_sign_buckets``, the bucketer of
+    ``embedding_ann_lsh`` too, so the whole pipeline — signs, candidate
+    set, exact in-bucket cosine verify — is SQL-mirrorable for the
+    oracle. Only pairs sharing the full sign vector are scored: compute
+    drops from O(N²) to sum-of-bucket² while exact duplicates (identical
+    vectors share every sign bit) keep recall 1.0; near-duplicates below
+    cosine 1 trade recall per plane, the standard sign-LSH dial.
 
     Physical shape: ONE shuffle (groupBy bucket), one numpy matrix per
     bucket inside ``applyInPandas``, only above-threshold (a < b) hits
     leave Python. Single-frame grouping — no self-cogroup, so the
-    attribute-dedup hazard ``embedding_pairs`` documents does not
-    apply. Per-bucket score memory is O(rows²); ``lsh_num_planes``
-    bounds EXPECTED occupancy at ``target_bucket_rows`` (128 MB of
-    doubles at the 4096 default — size it down for wide corpora).
+    attribute-dedup hazard ``_block_cells`` documents does not apply.
+    Per-bucket score memory is O(rows²); ``lsh_num_planes`` bounds
+    EXPECTED occupancy at ``LSH_BUCKET_ROWS`` (128 MB of doubles — pass
+    more planes for wide corpora).
 
     Output: (id_a, id_b) with id_a < id_b, no duplicates.
     """
-    df = _non_null_vectors(df, vec_col)
-    if num_planes == "auto":
-        num_planes = lsh_num_planes(df.count(), target_bucket_rows)
-    planes = _hyperplanes(dim, num_planes, seed)
-    v = F.col(vec_col)
-    bucket = None
-    for i, plane in enumerate(planes):
-        d = dot(v, F.array(*[F.lit(x) for x in plane]))
-        bit = F.when(d >= 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        term = F.shiftleft(bit, i)
-        bucket = term if bucket is None else bucket.bitwiseOR(term)
-    bucketed = df.select(
-        F.col(id_col).alias("__id"), v.alias("__v"), bucket.alias("__b")
-    )
 
-    def bucket_hits(key, pdf):
-        if len(pdf) < 2:
-            return pd.DataFrame({"id_a": [], "id_b": []}).astype(
-                {"id_a": "int64", "id_b": "int64"}
-            )
+    def bucket_hits(pdf: pd.DataFrame) -> pd.DataFrame:
         arr = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
         ids = pdf["__id"].to_numpy()
         score = _seq_scores(arr, arr)
         i, j = np.nonzero((score >= threshold) & (ids[:, None] < ids[None, :]))
         return pd.DataFrame({"id_a": ids[i], "id_b": ids[j]})
 
-    return bucketed.groupBy("__b").applyInPandas(
-        bucket_hits, "id_a long, id_b long"
+    return (
+        _sign_buckets(df, id_col, vec_col, dim, num_planes, seed)
+        .groupBy("__bucket")
+        .applyInPandas(bucket_hits, "id_a long, id_b long")
     )
 
 

@@ -368,25 +368,29 @@ def q_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_frame(pairs, truth)
 
 
-def _ann_lsh_oracle(dim: int = 64, num_planes: int = 6, k: int = 5, seed: int = 42) -> str:
-    """Full DuckDB twin of embedding_ann_lsh: the seeded hyperplanes are
-    deterministic Python floats, embedded as SQL literals (repr round-trips
-    exactly), so bucket signs and scores match bit-for-bit."""
+def _sign_bucket_sql(dim: int, num_planes: int, seed: int) -> str:
+    """Oracle twin of ``operators.similarity._sign_buckets``: the
+    ``(vec_id, embedding, bucket, nrm)`` rows of ``embeddings``, with the
+    seeded hyperplanes embedded as SQL literals (repr round-trips
+    doubles exactly), so bucket signs match bit-for-bit."""
     from bcg_contacts_data_pipeline_spark.operators.similarity import _hyperplanes
 
-    planes = _hyperplanes(dim, num_planes, seed)
-    bucket_terms = []
-    for i, plane in enumerate(planes):
+    terms = []
+    for i, plane in enumerate(_hyperplanes(dim, num_planes, seed)):
         lits = ", ".join(repr(x) for x in plane)
         d = _DOT_SQL.format(a="embedding", b=f"[{lits}]")
-        bucket_terms.append(f"(CASE WHEN {d} >= 0 THEN {1 << i} ELSE 0 END)")
-    bucket = " + ".join(bucket_terms)
+        terms.append(f"(CASE WHEN {d} >= 0 THEN {1 << i} ELSE 0 END)")
     return f"""
-    WITH b AS (
-      SELECT vec_id, embedding,
-             {bucket} AS bucket,
+      SELECT vec_id, embedding, {" + ".join(terms)} AS bucket,
              sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
-      FROM embeddings),
+      FROM embeddings"""
+
+
+def _ann_lsh_oracle(dim: int = 64, num_planes: int = 6, k: int = 5, seed: int = 42) -> str:
+    """Full DuckDB twin of embedding_ann_lsh: the same sign buckets
+    (``_sign_bucket_sql``) and in-bucket cosine scores, bit-for-bit."""
+    return f"""
+    WITH b AS ({_sign_bucket_sql(dim, num_planes, seed)}),
     scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
              {_DOT_SQL.format(a='q.embedding', b='c.embedding')} / (q.nrm * c.nrm) AS score
@@ -683,46 +687,31 @@ def q_embedding_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _components_ann_oracle(
-    dim: int = 64, num_planes: int = 4, threshold: float = 0.35, seed: int = 42
-) -> str:
-    """DuckDB twin of embedding_components_ann: seeded hyperplanes as
-    SQL literals (repr round-trips doubles exactly), the same sign
-    bucket, the same exact in-bucket cosine verify, closure via a
-    recursive CTE."""
-    from bcg_contacts_data_pipeline_spark.operators.similarity import (
-        _hyperplanes,
-    )
-
-    planes = _hyperplanes(dim, num_planes, seed)
-    terms = []
-    for i, plane in enumerate(planes):
-        lits = ", ".join(repr(x) for x in plane)
-        d = _DOT_SQL.format(a="embedding", b=f"[{lits}]")
-        terms.append(f"(CASE WHEN {d} >= 0 THEN {1 << i} ELSE 0 END)")
-    bucket = " + ".join(terms)
-    cos = (
-        _DOT_SQL.format(a="a.embedding", b="b.embedding")
-        + f" / (a.nrm * b.nrm)"
-    )
+def _lsh_pairs_sql(threshold: float, num_planes: int) -> str:
+    """Oracle twin of ``embedding_pairs_lsh`` (dim 64, seed 42): the
+    ``bk -> pairs`` CTE chain, without the leading ``WITH``;
+    ``pairs(id_a, id_b)`` holds the same-bucket pairs with exact cosine
+    >= ``threshold``. The one edge definition of every LSH-graph oracle."""
+    cos = _DOT_SQL.format(a="a.embedding", b="b.embedding") + " / (a.nrm * b.nrm)"
     return f"""
-    WITH bk AS (
-      SELECT vec_id, embedding, {bucket} AS bucket,
-             sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
-      FROM embeddings),
+    bk AS ({_sign_bucket_sql(64, num_planes, 42)}),
     pairs AS (
       SELECT a.vec_id AS id_a, b.vec_id AS id_b
       FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-      WHERE {cos} >= {threshold}),
+      WHERE {cos} >= {threshold})"""
+
+
+@register(
+    "embedding_components_ann",
+    oracle=f"""
+    WITH {_lsh_pairs_sql(0.35, 4)},
     {reach_sql("embeddings", "pairs", "vec_id")}
     SELECT CAST(node AS BIGINT) AS vec_id, CAST(comp AS BIGINT) AS component,
            CAST(COUNT(*) OVER (PARTITION BY comp) AS BIGINT)
                AS component_size
     FROM reach
-    """
-
-
-@register("embedding_components_ann", oracle=_components_ann_oracle())
+    """,
+)
 def q_embedding_components_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sub-quadratic twin of `embedding_components`: candidate pairs
     come from same-sign-LSH-bucket neighbors only (exact cosine verify
@@ -1582,20 +1571,10 @@ def kmeans_assign_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _lsh_pairs_prefix(threshold: float, num_planes: int) -> str:
-    """The bk/pairs CTE prefix of the LSH pair graph, reused verbatim
-    from the ``embedding_components_ann`` oracle builder so the edge
-    set has exactly ONE definition across all graph queries (split at
-    the closure CTE; a shape change there fails these queries loudly,
-    which is the point)."""
-    full = _components_ann_oracle(threshold=threshold, num_planes=num_planes)
-    return full.split("sym AS")[0].rstrip().rstrip(",")
-
-
 @register(
     "triangle_count",
-    oracle=_lsh_pairs_prefix(0.2, 4)
-    + """
+    oracle=f"""
+    WITH {_lsh_pairs_sql(0.2, 4)}
     SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM pairs) AS n_edges,
            (SELECT CAST(COUNT(*) AS BIGINT)
             FROM pairs e1 JOIN pairs e2 ON e2.id_a = e1.id_b) AS n_wedges,
@@ -2036,8 +2015,8 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one broadcast-codebook corpus pass, one shuffle
     (groupBy cluster), per-cluster scoring capped at
-    |cluster| x {cap} by the rep-cap (idle at shipped SFs — cluster
-    max 584 at sf0.1 vs cap {cap}; engages on the 100x clone replica
+    |cluster| x 1024 by the rep-cap ``_SEM_CAP`` (idle at shipped SFs —
+    cluster max 584 at sf0.1 vs cap 1024; engages on the 100x clone replica
     where clusters grow ~100x, exact for clone families)."""
     from bcg_contacts_data_pipeline_spark.operators.similarity import (
         semantic_dedup,
@@ -2051,12 +2030,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_clusters=_SEM_K,
         threshold=_SEM_TAU,
         max_cluster=_SEM_CAP,
-    )
-
-
-if q_semantic_dedup.__doc__:
-    q_semantic_dedup.__doc__ = q_semantic_dedup.__doc__.replace(
-        "{cap}", str(_SEM_CAP)
     )
 
 

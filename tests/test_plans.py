@@ -90,7 +90,7 @@ def test_no_rowwise_python_udf_on_reference_surface(plans):
 
 
 def test_ann_lsh_plan_ships_no_vector_pairs(spark):
-    """The ANN-LSH physical plan must score inside a per-bucket cogroup
+    """The ANN-LSH physical plan must score inside a per-bucket group
     (FlatMapGroupsInPandas), never via a candidate-pair join that ships
     both 64-float vectors per pair through a shuffle — the O(N^2/buckets)
     pair-materialization shape is the known 100 TB anti-pattern here.
@@ -113,8 +113,8 @@ def test_ann_lsh_plan_ships_no_vector_pairs(spark):
 
 
 def test_lsh_num_planes_formula():
-    """The documented recall/cost dial: planes = ceil(log2(n/target)),
-    clamped to [1, 30] — expected bucket occupancy stays <= target, so
+    """The documented recall/cost dial: planes = ceil(log2(n/4096)),
+    clamped to [1, 30] — expected bucket occupancy stays <= 4096, so
     in-bucket cost is bounded as the corpus grows."""
     from bcg_contacts_data_pipeline_spark.operators.similarity import (
         lsh_num_planes,

@@ -11,11 +11,12 @@ from __future__ import annotations
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from bcg_contacts_data_pipeline_spark.operators.similarity import (
     embedding_pairs,
+    embedding_topk,
 )
 
 SETTINGS = dict(
@@ -75,6 +76,88 @@ def test_embedding_pairs_matches_brute_force(spark, vecs, threshold, blocks):
         if cos(vecs[a], vecs[b]) >= threshold
     }
     assert got == want
+
+
+# ---------------------------------------------------------------------------
+# embedding_topk: every upper-triangle grid cell emits the local top-k of
+# its lo rows over its hi rows and, off the diagonal only, of hi over lo —
+# so the ranked union must equal a brute-force model for any block count,
+# with ties, k past the corpus size, and ineligible vectors (NULL,
+# all-zero, NaN) that neither query nor match
+# ---------------------------------------------------------------------------
+
+NAN = float("nan")
+
+topk_vec = st.one_of(
+    st.none(),
+    st.lists(
+        st.sampled_from([-1.0, 0.0, 0.5, 1.0, 2.0, NAN]), min_size=3, max_size=3
+    ),
+)
+
+
+def _seq_cos(a, b):
+    """Cosine with every sum folded left to right, as ``_seq_scores``
+    does (``sum`` of floats is compensated on Python >= 3.12)."""
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot += x * y
+        na += x * x
+        nb += y * y
+    return dot / (math.sqrt(na) * math.sqrt(nb))
+
+
+def _topk_model(vecs, k):
+    """{(query_id, rank): (neighbor_id, score)}: the query itself
+    excluded, ties broken by neighbor_id ascending."""
+    ok = {
+        i: v
+        for i, v in enumerate(vecs)
+        if v is not None
+        and any(x != 0.0 for x in v)
+        and not any(math.isnan(x) for x in v)
+    }
+    want = {}
+    for q, qv in ok.items():
+        ranked = sorted(
+            ((-_seq_cos(qv, cv), c) for c, cv in ok.items() if c != q)
+        )[:k]
+        for rank, (neg, c) in enumerate(ranked, start=1):
+            want[(q, rank)] = (c, -neg)
+    return want
+
+
+@pytest.mark.parametrize("blocks", [1, 2, 3])
+@given(
+    st.lists(topk_vec, min_size=1, max_size=10),
+    st.sampled_from([1, 2, 3, 20]),
+)
+@example(
+    vecs=[
+        [1.0, 0.0, 0.0],
+        [1.0, 0.0, 0.0],
+        [2.0, 0.0, 0.0],
+        [0.5, 1.0, -1.0],
+        None,
+        [0.0, 0.0, 0.0],
+        [NAN, 1.0, 0.0],
+        [-1.0, 2.0, 0.5],
+        [0.0, 1.0, 1.0],
+    ],
+    k=20,
+)
+@settings(**SETTINGS)
+def test_embedding_topk_matches_brute_force(spark, blocks, vecs, k):
+    df = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
+    )
+    got = {
+        (r.query_id, r.rank): (r.neighbor_id, r.score)
+        for r in embedding_topk(
+            df, "vec_id", "embedding", k=k, corpus_blocks=blocks
+        ).collect()
+    }
+    assert got == _topk_model(vecs, k)
 
 
 # ---------------------------------------------------------------------------
