@@ -22,6 +22,19 @@ catalog but does not forward them back to a Python reader at scan time
 (probed on Spark 4.1 — Python-source catalog tables round-trip the
 format name, not the options).
 
+One contract with ``read_sources``
+----------------------------------
+The header-and-cell rules live in ``io.readers`` and both routes use
+them: header cells are named by ``column_names`` (the ``read_tsv``
+rule), synonyms resolve through ``SourceRegistry.resolve``, and a cell
+is blank when Spark's ``trim`` (ASCII space only) leaves it empty. The
+batch and streaming readers share one options parser, one sorted
+``*.tsv`` listing and one per-file row generator (``_TSVReaderBase``).
+What still differs is the CSV dialect for QUOTED cells: this source
+parses with Python's csv module, which honours quotes, while the JVM
+leg needs ``multiLine=true, escape='"'`` for cells carrying tabs,
+newlines or quotes (see ``ContactsTSVWriter``).
+
 Filesystem contract
 -------------------
 ``partitions()`` globs driver-side and ``read()`` uses plain
@@ -43,8 +56,8 @@ Scale notes
   zero driver-side plan width (read_sources builds an N-branch union in
   the driver — fine for tens of files, quadratic analyzer pain for
   thousands).
-- Each partition yields ONE Arrow RecordBatch built columnar-side, not
-  row tuples — the Arrow fast path of the DataSource API.
+- Each partition yields Arrow RecordBatches of up to ``_BATCH_ROWS``
+  rows, not row tuples — the Arrow fast path of the DataSource API.
 - This source exists for *heterogeneous/quirky* formats (per-file
   synonym schemas, the reference's headerless exports). For big
   homogeneous TSVs the JVM csv reader (`read_tsv`) remains the fast
@@ -58,10 +71,11 @@ from __future__ import annotations
 
 import csv
 import glob as globmod
+import itertools
 import json
 import os
-
 import uuid
+from pathlib import Path
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -73,41 +87,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-
-class _FilePartition(InputPartition):
-    def __init__(self, path: str, headerless_cols: list[str] | None):
-        self.path = path
-        self.headerless_cols = headerless_cols
-
-
-def _synonym_chains(
-    header: list[str], registry: dict[str, list[str]]
-) -> list[list[int]]:
-    """Per canonical column, the source-column indexes to coalesce, in
-    priority order — case-insensitive on stripped names, identical
-    contract to SourceRegistry.apply. Shared by the batch and streaming
-    readers so the two routes can never drift."""
-    lookup: dict[str, int] = {}
-    for i, col in enumerate(header):
-        lookup.setdefault(col.strip().lower(), i)
-    chains: list[list[int]] = []
-    for target, synonyms in registry.items():
-        idxs: list[int] = []
-        for syn in [target, *synonyms]:
-            hit = lookup.get(syn.strip().lower())
-            if hit is not None and hit not in idxs:
-                idxs.append(hit)
-        chains.append(idxs)
-    return chains
-
-
-def _first_non_blank(row: list[str], idxs: list[int]) -> str | None:
-    for i in idxs:
-        if i < len(row):
-            v = row[i]
-            if v is not None and len(v.strip()) > 0:
-                return v
-    return None
+from bcg_contacts_data_pipeline_spark.io.readers import SourceRegistry, column_names
 
 
 class ContactsTSVDataSource(DataSource):
@@ -169,12 +149,16 @@ def _parse_registry(options: dict) -> dict[str, list[str]]:
 _BATCH_ROWS = 65_536
 
 
-class ContactsTSVReader(DataSourceReader):
+class _TSVReaderBase:
+    """Shared by the batch and streaming readers, so the two routes can
+    never drift: one options parser, one ``*.tsv`` listing and one
+    per-file generator of canonical rows."""
+
     def __init__(self, options: dict):
         if "path" not in options:
             raise ValueError("contacts_tsv requires a 'path' option (TSV directory)")
         self.directory = options["path"]
-        self.registry = _parse_registry(options)
+        self.registry = SourceRegistry(_parse_registry(options))
         try:
             self.headerless: dict[str, list[str]] = json.loads(
                 options.get("headerless", "{}")
@@ -184,8 +168,28 @@ class ContactsTSVReader(DataSourceReader):
                 f"contacts_tsv 'headerless' option is not valid JSON: {e}"
             ) from e
 
+    def _files(self) -> list[str]:
+        return sorted(globmod.glob(os.path.join(self.directory, "*.tsv")))
+
+    def _file_rows(self, path: str):
+        """Each data row of ``path`` as its canonical values plus the
+        file's ``file:`` URI, percent-encoded — byte-identical to what
+        input_file_name() yields in read_sources, so provenance
+        joins/filters written against one route work on the other. The
+        file is streamed, never held whole."""
+        uri = Path(os.path.abspath(path)).as_uri()
+        cols = self.headerless.get(os.path.basename(path))
+        with open(path, newline="", encoding="utf-8") as fh:
+            reader = csv.reader(fh, delimiter="\t")
+            header = cols if cols is not None else column_names(next(reader, []))
+            canonical = self.registry.row_mapper(header)
+            for row in reader:
+                yield (*canonical(row), uri)
+
+
+class ContactsTSVReader(_TSVReaderBase, DataSourceReader):
     def partitions(self):
-        paths = sorted(globmod.glob(os.path.join(self.directory, "*.tsv")))
+        paths = self._files()
         if not paths:
             raise FileNotFoundError(f"no *.tsv under {self.directory!r}")
         # Fail up front on a headerless key that matches no file: a typo
@@ -198,48 +202,20 @@ class ContactsTSVReader(DataSourceReader):
                 f"'headerless' keys match no *.tsv in {self.directory!r}: "
                 f"{unmatched} (found: {sorted(basenames)})"
             )
-        return [
-            _FilePartition(p, self.headerless.get(os.path.basename(p)))
-            for p in paths
-        ]
+        return [InputPartition(p) for p in paths]
 
-    def read(self, partition: _FilePartition):
+    def read(self, partition: InputPartition):
         import pyarrow as pa
 
-        def batches(rows: list[list[str]], header: list[str]):
-            chains = _synonym_chains(header, self.registry)
-            names = [*self.registry.keys(), "source_file"]
-            columns = [
-                [_first_non_blank(r, idxs) for r in rows] for idxs in chains
-            ]
-            # file: URI, percent-encoded — byte-identical to what
-            # input_file_name() yields in read_sources, so provenance
-            # joins/filters written against one route work on the other.
-            from pathlib import Path
-
-            uri = Path(os.path.abspath(partition.path)).as_uri()
-            columns.append([uri] * len(rows))
+        names = [*self.registry.canonical, "source_file"]
+        rows = self._file_rows(partition.value)
+        for chunk in iter(lambda: list(itertools.islice(rows, _BATCH_ROWS)), []):
             yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=pa.string()) for c in columns], names=names
+                [pa.array(c, type=pa.string()) for c in zip(*chunk)], names=names
             )
 
-        with open(partition.path, newline="", encoding="utf-8") as fh:
-            reader = csv.reader(fh, delimiter="\t")
-            if partition.headerless_cols is not None:
-                header = partition.headerless_cols
-            else:
-                header = next(reader, [])
-            # stream the file in bounded slices — never the whole file
-            chunk: list[list[str]] = []
-            for row in reader:
-                chunk.append(row)
-                if len(chunk) >= _BATCH_ROWS:
-                    yield from batches(chunk, header)
-                    chunk = []
-            yield from batches(chunk, header)
 
-
-class ContactsTSVStreamReader(SimpleDataSourceStreamReader):
+class ContactsTSVStreamReader(_TSVReaderBase, SimpleDataSourceStreamReader):
     """Streaming flavor of ``contacts_tsv``: each micro-batch picks up
     the *.tsv files that arrived since the last committed offset — the
     drop-directory ingest the reference runs by hand (run.py re-scans
@@ -257,61 +233,29 @@ class ContactsTSVStreamReader(SimpleDataSourceStreamReader):
     DataSourceStreamReader API instead.
     """
 
-    def __init__(self, options: dict):
-        if "path" not in options:
-            raise ValueError("contacts_tsv requires a 'path' option (TSV directory)")
-        self.directory = options["path"]
-        self.registry = _parse_registry(options)
-        try:
-            self.headerless: dict[str, list[str]] = json.loads(
-                options.get("headerless", "{}")
-            )
-        except json.JSONDecodeError as e:
-            raise ValueError(
-                f"contacts_tsv 'headerless' option is not valid JSON: {e}"
-            ) from e
-
     def initialOffset(self) -> dict:
         return {"processed": []}
 
     def _rows(self, paths: list[str]):
-        from pathlib import Path
-
-        for path in paths:
-            with open(path, newline="", encoding="utf-8") as fh:
-                reader = csv.reader(fh, delimiter="\t")
-                cols = self.headerless.get(os.path.basename(path))
-                header = cols if cols is not None else next(reader, [])
-                chains = _synonym_chains(header, self.registry)
-                uri = Path(os.path.abspath(path)).as_uri()
-                for row in reader:
-                    yield (
-                        *[_first_non_blank(row, idxs) for idxs in chains],
-                        uri,
-                    )
+        return iter([row for p in paths for row in self._file_rows(p)])
 
     def read(self, start: dict):
         done = set(start.get("processed", []))
-        paths = sorted(globmod.glob(os.path.join(self.directory, "*.tsv")))
-        new = [p for p in paths if os.path.basename(p) not in done]
+        new = [p for p in self._files() if os.path.basename(p) not in done]
         end = {
             "processed": sorted(done | {os.path.basename(p) for p in new})
         }
-        return iter(list(self._rows(new))), end
+        return self._rows(new), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
         want = set(end.get("processed", [])) - set(start.get("processed", []))
-        paths = sorted(
-            p
-            for p in globmod.glob(os.path.join(self.directory, "*.tsv"))
-            if os.path.basename(p) in want
-        )
+        paths = [p for p in self._files() if os.path.basename(p) in want]
         missing = want - {os.path.basename(p) for p in paths}
         if missing:
             raise FileNotFoundError(
                 f"replay needs committed files that vanished: {sorted(missing)}"
             )
-        return iter(list(self._rows(paths)))
+        return self._rows(paths)
 
 
 def _write_rows_lazily(

@@ -10,7 +10,10 @@ Reference semantics re-expressed Spark-first:
 - S5 per-file heterogeneous directory -> ``read_sources`` unions the
   per-file frames after the synonym registry maps each one (schemas
   differ so it can NOT be one multi-path scan); ``input_file_name()``
-  keeps provenance.
+  keeps provenance. ``SourceRegistry`` holds the whole header-and-cell
+  contract: synonym positions (``resolve``), the blank-cell rule, and
+  its Python twin (``row_mapper``) that the ``contacts_tsv`` DataSource
+  (io/datasource.py) reads its rows with.
 - S6 latest-file-by-mtime -> driver-side glob (filesystem concern, not
   engine), same as the reference (clean_contacts.py:239-245).
 - S7/S8 SQLite staging -> ``io.jdbc`` (partitioned JDBC read/write and
@@ -66,22 +69,23 @@ def _peek_header(spark: SparkSession, path: str) -> list[str]:
     serves."""
     first = spark.read.text(path).limit(1).take(1)
     line = first[0][0] if first else ""
-    return _column_names([c.strip() for c in line.split("\t")])
+    return column_names(line.split("\t"))
 
 
-def _column_names(header: list[str]) -> list[str]:
+def column_names(header: list[str]) -> list[str]:
     """Header cells -> usable column names, the way the reference's
-    pandas loader names them: an empty cell i becomes ``Unnamed: i`` and
-    a repeated name gets ``.1``, ``.2``, ... appended. Repeats are found
-    case-insensitively (pandas: case-sensitively), because Spark resolves
-    names that way and rejects a schema that repeats one. Matters for
-    files whose first DATA row is misread as a header (data_files/5.tsv:
-    two empty cells), which must still read so the usable-source rule
-    can skip them."""
+    pandas loader names them: cells are stripped, an empty cell i becomes
+    ``Unnamed: i`` and a repeated name gets ``.1``, ``.2``, ... appended
+    (the ``contacts_tsv`` DataSource names its headers here too). Repeats
+    are found case-insensitively (pandas: case-sensitively), because
+    Spark resolves names that way and rejects a schema that repeats one.
+    Matters for files whose first DATA row is misread as a header
+    (data_files/5.tsv: two empty cells), which must still read so the
+    usable-source rule can skip them."""
     names: list[str] = []
     seen: set[str] = set()
     for i, c in enumerate(header):
-        base = name = c or f"Unnamed: {i}"
+        base = name = c.strip() or f"Unnamed: {i}"
         k = 0
         while name.lower() in seen:
             k += 1
@@ -108,7 +112,9 @@ class SourceRegistry:
     (compared case-insensitively after strip). ``apply`` projects a raw
     source frame onto the canonical columns by coalescing the first
     NON-BLANK value along the synonym chain (synonym-priority order);
-    targets with no matching column become NULL.
+    targets with no matching column become NULL. ``row_mapper`` is the
+    same projection over parsed Python rows. Both take their chains from
+    ``resolve`` and their blank rule from Spark's ``trim``.
 
     The coalesce is a documented divergence from the reference, which
     keys and fills from only the FIRST phone-family column in file order
@@ -119,31 +125,51 @@ class SourceRegistry:
     def __init__(self, canonical: dict[str, list[str]]):
         self.canonical = canonical
 
+    def resolve(self, columns: list[str]) -> list[list[int]]:
+        """Per canonical column, the positions in ``columns`` of its
+        synonyms (the target name first), in priority order. Names match
+        case-insensitively after strip; a repeated name resolves to its
+        first position."""
+        lookup: dict[str, int] = {}
+        for i, col in enumerate(columns):
+            lookup.setdefault(col.strip().lower(), i)
+        return [
+            list(dict.fromkeys(
+                lookup[k]
+                for k in (s.strip().lower() for s in [target, *synonyms])
+                if k in lookup
+            ))
+            for target, synonyms in self.canonical.items()
+        ]
+
     def apply(self, df: DataFrame, keep_provenance: bool = False) -> DataFrame:
-        lookup = {}
-        for col in df.columns:
-            lookup.setdefault(col.strip().lower(), col)
         out = []
-        for target, synonyms in self.canonical.items():
-            hits = []
-            for syn in [target, *synonyms]:
-                hit = lookup.get(syn.strip().lower())
-                if hit is not None and hit not in hits:
-                    hits.append(hit)
+        for target, hits in zip(self.canonical, self.resolve(df.columns)):
             if not hits:
                 out.append(F.lit(None).cast("string").alias(target))
             else:
-                candidates = [
-                    F.when(
-                        F.length(F.trim(F.col(f"`{h}`").cast("string"))) > 0,
-                        F.col(f"`{h}`").cast("string"),
-                    )
-                    for h in hits
-                ]
+                cells = [F.col(f"`{df.columns[i]}`").cast("string") for i in hits]
+                candidates = [F.when(F.length(F.trim(c)) > 0, c) for c in cells]
                 out.append(F.coalesce(*candidates).alias(target))
         if keep_provenance:
             out.append(F.input_file_name().alias("source_file"))
         return df.select(*out)
+
+    def row_mapper(self, header: list[str]):
+        """``apply`` for parsed rows of a file whose header is ``header``:
+        returns a function from a row's cells to its canonical values."""
+        chains = self.resolve(header)
+        return lambda row: tuple(_first_non_blank(row, c) for c in chains)
+
+
+def _first_non_blank(row: list[str], positions: list[int]) -> str | None:
+    """The first cell at ``positions`` that Spark's ``trim`` leaves
+    non-empty. ``trim`` strips ASCII space only, so a cell holding just
+    U+00A0 or U+000B is a value, as it is in ``apply``."""
+    for i in positions:
+        if i < len(row) and row[i].strip(" "):
+            return row[i]
+    return None
 
 
 def read_sources(frames: list[DataFrame], registry: SourceRegistry) -> DataFrame:

@@ -137,15 +137,23 @@ def with_source_order(df: DataFrame, order_col: str = "sid") -> DataFrame:
     return df.select("*", F.xxhash64(F.struct(*cols)).alias(order_col))
 
 
+def contact_sources(frames: list[DataFrame]) -> DataFrame:
+    """Source frames (as ``read_tsv`` returns them) mapped through
+    CONTACT_SOURCE_REGISTRY, unioned, with the ``sid`` source order —
+    the projection both the enrichment sources and the Mailchimp file
+    take."""
+    sources = read_sources(frames, CONTACT_SOURCE_REGISTRY).drop("source_file")
+    return with_source_order(sources, "sid")
+
+
 def read_contact_sources(
     spark: SparkSession, paths: list[str]
 ) -> tuple[DataFrame | None, list[str]]:
     """The enrichment-source ingest (fill_missing_contacts.py:186-196):
     read each file once, keep the files ``usable_source`` accepts on the
-    header that read found, and return their CONTACT_SOURCE_REGISTRY
-    projections as one frame with a ``sid`` source order (None when no
-    file is usable), plus the skipped paths in input order. One Spark
-    job per file: ``read_tsv``'s header peek."""
+    header that read found, and return their ``contact_sources``
+    projection (None when no file is usable), plus the skipped paths in
+    input order. One Spark job per file: ``read_tsv``'s header peek."""
     usable, skipped = [], []
     for p in paths:
         df = read_tsv(spark, p)
@@ -153,7 +161,4 @@ def read_contact_sources(
             usable.append(df)
         else:
             skipped.append(p)
-    if not usable:
-        return None, skipped
-    sources = read_sources(usable, CONTACT_SOURCE_REGISTRY).drop("source_file")
-    return with_source_order(sources, "sid"), skipped
+    return (contact_sources(usable) if usable else None), skipped

@@ -25,29 +25,28 @@ def write_tsv(df: DataFrame, path: str) -> None:
 
 
 def write_tsv_single(df: DataFrame, path: str) -> str:
-    """Single-file TSV with a header line, for edge export. Writes via a
-    temp dir then moves the one part file to ``path``."""
-    tmp = path + ".__tmpdir__"
-    df.coalesce(1).write.mode("overwrite").option("sep", "\t").option(
-        "header", True
-    ).csv(tmp)
-    part = glob.glob(os.path.join(tmp, "part-*"))[0]
-    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-    shutil.move(part, path)
-    shutil.rmtree(tmp)
+    """Single-file TSV with a header line, for edge export."""
+    _write_single(df, path, "csv", sep="\t", header=True)
     return path
 
 
 def write_json_log(df: DataFrame, path: str, single: bool = False) -> None:
     """JSON side-output (fill log / validation report)."""
     if single:
-        tmp = path + ".__tmpdir__"
-        df.coalesce(1).write.mode("overwrite").json(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*"))[0]
-        shutil.move(part, path)
-        shutil.rmtree(tmp)
+        _write_single(df, path, "json")
     else:
         df.write.mode("overwrite").json(path)
+
+
+def _write_single(df: DataFrame, path: str, fmt: str, **options) -> None:
+    """Write ``df`` as ONE ``fmt`` file at ``path``: coalesce(1), write
+    to a temp dir next to ``path``, then move the one part file."""
+    tmp = path + ".__tmpdir__"
+    df.coalesce(1).write.mode("overwrite").options(**options).format(fmt).save(tmp)
+    part = glob.glob(os.path.join(tmp, "part-*"))[0]
+    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
+    shutil.move(part, path)
+    shutil.rmtree(tmp)
 
 
 def write_columnar(

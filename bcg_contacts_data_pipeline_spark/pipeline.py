@@ -116,10 +116,7 @@ def _run(args, spark: SparkSession) -> int:
     if args.mailchimp:
         step(i, n_steps, f"read mailchimp source: {args.mailchimp}")
         s = time.time()
-        mailchimp = REG.with_source_order(
-            REG.CONTACT_SOURCE_REGISTRY.apply(R.read_tsv(spark, args.mailchimp)),
-            "sid",
-        )
+        mailchimp = REG.contact_sources([R.read_tsv(spark, args.mailchimp)])
         _log(f"  done in {time.time() - s:.1f}s")
         i += 1
 

@@ -235,21 +235,24 @@ def fill_missing(
         broadcast_source=True,
         with_change_log=with_change_log,
     )
-    # Splice filled values back into the full-width master. The fill side
-    # is NARROW (id + fill columns) and deduped by content id — identical
-    # master rows share an id and an identical fill, so one row per id
-    # suffices and the join stays 1:1 per master row. The join key is a
-    # single long; AQE broadcast-converts the fill side when small.
-    out = (
-        master_with_id.drop(*FILL_FIELDS)
+    return _splice(master_with_id, enriched, list(FILL_FIELDS)).drop("__row_id"), log
+
+
+def _splice(target: DataFrame, filled: DataFrame, cols: list[str]) -> DataFrame:
+    """``target`` with its ``cols`` replaced by ``filled``'s, joined on
+    ``__row_id``, in ``target``'s column order. The fill side is NARROW
+    (id + fill columns) and deduped by content id — identical target rows
+    share an id and an identical fill, so one row per id suffices and the
+    join stays 1:1 per target row. The join key is a single long; AQE
+    broadcast-converts the fill side when small."""
+    return (
+        target.drop(*cols)
         .join(
-            enriched.select("__row_id", *FILL_FIELDS)
-            .dropDuplicates(["__row_id"]),
+            filled.select("__row_id", *cols).dropDuplicates(["__row_id"]),
             "__row_id",
         )
-        .select(*[c for c in master_with_id.columns if c != "__row_id"])
+        .select(*target.columns)
     )
-    return out, log
 
 
 def mailchimp_enrich(
@@ -261,7 +264,7 @@ def mailchimp_enrich(
     target (module docstring).
 
     ``mailchimp`` columns must be pre-mapped like ``fill_missing``'s
-    source, ``sid`` included (io.registries.with_source_order).
+    source, ``sid`` included (io.registries.contact_sources).
     """
     m1 = checkpoint(_with_row_id(master))
 
@@ -279,12 +282,7 @@ def mailchimp_enrich(
         target_id="__row_id",
         source_order="sid",
     )
-    m2 = checkpoint(
-        m1.drop("email").join(
-            email_fill.select("__row_id", "email").dropDuplicates(["__row_id"]),
-            "__row_id",
-        )
-    )
+    m2 = checkpoint(_splice(m1, email_fill, ["email"]))
     mobile_fill, log2 = two_key_enrich(
         m2,
         mailchimp,
@@ -296,14 +294,7 @@ def mailchimp_enrich(
         target_id="__row_id",
         source_order="sid",
     )
-    out = (
-        m2.drop("mobile")
-        .join(
-            mobile_fill.select("__row_id", "mobile").dropDuplicates(["__row_id"]),
-            "__row_id",
-        )
-        .select(*[c for c in m1.columns if c != "__row_id"])
-    )
+    out = _splice(m2, mobile_fill, ["mobile"]).drop("__row_id")
     return out, log1.unionByName(log2)
 
 

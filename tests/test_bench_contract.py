@@ -305,3 +305,18 @@ def test_rotation_cursor_roundtrips_through_bench_full(tmp_path):
     # wrap-around
     order2, _ = bench.rotating_report_order(timings, 5 + len(rest_sorted))
     assert order2 == order
+
+
+def test_layer_functions_resolve():
+    """Every (module, function) the tracer wraps exists: a renamed or
+    deleted layer would crash a ``--trace 1`` benchmark run."""
+    import importlib
+
+    from perfbench.tracing import LAYER_FUNCTIONS, PKG
+
+    missing = [
+        name
+        for name, (mod, fn) in LAYER_FUNCTIONS.items()
+        if not callable(getattr(importlib.import_module(f"{PKG}.{mod}"), fn, None))
+    ]
+    assert not missing, missing

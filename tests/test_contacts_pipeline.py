@@ -142,11 +142,8 @@ def golden_inputs(spark, golden_paths):
     from bcg_contacts_data_pipeline_spark.io import registries as REG
 
     master = R.read_tsv(spark, golden_paths["master"])
-    mailchimp = REG.with_source_order(
-        REG.CONTACT_SOURCE_REGISTRY.apply(
-            R.read_tsv(spark, golden_paths["mailchimpclean"])
-        ),
-        "sid",
+    mailchimp = REG.contact_sources(
+        [R.read_tsv(spark, golden_paths["mailchimpclean"])]
     )
     sources, _skipped = REG.read_contact_sources(
         spark, [golden_paths[k] for k in SOURCE_KEYS]

@@ -11,6 +11,7 @@ import pytest
 from bcg_contacts_data_pipeline_spark.io.datasource import ContactsTSVDataSource
 from bcg_contacts_data_pipeline_spark.io.readers import (
     SourceRegistry,
+    read_headerless_tsv,
     read_sources,
     read_tsv,
 )
@@ -82,25 +83,47 @@ def test_partition_per_file(registered, tsv_dir):
 
 def test_parity_with_read_sources(registered, tsv_dir):
     """The packaged source and the plan-construction helper implement the
-    same contract: identical canonical rows on header-ful files,
-    INCLUDING the source_file column — both routes emit the percent-
-    encoded file: URI (input_file_name form), so provenance joins
-    written against one route work on the other (round-5 advisor flag:
-    the raw-path/URI divergence was masked by comparing basenames)."""
-    paths = [os.path.join(tsv_dir, f) for f in ("a.tsv", "b.tsv")]
+    same contract: identical canonical rows on every file, headerless
+    ones included, INCLUDING the source_file column — both routes emit
+    the percent-encoded file: URI (input_file_name form), so provenance
+    joins written against one route work on the other (round-5 advisor
+    flag: the raw-path/URI divergence was masked by comparing basenames).
+
+    d.tsv pins the blank-cell rule and header naming: a cell holding only
+    U+00A0 or U+000B is a value (Spark's ``trim`` strips ASCII space
+    only), so it wins over a lower-priority synonym on both routes; a
+    header repeated case-insensitively resolves to its first column."""
+    with open(os.path.join(tsv_dir, "d.tsv"), "w", encoding="utf-8") as fh:
+        fh.write(
+            "Email\tmail\tphone\tcell\tFull Name\tEMAIL\n"
+            "\u00a0\tnbsp@x.io\t\u000b\t555\tEve\tdup@x.io\n"
+            "  \tspace@x.io\t \t666\tFay\tdup2@x.io\n"
+        )
+    registry = SourceRegistry(CANONICAL)
+    frames = [
+        read_tsv(registered, os.path.join(tsv_dir, f))
+        for f in ("a.tsv", "b.tsv", "d.tsv")
+    ]
+    frames.append(
+        read_headerless_tsv(
+            registered, os.path.join(tsv_dir, "c.tsv"), ["email", "mobile", "name"]
+        )
+    )
     want = {
         tuple(r[c] for c in (*CANONICAL, "source_file"))
-        for r in read_sources(
-            [read_tsv(registered, p) for p in paths], SourceRegistry(CANONICAL)
-        ).collect()
+        for r in read_sources(frames, registry).collect()
     }
     got = {
         tuple(r[c] for c in (*CANONICAL, "source_file"))
         for r in _load(registered, tsv_dir).collect()
-        if os.path.basename(r["source_file"]) in ("a.tsv", "b.tsv")
     }
     assert got == want
     assert all(t[-1].startswith("file:///") for t in got)
+    d_rows = {t[:-1] for t in got if t[-1].endswith("/d.tsv")}
+    assert d_rows == {
+        ("\u00a0", "\u000b", "Eve"),
+        ("space@x.io", "666", "Fay"),
+    }
 
 
 def test_empty_dir_raises(registered, tmp_path):
@@ -193,6 +216,11 @@ def test_streaming_source_picks_up_new_files_exactly_once(
     # provenance column carries the file URI on the streaming route too
     assert all(
         r.source_file.startswith("file:") for r in second.collect()
+    )
+    # the streaming route emits exactly the batch reader's canonical rows
+    batch = spark.read.format("contacts_tsv").options(**opts).load()
+    assert sorted(map(tuple, second.select(*batch.columns).collect())) == sorted(
+        map(tuple, batch.collect())
     )
 
     S.run_to_files(st, out, ckpt)  # no new files -> no new rows
