@@ -41,7 +41,7 @@ def read_tsv(spark: SparkSession, path: str) -> DataFrame:
     """TSV scan (S1-S3) in the reference's ``dtype=str`` loading mode,
     but with NULLs kept real instead of '': the two null conventions
     (SURVEY §1.2) unify at ingest. Columns are named from one header
-    peek (:func:`_peek_header`, one Spark job)."""
+    peek (:func:`_peek_header`, driver-side, no Spark job)."""
     df = (
         spark.read.option("sep", "\t")
         .option("header", True)
@@ -60,16 +60,53 @@ def read_tsv(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _peek_header(spark: SparkSession, path: str) -> list[str]:
-    """First line of the input, split on tabs — read through Spark's text
-    source (not a driver-side ``open()``), so the same code path works on
-    object stores (s3a://, abfss://) and HDFS. For a glob the line comes
-    from one of the matched files (Spark packs splits by size, so not
-    necessarily the lexicographically first); a multi-file scan already
-    contracts that every file shares the header, so any file's header
-    serves."""
-    first = spark.read.text(path).limit(1).take(1)
-    line = first[0][0] if first else ""
+    """First line of the input, split on tabs — read on the driver
+    through the Hadoop ``FileSystem`` API with the session's Hadoop conf,
+    so it runs no Spark job and the same code path works on object
+    stores (s3a://, abfss://) and HDFS. A glob or a directory resolves
+    to its first non-empty data file in sorted order (names starting
+    with ``_`` or ``.`` skipped, as Spark's file listing skips them); a
+    multi-file scan already contracts that every file shares the header,
+    so any file's header serves. Compressed files decompress through the
+    codec their extension names, lines end at LF, CR or CRLF and a
+    leading byte-order mark is dropped, as in Spark's text source. With
+    no such file (an empty file, a missing path) there is no line, as
+    Spark's text source reads none; a missing path then fails in
+    ``read_tsv``'s scan, as before."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    first = _first_data_file(jvm.org.apache.hadoop.fs.Path(path), conf)
+    line = ""
+    if first is not None:
+        stream = first.getFileSystem(conf).open(first)
+        try:
+            codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(
+                conf
+            ).getCodec(first)
+            lines = stream if codec is None else codec.createInputStream(stream)
+            text = jvm.org.apache.hadoop.io.Text()
+            jvm.org.apache.hadoop.util.LineReader(lines, conf).readLine(text)
+            # Spark's line reader drops a UTF-8 byte-order mark at offset 0
+            line = text.toString().removeprefix("\ufeff")
+        finally:
+            stream.close()
     return column_names(line.split("\t"))
+
+
+def _first_data_file(path, conf):
+    """The first non-empty, non-hidden file ``path`` (a file, directory
+    or glob) resolves to, in sorted path order; None if there is none."""
+    fs = path.getFileSystem(conf)
+    files = []
+    for status in fs.globStatus(path) or []:
+        children = fs.listStatus(status.getPath()) if status.isDirectory() else [status]
+        files += [
+            f for f in children
+            if f.isFile()
+            and f.getLen() > 0
+            and not f.getPath().getName().startswith(("_", "."))
+        ]
+    return min((f.getPath() for f in files), key=lambda p: p.toString(), default=None)
 
 
 def column_names(header: list[str]) -> list[str]:

@@ -153,7 +153,7 @@ def read_contact_sources(
     read each file once, keep the files ``usable_source`` accepts on the
     header that read found, and return their ``contact_sources``
     projection (None when no file is usable), plus the skipped paths in
-    input order. One Spark job per file: ``read_tsv``'s header peek."""
+    input order. No Spark job: ``read_tsv``'s header peek is driver-side."""
     usable, skipped = [], []
     for p in paths:
         df = read_tsv(spark, p)

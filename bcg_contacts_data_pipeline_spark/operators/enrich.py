@@ -18,7 +18,9 @@ broadcastable, no theta join, no per-row probing. "First match" becomes a
 ``groupBy(target).min(source_order)`` (partial-aggregatable — cheaper
 than a window) and the in-place cell updates become ``coalesce`` after a
 left join. The change log the reference writes row-by-row
-(fill_missing_contacts.py:124-131) is emitted as a DataFrame.
+(fill_missing_contacts.py:124-131) rides the enriched frame as a
+``changes`` array column; ``change_log`` explodes it, so the log and the
+fills come from one match.
 
 Scale notes: each pairwise join shuffles on a composite key; when the
 source is dimension-sized pass ``broadcast_source=True`` and every branch
@@ -54,25 +56,22 @@ def kofn_enrich(
     source_order: str,
     min_matches: int = 2,
     broadcast_source: bool = False,
-    with_change_log: bool = True,
-) -> tuple[DataFrame, DataFrame | None]:
+) -> DataFrame:
     """J2 — fill missing target fields from the first source row agreeing on
     >= ``min_matches`` of ``len(keys)`` normalized keys.
 
-    ``with_change_log=False`` skips constructing the change-log frame
-    (returned as None) — plan BUILD cost, not execution cost: the log's
-    per-fill filtered selects are ~0.4 s of py4j round-trips that a
-    caller consuming only ``enriched`` pays for nothing
-    (tests/test_plans.py's build-time gate).
-
-    Returns ``(enriched, change_log)``. ``enriched`` is NARROW — one row
-    per target row with (target_id, the fill columns coalesced
-    target-first, matched_source_id, matched_on); non-fill target columns
-    are NOT carried, so callers splice the fills back into the full-width
-    target by ``target_id`` (see plans.contacts.fill_missing — the narrow
-    shape is what keeps the splice join's build side small).
-    ``change_log`` has one row per actually-filled cell: (target_id,
-    field, old_value, new_value, source_id, matched_on).
+    Returns ONE narrow frame, one row per target row: (target_id, the
+    fill columns coalesced target-first, matched_source_id, matched_on,
+    changes). Non-fill target columns are NOT carried, so callers splice
+    the fills back into the full-width target by ``target_id`` (see
+    plans.contacts.fill_missing — the narrow shape is what keeps the
+    splice join's build side small). ``changes`` is the row's fill
+    journal, ``array<struct<field, old_value, new_value>>`` with one
+    entry per actually-filled cell; :func:`change_log` explodes it into
+    the reference's change log. A caller that selects only the fill
+    columns never computes it (Catalyst prunes the column), and a caller
+    that needs both the fills and the log checkpoints this frame once
+    and derives both from the checkpoint, so the match runs once.
     """
     t_keyed = target.select(
         F.col(target_id).alias("__tid"),
@@ -82,14 +81,16 @@ def kofn_enrich(
     s_keyed = source.select(
         F.col(source_order).alias("__sid"),
         *[k.source_expr.alias(f"__sk_{k.name}") for k in keys],
-        *[F.col(c).alias(f"__sf_{c}") for c in set(fill.values())],
+        # dict.fromkeys, not set: a set's string order changes with the
+        # process's hash seed, and with it the plan text
+        *[F.col(c).alias(f"__sf_{c}") for c in dict.fromkeys(fill.values())],
     )
     # With content-hash source ordering (io.registries.with_source_order),
     # byte-identical duplicate source rows share a __sid — and are
     # identical in every carried key/fill column, so one representative
     # suffices. Deduping HERE keeps the left join onto s_keyed 1:1 per
-    # __sid: without it, duplicate source rows fan out both `enriched`
-    # and `change_log` (duplicate fill entries for the same
+    # __sid: without it, duplicate source rows fan out `enriched` and
+    # with it the change log (duplicate fill entries for the same
     # (target_id, field)). Unique-sid callers pay a no-op aggregate.
     s_keyed = s_keyed.dropDuplicates(["__sid"])
     if broadcast_source:
@@ -181,22 +182,10 @@ def kofn_enrich(
         c: F.coalesce(F.col(f"__tf_{c}"), F.col(f"__sf_{src}"))
         for c, src in fill.items()
     }
-    enriched = enriched_keys.select(
-        F.col("__tid").alias(target_id),
-        *[fill_exprs[c].alias(c) for c in fill],
-        F.col("__sid").alias("matched_source_id"),
-        F.when(F.col("__sid").isNotNull(), matched_on).alias("matched_on"),
-    )
-
-    if not with_change_log:
-        return enriched, None
-
-    # ONE pass over enriched_keys for every fill field (r14, guide
-    # §2.4): the former per-field filtered-select union re-planned and
-    # re-executed the whole enrich pipeline (both joins + the candidate
-    # union) once per fill column. Each row now emits its filled cells
-    # as an exploded struct array — same row multiset, one execution.
-    entries = F.array_compact(
+    # Each row's filled cells as one struct array (r14, guide §2.4: one
+    # pass for every fill field, not a per-field filtered-select union
+    # that re-ran the whole match once per fill column).
+    changes = F.array_compact(
         F.array(
             *[
                 F.when(
@@ -212,13 +201,29 @@ def kofn_enrich(
             ]
         )
     )
-    change_log = (
-        enriched_keys.filter(F.col("__sid").isNotNull())
+    return enriched_keys.select(
+        F.col("__tid").alias(target_id),
+        *[fill_exprs[c].alias(c) for c in fill],
+        F.col("__sid").alias("matched_source_id"),
+        F.when(F.col("__sid").isNotNull(), matched_on).alias("matched_on"),
+        changes.alias("changes"),
+    )
+
+
+def change_log(enriched: DataFrame, target_id: str) -> DataFrame:
+    """The fill change log (fill_missing_contacts.py:124-131) of a
+    :func:`kofn_enrich` result, as a pure projection of it: one row per
+    actually-filled cell, (target_id, field, old_value, new_value,
+    source_id, matched_on) with ``matched_on`` comma-joined. Over a
+    checkpointed ``enriched`` it reads the checkpoint only — no source
+    scan, no exchange."""
+    return (
+        enriched.filter(F.col("matched_source_id").isNotNull())
         .select(
-            F.col("__tid").alias(target_id),
-            F.explode(entries).alias("__e"),
-            F.col("__sid").alias("source_id"),
-            F.array_join(matched_on, ",").alias("matched_on"),
+            target_id,
+            F.explode("changes").alias("__e"),
+            F.col("matched_source_id").alias("source_id"),
+            F.array_join("matched_on", ",").alias("matched_on"),
         )
         .select(
             target_id,
@@ -230,8 +235,6 @@ def kofn_enrich(
         )
     )
 
-    return enriched, change_log
-
 
 def two_key_enrich(
     target: DataFrame,
@@ -240,7 +243,7 @@ def two_key_enrich(
     fill: dict[str, str],
     target_id: str,
     source_order: str,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """J1 — the Mailchimp-style strict variant: ALL listed keys must match
     (merge_contacts_kindaworks.py:77-96). Same machinery with
     min_matches == len(keys); the source is always broadcast because the

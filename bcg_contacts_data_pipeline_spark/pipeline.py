@@ -19,15 +19,17 @@ Reference-parity operational behavior, Spark-first mechanics:
   fails only on email problems, not data-quality gaps), else 0.
 
 Stages compose lazily and Catalyst optimizes within each one; every
-enrichment stage's target is checkpointed into the run's PinScope (the
-plans/contacts module docstring says why), because each splice join
-reads its target three times and the chained stages would otherwise
-multiply the input scans in every later plan. Each input file is read
-once: one header peek names its all-string columns, and the enrichment
-sources are filtered by the reference's usable-source rule on that same
-read (io/registries.read_contact_sources). Subprocess-per-step and TSV
-handoffs between steps (the reference's design) have no equivalent here
-by design.
+enrichment pass checkpoints its target and its narrow match result into
+the run's PinScope (the plans/contacts module docstring says why): each
+splice join reads its target three times, the chained passes would
+otherwise multiply the input scans in every later plan, and the change
+logs written next to the master are projections of those match
+checkpoints, so writing them re-runs no match. Each input file is read
+once: a driver-side header peek (no Spark job) names its all-string
+columns, and the enrichment sources are filtered by the reference's
+usable-source rule on that same read (io/registries.read_contact_sources).
+Subprocess-per-step and TSV handoffs between steps (the reference's
+design) have no equivalent here by design.
 """
 
 from __future__ import annotations

@@ -1,22 +1,32 @@
 """The complete contact-unification pipeline — the reference's whole
 run.py workflow (fill-missing -> clean -> dedup -> validate, plus the
 optional Mailchimp stage 0) as composable DataFrame stages, files only
-at the edges. Each stage is lazy, but every enrichment stage's target
-frame (``mailchimp_enrich``'s two passes, ``fill_missing``) is
-materialized once by an eager ``pins.checkpoint``: into the caller's
-open ``PinScope``, else held by the session until Spark's ContextCleaner
-frees it. The plan is the same whether or not a scope is open.
+at the edges. Each stage is lazy, but every enrichment pass
+(``mailchimp_enrich``'s email and mobile passes, ``fill_missing``) is
+bounded by eager ``pins.checkpoint``s: the frame a stage enriches
+(``mailchimp_enrich``'s ``m1``, ``fill_missing``'s target) and each
+pass's narrow match result (``kofn_enrich``'s id, fills, match basis and
+``changes``). Each checkpoint goes into the caller's open ``PinScope``,
+else is held by the session until Spark's ContextCleaner frees it. The
+plan is the same whether or not a scope is open.
 
-Why: each enrichment stage reads its target three times (the k-of-n
-probe, the enriched-key join, the splice join back), and the stages
-chain (Mailchimp email pass -> mobile pass -> fill-missing), so the
-copies multiply. Unbounded, the frame entering ``clean_fields`` held 46
-CSV relations and 70 exchanges for 4 input files on the golden fixture,
-and every action re-planned and re-ran that tree (the renumber offset
-collect alone: 91 jobs). A scoped ``persist`` was measured too and
-loses (CLI on the golden fixture, 4-core host: 48.6 s vs 30.3 s): the
-cache spares execution, but the analyzer still walks the full tree on
-every action.
+Why the boundaries sit there: each pass reads its target three times
+(the k-of-n probe, the enriched-key join, the splice join back), and
+the passes chain (Mailchimp email pass -> mobile pass -> fill-missing),
+so the copies multiply. Unbounded, the frame entering ``clean_fields``
+held 46 CSV relations and 70 exchanges for 4 input files on the golden
+fixture, and every action re-planned and re-ran that tree (the renumber
+offset collect alone: 91 jobs). The narrow match is the boundary
+because two consumers read it: the fill splice and the change log
+(``enrich.change_log``, a pure projection of the ``changes`` column).
+Checkpointed once, the match runs once; left lazy, every log write
+re-read, re-parsed, deduped and broadcast the sources and re-ran the
+joins. Between the email and the mobile pass, the Mailchimp stage's
+full-width frame stays a lazy splice of two checkpoints, which bounds
+the mobile pass as tightly as a wide 88-column checkpoint would. A
+scoped ``persist`` was measured too and loses (CLI on the golden
+fixture, 4-core host: 48.6 s vs 30.3 s): the cache spares execution,
+but the analyzer still walks the full tree on every action.
 
 Reference parity map (cites into /root/reference):
 - master schema: output/MergedDatabase.tsv header (88 columns)
@@ -56,6 +66,7 @@ from bcg_contacts_data_pipeline_spark.operators.dedup import (
 )
 from bcg_contacts_data_pipeline_spark.operators.enrich import (
     MatchKey,
+    change_log,
     kofn_enrich,
     two_key_enrich,
 )
@@ -210,32 +221,45 @@ def contact_match_keys() -> list[MatchKey]:
 
 
 def fill_missing(
-    master: DataFrame,
-    source: DataFrame,
-    with_change_log: bool = True,
-) -> tuple[DataFrame, DataFrame | None]:
+    master: DataFrame, source: DataFrame
+) -> tuple[DataFrame, DataFrame]:
     """fill_missing_contacts.py semantics: fill the FILL_FIELDS
     (firstname/lastname/fullname/mobile, SURVEY J2 fill set) from the
-    first source row agreeing on >=2 of (name, email, phone).
+    first source row agreeing on >=2 of (name, email, phone). Returns
+    the filled master and its change log.
 
     ``source`` columns must be pre-mapped to s_firstname, s_lastname,
     s_fullname, s_email, s_mobile + a numeric ``sid`` order column (use
     io.registries.read_contact_sources for raw files).
     """
-    # the stage's target is checkpointed (module docstring says why)
+    # the target and the match are checkpointed (module docstring says why)
     master_with_id = checkpoint(_with_row_id(master))
-    enriched, log = kofn_enrich(
+    filled, log = _fill_pass(
         master_with_id,
-        source,
-        contact_match_keys(),
-        fill=FILL_FIELDS,
-        target_id="__row_id",
-        source_order="sid",
-        min_matches=2,
-        broadcast_source=True,
-        with_change_log=with_change_log,
+        kofn_enrich(
+            master_with_id,
+            source,
+            contact_match_keys(),
+            fill=FILL_FIELDS,
+            target_id="__row_id",
+            source_order="sid",
+            min_matches=2,
+            broadcast_source=True,
+        ),
+        list(FILL_FIELDS),
     )
-    return _splice(master_with_id, enriched, list(FILL_FIELDS)).drop("__row_id"), log
+    return filled.drop("__row_id"), log
+
+
+def _fill_pass(
+    target: DataFrame, enriched: DataFrame, cols: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """One enrichment pass's outputs from its match: ``enriched`` (a
+    ``kofn_enrich`` result over ``target``, keyed by ``__row_id``) is
+    checkpointed once, and the splice of its ``cols`` into ``target``
+    and the change log both read that checkpoint (module docstring)."""
+    match = checkpoint(enriched)
+    return _splice(target, match, cols), change_log(match, "__row_id")
 
 
 def _splice(target: DataFrame, filled: DataFrame, cols: list[str]) -> DataFrame:
@@ -260,8 +284,10 @@ def mailchimp_enrich(
 ) -> tuple[DataFrame, DataFrame]:
     """merge_contacts_kindaworks.py: fill missing email on (name, phone)
     match; fill missing mobile on (name, email) match. Two strict two-key
-    passes against a broadcast dimension, each against a checkpointed
-    target (module docstring).
+    passes against a broadcast dimension, each pass's match checkpointed
+    once and read by both its splice and the change log (module
+    docstring). Returns the enriched master and the two passes' change
+    logs.
 
     ``mailchimp`` columns must be pre-mapped like ``fill_missing``'s
     source, ``sid`` included (io.registries.contact_sources).
@@ -271,31 +297,37 @@ def mailchimp_enrich(
     name_t = N.norm_ws(N.full_name("firstname", "lastname", "fullname", "name"))
     name_s = N.norm_ws(N.full_name("s_firstname", "s_lastname", "s_fullname"))
 
-    email_fill, log1 = two_key_enrich(
+    m2, email_log = _fill_pass(
         m1,
-        mailchimp,
-        [
-            MatchKey("name", name_t, name_s),
-            MatchKey("phone", N.norm_phone(F.col("mobile")), N.norm_phone(F.col("s_mobile"))),
-        ],
-        fill={"email": "s_email"},
-        target_id="__row_id",
-        source_order="sid",
+        two_key_enrich(
+            m1,
+            mailchimp,
+            [
+                MatchKey("name", name_t, name_s),
+                MatchKey("phone", N.norm_phone(F.col("mobile")), N.norm_phone(F.col("s_mobile"))),
+            ],
+            fill={"email": "s_email"},
+            target_id="__row_id",
+            source_order="sid",
+        ),
+        ["email"],
     )
-    m2 = checkpoint(_splice(m1, email_fill, ["email"]))
-    mobile_fill, log2 = two_key_enrich(
+    out, mobile_log = _fill_pass(
         m2,
-        mailchimp,
-        [
-            MatchKey("name", name_t, name_s),
-            MatchKey("email", N.norm_email(F.col("email")), N.norm_email(F.col("s_email"))),
-        ],
-        fill={"mobile": "s_mobile"},
-        target_id="__row_id",
-        source_order="sid",
+        two_key_enrich(
+            m2,
+            mailchimp,
+            [
+                MatchKey("name", name_t, name_s),
+                MatchKey("email", N.norm_email(F.col("email")), N.norm_email(F.col("s_email"))),
+            ],
+            fill={"mobile": "s_mobile"},
+            target_id="__row_id",
+            source_order="sid",
+        ),
+        ["mobile"],
     )
-    out = _splice(m2, mobile_fill, ["mobile"]).drop("__row_id")
-    return out, log1.unionByName(log2)
+    return out.drop("__row_id"), email_log.unionByName(mobile_log)
 
 
 def dedup_contacts(
@@ -426,18 +458,20 @@ def run_pipeline(
     stage 0 (optional) mailchimp enrich -> stage 1 fill-missing ->
     stage 2 clean+dedup -> stage 3 validate.
 
-    ``side_outputs=False`` skips CONSTRUCTING the errors frame and the
-    fill change log (returned as None) — plan-BUILD cost, not execution
-    cost: these frames are ~0.7 s of py4j round-trips and analyzer
-    passes that a caller consuming only ``cleaned`` pays for nothing
-    (r14; the e2e benchmark query derives its per-row error count as a
-    column via ``contact_error_count`` instead)."""
+    ``side_outputs=False`` skips CONSTRUCTING the errors frame (returned
+    as None) — plan-BUILD cost, not execution cost: the validation
+    documents are py4j round-trips and analyzer passes that a caller
+    consuming only ``cleaned`` pays for nothing (r14; the e2e benchmark
+    query derives its per-row error count as a column via
+    ``contact_error_count`` instead). The change logs are always
+    returned: each is a projection of its pass's checkpointed match,
+    built without a job."""
     df = conform_to_master(master)
     mc_log = fill_log = None
     if mailchimp is not None:
         df, mc_log = mailchimp_enrich(df, mailchimp)
     if sources is not None:
-        df, fill_log = fill_missing(df, sources, with_change_log=side_outputs)
+        df, fill_log = fill_missing(df, sources)
     cleaned = dedup_contacts(clean_fields(df), merge_empty_keys=merge_empty_keys)
     errors = validate_contacts(cleaned) if side_outputs else None
     return PipelineResult(cleaned, errors, fill_log, mc_log)

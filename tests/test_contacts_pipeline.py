@@ -1,9 +1,10 @@
 """End-to-end contact pipeline test — the reference's full run.py flow
 (mailchimp enrich -> fill missing -> clean -> dedup -> validate) on
 contact-shaped fixtures, plus the guards on the one path the CLI runs:
-one Spark job per source file at ingest, and the checkpointed
-enrichment stage boundaries (plans/contacts.py) — plan shape scoped or
-not, job budget, outputs equal to the lazy plan's, and release."""
+no Spark job at source ingest, and the checkpointed enrichment stage
+boundaries (plans/contacts.py) — plan shape scoped or not, change logs
+that read only their match checkpoints, job budget, outputs equal to
+the lazy plan's, and release."""
 
 from __future__ import annotations
 
@@ -16,13 +17,17 @@ from bcg_contacts_data_pipeline_spark.operators.pins import PinScope
 from bcg_contacts_data_pipeline_spark.plans import contacts as C
 from tests.test_pins import _n_persistent_rdds
 
-#: Golden-fixture budgets with the stage boundaries checkpointed
-#: (measured 4 relations / 7 exchanges / 74 jobs; without them 46 / 70 /
-#: 172). A reintroduced splice-join fan-out multiplies all three; a
-#: second header peek per source file adds a job per usable file.
-MAX_CLEAN_INPUT_RELATIONS = 4
-MAX_CLEAN_INPUT_EXCHANGES = 8
-MAX_CLI_JOBS = 78
+#: Golden-fixture budgets with each enrichment pass's target and match
+#: checkpointed (measured 0 relations / 2 exchanges / 50-51 jobs, the
+#: job count moving by one between runs; with only the targets
+#: checkpointed 4 / 7 / 74; with no checkpoints 46 / 70 / 172). The
+#: clean_fields input reads only the fill target's and the fill match's
+#: checkpoints. A reintroduced splice-join fan-out or a lazy match
+#: multiplies all three; a header peek that runs a Spark job adds one
+#: per input file.
+MAX_CLEAN_INPUT_RELATIONS = 0
+MAX_CLEAN_INPUT_EXCHANGES = 2
+MAX_CLI_JOBS = 52
 
 
 def master_fixture(spark):
@@ -164,15 +169,16 @@ def _jobs_in(spark, fn):
 
 
 def test_source_ingest_runs_one_job_per_file(spark, golden_paths):
-    """Each source file is read once: its header peek names the columns
-    and decides usability; nothing re-reads a usable file's header."""
+    """Each source file is read once: its driver-side header peek names
+    the columns and decides usability without a Spark job, and nothing
+    re-reads a usable file's header, so the ingest runs no job at all."""
     from bcg_contacts_data_pipeline_spark.io import registries as REG
 
     paths = [golden_paths[k] for k in SOURCE_KEYS]
     (sources, skipped), jobs = _jobs_in(
         spark, lambda: REG.read_contact_sources(spark, paths)
     )
-    assert jobs == len(paths), jobs
+    assert jobs == 0, jobs
     assert skipped == [golden_paths["adhoc5"], golden_paths["adhoc6"]]
     assert sources is not None and "sid" in sources.columns
 
@@ -207,15 +213,30 @@ def _canonical(result: C.PipelineResult) -> dict:
     }
 
 
+def _plan_facts(df) -> tuple[int, int]:
+    """File relations in ``df``'s optimized plan, exchanges in its
+    executed plan."""
+    qe = df._jdf.queryExecution()
+    return (
+        len(re.findall(r"Relation \[", qe.optimizedPlan().toString())),
+        qe.executedPlan().toString().count("Exchange"),
+    )
+
+
 def _plan_and_outputs(golden_inputs) -> dict:
     """One run over the golden inputs: the clean_fields input's relation
-    and exchange counts, and the canonical outputs (collected in the
-    caller's scope — released checkpoints are unrecomputable)."""
+    and exchange counts, the change logs' plan facts, and the canonical
+    outputs (collected in the caller's scope — released checkpoints are
+    unrecomputable)."""
     result, clean_input = _run_capturing_clean_input(golden_inputs)
-    qe = clean_input._jdf.queryExecution()
+    relations, exchanges = _plan_facts(clean_input)
     return {
-        "relations": len(re.findall(r"Relation \[", qe.optimizedPlan().toString())),
-        "exchanges": qe.executedPlan().toString().count("Exchange"),
+        "relations": relations,
+        "exchanges": exchanges,
+        "log_plans": {
+            "fill_log": _plan_facts(result.fill_log),
+            "mailchimp_log": _plan_facts(result.mailchimp_log),
+        },
         "outputs": _canonical(result),
     }
 
@@ -251,9 +272,9 @@ def lazy_run(golden_inputs):
 
 
 def test_stage_boundaries_bound_the_enrichment_plan(scoped_run):
-    """The frame entering clean_fields plans from the checkpointed stage
-    targets: one relation per input file (4), not the 46 the chained
-    splice joins multiply them into."""
+    """The frame entering clean_fields plans from the fill stage's
+    checkpointed target and match: no file relation at all, not the 46
+    the chained splice joins multiply the 4 input files into."""
     assert scoped_run["relations"] <= MAX_CLEAN_INPUT_RELATIONS, scoped_run["relations"]
     assert scoped_run["exchanges"] <= MAX_CLEAN_INPUT_EXCHANGES, scoped_run["exchanges"]
 
@@ -267,6 +288,14 @@ def test_unscoped_run_plans_the_same_bounded_input(scoped_run, unscoped_run):
         scoped_run["relations"],
         scoped_run["exchanges"],
     )
+
+
+def test_change_logs_read_only_the_match_checkpoints(scoped_run):
+    """Each change log is a projection of its pass's checkpointed match:
+    no source file scan and no exchange, so writing a log re-runs no
+    match (a lazy match re-read, deduped and broadcast the sources)."""
+    for name, (relations, exchanges) in scoped_run["log_plans"].items():
+        assert (relations, exchanges) == (0, 0), (name, relations, exchanges)
 
 
 def test_cli_job_budget(cli_run):

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from bcg_contacts_data_pipeline_spark.functions import normalize as N
 from bcg_contacts_data_pipeline_spark.operators.enrich import (
     MatchKey,
+    change_log,
     kofn_enrich,
     two_key_enrich,
 )
@@ -44,7 +45,7 @@ def test_kofn_fills_only_missing_with_first_2of3_match(spark):
         ],
         "sid long, s_name string, s_email string, s_phone string, s_title string",
     )
-    enriched, log = kofn_enrich(
+    enriched = kofn_enrich(
         target,
         source,
         keys3(),
@@ -53,6 +54,7 @@ def test_kofn_fills_only_missing_with_first_2of3_match(spark):
         source_order="sid",
         min_matches=2,
     )
+    log = change_log(enriched, "id")
     rows = {r["id"]: r for r in enriched.collect()}
     assert rows[1]["phone"] == "0412345678" and rows[1]["title"] == "Dr"
     assert rows[2]["phone"] is None and rows[2]["matched_source_id"] is None
@@ -77,7 +79,7 @@ def test_null_keys_never_match(spark):
         [(10, None, None, "123", "Dr")],
         "sid long, s_name string, s_email string, s_phone string, s_title string",
     )
-    enriched, _ = kofn_enrich(
+    enriched = kofn_enrich(
         target, source, keys3(), {"title": "s_title"}, "id", "sid", min_matches=2
     )
     assert enriched.collect()[0]["title"] is None
@@ -97,7 +99,7 @@ def test_two_key_strict_variant(spark):
         MatchKey("name", N.norm_ws(F.col("name")), N.norm_ws(F.col("s_name"))),
         MatchKey("phone", N.norm_phone(F.col("phone")), N.norm_phone(F.col("s_phone"))),
     ]
-    enriched, _ = two_key_enrich(
+    enriched = two_key_enrich(
         target, source, keys, {"email": "s_email"}, "id", "sid"
     )
     # phone normalizes to last-10 on both sides -> match; email filled
@@ -126,10 +128,11 @@ def test_banded_join_multi_combo_and_all_three_match(spark):
         ],
         "sid long, s_name string, s_email string, s_phone string, s_title string",
     )
-    enriched, log = kofn_enrich(
+    enriched = kofn_enrich(
         target, source, keys3(), {"title": "s_title"}, "id", "sid",
         min_matches=2,
     )
+    log = change_log(enriched, "id")
     rows = {r["id"]: r for r in enriched.collect()}
     assert rows[1]["title"] == "Dr"
     assert rows[1]["matched_source_id"] == 10

@@ -5,6 +5,9 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
+from pyspark.errors import AnalysisException
+
 from bcg_contacts_data_pipeline_spark.io import readers as R
 from bcg_contacts_data_pipeline_spark.io import writers as W
 
@@ -40,6 +43,48 @@ def test_read_tsv_dotted_and_repeated_header_names(spark, tmp_path):
     df = R.read_tsv(spark, str(p))
     assert df.columns == ["No.", "E-mail", "Unnamed: 2", "E-MAIL.1"]
     assert [tuple(r) for r in df.collect()] == [("1", "a@x.com", "z", None)]
+
+
+def test_header_peek_matches_spark_text_source(spark, tmp_path):
+    """The driver-side header peek names the same columns as the first
+    line Spark's text source reads, and runs no Spark job: CRLF line
+    ends, a glob and a directory (``_``/``.`` files skipped), a gzip
+    file and a byte-order mark. An empty file has no line to peek; it
+    names the one ``Unnamed: 0`` column, as Spark's empty read does."""
+    import gzip
+
+    crlf = tmp_path / "crlf.tsv"
+    crlf.write_bytes(b"First Name\tE-mail\r\nAnn\ta@x.com\r\n")
+    parts = tmp_path / "parts"
+    parts.mkdir()
+    for name in ("b.tsv", "a.tsv"):
+        (parts / name).write_text("id\tname\n1\tx\n")
+    (parts / "_meta").write_text("not\tthe header\n")
+    (parts / ".hidden").write_text("nor\tthis\n")
+    packed = tmp_path / "packed.tsv.gz"
+    packed.write_bytes(gzip.compress(b"k\tv\n1\t2\n"))
+    bom = tmp_path / "bom.tsv"
+    bom.write_bytes("\ufeffseqno\temail\n1\tx\n".encode())
+    empty = tmp_path / "empty.tsv"
+    empty.write_text("")
+
+    sc = spark.sparkContext
+    for p in [crlf, parts / "*.tsv", parts, packed, bom, empty]:
+        rows = spark.read.text(str(p)).limit(1).take(1)
+        want = R.column_names((rows[0][0] if rows else "").split("\t"))
+        group = f"header-peek-{p.name}"
+        sc.setJobGroup(group, "header peek")
+        try:
+            got = R._peek_header(spark, str(p))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert got == want, (p, got, want)
+        assert not sc.statusTracker().getJobIdsForGroup(group), p
+    assert R._peek_header(spark, str(empty)) == ["Unnamed: 0"]
+    # a missing path names no header and still fails at the scan
+    assert R._peek_header(spark, str(tmp_path / "missing.tsv")) == ["Unnamed: 0"]
+    with pytest.raises(AnalysisException):
+        R.read_tsv(spark, str(tmp_path / "missing.tsv"))
 
 
 def test_headerless_positional(spark, tmp_path):

@@ -160,7 +160,12 @@ def test_kofn_enrich_matches_model(spark, tgt, src):
 
     from bcg_contacts_data_pipeline_spark.operators.enrich import (
         MatchKey,
+        change_log,
         kofn_enrich,
+    )
+    from bcg_contacts_data_pipeline_spark.operators.pins import (
+        PinScope,
+        checkpoint,
     )
 
     tdata = [(i, *row) for i, row in enumerate(tgt)]
@@ -176,11 +181,18 @@ def test_kofn_enrich_matches_model(spark, tgt, src):
         MatchKey("k2", F.col("k2"), F.col("sk2")),
         MatchKey("k3", F.col("k3"), F.col("sk3")),
     ]
-    enriched, log = kofn_enrich(
+    enriched = kofn_enrich(
         tdf, sdf, keys, fill={"f1": "sf1"}, target_id="tid",
         source_order="sid", min_matches=2,
     )
     got = {r.tid: (r.f1, r.matched_source_id) for r in enriched.collect()}
+    # the log as the contacts plan derives it: from the checkpointed match
+    with PinScope():
+        log = [
+            tuple(r)
+            for r in change_log(checkpoint(enriched), "tid").collect()
+        ]
+    want_log = []
 
     # model: first (lowest sid) source agreeing on >=2 non-null keys;
     # only rows with f1 missing probe; fill only if currently null
@@ -190,18 +202,23 @@ def test_kofn_enrich_matches_model(spark, tgt, src):
             continue
         best = None
         for (sid, s1, s2, s3, sf1) in sdata:
-            agree = sum(
-                1
-                for a, b in [(k1, s1), (k2, s2), (k3, s3)]
+            agree = [
+                name
+                for name, a, b in [("k1", k1, s1), ("k2", k2, s2), ("k3", k3, s3)]
                 if a is not None and b is not None and a == b
-            )
-            if agree >= 2:
-                best = (sid, sf1)
+            ]
+            if len(agree) >= 2:
+                best = (sid, sf1, ",".join(agree))
                 break  # sdata is sid-ordered: first match wins
         if best is None:
             assert got[i] == (None, None), (i, got[i])
         else:
             assert got[i] == (best[1], best[0]), (i, got[i], best)
+            if best[1] is not None:
+                want_log.append((i, "f1", None, best[1], best[0], best[2]))
+    # one f1 entry per filled row: new_value = the winner's sf1,
+    # source_id = the winning sid, matched_on = the keys that agree
+    assert sorted(log) == sorted(want_log), (log, want_log)
 
 
 # ---------------------------------------------------------------------------
